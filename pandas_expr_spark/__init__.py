@@ -173,7 +173,7 @@ def crosstab(frame, index=None, columns=None, values=None, aggfunc=None,
     form ``crosstab(df, "row_col", "col_col")`` or pandas' two-Series form
     ``crosstab(s_rows, s_cols)`` (same-anchor Series).  ``values=`` may be
     a same-anchor Series in the two-Series form."""
-    from ._collection import Series as _Series, _attach_rowid, _ROWID
+    from ._collection import Series as _Series, _ROWID, positions
     from pyspark.sql import functions as _F
     if isinstance(frame, _Series):
         s1, s2 = frame, index
@@ -203,10 +203,8 @@ def crosstab(frame, index=None, columns=None, values=None, aggfunc=None,
             pos2 = (not f2._index_cols
                     or tuple(f2._index_cols) == (_ROWID,))
             if pos1 and pos2:
-                a = (f1._sdf if tuple(f1._index_cols) == (_ROWID,)
-                     else _attach_rowid(f1._sdf))
-                b = (f2._sdf if tuple(f2._index_cols) == (_ROWID,)
-                     else _attach_rowid(f2._sdf))
+                a = f1._sdf if f1._index_cols else positions(f1)
+                b = f2._sdf if f2._index_cols else positions(f2)
                 joined = (a.select(_F.col(_ROWID), _F.col("__r__"))
                           .join(b.select(_F.col(_ROWID), _F.col("__c__")),
                                 _ROWID, "inner"))

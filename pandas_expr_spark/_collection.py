@@ -35,27 +35,10 @@ from pyspark.sql import types as T
 
 from ._dtypes import is_numeric, to_pandas_dtype, to_spark_type
 from ._expr import Node
+from ._order import _LABEL, _ORDER, _ROWID, order_key, positions
 
 __all__ = ["DataFrame", "Series", "Index", "Scalar", "new_collection"]
 
-_ROWID = "__pes_rowid__"
-# hidden presentation-order column: stamped by order-changing ops
-# (sort_values/nlargest/...) so order-dependent scans (cumsum, pct_change,
-# rolling, ewm) follow the PRESENTED order like pandas, while the rowid/
-# index keeps pandas' preserved labels
-_ORDER = "__pes_order__"
-# hidden positional-label column: minted IN-SCAN for parquet sources
-# (Spark 4.1 `_metadata.row_index` + per-file footer row-count offsets —
-# predicate pushdown intact, zero shuffle) and driver-side for
-# from_pandas.  When an UNINDEXED, UNSTAMPED frame carries it, it holds
-# each row's exact pandas positional label; bare filter/dropna promote
-# it to the rowid index so `df[mask].index` matches pandas instead of
-# renumbering 0..n-1.  Valid only while `_index_cols == ()` and `_ORDER`
-# is absent: every op that reorders rows either stamps _ORDER or sets an
-# index (guard excludes), and ops that re-select drop the column (recipe
-# lost, old renumbering fallback).  Catalyst prunes the column (and the
-# _metadata scan read) from any plan that never observes it.
-_LABEL = "__pes_label__"
 # id(sdf) -> (sdf, hidden-column-stripped twin): keeps to_spark() identity
 # stable (scan-sharing CSE) now that scans carry a hidden label column.
 # Bounded LRU (r7 advice: the unbounded id-keyed dict held every plan pair
@@ -73,58 +56,6 @@ _NAME_PLACEHOLDER = "__v__"
 
 def _scrub_name(n):
     return None if n == _NAME_PLACEHOLDER else n
-
-
-def _labels_valid(frame) -> bool:
-    """True iff the frame's hidden ``_LABEL`` column currently equals the
-    pandas positional labels (see the invariant on ``_LABEL``).  A stray
-    ``_ROWID`` DATA column (a round-tripped engine file) blocks the
-    label→rowid rename — fall back to the physical attach, which
-    replaces instead of colliding."""
-    return (not frame._index_cols
-            and _LABEL in frame._sdf.columns
-            and _ORDER not in frame._sdf.columns
-            and _ROWID not in frame._sdf.columns)
-
-
-def _anchor_rowid(frame, name: str = "__pes_rowid__"):
-    """Positional anchor for an unindexed frame/series — pandas
-    positional labels as a column, cheapest correct path first:
-
-    1. in-scan label column → pure rename (pushdown intact, no pass);
-    2. stamped (_ORDER) frame → ranged position pass over the STAMP
-       (pandas numbers the PRESENTED order; the physical layout of a
-       stamped frame is scrambled — r7 rand-hunt, extending the r6
-       seed-96 dedup fix to every anchor site);
-    3. else → physical distributed-sequence attach (layout == labels
-       for unindexed unstamped frames, the engine's core invariant)."""
-    if _labels_valid(frame):
-        return frame._sdf.withColumnRenamed(_LABEL, name)
-    if _ORDER in frame._sdf.columns and not frame._index_cols:
-        from .functions import scan
-        sdf = frame._sdf
-        if name in sdf.columns:
-            # a stale non-index anchor from an upstream op — superseded
-            # by the stamp-position pass
-            sdf = sdf.drop(name)
-        return scan.global_pos(sdf, [_ORDER], name=name)
-    return _attach_rowid(frame._sdf, name)
-
-
-def _label_base(frame):
-    """The frame's sdf with pandas positional labels bound as ``_ROWID``,
-    for label-PROMOTING ops (filter/dropna/tail/sample) — or None when
-    labels are unavailable without the checkpointing physical attach
-    (which those ops deliberately skip: the renumber fallback is the
-    documented cheap path).  Covers both in-scan-label frames (pure
-    rename) and stamped frames (position pass over the stamp)."""
-    if _labels_valid(frame):
-        return frame._sdf.withColumnRenamed(_LABEL, _ROWID)
-    if (not frame._index_cols and _ORDER in frame._sdf.columns
-            and _ROWID not in frame._sdf.columns):
-        from .functions import scan
-        return scan.global_pos(frame._sdf, [_ORDER], name=_ROWID)
-    return None
 
 
 def _avg_rank_join(sdf: SparkDF, col: str, out_col: str) -> SparkDF:
@@ -432,11 +363,11 @@ def _interval_display(edges, precision: int, first_edge_adjust: bool):
     return disp
 
 
-def _assign_positional(sdf: SparkDF, key: str, values) -> SparkDF:
+def _assign_positional(frame, key: str, values) -> SparkDF:
     """pandas sequence assignment: value i goes to row i (current row
     order).  The sequence is a driver-held Python object, so the
-    (position, value) table broadcasts; the frame needs one rowid pass.
-    An eager count enforces pandas' length check."""
+    (position, value) table broadcasts; the frame needs one position
+    pass.  An eager count enforces pandas' length check."""
     if isinstance(values, pd.Series):
         idx = values.index
         if not (isinstance(idx, pd.RangeIndex)
@@ -446,35 +377,24 @@ def _assign_positional(sdf: SparkDF, key: str, values) -> SparkDF:
                 "align explicitly (from_pandas + merge) instead")
         values = values.to_numpy()
     vals = list(values.tolist() if hasattr(values, "tolist") else values)
+    sdf = frame._sdf
     n = sdf.count()
     if len(vals) != n:
         raise ValueError(f"Length of values ({len(vals)}) does not match "
                          f"length of index ({n})")
-    spark = sdf.sparkSession
-    lookup = spark.createDataFrame(
+    lookup = sdf.sparkSession.createDataFrame(
         pd.DataFrame({"__assign_pos__": range(len(vals)), key: vals}))
     orig_cols = list(sdf.columns)
-    renamed_rowid = _ROWID in orig_cols
-    base = sdf.withColumnRenamed(_ROWID, "__orig_rowid__") if renamed_rowid \
-        else sdf
-    if key in base.columns:
-        base = base.drop(key)
-    if _ORDER not in base.columns and renamed_rowid:
-        # an unstamped rowid-carrying frame (alignment-join outputs:
-        # index = labels, physical layout scrambled) presents in ROWID
-        # order — positions must follow it, not the layout (r8 review)
-        from .functions import scan
-        withpos = scan.global_pos(base, ["__orig_rowid__"], name=_ROWID)
-    else:
-        withpos = _presented_rowid(base)
-    out = (withpos.join(F.broadcast(lookup),
-                        withpos[_ROWID] == lookup["__assign_pos__"], "left")
-           .drop("__assign_pos__", _ROWID))
-    if renamed_rowid:
-        out = out.withColumnRenamed("__orig_rowid__", _ROWID)
+    withpos = positions(frame, "__assign_pos__")
+    if _LABEL in orig_cols and _LABEL not in withpos.columns:
+        # the positions were the in-scan labels — keep the labels too
+        withpos = withpos.withColumn(_LABEL, F.col("__assign_pos__"))
+    if key in withpos.columns:
+        withpos = withpos.drop(key)
+    out = (withpos.join(F.broadcast(lookup), "__assign_pos__", "left")
+           .drop("__assign_pos__"))
     # preserve column order; a replaced column keeps its original slot
-    final = [c if c != key or key not in orig_cols else key
-             for c in orig_cols] + ([key] if key not in orig_cols else [])
+    final = orig_cols + ([key] if key not in orig_cols else [])
     return out.select(*[F.col(c) for c in final])
 
 
@@ -725,69 +645,6 @@ def _sort_dir(c, asc: bool, na_position: str):
             else c.asc_nulls_first()
     return c.desc_nulls_last() if na_position == "last" \
         else c.desc_nulls_first()
-
-
-def _attach_rowid(sdf: SparkDF, name: str = _ROWID) -> SparkDF:
-    """Materialize a positional row id — entirely JVM-side.
-
-    The distributed-sequence trick (same design as pandas-on-Spark's
-    default index): per-partition row numbers are a window partitioned by
-    ``spark_partition_id()`` (every partition ranks in parallel — NO
-    global single-task window), and the partition start offsets come from
-    a tiny per-partition count histogram cumsum'd and broadcast back.
-    Two scans of the input plan, zero Python serialization — unlike
-    ``rdd.zipWithIndex``, which shipped every row through a Python
-    worker.  Determinism caveat (shared with zipWithIndex): both scans
-    must see the same partition layout, true for any deterministic
-    lineage."""
-    # monotonically_increasing_id documented layout: partition id in the
-    # upper 31 bits, CONSECUTIVE 0-based record number in the lower 33 —
-    # so (mid >> 33) is the partition and (mid & mask) the exact position
-    # within it.  rowid = broadcast partition-start offset + position:
-    # no window over the data, no shuffle, no Python.
-    mask = (1 << 33) - 1
-    # lazy localCheckpoint: the per-partition count histogram and the data
-    # branch would otherwise each recompute the ENTIRE upstream plan (for
-    # a sort after a join+agg that doubles the query) — checkpointing
-    # computes it once and both branches read the cached partitions.
-    # Also pins the partition layout, removing the two-scan determinism
-    # caveat entirely.
-    base = (sdf.localCheckpoint(eager=False)
-            .withColumn("__mid__", F.monotonically_increasing_id()))
-    pid = F.shiftright(F.col("__mid__"), 33)
-    counts = (base.groupBy(pid.alias("__pid__"))
-              .agg(F.count(F.lit(1)).alias("__n__")))
-    # cumsum over ≤ #partitions rows — a one-task window over a tiny frame
-    w_off = (Window.orderBy("__pid__")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = counts.select(
-        "__pid__",
-        F.coalesce(F.sum("__n__").over(w_off), F.lit(0)).alias("__off__"))
-    out = (base.join(F.broadcast(offsets),
-                     pid == F.col("__pid__"))
-           .withColumn(name,
-                       F.col("__off__")
-                       + F.col("__mid__").bitwiseAND(F.lit(mask)))
-           .drop("__pid__", "__mid__", "__off__"))
-    return out.select(*sdf.columns, name)
-
-
-def _presented_rowid(sdf: SparkDF, name: str = _ROWID) -> SparkDF:
-    """Positional anchor over an sdf that may carry a presentation stamp.
-
-    ``_attach_rowid`` numbers the PHYSICAL layout; a stamped frame
-    (drop_duplicates→reset_index, concat, melt — logically ordered by
-    ``_ORDER``, physically scrambled by shuffles) must number rows in the
-    PRESENTED order instead, or every positional consumer silently
-    misaligns (the r7-advice ``_binop_axis0`` class; r8 audit found the
-    same gap at 12 more sites).  Stamped → ranged position pass over the
-    stamp; unstamped → physical attach (layout == presentation there)."""
-    if _ORDER in sdf.columns:
-        from .functions import scan
-        if name in sdf.columns:
-            sdf = sdf.drop(name)
-        return scan.global_pos(sdf, [_ORDER], name=name)
-    return _attach_rowid(sdf, name)
 
 
 # --------------------------------------------------------------------------
@@ -1905,7 +1762,8 @@ class Series(FrameBase):
         pandas keeps the surviving rows' original positional labels; an
         in-scan label column promotes to the rowid index (pure rename)."""
         node = Node("dropna", {}, self._expr)
-        lbase = _label_base(self)
+        lbase = (None if self._index_cols
+                 else positions(self, upto="pass"))
         if lbase is not None:
             return Series(lbase.filter(self._scol.isNotNull()), self._scol,
                           self._col_name, node, (_ROWID,), (None,))
@@ -2317,9 +2175,7 @@ class Series(FrameBase):
         if self._index_cols:
             sdf = self._sdf.select(*[F.col(c) for c in self._index_cols], *sel)
             return sdf, name, list(self._index_cols), self._index_cols
-        base = (self._sdf.withColumnRenamed(_LABEL, _ROWID)
-                if _labels_valid(self) else _attach_rowid(self._sdf))
-        sdf = base.select(F.col(_ROWID), *sel)
+        sdf = positions(self).select(F.col(_ROWID), *sel)
         return sdf, name, [_ROWID], (_ROWID,)
 
     def _cumop(self, op: str, skipna: bool = True) -> "Series":
@@ -3032,7 +2888,7 @@ class Series(FrameBase):
             idx = F.col(self._index_cols[0])
             sdf = self._sdf
         else:
-            sdf = _anchor_rowid(self)
+            sdf = positions(self)
             idx = F.col(_ROWID)
         valid = sdf.filter(self._scol.isNotNull())
         # min_by over a (value', idx) struct — struct comparison is
@@ -3360,10 +3216,7 @@ class Series(FrameBase):
             c = self._index_cols[0]
             return Index(self._sdf, F.col(c), self._index_names[0],
                          Node("index", {"col": c}, self._expr))
-        # _anchor_rowid: label rename / stamp-position pass / physical
-        # attach — a stamped frame's labels are its PRESENTED positions,
-        # not the physical layout (r8 audit)
-        sdf = _anchor_rowid(self)
+        sdf = positions(self)
         return Index(sdf, F.col(_ROWID), None, Node("index", {}, self._expr))
 
     def keys(self) -> "Index":
@@ -3453,7 +3306,7 @@ class Series(FrameBase):
                     and _ORDER not in self._sdf.columns):
                 # pandas relabels but KEEPS row order — the rowid labels
                 # carry the presented order, so they become the stamp
-                # (same seed-96 contract as the frame path)
+                # (as in the frame path)
                 sdf = self._sdf.select(F.col(_ROWID).alias(_ORDER),
                                        self._scol.alias(vname))
             elif _ORDER in self._sdf.columns:
@@ -3982,7 +3835,8 @@ class Series(FrameBase):
             if key._sdf is self._sdf:
                 node = Node("filter", {"predicate": key._expr.op},
                             self._expr)
-                lbase = _label_base(self)
+                lbase = (None if self._index_cols
+                         else positions(self, upto="pass"))
                 if lbase is not None:
                     # pandas keeps original positional labels (see the
                     # frame getitem promotion)
@@ -4374,16 +4228,13 @@ class _SeriesRolling:
                                    other.to_frame("__y__"))
         if base_f._index_cols:
             sdf = base_f._sdf
-            # stamp outranks index for WINDOW order (pandas windows over
-            # the presented rows — a sorted label-keeping frame's labels
-            # are not its presentation, r8 hunt seed 30020)
+            # pandas windows over the presented rows — a sorted
+            # label-keeping frame's labels are not its presentation
             order = [_ORDER] if _ORDER in sdf.columns \
                 else list(base_f._index_cols)
             idx, names = base_f._index_cols, base_f._index_names
         else:
-            # presented-order anchor: a stamped series windows over the
-            # STAMP order, not the physical layout (r8 audit)
-            sdf = _presented_rowid(base_f._sdf)
+            sdf = positions(base_f)
             order, idx, names = [_ROWID], (_ROWID,), (None,)
         x, y = F.col("__x__").cast("double"), F.col("__y__").cast("double")
         m = x.isNotNull() & y.isNotNull()
@@ -4473,9 +4324,8 @@ class _SeriesTimeRolling:
                              "set_index first")
         ts_col = s._index_cols[0]
         f = s.to_frame("__v__")
-        # stamp-aware: duplicate-timestamp ties follow the PRESENTED
-        # order on a stamped frame (r8 audit)
-        sdf = _presented_rowid(f._sdf)
+        # duplicate-timestamp ties follow the presented order
+        sdf = positions(f)
         out = time_rolling(sdf, [_ROWID, ts_col], ts_col, ["__v__"],
                            self._wm, how, self._mp, closed=self._closed,
                            pos_col=_ROWID)
@@ -4517,8 +4367,8 @@ class _FrameTimeRolling:
         cols = self._cols if self._cols is not None else \
             [c for c in f.columns
              if c not in self._by and is_numeric(f._sdf.schema[c].dataType)]
-        # stamp-aware tie order (r8 audit)
-        sdf = _presented_rowid(f._sdf)
+        # duplicate-timestamp ties follow the presented order
+        sdf = positions(f)
         out = time_rolling(sdf, [_ROWID, ts_col], ts_col, cols,
                            self._wm, how, self._mp, by=self._by,
                            closed=self._closed, pos_col=_ROWID)
@@ -4620,13 +4470,12 @@ class _FrameRolling:
             # label-preserving index for window order, like pandas
             if f._index_cols:
                 return f._sdf, [_ORDER], f._index_cols, f._index_names
-            # unindexed stamped: labels ARE the presented positions —
-            # anchor them (r8: (_ORDER,) as the result index crashed at
-            # the compute boundary, which drops the stamp)
-            return _anchor_rowid(f), [_ORDER], (_ROWID,), (None,)
+            # unindexed stamped: labels ARE the presented positions
+            # ((_ORDER,) as the result index would vanish at compute)
+            return positions(f), [_ORDER], (_ROWID,), (None,)
         if f._index_cols:
             return f._sdf, list(f._index_cols), f._index_cols, f._index_names
-        sdf = _anchor_rowid(f)
+        sdf = positions(f)
         return sdf, [_ROWID], (_ROWID,), (None,)
 
     def _numeric(self):
@@ -4693,17 +4542,16 @@ class _FrameEwm:
     def mean(self) -> "DataFrame":
         from .functions import timeseries as _ts
         f = self._f
-        if _ORDER in f._sdf.columns:
+        if _ORDER in f._sdf.columns and f._index_cols:
             sdf, order = f._sdf, _ORDER
-            idx = f._index_cols if f._index_cols else (_ORDER,)
-            names = f._index_names if f._index_cols else (None,)
+            idx, names = f._index_cols, f._index_names
         elif f._index_cols:
             sdf, order = f._sdf, f._index_cols[0]
             idx, names = f._index_cols, f._index_names
             if len(f._index_cols) != 1:
                 raise ValueError("frame ewm needs a single-level index")
         else:
-            sdf, order = _attach_rowid(f._sdf), _ROWID
+            sdf, order = positions(f), _ROWID
             idx, names = (_ROWID,), (None,)
         num = [c for c in f.columns
                if is_numeric(f._sdf.schema[c].dataType)]
@@ -4730,15 +4578,14 @@ class _FrameExpanding:
     def _agg(self, fn: str) -> "DataFrame":
         from .functions import scan
         f = self._f
-        if _ORDER in f._sdf.columns:
+        if _ORDER in f._sdf.columns and f._index_cols:
             sdf, order = f._sdf, [_ORDER]
-            idx = f._index_cols if f._index_cols else (_ORDER,)
-            names = f._index_names if f._index_cols else (None,)
+            idx, names = f._index_cols, f._index_names
         elif f._index_cols:
             sdf, order = f._sdf, list(f._index_cols)
             idx, names = f._index_cols, f._index_names
         else:
-            sdf, order = _attach_rowid(f._sdf), [_ROWID]
+            sdf, order = positions(f), [_ROWID]
             idx, names = (_ROWID,), (None,)
         num = [c for c in f.columns
                if is_numeric(f._sdf.schema[c].dataType)]
@@ -4901,13 +4748,12 @@ class _SeriesExpanding:
                                    other.to_frame("__y__"))
         if base_f._index_cols:
             sdf = base_f._sdf
-            # stamp outranks index for window order (r8, see rolling)
+            # pandas windows over the presented rows (see rolling)
             order = [_ORDER] if _ORDER in sdf.columns \
                 else list(base_f._index_cols)
             idx, names = base_f._index_cols, base_f._index_names
         else:
-            # presented-order anchor (r8 audit: stamp outranks layout)
-            sdf = _presented_rowid(base_f._sdf)
+            sdf = positions(base_f)
             order, idx, names = [_ROWID], (_ROWID,), (None,)
         x, y = F.col("__x__").cast("double"), F.col("__y__").cast("double")
         m = x.isNotNull() & y.isNotNull()
@@ -5050,7 +4896,7 @@ class DataFrame(FrameBase):
             c = self._index_cols[0]
             return Index(self._sdf, F.col(c), self._index_names[0],
                          Node("index", {"col": c}, self._expr))
-        sdf = _anchor_rowid(self)
+        sdf = positions(self)
         return Index(sdf, F.col(_ROWID), None, Node("index", {}, self._expr))
 
     # ------------------------------------------------------------------
@@ -5143,7 +4989,8 @@ class DataFrame(FrameBase):
                                 {"columns": list(key)})
         if isinstance(key, Series):
             if key._sdf is self._sdf:
-                lbase = _label_base(self)
+                lbase = (None if self._index_cols
+                         else positions(self, upto="pass"))
                 if lbase is not None:
                     # pandas keeps the surviving rows' ORIGINAL positional
                     # labels — promote them to the rowid index (in-scan
@@ -5166,16 +5013,15 @@ class DataFrame(FrameBase):
             needed = list(self._index_cols) + self.columns
             if (getattr(key, "_mask_anchor", None) is self._sdf
                     and all(c in key._sdf.columns for c in needed)):
-                lab = (_labels_valid(self)
-                       and _LABEL in key._sdf.columns)
-                out = (key._sdf.filter(key._scol)
-                       .select(*[F.col(c) for c in needed],
-                               *([F.col(_LABEL)] if lab else [])))
-                if lab:
+                lbase = positions(key, upto="label")
+                if lbase is not None:
                     node = Node("filter", {"predicate": key._expr.op},
                                 self._expr)
-                    return DataFrame(out.withColumnRenamed(_LABEL, _ROWID),
-                                     node, (_ROWID,), (None,))
+                    out = (lbase.filter(key._scol)
+                           .select(*[F.col(c) for c in needed], _ROWID))
+                    return DataFrame(out, node, (_ROWID,), (None,))
+                out = (key._sdf.filter(key._scol)
+                       .select(*[F.col(c) for c in needed]))
                 return self._derive(out, "filter",
                                     {"predicate": key._expr.op})
             # genuinely FOREIGN mask: pandas aligns it on the index
@@ -5190,7 +5036,7 @@ class DataFrame(FrameBase):
             # is the established position contract (same as where/assign)
             mask_rowid = (tuple(mf._index_cols) == (_ROWID,))
             if not self._index_cols and mask_rowid:
-                base = _anchor_rowid(self)
+                base = positions(self)
                 lidx = [_ROWID]
                 msel = mf._sdf.select(F.col(_ROWID), F.col("__mask__"))
                 # KEEP the rowid as the surviving rows' positional labels
@@ -5215,11 +5061,9 @@ class DataFrame(FrameBase):
                     F.col("__mask__"))
                 drop_rowid = False
             else:
-                # _anchor_rowid: stamped frames number by the PRESENTED
-                # order (r8 audit — the stamp-ignoring misalignment class)
-                base = _anchor_rowid(self)
+                base = positions(self)
                 lidx = [_ROWID]
-                mbase = _anchor_rowid(mf)
+                mbase = positions(mf)
                 msel = mbase.select(F.col(_ROWID), F.col("__mask__"))
                 drop_rowid = True
             joined = (base.join(msel, lidx, "left")
@@ -5294,7 +5138,7 @@ class DataFrame(FrameBase):
             from .functions import scan
             pos = scan.global_pos(base, order, "__take_pos__")
         else:
-            pos = _anchor_rowid(self, "__take_pos__")
+            pos = positions(self, "__take_pos__")
         out = (pos.filter(F.col("__take_pos__").isin(idx))
                .withColumn(_ORDER, F.array_position(
                    F.lit(idx), F.col("__take_pos__")).cast("long"))
@@ -5399,16 +5243,17 @@ class DataFrame(FrameBase):
         (pandas assign chaining: ``assign(z=..., y=lambda d: d.z + 1)``)."""
         sdf = self._sdf
         made_rowid_index = False
+
+        def _current():
+            # the frame as assigned so far (late-bound on sdf)
+            if made_rowid_index and not self._index_cols:
+                return DataFrame(sdf, self._expr, (_ROWID,), (None,))
+            return DataFrame(sdf, self._expr, self._index_cols,
+                             self._index_names)
+
         for k, v in kwargs.items():
             if callable(v) and not isinstance(v, Series):
-                tmp = DataFrame(sdf, self._expr,
-                                (_ROWID,) if made_rowid_index
-                                and not self._index_cols
-                                else self._index_cols,
-                                (None,) if made_rowid_index
-                                and not self._index_cols
-                                else self._index_names)
-                res = v(tmp)
+                res = v(_current())
                 if not isinstance(res, Series):
                     raise TypeError("assign callable must return a Series")
                 v = res    # fall through: same-anchor fast path below, or
@@ -5452,12 +5297,12 @@ class DataFrame(FrameBase):
                         # r5 wave-R2 explosion can't recur, no eager
                         # uniqueness probe needed.
                         pos = "__assign_pos2__"
-                        lsdf = _presented_rowid(sdf, pos)
+                        lsdf = positions(_current(), pos)
                         wv = Window.partitionBy(_ROWID).orderBy(pos)
                         lsdf = (lsdf.withColumn("__occ__",
                                                 F.row_number().over(wv))
                                 .drop(pos))
-                        vsdf2 = _presented_rowid(vf._sdf, pos)
+                        vsdf2 = positions(vf, pos)
                         vsdf2 = (vsdf2.withColumn(
                                     "__vocc__", F.row_number().over(
                                         Window.partitionBy(_ROWID)
@@ -5484,8 +5329,8 @@ class DataFrame(FrameBase):
                         # survivor-label stamp vs rank's re-minted dense
                         # stamp silently mispaired every row).
                         pos = "__assign_pos2__"
-                        lsdf = _presented_rowid(sdf, pos)
-                        vsel = (_presented_rowid(vf._sdf, pos)
+                        lsdf = positions(_current(), pos)
+                        vsel = (positions(vf, pos)
                                 .select(F.col(pos), F.col("__assign_v__")))
                         sdf = (lsdf.join(vsel, on=[pos], how="left")
                                .drop(pos))
@@ -5499,7 +5344,7 @@ class DataFrame(FrameBase):
                         # IS its label — one rowid equi-join (r5 wave Q)
                         vsdf = (vf._sdf
                                 if tuple(vf._index_cols) == (_ROWID,)
-                                else _anchor_rowid(vf))
+                                else positions(vf))
                         vsel = vsdf.select(F.col(_ROWID),
                                            F.col("__assign_v__"))
                         sdf = sdf.join(vsel, on=[_ROWID], how="left")
@@ -5515,7 +5360,7 @@ class DataFrame(FrameBase):
                                        how="left")
                     else:
                         vsdf = (vf._sdf if tuple(vf._index_cols) == (_ROWID,)
-                                else _anchor_rowid(vf))
+                                else positions(vf))
                         vsel = vsdf.select(F.col(_ROWID),
                                            F.col("__assign_v__"))
                         # KEEP the rowid: the join scrambles arrival
@@ -5523,7 +5368,7 @@ class DataFrame(FrameBase):
                         # nondeterministic order would silently misalign
                         # the next positional op (r5 wave Q)
                         base = (sdf if _ROWID in sdf.columns
-                                else _presented_rowid(sdf))
+                                else positions(_current()))
                         sdf = base.join(vsel, on=[_ROWID], how="left")
                         made_rowid_index = True
                     sdf = (sdf.withColumn(k, F.col("__assign_v__"))
@@ -5536,7 +5381,7 @@ class DataFrame(FrameBase):
                 # silently wrong data).  The sequence is driver-held by
                 # construction → (pos, value) broadcast join against one
                 # rowid pass; length mismatch raises like pandas.
-                sdf = _assign_positional(sdf, k, v)
+                sdf = _assign_positional(_current(), k, v)
                 continue
             else:
                 col = F.lit(v)
@@ -5731,7 +5576,8 @@ class DataFrame(FrameBase):
         # but <=> calls two nulls equal; the engine conflates NaN/None.)
         if "!=" in expr:
             expr = _rewrite_not_equal(expr)
-        lbase = _label_base(self)
+        lbase = (None if self._index_cols
+                 else positions(self, upto="pass"))
         if lbase is not None:
             # pandas query keeps the surviving rows' ORIGINAL labels —
             # same promotion as the bare boolean filter
@@ -5781,7 +5627,8 @@ class DataFrame(FrameBase):
         # pandas considers DATA columns only — defaulting the subset keeps
         # hidden engine columns (order stamp, labels) and index levels out
         # of the how='all'/thresh counts
-        lbase = _label_base(self)
+        lbase = (None if self._index_cols
+                 else positions(self, upto="pass"))
         sub = _ensure_list(subset) or self.columns
         if lbase is not None:
             # pandas keeps the surviving rows' original positional labels
@@ -6204,23 +6051,10 @@ class DataFrame(FrameBase):
         if not self._index_cols and not other._index_cols:
             # both default-indexed: pandas aligns POSITIONALLY — one
             # rowid equi-join, keeping the rowid as the result's labels
-            # (assign's wave-Q contract: a re-attach over the join's
-            # scrambled arrival order would silently misalign) (wave V).
-            # A presentation stamp (_ORDER) outranks the physical layout:
-            # a stamp-ordered, physically-scrambled frame (drop_duplicates
-            # → reset_index(drop=True), concat, melt) must number rows by
-            # the stamp, exactly as drop_duplicates itself does above.
-            from .functions import scan
-
-            def _pos(sdf):
-                if _ROWID in sdf.columns:
-                    return sdf
-                if _ORDER in sdf.columns:
-                    return scan.global_pos(sdf, [_ORDER], name=_ROWID)
-                return _attach_rowid(sdf)
-
-            lsdf = _pos(self._sdf)
-            osdf = _pos(other.to_frame("__o__")._sdf)
+            # (a re-attach over the join's scrambled arrival order would
+            # silently misalign the next positional op)
+            lsdf = positions(self)
+            osdf = positions(other.to_frame("__o__"))
             joined = lsdf.join(osdf.select(F.col(_ROWID), F.col("__o__")),
                                on=[_ROWID], how="left")
             updates = {c: (fn(F.col(c), F.col("__o__"),
@@ -6328,7 +6162,7 @@ class DataFrame(FrameBase):
         elif self._index_cols:
             sdf, order, drop_rowid = self._sdf, list(self._index_cols), False
         else:
-            sdf, order, drop_rowid = _anchor_rowid(self), [_ROWID], True
+            sdf, order, drop_rowid = positions(self), [_ROWID], True
         cols = [c for c in self.columns
                 if is_numeric(self._sdf.schema[c].dataType)]
         pos = global_pos(sdf, order)  # checkpoint-backed (r9), no persist
@@ -6502,8 +6336,8 @@ class DataFrame(FrameBase):
             cond_sdf, cidx = cond._sdf, list(cond._index_cols)
             drop_rowid = False
         else:
-            base, lidx = _anchor_rowid(self), [_ROWID]
-            cond_sdf, cidx = _anchor_rowid(cond), [_ROWID]
+            base, lidx = positions(self), [_ROWID]
+            cond_sdf, cidx = positions(cond), [_ROWID]
             drop_rowid = True
         csel = cond_sdf.select(
             *[F.col(c).alias(i) for c, i in zip(cidx, lidx)],
@@ -6511,7 +6345,7 @@ class DataFrame(FrameBase):
         joined = base.join(csel, on=lidx, how="left")
         if other_is_frame:
             other_sdf = other._sdf if self._index_cols \
-                else _anchor_rowid(other)
+                else positions(other)
             oidx = list(other._index_cols) if self._index_cols else [_ROWID]
             osel = other_sdf.select(
                 *[F.col(c).alias(i) for c, i in zip(oidx, lidx)],
@@ -6574,8 +6408,8 @@ class DataFrame(FrameBase):
         else:
             # default-index frames align POSITIONALLY (pandas
             # label==position), same rowid contract as _framewise_cond
-            base, lidx = _anchor_rowid(self), [_ROWID]
-            csel = _anchor_rowid(cf).select(F.col(_ROWID),
+            base, lidx = positions(self), [_ROWID]
+            csel = positions(cf).select(F.col(_ROWID),
                                             F.col("__cond__"))
             drop_rowid = True
         joined = base.join(csel, on=lidx, how="left")
@@ -6633,6 +6467,13 @@ class DataFrame(FrameBase):
         (TakeOrderedAndProject — no global sort).  Zero/null-weight rows
         are never selected; negative weights raise at compute (filtered
         defensively here)."""
+        # pandas sample KEEPS the original row labels: draw from the frame
+        # with valid in-scan labels bound as the rowid (pure rename) —
+        # without them, the renumbering derive (documented deviation)
+        src = positions(self, upto="label")
+        labeled = src is not None
+        if not labeled:
+            src = self._sdf
         if weights is not None:
             if replace:
                 raise NotImplementedError("sample(weights=, replace=True)")
@@ -6645,11 +6486,11 @@ class DataFrame(FrameBase):
             u = F.rand(random_state) if random_state is not None else F.rand()
             # ANSI guard: the 1/w only evaluates on positive weights
             key = F.when(w > 0, F.pow(u, F.lit(1.0) / w))
-            sampled = (self._sdf.withColumn("__wk__", key)
+            sampled = (src.withColumn("__wk__", key)
                        .filter(F.col("__wk__").isNotNull())
                        .orderBy(F.col("__wk__").desc()).limit(n)
                        .drop("__wk__"))
-            return self._sample_out(sampled,
+            return self._sample_out(sampled, labeled,
                                     {"n": n, "weighted": True,
                                      "seed": random_state})
         if frac is None:
@@ -6660,37 +6501,32 @@ class DataFrame(FrameBase):
                 # with replacement n may EXCEED the population (pandas);
                 # Poisson fractions > 1 are legal under withReplacement
                 frac_n = n / max(total, 1) * 1.2 + 10.0 / max(total, 1)
-                sampled = self._sdf.sample(withReplacement=True,
-                                           fraction=frac_n,
-                                           seed=random_state)
-                return self._sample_out(sampled.limit(n),
+                sampled = src.sample(withReplacement=True,
+                                     fraction=frac_n, seed=random_state)
+                return self._sample_out(sampled.limit(n), labeled,
                                         {"n": n, "replace": True,
-                                         "seed": random_state},
-                                        replace=True)
+                                         "seed": random_state})
             if n >= total:
                 return self._derive(self._sdf, "sample", {"n": n})
             # oversample so P(fewer than n rows) is negligible, then cap
             frac_n = min(1.0, n / total * 1.2 + 10.0 / total)
-            sampled = self._sdf.sample(withReplacement=False,
-                                       fraction=frac_n, seed=random_state)
-            return self._sample_out(sampled.limit(n),
+            sampled = src.sample(withReplacement=False,
+                                 fraction=frac_n, seed=random_state)
+            return self._sample_out(sampled.limit(n), labeled,
                                     {"n": n, "seed": random_state})
         return self._sample_out(
-            self._sdf.sample(withReplacement=replace, fraction=frac, seed=random_state),
-            {"frac": frac, "replace": replace, "seed": random_state},
-            replace=replace)
+            src.sample(withReplacement=replace, fraction=frac,
+                       seed=random_state), labeled,
+            {"frac": frac, "replace": replace, "seed": random_state})
 
-    def _sample_out(self, sampled: SparkDF, params: dict,
-                    replace: bool = False) -> "DataFrame":
-        """pandas ``sample`` KEEPS the original row labels — when the
-        frame carries valid in-scan labels, promote them to the index
-        (pure rename).  ``replace=True`` can emit DUPLICATE labels, which
-        pandas also does.  Without labels, fall back to the renumbering
-        derive (documented deviation)."""
-        if _labels_valid(self):
-            return DataFrame(sampled.withColumnRenamed(_LABEL, _ROWID),
-                             Node("sample", params, self._expr),
-                             (_ROWID,), (None,))
+    def _sample_out(self, sampled: SparkDF, labeled: bool,
+                    params: dict) -> "DataFrame":
+        """Wrap a draw: a ``labeled`` draw keeps its rowid labels as the
+        index (``replace=True`` can emit DUPLICATE labels, as pandas
+        does)."""
+        node = Node("sample", params, self._expr)
+        if labeled:
+            return DataFrame(sampled, node, (_ROWID,), (None,))
         return self._derive(sampled, "sample", params)
 
     def drop_duplicates(self, subset: Sequence[str] | None = None,
@@ -6718,7 +6554,7 @@ class DataFrame(FrameBase):
                 sdf, idx, names = self._sdf, self._index_cols, \
                     self._index_names
             else:
-                sdf, idx, names = _anchor_rowid(self), (_ROWID,), \
+                sdf, idx, names = positions(self), (_ROWID,), \
                     (None,)
             out = (sdf.withColumn("__n__", F.count(F.lit(1)).over(w))
                    .filter(F.col("__n__") == 1).drop("__n__"))
@@ -6731,19 +6567,14 @@ class DataFrame(FrameBase):
             if self._index_cols:
                 idx, names = self._index_cols, self._index_names
             else:
-                # positional labels must follow the STAMP order, not the
-                # physical layout (rand-hunt seed 96 follow-up): one
-                # ranged position pass over _ORDER
-                from .functions import scan
-                sdf = scan.global_pos(sdf, [_ORDER], name=_ROWID)
-                idx, names = (_ROWID,), (None,)
+                sdf, idx, names = positions(self), (_ROWID,), (None,)
         elif self._index_cols:
             sdf, order_col = self._sdf, self._index_cols[0]
             idx, names = self._index_cols, self._index_names
         else:
             # pandas keeps the surviving rows' original labels — anchor
             # them as the anonymous rowid index (not dropped!)
-            sdf, order_col = _anchor_rowid(self), _ROWID
+            sdf, order_col = positions(self), _ROWID
             idx, names = (_ROWID,), (None,)
         order = F.col(order_col).asc() if keep == "first" else F.col(order_col).desc()
         w = Window.partitionBy(*subset).orderBy(order)
@@ -6768,7 +6599,7 @@ class DataFrame(FrameBase):
             # keep the rowid as the anonymous engine index so the result
             # carries pandas' positional labels (the window shuffle
             # otherwise destroys row order)
-            sdf, order_col = _anchor_rowid(self), _ROWID
+            sdf, order_col = positions(self), _ROWID
             idx, names = (_ROWID,), (None,)
         if keep is False:
             w = Window.partitionBy(*subset)
@@ -6805,10 +6636,8 @@ class DataFrame(FrameBase):
             src, idx_cols, idx_names = \
                 self._sdf, self._index_cols, self._index_names
         else:
-            # pandas DUPLICATES the original row label per element —
-            # anchor positional labels as rowids (in-scan label rename
-            # when available, else the JVM attach; no shuffle either way)
-            src = _anchor_rowid(self)
+            # pandas DUPLICATES the original row label per element
+            src = positions(self)
             idx_cols, idx_names = (_ROWID,), (None,)
         # a stamped input must keep its presented order through the
         # explode; the element position extends the stamp (posexplode) and
@@ -6932,7 +6761,7 @@ class DataFrame(FrameBase):
                 # pandas sorts are STABLE: ties keep the current row
                 # order, which an indexed frame carries in its (label)
                 # index — without this, Spark's unstable sort scrambles
-                # tied rows (r7 rand-hunt seed 20078)
+                # tied rows
                 tie = self._index_cols[0]
             elif _LABEL in self._sdf.columns:
                 tie = _LABEL
@@ -6962,10 +6791,8 @@ class DataFrame(FrameBase):
                                    {"by": by, "ascending": list(asc)})
             out._sort_fuse = (self._sdf, raw, na_position, tie)
             return out
-        # positional labels: in-scan label rename, stamp-position pass,
-        # or the physical attach — all three keep pandas' preserved-
-        # labels contract; only the last costs a checkpoint
-        pre = _anchor_rowid(self)
+        # pandas keeps each row's positional label through the sort
+        pre = positions(self)
         if _ORDER in pre.columns:
             pre = pre.drop(_ORDER)
         # rowid tie break: ties land in ORIGINAL row order (stable), and
@@ -7086,12 +6913,12 @@ class DataFrame(FrameBase):
             _ROWID if tuple(self._index_cols) == (_ROWID,) else None)
         lab = False
         if not self._index_cols:
-            if _labels_valid(self):
+            lbase = positions(self, upto="label")
+            if lbase is not None:
                 # pandas tail KEEPS the original positional labels — the
-                # in-scan label column is both the reverse-TopK order and
-                # the surviving rows' index (pure rename)
-                base = base.withColumnRenamed(_LABEL, _ROWID)
-                lab, ocol = True, _ROWID
+                # in-scan labels are both the reverse-TopK order and the
+                # surviving rows' index
+                base, lab, ocol = lbase, True, _ROWID
             elif (n >= 0 and _ORDER in base.columns
                     and _ROWID not in base.columns):
                 # stamped frame: pandas labels are the dense stamp
@@ -7152,9 +6979,7 @@ class DataFrame(FrameBase):
                                self._index_names)
             pos = F.col(self._index_cols[0])
         else:
-            # in-scan labels keep the TakeOrderedAndProject shape without
-            # the checkpointing rowid attach
-            sdf = _anchor_rowid(self)
+            sdf = positions(self)
             idx, names = (_ROWID,), (None,)
             pos = F.col(_ROWID)
         if _ORDER in sdf.columns:
@@ -7207,9 +7032,8 @@ class DataFrame(FrameBase):
                 and _ROWID in sdf.columns and _ROWID not in keys):
             # pandas set_index KEEPS row order; an anonymous rowid index
             # (filter/dedup survivors) carries the presented order, so it
-            # becomes the stamp instead of vanishing (seed-96 contract,
-            # extended to set_index by the r7 hunt: dedup→set_index→
-            # reset_index presented in arrival order)
+            # becomes the stamp instead of vanishing (dedup→set_index→
+            # reset_index must present in arrival order)
             sdf = sdf.withColumnRenamed(_ROWID, _ORDER)
         stale = [c for c in self._index_cols
                  if c not in keys and c not in self.columns
@@ -7217,18 +7041,13 @@ class DataFrame(FrameBase):
         if stale:
             sdf = sdf.drop(*stale)
         if _LABEL in sdf.columns:
-            if _labels_valid(self):
-                # valid labels ARE the presented positions — demote them
-                # to the ORDER stamp: order-only information can never
-                # resurrect as stale labels (any later label derivation
-                # is a dense position pass over the stamp = exactly
-                # pandas' renumber after reset_index), and the presented
-                # order survives set_index→reset_index round trips
-                sdf = sdf.withColumnRenamed(_LABEL, _ORDER)
-            else:
-                # a stale label column must not ride dormant under the
-                # new index (resurrection guard)
-                sdf = sdf.drop(_LABEL)
+            # valid labels ARE the presented positions — demote them to
+            # the ORDER stamp: order-only information can never resurrect
+            # as stale labels, and the presented order survives
+            # set_index→reset_index round trips.  A stale label column
+            # must not ride dormant under the new index.
+            demoted = positions(self, _ORDER, upto="label")
+            sdf = demoted if demoted is not None else sdf.drop(_LABEL)
         node = Node("set_index", {"keys": keys, "drop": drop}, self._expr)
         if not drop:
             # pandas keeps the data column AND indexes by it: the INDEX
@@ -7253,7 +7072,7 @@ class DataFrame(FrameBase):
     def reset_index(self, drop: bool = False) -> "DataFrame":
         sdf = self._sdf
         if drop:
-            if _LABEL in sdf.columns and not _labels_valid(self):
+            if positions(self, upto="label") is None:
                 # pandas renumbers 0..n-1 — a STALE in-scan label must
                 # not resurrect as the index once _index_cols empties.
                 # (On a default-index frame whose labels are still the
@@ -7265,34 +7084,18 @@ class DataFrame(FrameBase):
                 # the rowid labels ARE the presented order (dedup/filter
                 # survivors) — pandas reset_index(drop=True) relabels but
                 # KEEPS row order, so the anchor becomes the stamp
-                # instead of vanishing (randomized-hunt seed 96)
+                # instead of vanishing
                 sdf = sdf.withColumnRenamed(_ROWID, _ORDER)
             else:
                 sdf = sdf.drop(*self._index_cols)
-        elif not self._index_cols and _labels_valid(self):
-            # pandas reset_index() on a default-index frame materializes
-            # the positional labels as an "index" column — the in-scan
-            # label column IS those labels (pure rename, no rowid pass)
-            sdf = sdf.select(F.col(_LABEL).alias("index"), *self.columns)
-            node = Node("reset_index", {"drop": False}, self._expr)
-            return DataFrame(sdf, node, (), ())
-        elif not self._index_cols and _ORDER in sdf.columns:
-            # stamped default-index frame (dedup→reset ancestry): the
-            # positional labels are the PRESENTED positions — one ranged
-            # pass over the stamp materializes them (r8: this case
-            # previously produced no index column at all)
-            from .functions import scan
-            sdf = scan.global_pos(sdf, [_ORDER], name="index")
-            sdf = sdf.select(F.col(_ORDER), F.col("index"), *self.columns)
-            node = Node("reset_index", {"drop": False}, self._expr)
-            return DataFrame(sdf, node, (), ())
         elif not self._index_cols:
-            # unstamped, unlabeled default-index frame: physical layout
-            # IS the presentation — attach and materialize
-            sdf = _attach_rowid(sdf, "index")
+            # pandas reset_index() on a default-index frame materializes
+            # the positional labels as an "index" column
+            sdf = positions(self, "index")
+            stamp = [F.col(_ORDER)] if _ORDER in sdf.columns else []
             node = Node("reset_index", {"drop": False}, self._expr)
-            return DataFrame(sdf.select(F.col("index"), *self.columns),
-                             node, (), ())
+            return DataFrame(sdf.select(*stamp, F.col("index"),
+                                        *self.columns), node, (), ())
         else:
             # pandas naming for unnamed levels: single index -> "index",
             # MultiIndex levels -> "level_{i}" (r5 hunt pin).  The internal
@@ -7618,7 +7421,7 @@ class DataFrame(FrameBase):
 
     def _valid_index(self, first: bool):
         sdf, icol = ((self._sdf, self._index_cols[0]) if self._index_cols
-                     else (_anchor_rowid(self), _ROWID))
+                     else (positions(self), _ROWID))
         schema = {f.name: f.dataType for f in sdf.schema.fields}
         cond = None
         for c in self.columns:
@@ -8003,7 +7806,7 @@ class DataFrame(FrameBase):
             if self._index_cols:
                 sdf, order = self._sdf, list(self._index_cols)
             else:
-                sdf, order = _anchor_rowid(self), [_ROWID]
+                sdf, order = positions(self), [_ROWID]
             n = sdf.count()
             if len(labels) != n:
                 raise ValueError(f"expected {n} labels, got {len(labels)}")
@@ -8039,7 +7842,7 @@ class DataFrame(FrameBase):
         elif self._index_cols:
             sdf, ordc = self._sdf, list(self._index_cols)
         else:
-            sdf, ordc = _anchor_rowid(self), [_ROWID]
+            sdf, ordc = positions(self), [_ROWID]
         if dropna:
             for c in subset:
                 sdf = sdf.filter(F.col(c).isNotNull())
@@ -8218,7 +8021,7 @@ class DataFrame(FrameBase):
             sdf, order = self._sdf, list(self._index_cols)
             idx, names = self._index_cols, self._index_names
         else:
-            sdf, order = _anchor_rowid(self), [_ROWID]
+            sdf, order = positions(self), [_ROWID]
             idx, names = (_ROWID,), (None,)
         specs = [(c, op, c) for c in num]
         flags = {}
@@ -8284,7 +8087,7 @@ class DataFrame(FrameBase):
             sdf, idx = self._sdf, F.col(self._index_cols[0])
             iname = self._index_names[0] if self._index_names else None
         else:
-            sdf, idx = _anchor_rowid(self), F.col(_ROWID)
+            sdf, idx = positions(self), F.col(_ROWID)
             iname = None
         aggs = []
         for c in self.columns:
@@ -8344,7 +8147,7 @@ class DataFrame(FrameBase):
             sdf, order = self._sdf, list(self._index_cols)
             idx, names = self._index_cols, self._index_names
         else:
-            sdf, order = _anchor_rowid(self), [_ROWID]
+            sdf, order = positions(self), [_ROWID]
             idx, names = (_ROWID,), (None,)
         num = [c for c in self.columns
                if is_numeric(self._sdf.schema[c].dataType)]
@@ -8442,7 +8245,7 @@ class DataFrame(FrameBase):
             sdf, order = self._sdf, list(self._index_cols)
             idx, names = self._index_cols, self._index_names
         else:
-            sdf, order = _anchor_rowid(self), [_ROWID]
+            sdf, order = positions(self), [_ROWID]
             idx, names = (_ROWID,), (None,)
         out = scan.last_scan(sdf, list(self.columns), order,
                              descending=[descending] * len(order),
@@ -8680,7 +8483,7 @@ class DataFrame(FrameBase):
         base = self
         attached = False
         if not base._index_cols:
-            sdf = _anchor_rowid(base)
+            sdf = positions(base)
             base = DataFrame(sdf, Node("rowid", {}, base._expr),
                              (_ROWID,), (None,))
             attached = True
@@ -9729,7 +9532,7 @@ class DataFrame(FrameBase):
             [c for c in self.columns if c not in ids]
         node = Node("melt", {"id_vars": ids, "value_vars": vals}, self._expr)
         anchored = (self._sdf if _ROWID in self._sdf.columns
-                    else _anchor_rowid(self))
+                    else positions(self))
         if self._index_cols:
             src, idx_cols, idx_names = \
                 anchored, self._index_cols, self._index_names
@@ -9742,7 +9545,7 @@ class DataFrame(FrameBase):
         vpos = F.array_position(
             F.array(*[F.lit(v) for v in vals]), F.col(var_name))
         if anchor == _ROWID and (_column_major or False):
-            # the rowid is DENSE (0..n-1, _attach_rowid) — the
+            # the rowid is DENSE (0..n-1, positions) — the
             # column-major stamp packs arithmetically as
             # (variable << 44) | rowid, keeping melt a narrow no-shuffle
             # op (valid to 17.6e12 source rows / 2^19 variables)
@@ -9792,9 +9595,8 @@ class DataFrame(FrameBase):
         from_index = False
         if id_vars is None:
             if not self._index_cols:
-                # pandas keys a bare stack() on the (positional) index —
-                # anchor it as rowids (JVM attach, no shuffle)
-                base = DataFrame(_anchor_rowid(self),
+                # pandas keys a bare stack() on the (positional) index
+                base = DataFrame(positions(self),
                                  Node("rowid", {}, self._expr),
                                  (_ROWID,), (None,))
             id_vars = list(base._index_cols)
@@ -9910,7 +9712,7 @@ class DataFrame(FrameBase):
         if self._index_cols:
             sdf, idx, names = self._sdf, self._index_cols, self._index_names
         else:
-            sdf, idx, names = _anchor_rowid(self), (_ROWID,), (None,)
+            sdf, idx, names = positions(self), (_ROWID,), (None,)
         fields = [sdf.schema[c] for c in idx] + \
                  [T.StructField("__applied__", vtype)]
         schema = T.StructType(fields)
@@ -10263,9 +10065,7 @@ class DataFrame(FrameBase):
 def _frame_with_index(df: DataFrame) -> DataFrame:
     if df._index_cols:
         return df
-    # in-scan positional labels ARE the default index — pure rename
-    # instead of the checkpointing rowid attach
-    sdf = _anchor_rowid(df)
+    sdf = positions(df)
     return DataFrame(sdf, df._expr, (_ROWID,), (None,))
 
 
@@ -10573,20 +10373,9 @@ class _LocIndexer:
         """Positional boolean-list mask (pandas: length must equal the
         row count; True rows kept in order)."""
         # a distinct anchor name: an indexed frame may already carry
-        # _ROWID as its index column (filter survivors) — reusing the
-        # name would collide (r8 hunt seed 30059)
+        # _ROWID as its index column (filter survivors)
         pos = "__loc_pos__"
-        if not f._index_cols:
-            sdf = _anchor_rowid(f, pos)
-        elif (tuple(f._index_cols) == (_ROWID,)
-                and _ORDER not in f._sdf.columns):
-            # unstamped rowid-labeled frame (alignment-join outputs)
-            # presents in label order — positions follow the labels,
-            # not the scrambled physical layout (r8 review)
-            from .functions import scan
-            sdf = scan.global_pos(f._sdf, [_ROWID], name=pos)
-        else:
-            sdf = _presented_rowid(f._sdf, pos)
+        sdf = positions(f, pos)
         n = sdf.count()
         if n != len(key):
             raise IndexError(
@@ -10775,16 +10564,12 @@ class _ILocIndexer:
                 stop = -1 if key.stop is None else (
                     key.stop if key.stop >= 0 else n + key.stop)
                 if f._index_cols:
-                    sdf = f._sdf
-                    order = [_ORDER] if _ORDER in sdf.columns \
+                    order = [_ORDER] if _ORDER in f._sdf.columns \
                         else list(f._index_cols)
-                    rev_mode = "indexed"
-                elif _ORDER in f._sdf.columns:
-                    sdf, order, rev_mode = f._sdf, [_ORDER], "pos_as_label"
+                    pos = scan.global_pos(f._sdf, order)
                 else:
-                    sdf, order, rev_mode = _anchor_rowid(f), [_ROWID], \
-                        "anchor"
-                pos = scan.global_pos(sdf, order)
+                    # unindexed: the position column doubles as the label
+                    pos = positions(f, "__pos__")
                 cond = ((F.col("__pos__") <= start)
                         & (F.col("__pos__") > stop)
                         & ((start - F.col("__pos__")) % s == 0))
@@ -10793,26 +10578,14 @@ class _ILocIndexer:
                 # pandas keeps labels through a reversal; the reversed
                 # presentation rides the _ORDER stamp (downstream scans
                 # prefer the stamp; a bare orderBy would be elided by
-                # Catalyst before the next exchange) — r7: was
-                # renumbering
+                # Catalyst before the next exchange)
                 new_stamp = ((F.lit(start) - F.col("__pos__"))
                              / F.lit(s)).cast("long")
-                if rev_mode == "pos_as_label":
-                    # stamped, unindexed: pandas labels = the dense PRE-
-                    # reversal stamp positions
-                    out = (hit.withColumnRenamed("__pos__", _ROWID)
-                           .withColumn(_ORDER, (F.lit(start)
-                                                - F.col(_ROWID))
-                                       / F.lit(s))
-                           .withColumn(_ORDER,
-                                       F.col(_ORDER).cast("long")))
-                    return DataFrame(out, node, (_ROWID,), (None,))
-                if rev_mode == "anchor":
-                    out = (hit.withColumn(_ORDER, new_stamp)
-                           .drop("__pos__"))
-                    return DataFrame(out, node, (_ROWID,), (None,))
-                out = hit.withColumn(_ORDER, new_stamp).drop("__pos__")
-                return DataFrame(out, node, f._index_cols,
+                out = hit.withColumn(_ORDER, new_stamp)
+                if not f._index_cols:
+                    return DataFrame(out.withColumnRenamed("__pos__", _ROWID),
+                                     node, (_ROWID,), (None,))
+                return DataFrame(out.drop("__pos__"), node, f._index_cols,
                                  f._index_names)
             start, stop = key.start, key.stop
             if (start is not None and start < 0) or \
@@ -10831,22 +10604,14 @@ class _ILocIndexer:
             if step == 1 and start == 0:
                 return f.head(stop)
             from .functions import scan
-            # positions follow the PRESENTED order: the stamp when one
-            # exists (sorted/concat/reversed ancestry), else the index,
-            # else the label/physical anchor (r7 rand-hunt: a stamped
-            # frame's index order is NOT its presentation)
-            promote = None
             if f._index_cols:
-                sdf = f._sdf
-                order = [_ORDER] if _ORDER in sdf.columns \
+                # a stamped frame's index order is NOT its presentation
+                order = [_ORDER] if _ORDER in f._sdf.columns \
                     else list(f._index_cols)
-            elif _ORDER in f._sdf.columns:
-                # stamped, unindexed: pandas labels ARE the dense stamp
-                # positions — the position column doubles as the label
-                sdf, order, promote = f._sdf, [_ORDER], "pos_as_label"
+                pos = scan.global_pos(f._sdf, order)
             else:
-                sdf, order, promote = _anchor_rowid(f), [_ROWID], "anchor"
-            pos = scan.global_pos(sdf, order)
+                # unindexed: the position column doubles as the label
+                pos = positions(f, "__pos__")
             cond = F.col("__pos__") >= start
             if stop is not None:
                 cond = cond & (F.col("__pos__") < stop)
@@ -10855,15 +10620,12 @@ class _ILocIndexer:
             hit = pos.filter(cond)
             node = Node("iloc", {"start": start, "stop": stop,
                                  "step": step}, f._expr)
-            if promote == "pos_as_label":
+            if not f._index_cols:
+                # pandas keeps the sliced rows' ORIGINAL positional labels
                 out = hit.withColumnRenamed("__pos__", _ROWID)
                 return DataFrame(out, node, (_ROWID,), (None,))
-            out = hit.drop("__pos__")
-            if promote == "anchor":
-                # pandas keeps the sliced rows' ORIGINAL positional labels
-                return DataFrame(out, node, (_ROWID,), (None,))
-            return f._derive(out, "iloc", {"start": start, "stop": stop,
-                                           "step": step})
+            return f._derive(hit.drop("__pos__"), "iloc",
+                             {"start": start, "stop": stop, "step": step})
         if isinstance(key, (int, np.integer)):
             # pandas: df.iloc[i] is the ROW as a Series (name = the index
             # label at that position); one bounded 1-row collect

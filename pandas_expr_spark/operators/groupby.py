@@ -368,14 +368,11 @@ class GroupBy:
         min(struct(-value, idx)) for idxmax on numeric columns (bare
         min_by/max_by leave the tie arbitrary — silent wrong labels).  A
         positional (trivial) index materializes the 0..n-1 row labels
-        first via the distributed ``global_pos`` scan — ONE extra range
-        shuffle, never a single-task window."""
+        first (``positions``), never a single-task window."""
         idx_cols = self._frame._index_cols
         if not idx_cols:
-            from .._collection import _ROWID, _attach_rowid
-            from ..functions import scan
-            base = scan.global_pos(_attach_rowid(self._frame._sdf),
-                                   [_ROWID]).drop(_ROWID)
+            from .._collection import positions
+            base = positions(self._frame, "__pos__")
             if self._dropna:
                 for b in self._by:
                     base = base.filter(F.col(b).isNotNull())
@@ -615,14 +612,16 @@ class GroupBy:
         a frame-returning func keeps the applyInPandas path; a
         SCALAR-returning func (``g.apply(lambda g: g.v.corr(g.i))``)
         becomes a key-indexed Series — one row per group."""
-        from .._collection import DataFrame, Series, _LABEL
-        if _LABEL in self._frame._sdf.columns:
-            # the hidden in-scan label column must never reach the user's
-            # function (or the inferred schema)
+        from .._collection import DataFrame, Series
+        public = set(self._frame.to_spark().columns)
+        hidden = [c for c in self._frame._sdf.columns if c not in public]
+        if hidden:
+            # hidden engine columns (labels, stamps, rowid index) must
+            # never reach the user's function (or the inferred schema)
             inner = func
 
             def _vis(pdf):
-                return inner(pdf.drop(columns=[_LABEL], errors="ignore"))
+                return inner(pdf.drop(columns=hidden, errors="ignore"))
             func = _vis
         sl = list(getattr(self, "_slice", None) or [])
         if sl:
@@ -755,9 +754,9 @@ class GroupBy:
 
     # -- positional window ops (pandas groupby.shift/rank/cum*; `IX` §1.5).
     # All are ONE window = one shuffle on the group keys; row order comes
-    # from the engine index when present, else an attached monotonic rowid.
+    # from the stamp or the engine index when present, else the positions.
     def _positional(self):
-        from .._collection import _ORDER, _ROWID, _attach_rowid
+        from .._collection import _ORDER, _ROWID, positions
         if _ORDER in self._frame._sdf.columns:
             # a sort/nlargest stamped the presentation order — grouped
             # positional ops (cum*, shift, head/tail) follow IT within
@@ -765,8 +764,7 @@ class GroupBy:
             return self._frame._sdf, [_ORDER], None
         if self._frame._index_cols:
             return self._frame._sdf, list(self._frame._index_cols), None
-        sdf = _attach_rowid(self._frame._sdf)
-        return sdf, [_ROWID], _ROWID
+        return positions(self._frame), [_ROWID], _ROWID
 
     # grouped ops that REMOVE null-key rows under dropna=True (pandas);
     # every other grouped positional op KEEPS the row and nulls the value
@@ -1651,11 +1649,10 @@ class Resampler(GroupBy):
         if getattr(self, "_slice", None):
             vcols = list(self._slice)
         else:
-            from .._collection import _ROWID, _ORDER, _LABEL
-            vcols = [f.name for f in orig.schema.fields
-                     if f.name != on and f.name not in self._extra_by
-                     and f.name not in (_ROWID, _ORDER, _LABEL)
-                     and isinstance(f.dataType, T.NumericType)]
+            vcols = [c for c in self._frame.columns
+                     if c != on and c not in self._extra_by
+                     and isinstance(orig.schema[c].dataType,
+                                    T.NumericType)]
         bare = getattr(self, "_slice_scalar", False) and len(vcols) == 1
         pos = F.col(on)
         aggs = []

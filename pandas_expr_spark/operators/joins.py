@@ -313,7 +313,7 @@ def merge_asof(left, right, on: str, by=None, direction: str = "backward",
     timestamp keys) nulls out matches farther than the bound — a pure
     post-window filter on the carried match key, no extra shuffle.
     """
-    from .._collection import DataFrame, _ROWID, _attach_rowid
+    from .._collection import DataFrame, _ORDER, order_key
 
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError("direction must be 'backward', 'forward' "
@@ -325,17 +325,18 @@ def merge_asof(left, right, on: str, by=None, direction: str = "backward",
     rvals = [c for c in right.columns if c != on and c not in by]
     rout = {c: (c + suffixes[1] if c in collide else c) for c in rvals}
 
-    # pandas returns rows in LEFT order (fresh RangeIndex): anchor the
-    # left side's positions as rowids and carry them to the result index
-    lsdf = _attach_rowid(left._sdf).select(
+    # pandas returns rows in LEFT order (fresh RangeIndex): the left
+    # side's order key becomes the result's presentation stamp
+    lsdf, (lkey,) = order_key(left)
+    lsdf = lsdf.select(
         *[F.col(c).alias(lout[c]) for c in left.columns],
-        F.col(_ROWID),
+        F.col(lkey).cast("long").alias(_ORDER),
         F.lit(1).alias("__side__"))
     rsdf = right._sdf.select(
         *by, F.col(on),
         *[F.col(c).alias(rout[c]) for c in rvals],
         F.col(on).alias("__asof_on__"),  # carried match key for tolerance
-        F.lit(None).cast("long").alias(_ROWID),
+        F.lit(None).cast("long").alias(_ORDER),
         F.lit(0).alias("__side__"))
     for c in lout.values():
         if c not in rsdf.columns:
@@ -356,7 +357,7 @@ def merge_asof(left, right, on: str, by=None, direction: str = "backward",
           .rowsBetween(Window.unboundedPreceding, 0))
     wf = (Window.partitionBy(*by).orderBy(F.col(on).desc(), side_order.asc())
           .rowsBetween(Window.unboundedPreceding, 0))
-    keep = [lout[c] for c in left.columns] + [_ROWID]
+    keep = [lout[c] for c in left.columns] + [_ORDER]
 
     # With `by` keys the windows above shuffle once on `by` — fine.  With
     # NO keys they'd be global windows (all rows through one task), so the
@@ -451,7 +452,7 @@ def merge_asof(left, right, on: str, by=None, direction: str = "backward",
     node = Node("merge_asof", {"on": on, "by": tuple(by),
                                "direction": direction},
                 left._expr, right._expr)
-    return DataFrame(out, node, (_ROWID,), (None,))
+    return DataFrame(out, node, (), ())
 
 
 def interval_join(left, right, point: str, start: str, end: str,

@@ -34,15 +34,10 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
         # with canonical level column names — otherwise a mix of
         # default-index and labeled frames fails the recursive concat's
         # shared-index check and silently drops the key level (r5 pin)
-        from .._collection import (_ROWID, _attach_rowid, _LABEL,
-                                   _labels_valid)
-        norm = []
-        for f in frames:
-            if not f._index_cols:
-                sdf = (f._sdf.withColumnRenamed(_LABEL, _ROWID)
-                       if _labels_valid(f) else _attach_rowid(f._sdf))
-                f = DataFrame(sdf, f._expr, (_ROWID,), (None,))
-            norm.append(f)
+        from .._collection import _ROWID, positions
+        norm = [f if f._index_cols
+                else DataFrame(positions(f), f._expr, (_ROWID,), (None,))
+                for f in frames]
         depth = len(norm[0]._index_cols)
         if any(len(f._index_cols) != depth for f in norm):
             raise ValueError(
@@ -97,28 +92,19 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
     # each input's presentation-order stamp/anchor is only meaningful
     # WITHIN that input — union'd stamps collide.  Re-anchor every
     # default/rowid-index input to a DENSE within-input position
-    # ``__cpos__`` (stamped frames pay one ranged position pass; rowid
-    # labels and plain frames are already dense-bounded), then mint the
-    # result stamp arithmetically as (input_k << 44) | __cpos__ — the
-    # presented order survives the union with NO global sort, even when
-    # an input's physical layout is scrambled (rand-hunt seed 24:
-    # dedup → concat(ignore_index=True) → dedup lost row order).
+    # ``__cpos__``, then mint the result stamp arithmetically as
+    # (input_k << 44) | __cpos__ — the presented order survives the union
+    # with NO global sort, even when an input's physical layout is
+    # scrambled.
     from pyspark.sql import functions as F
-    from .._collection import (_ORDER as _ORD, _ROWID as _RID,
-                               _attach_rowid, _LABEL, _labels_valid)
-    from ..functions import scan
+    from .._collection import _ORDER as _ORD, _ROWID as _RID, positions
     anchored, labeled = [], False
     for k, f in enumerate(frames):
-        sdf = f._sdf
-        if _ORD in sdf.columns:
-            sdf = scan.global_pos(sdf, [_ORD], name="__cpos__").drop(_ORD)
-        elif tuple(f._index_cols) == (_RID,):
-            sdf = sdf.withColumn("__cpos__", F.col(_RID))
-        elif not f._index_cols:
-            # in-scan labels ARE the dense positions — pure rename
-            sdf = (sdf.withColumnRenamed(_LABEL, "__cpos__")
-                   if _labels_valid(f)
-                   else _attach_rowid(sdf, name="__cpos__"))
+        if tuple(f._index_cols) == (_RID,) and _ORD not in f._sdf.columns:
+            # rowid labels are dense-bounded already
+            sdf = f._sdf.withColumn("__cpos__", F.col(_RID))
+        elif not f._index_cols or _ORD in f._sdf.columns:
+            sdf = positions(f, "__cpos__").drop(_ORD)
         else:
             labeled = True
             break
@@ -202,8 +188,7 @@ def _concat_axis1(frames: Sequence, join: str):
     (Spark columns must be unique; pandas would keep both)."""
     from functools import reduce as _reduce
     from pyspark.sql import functions as F
-    from .._collection import (DataFrame, Series, _ROWID, _attach_rowid,
-                               _LABEL, _labels_valid)
+    from .._collection import DataFrame, Series, _ROWID, positions
 
     if join not in ("outer", "inner"):
         raise ValueError(f"join must be 'inner' or 'outer', got {join!r}")
@@ -219,9 +204,7 @@ def _concat_axis1(frames: Sequence, join: str):
         if f._index_cols:
             sdf = f._sdf.select(F.col(f._index_cols[0]).alias(IDX), *f.columns)
         else:
-            base = (f._sdf.withColumnRenamed(_LABEL, _ROWID)
-                    if _labels_valid(f) else _attach_rowid(f._sdf))
-            sdf = base.select(F.col(_ROWID).alias(IDX), *f.columns)
+            sdf = positions(f).select(F.col(_ROWID).alias(IDX), *f.columns)
         sides.append(sdf)
     out = _reduce(lambda a, b: a.join(b, on=IDX, how="full" if join == "outer"
                                       else "inner"), sides)
@@ -236,24 +219,13 @@ def _concat_axis1(frames: Sequence, join: str):
     return DataFrame(out, node, (IDX,), (None,))
 
 
-def _setop_base(frame):
-    """A frame's ROW-VALUE projection for set operations: synthetic
-    engine columns (in-scan labels, presentation stamps, anonymous rowid
-    indexes) are never part of row equality — a stamp or label difference
-    must not make two equal rows unequal (and mismatched hidden columns
-    would crash INTERSECT outright)."""
-    from .._collection import _LABEL, _ORDER, _ROWID
-    sdf = frame._sdf
-    drop = [c for c in (_LABEL, _ORDER) if c in sdf.columns]
-    if _ROWID in sdf.columns and _ROWID in tuple(frame._index_cols):
-        drop.append(_ROWID)
-    return sdf.drop(*drop) if drop else sdf
-
-
 def union(left, right, distinct: bool = False):
     from .._collection import DataFrame
-    out = _setop_base(left).unionByName(_setop_base(right),
-                                        allowMissingColumns=True)
+    # set operations compare ROW VALUES: to_spark() leaves out the
+    # synthetic engine columns (labels, stamps, rowid indexes), which must
+    # never make two equal rows unequal or crash INTERSECT on a mismatch
+    out = left.to_spark().unionByName(right.to_spark(),
+                                      allowMissingColumns=True)
     if distinct:
         out = out.distinct()
     return DataFrame(out, Node("union", {"distinct": distinct},
@@ -262,7 +234,7 @@ def union(left, right, distinct: bool = False):
 
 def intersect(left, right, all: bool = False):
     from .._collection import DataFrame
-    l, r = _setop_base(left), _setop_base(right)
+    l, r = left.to_spark(), right.to_spark()
     out = l.intersectAll(r) if all else l.intersect(r)
     return DataFrame(out, Node("intersect", {"all": all},
                                left._expr, right._expr), (), None)
@@ -270,7 +242,7 @@ def intersect(left, right, all: bool = False):
 
 def except_(left, right, all: bool = False):
     from .._collection import DataFrame
-    l, r = _setop_base(left), _setop_base(right)
+    l, r = left.to_spark(), right.to_spark()
     out = l.exceptAll(r) if all else l.subtract(r)
     return DataFrame(out, Node("except", {"all": all},
                                left._expr, right._expr), (), None)

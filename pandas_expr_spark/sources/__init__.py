@@ -279,8 +279,8 @@ def read_csv(path: str, usecols: Sequence[str] | None = None,
             raise NotImplementedError(
                 "read_csv(skiprows=) cannot skip the header line")
         if drop:
-            from .._collection import _attach_rowid, _ROWID
-            sdf = (_attach_rowid(sdf)
+            from .._collection import _ROWID, positions
+            sdf = (positions(DataFrame(sdf, node))
                    .filter(~F.col(_ROWID).isin(list(drop)))
                    .drop(_ROWID))
     if nrows is not None:

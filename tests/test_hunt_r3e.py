@@ -117,7 +117,7 @@ def test_grouped_rank_aligns_on_default_index(spark):
 
 
 def test_attach_rowid_jvm_positional(spark):
-    from pandas_expr_spark._collection import _ROWID, _attach_rowid
+    from pandas_expr_spark._order import _ROWID, _attach_rowid
     sdf = spark.range(0, 500, 1, 9).filter("id % 3 != 0") \
         .selectExpr("id as v")
     rows = _attach_rowid(sdf).orderBy("v").collect()

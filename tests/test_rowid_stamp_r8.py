@@ -23,8 +23,8 @@ REF = BASE.drop_duplicates(subset=["g"]).reset_index(drop=True)
 M = len(REF)
 
 
-def stamped():
-    return (pes.from_pandas(BASE)
+def stamped(base=BASE):
+    return (pes.from_pandas(base)
             .drop_duplicates(subset=["g"]).reset_index(drop=True))
 
 
@@ -195,3 +195,58 @@ def test_frame_compute_object_index_nan():
     fx = (pes.from_pandas(pd.DataFrame({"k": ["a", None], "v": [1, 2]}))
           .set_index("k").compute())
     assert not any(x is None for x in fx.index)
+
+
+# ------------------------------------------- ops that skipped the stamp
+def test_concat_axis1_positional_frame():
+    oth = pd.DataFrame({"z": np.arange(M) * 10})
+    got = pes.concat([stamped()[["v"]], pes.from_pandas(oth)],
+                     axis=1).compute()
+    exp = pd.concat([REF[["v"]], oth], axis=1)
+    eq_vals(got["v"].tolist(), exp["v"].tolist())
+    eq_vals(got["z"].tolist(), exp["z"].tolist())
+
+
+def test_concat_keys():
+    got = pes.concat([stamped()[["v"]], stamped()[["i"]]],
+                     keys=["a", "b"]).compute()
+    exp = pd.concat([REF[["v"]], REF[["i"]]], keys=["a", "b"])
+    assert got.index.tolist() == exp.index.tolist()
+    eq_vals(got["v"].tolist(), exp["v"].tolist())
+    eq_vals(got["i"].tolist(), exp["i"].tolist())
+
+
+def test_groupby_idxmax_labels():
+    st = stamped()
+    got = st.groupby("g").v.idxmax().compute()
+    exp = REF.groupby("g").v.idxmax()
+    eq_vals(got.sort_index().tolist(), exp.tolist())
+    gotf = st.groupby("i")[["v"]].idxmax().compute().sort_index()
+    expf = REF.groupby("i")[["v"]].idxmax()
+    eq_vals(gotf["v"].tolist(), expf["v"].tolist())
+
+
+def test_frame_ewm_and_expanding():
+    st = stamped()[["v", "i"]]
+    got = st.ewm(alpha=0.3).mean().compute()
+    exp = REF[["v", "i"]].ewm(alpha=0.3).mean()
+    eq_vals(got.index.tolist(), exp.index.tolist())
+    eq_vals(got["v"].tolist(), exp["v"].tolist())
+    got = st.expanding().sum().compute()
+    exp = REF[["v", "i"]].expanding().sum()
+    eq_vals(got.index.tolist(), exp.index.tolist())
+    eq_vals(got["v"].tolist(), exp["v"].tolist())
+
+
+def test_merge_asof_stamped_left():
+    # t rises in row order, so the dedup survivors stay sorted on it
+    based = BASE.assign(t=np.arange(N))
+    left = stamped(based)[["t", "v"]]
+    rpdf = pd.DataFrame({"t": np.arange(0, N, 3), "w": np.arange(0, N, 3) * 2})
+    got = pes.merge_asof(left, pes.from_pandas(rpdf), on="t").compute()
+    ref = based.drop_duplicates(subset=["g"]).reset_index(drop=True)
+    exp = pd.merge_asof(ref[["t", "v"]], rpdf, on="t")
+    eq_vals(got["t"].tolist(), exp["t"].tolist())
+    eq_vals(got["v"].tolist(), exp["v"].tolist())
+    eq_vals(got["w"].tolist(), exp["w"].tolist())
+    assert got.index.tolist() == exp.index.tolist()
