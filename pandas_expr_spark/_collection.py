@@ -426,6 +426,59 @@ def _order_cols(sdf: SparkDF) -> list:
     return out
 
 
+def _positional_order(frame):
+    """``(sdf, order_cols, idx_cols, idx_names)``: the row order every
+    positional op (cum*, shift/diff, fills, interpolate, rolling/
+    expanding/ewm) runs in, and the index its result carries.  A stamp
+    wins — a sort keeps its labels but presents in stamp order — then the
+    index, then the frame's positions, which become the result's index.
+    An unindexed stamped frame keeps no index: ``compute()`` presents it
+    in stamp order with a RangeIndex, so it needs no position pass."""
+    sdf = frame._sdf
+    if _ORDER in sdf.columns:
+        return sdf, [_ORDER], frame._index_cols, frame._index_names
+    if frame._index_cols:
+        return (sdf, list(frame._index_cols), frame._index_cols,
+                frame._index_names)
+    return positions(frame), [_ROWID], (_ROWID,), (None,)
+
+
+def _frame_column(frame, col: str, name) -> "Series":
+    """Column ``col`` of a positional op's frame result, as a Series
+    named ``name``."""
+    return Series(frame._sdf, F.col(col), name, frame._expr,
+                  frame._index_cols, frame._index_names)
+
+
+def _ewm_alpha(com, span, halflife, alpha) -> float:
+    """pandas' ewm decay: exactly one of com/span/halflife/alpha."""
+    import math
+    given = [x is not None for x in (com, span, halflife, alpha)]
+    if sum(given) != 1:
+        raise ValueError("pass exactly one of com, span, halflife, alpha")
+    if com is not None:
+        return 1.0 / (1.0 + com)
+    if span is not None:
+        return 2.0 / (span + 1.0)
+    if halflife is not None:
+        return 1.0 - math.exp(-math.log(2.0) / halflife)
+    return alpha
+
+
+def _pct_ratio(c: Column, prev: Column) -> Column:
+    """``c / prev - 1`` with pandas' zero-divisor semantics (x/0 → ±inf,
+    0/0 → NaN), not the ANSI divide-by-zero error.  IEEE sign rule incl.
+    NEGATIVE zero: x/-0.0 = -sign(x)·inf — ±0.0 is distinguishable only
+    via its string form ("-0.0"), signum gives 0 for both."""
+    neg_zero = prev.cast("string").startswith("-")
+    inf_sign = F.when(neg_zero, -F.signum(c)).otherwise(F.signum(c))
+    ratio = (F.when(prev.isNull(), F.lit(None).cast("double"))
+             .when(prev != 0, c / prev)
+             .when(c == 0, F.lit(float("nan")))
+             .otherwise(F.lit(float("inf")) * inf_sign))
+    return ratio - F.lit(1)
+
+
 # Node ops whose boolean output is a pandas MASK (False at missing
 # operands), as opposed to a nullable boolean data column — consulted by
 # Series.compute's null→False boundary fill.
@@ -2149,83 +2202,39 @@ class Series(FrameBase):
         return Series(out, F.col("__rank__"), self._col_name, node,
                       self._index_cols, self._index_names)
 
-    # -- positional family: distributed segment scans (functions/scan.py) —
-    # never a global single-task window (SURVEY §2.7 superset) -----------
+    # -- positional family: each op lowers through the DataFrame kernel on
+    # the one-column frame (functions/scan.py segment scans — never a
+    # global single-task window, SURVEY §2.7 superset) -----------------
     def _ordered_base(self, extra: list[Column] | None = None):
-        """(sdf, value_name, order_cols, index_cols) with the value column
-        materialized and a positional rowid attached when no index exists."""
-        name = self._col_name or "__v__"
-        sel = [self._scol.alias(name)] + (extra or [])
-        if _ORDER in self._sdf.columns:
-            # a sort/nlargest stamped the presentation order — positional
-            # scans follow IT, not the (label-preserving) index order
-            if self._index_cols:
-                sdf = self._sdf.select(
-                    F.col(_ORDER),
-                    *[F.col(c) for c in self._index_cols], *sel)
-                return sdf, name, [_ORDER], self._index_cols
-            # no index (sort_values(ignore_index=True) ancestry): keep the
-            # stamp as the ORDER column only — adopting it as the row
-            # labels would expose raw monotonically-increasing-id values
-            # (0,1,...,8589934592,...) where pandas shows 0..n-1 (r5
-            # advice).  No index cols → compute() emits a RangeIndex in
-            # stamped order, exactly pandas.
-            sdf = self._sdf.select(F.col(_ORDER), *sel)
-            return sdf, name, [_ORDER], ()
-        if self._index_cols:
-            sdf = self._sdf.select(*[F.col(c) for c in self._index_cols], *sel)
-            return sdf, name, list(self._index_cols), self._index_cols
-        sdf = positions(self).select(F.col(_ROWID), *sel)
-        return sdf, name, [_ROWID], (_ROWID,)
+        """(sdf, value_name, order_cols, index_cols): the value column
+        materialized next to the order ``_positional_order`` picks."""
+        name = self._pos_col
+        sdf, order, idx, _ = _positional_order(self)
+        keep = [F.col(c) for c in dict.fromkeys([*order, *idx])]
+        return (sdf.select(*keep, self._scol.alias(name), *(extra or [])),
+                name, order, idx)
 
-    def _cumop(self, op: str, skipna: bool = True) -> "Series":
-        from .functions import scan
-        if op in ("sum", "prod") and isinstance(
-                self._sdf.select(self._scol.alias("__t__"))
-                .schema["__t__"].dataType, T.BooleanType):
-            # pandas casts bool to int for cumulative sum/prod
-            return self._with_scol(self._scol.cast("long"),
-                                   "astype")._cumop(op, skipna)
-        sdf, name, order, idx = self._ordered_base()
-        if skipna:
-            out = scan.prefix_scan(sdf, [(name, op, name)], order)
-        else:
-            # pandas skipna=False: NaN poisons the accumulation from its
-            # first occurrence on — a second cummax scan over a null flag,
-            # fused into the SAME single-pass segment scan.
-            flag = "__nullseen__"
-            base = sdf.withColumn(
-                flag, F.when(F.col(name).isNull(), F.lit(1)).otherwise(F.lit(0)))
-            out = scan.prefix_scan(base, [(name, op, name), (flag, "max", flag)],
-                                   order)
-            out = (out.withColumn(name, F.when(F.col(flag) == 1, F.lit(None))
-                                  .otherwise(F.col(name)))
-                   .drop(flag))
-        node = Node(f"cum{op}", {"skipna": skipna}, self._expr)
-        return Series(out, F.col(name), self._col_name, node, idx,
-                      self._index_names if self._index_cols else (None,))
+    @property
+    def _pos_col(self) -> str:
+        """The column name this Series takes in its one-column frame."""
+        n = self._col_name
+        return n if isinstance(n, str) and n else "__v__"
 
-    def cumsum(self, skipna: bool = True): return self._cumop("sum", skipna)
-    def cumprod(self, skipna: bool = True): return self._cumop("prod", skipna)
-    def cummax(self, skipna: bool = True): return self._cumop("max", skipna)
-    def cummin(self, skipna: bool = True): return self._cumop("min", skipna)
+    def cumsum(self, skipna: bool = True):
+        return self._via_frame(lambda f, _n: f.cumsum(skipna=skipna),
+                               "cumsum")
 
-    def _pos_shifted(self, periods: int):
-        """Self-join on the global position: row at pos p sees the value
-        from pos p-periods.  Fully distributed — one range shuffle for the
-        position, one equi-join (no window)."""
-        from .functions import scan
-        sdf, name, order, idx = self._ordered_base()
-        # no persist (r9): global_pos output is checkpoint-backed inside
-        # the scan op; both join sides re-read the pinned blocks plus a
-        # cheap local-broadcast join — persisting again double-caches
-        pos = scan.global_pos(sdf, order)
-        shifted = pos.select(
-            (F.col("__pos__") + F.lit(periods)).alias("__pos__"),
-            F.col(name).alias("__shifted__"),
-            F.lit(1).alias("__src__"))
-        out = pos.join(shifted, "__pos__", "left").drop("__pos__")
-        return out, name, idx
+    def cumprod(self, skipna: bool = True):
+        return self._via_frame(lambda f, _n: f.cumprod(skipna=skipna),
+                               "cumprod")
+
+    def cummax(self, skipna: bool = True):
+        return self._via_frame(lambda f, _n: f.cummax(skipna=skipna),
+                               "cummax")
+
+    def cummin(self, skipna: bool = True):
+        return self._via_frame(lambda f, _n: f.cummin(skipna=skipna),
+                               "cummin")
 
     def shift(self, periods: int = 1, fill_value=None,
               freq: str | None = None) -> "Series":
@@ -2246,56 +2255,18 @@ class Series(FrameBase):
                               self._index_cols, self._index_names)
             return self._with_scol(
                 self._scol + _freq_interval(freq, periods), "shift_freq")
-        out, name, idx = self._pos_shifted(periods)
-        val = F.col("__shifted__")
-        if fill_value is not None:
-            # pandas fills only positions shifted in from beyond the
-            # boundary — NaNs that were already in the data stay NaN, so
-            # keying on the join-miss flag, not on null-ness of the value
-            val = F.when(F.col("__src__").isNull(),
-                         F.lit(fill_value)).otherwise(val)
-        out = out.select(*[F.col(c) for c in idx], *_order_cols(out),
-                         val.alias(name))
-        node = Node("shift", {"periods": periods}, self._expr)
-        return Series(out, F.col(name), self._col_name, node, idx,
-                      self._index_names if self._index_cols else (None,))
+        return self._via_frame(lambda f, _n: f.shift(periods, fill_value),
+                               "shift", periods=periods)
 
     def diff(self, periods: int = 1) -> "Series":
-        out, name, idx = self._pos_shifted(periods)
-        val = (F.col(name) - F.col("__shifted__")).alias(name)
-        out = out.select(*[F.col(c) for c in idx], *_order_cols(out),
-                         val)
-        node = Node("diff", {"periods": periods}, self._expr)
-        return Series(out, F.col(name), self._col_name, node, idx,
-                      self._index_names if self._index_cols else (None,))
+        return self._via_frame(lambda f, _n: f.diff(periods), "diff",
+                               periods=periods)
 
     def pct_change(self, periods: int = 1,
                    fill_method: str | None = "pad") -> "Series":
-        # pandas (current) default pad-fills missing values before the
-        # ratio (deprecated but live); fill_method=None computes raw
-        if fill_method in ("pad", "ffill"):
-            return self.ffill().pct_change(periods, fill_method=None)
-        if fill_method is not None:
-            raise ValueError(f"fill_method must be 'pad'/'ffill'/None, "
-                             f"got {fill_method!r}")
-        out, name, idx = self._pos_shifted(periods)
-        c, prev = F.col(name), F.col("__shifted__")
-        # pandas zero-divisor semantics (x/0 → ±inf, 0/0 → NaN), not the
-        # ANSI divide-by-zero error.  IEEE sign rule incl. NEGATIVE zero:
-        # x/-0.0 = -sign(x)·inf — ±0.0 is distinguishable only via its
-        # string form ("-0.0"), signum gives 0 for both
-        neg_zero = prev.cast("string").startswith("-")
-        inf_sign = F.when(neg_zero, -F.signum(c)).otherwise(F.signum(c))
-        ratio = (F.when(prev.isNull(), F.lit(None).cast("double"))
-                 .when(prev != 0, c / prev)
-                 .when(c == 0, F.lit(float("nan")))
-                 .otherwise(F.lit(float("inf")) * inf_sign))
-        out = out.select(*[F.col(col) for col in idx],
-                         *_order_cols(out),
-                         (ratio - F.lit(1)).alias(name))
-        node = Node("pct_change", {"periods": periods}, self._expr)
-        return Series(out, F.col(name), self._col_name, node, idx,
-                      self._index_names if self._index_cols else (None,))
+        return self._via_frame(
+            lambda f, _n: f.pct_change(periods, fill_method), "pct_change",
+            periods=periods)
 
     def interpolate(self, method: str = "linear",
                     limit: int | None = None,
@@ -2312,77 +2283,9 @@ class Series(FrameBase):
         ``limit_direction='forward'`` default).  ``pad``/``ffill``: previous
         valid value.  ``limit`` caps the fill distance after a valid row.
         """
-        if method not in ("linear", "pad", "ffill"):
-            raise ValueError(f"interpolate: method {method!r} not supported "
-                             "(linear/pad/ffill)")
-        if limit_direction is None:
-            limit_direction = "forward"
-        if limit_direction not in ("forward", "backward", "both"):
-            raise ValueError(f"interpolate: limit_direction "
-                             f"{limit_direction!r} not supported")
-        if limit_direction == "both" and limit is not None:
-            raise NotImplementedError(
-                "interpolate: limit with limit_direction='both' is not "
-                "supported (per-gap two-sided fill caps)")
-        from .functions import scan
-        SENT = -(1 << 62)
-        sdf, name, order, idx = self._ordered_base()
-        pos = scan.global_pos(sdf, order)
-        v = F.col(name)
-        base = (pos
-                .withColumn("__pv__", F.when(v.isNotNull(), F.col("__pos__"))
-                            .otherwise(F.lit(SENT)))
-                .withColumn("__negpos__", -F.col("__pos__"))
-                .withColumn("__nvn__", F.when(v.isNotNull(), -F.col("__pos__"))
-                            .otherwise(F.lit(SENT))))
-        s1 = scan.prefix_scan(base, [("__pv__", "max", "__pp__")], ["__pos__"])
-        s2 = scan.prefix_scan(s1, [("__nvn__", "max", "__npn__")],
-                              ["__negpos__"])
-        s2 = (s2.withColumn("__pp__", F.when(F.col("__pp__") != SENT,
-                                             F.col("__pp__")))
-              .withColumn("__np__", F.when(F.col("__npn__") != SENT,
-                                           -F.col("__npn__"))))
-        vals = (s2.filter(v.isNotNull())
-                .select(F.col("__pos__").alias("__vp__"),
-                        v.cast("double").alias("__vv__")))
-        j = (s2.join(vals.withColumnRenamed("__vp__", "__pp__")
-                     .withColumnRenamed("__vv__", "__prev__"), "__pp__", "left")
-             .join(vals.withColumnRenamed("__vp__", "__np__")
-                   .withColumnRenamed("__vv__", "__next__"), "__np__", "left"))
-        p, pp, np_, prev, nxt = (F.col("__pos__"), F.col("__pp__"),
-                                 F.col("__np__"), F.col("__prev__"),
-                                 F.col("__next__"))
-        interp = prev + (nxt - prev) * (p - pp) / (np_ - pp)
-        if method == "linear":
-            # interior gaps always interpolate; which EDGE runs fill is
-            # limit_direction's call (pandas: forward → trailing take the
-            # last valid, leading stay null; backward mirrors; both fills
-            # both edges)
-            if limit_direction == "forward":
-                filled = F.when(np_.isNotNull(), interp).otherwise(prev)
-            elif limit_direction == "backward":
-                filled = F.when(pp.isNotNull(), interp).otherwise(nxt)
-            else:
-                filled = (F.when(pp.isNull(), nxt)
-                          .when(np_.isNull(), prev)
-                          .otherwise(interp))
-        else:
-            filled = prev if limit_direction == "forward" else (
-                nxt if limit_direction == "backward"
-                else F.coalesce(prev, nxt))
-        if limit is not None:
-            dist = (p - pp) if limit_direction == "forward" else (np_ - p)
-            filled = F.when(dist <= F.lit(limit), filled)
-        anchor = (pp if limit_direction == "forward"
-                  else np_ if limit_direction == "backward"
-                  else F.coalesce(pp, np_))
-        out_val = F.when(v.isNotNull(), v.cast("double")).otherwise(
-            F.when(anchor.isNotNull(), filled))
-        out = j.select(*[F.col(c) for c in idx], *_order_cols(j),
-                       out_val.alias(name))
-        node = Node("interpolate", {"method": method}, self._expr)
-        return Series(out, F.col(name), self._col_name, node, idx,
-                      self._index_names if self._index_cols else (None,))
+        return self._via_frame(
+            lambda f, _n: f.interpolate(method, limit, limit_direction),
+            "interpolate")
 
     def ffill(self, limit: int | None = None) -> "Series":
         """pandas ``Series.ffill`` over the global order — the distributed
@@ -2390,23 +2293,12 @@ class Series(FrameBase):
         partition carry fold), never a global window.  Dtype-preserving,
         unlike ``interpolate('pad')`` which promotes to double.
         ``limit=k`` fills at most k rows past each non-null."""
-        return self._fill_scan(False, limit)
+        return self._via_frame(lambda f, _n: f.ffill(limit), "ffill")
 
     def bfill(self, limit: int | None = None) -> "Series":
         """pandas ``Series.bfill`` — the same scan traversed in reverse
         key order."""
-        return self._fill_scan(True, limit)
-
-    def _fill_scan(self, descending: bool,
-                   limit: int | None = None) -> "Series":
-        from .functions import scan
-        sdf, name, order, idx = self._ordered_base()
-        out = scan.last_scan(sdf, [name], order,
-                             descending=[descending] * len(order),
-                             limit=limit)
-        node = Node("bfill" if descending else "ffill", {}, self._expr)
-        return Series(out, F.col(name), self._col_name, node, idx,
-                      self._index_names if self._index_cols else (None,))
+        return self._via_frame(lambda f, _n: f.bfill(limit), "bfill")
 
     def rolling(self, window: int | str, min_periods: int | None = None,
                 center: bool = False, closed: str | None = None):
@@ -2415,60 +2307,30 @@ class Series(FrameBase):
         position equi-join, no window function.  sum/mean/count/var/std/
         min/max; ``center=True`` shifts the window per pandas.  A string
         window (``"3D"``) is a TIME-offset window over the datetime
-        index — block-bucketed self-join, see ``_SeriesTimeRolling``."""
+        index — block-bucketed self-join, see ``_FrameTimeRolling``."""
+        f = self._as_frame()
         if isinstance(window, str):
-            return _SeriesTimeRolling(self, window, min_periods,
-                                      closed or "right")
-        # closed= reduces to a window-size change plus a one-row shift of
-        # the result: the window CONTENTS are identical sets, so every
-        # aggregation composes exactly (wave T — closed was silently
-        # ignored).  min_periods keeps pandas' default of the ORIGINAL
-        # window (closed='neither' without min_periods is all-NaN, like
-        # pandas).
-        table = {
-            None: (window, 0), "right": (window, 0),
-            "left": (window, 1), "both": (window + 1, 0),
-            "neither": (window - 1, 1),
-        }
-        if closed not in table:
-            raise ValueError(f"closed must be 'right', 'left', 'both' or "
-                             f"'neither', got {closed!r}")
-        if center and closed not in (None, "right"):
-            # the (eff_window, result_shift) reduction assumes trailing
-            # windows; composing it with the centering shift would yield
-            # windows that silently differ from pandas
-            raise NotImplementedError(
-                "rolling(center=True) with closed= other than 'right' is "
-                "not supported")
-        eff_w, shift = table[closed]
-        minp = min_periods if min_periods is not None else window
-        return _SeriesRolling(self, eff_w, minp, center, result_shift=shift)
+            return _FrameTimeRolling(f, window, min_periods,
+                                     closed or "right", series=self)
+        return _FrameRolling(f, window, min_periods, center, closed=closed,
+                             series=self)
 
     def expanding(self, min_periods: int = 1):
         """pandas ``Series.expanding`` over the global order — the prefix
         scan itself, guarded by the running non-null count."""
-        return _SeriesExpanding(self, min_periods)
+        return _FrameExpanding(self._as_frame(), min_periods, series=self)
 
     def ewm(self, com: float | None = None, span: float | None = None,
             halflife: float | None = None, alpha: float | None = None,
             adjust: bool = True, ignore_na: bool = False):
-        """pandas ``Series.ewm(...)`` chain (``.mean()``) over the GLOBAL
-        order — the distributed segment-scan recurrence in
-        ``functions/timeseries.py`` (range shuffle + per-partition local
-        recurrence + tiny decayed-carry fold), never a single-task pass."""
-        import math
-        given = [x is not None for x in (com, span, halflife, alpha)]
-        if sum(given) != 1:
-            raise ValueError("pass exactly one of com, span, halflife, alpha")
-        if com is not None:
-            a = 1.0 / (1.0 + com)
-        elif span is not None:
-            a = 2.0 / (span + 1.0)
-        elif halflife is not None:
-            a = 1.0 - math.exp(-math.log(2.0) / halflife)
-        else:
-            a = alpha
-        return _SeriesEwm(self, a, adjust, ignore_na)
+        """pandas ``Series.ewm(...)`` chain (``.mean()``/``.var()``/
+        ``.std()``) over the GLOBAL order — the distributed segment-scan
+        recurrence in ``functions/timeseries.py`` (range shuffle +
+        per-partition local recurrence + tiny decayed-carry fold), never a
+        single-task pass."""
+        return _FrameEwm(self._as_frame(),
+                         _ewm_alpha(com, span, halflife, alpha), adjust,
+                         ignore_na, series=self)
 
     @property
     def is_unique(self) -> bool:
@@ -2633,9 +2495,13 @@ class Series(FrameBase):
         """pandas ``Series.autocorr``: Pearson correlation with the
         lag-shifted self — computed on the position-joined frame directly,
         one agg, no second alignment pass."""
-        out, name, _ = self._pos_shifted(lag)
-        return Scalar(out.agg(
-            F.corr(F.col(name), F.col("__shifted__")).alias("autocorr")),
+        col, f = self._pos_col, self._as_frame()
+        f = f._derive(f._sdf.withColumn("__shifted__", F.col(col)),
+                      "autocorr")
+        out = f._frame_positional(lag, lambda c, prev: prev, "shift",
+                                  cols=["__shifted__"])
+        return Scalar(out._sdf.agg(
+            F.corr(F.col(col), F.col("__shifted__")).alias("autocorr")),
             Node("autocorr", {"lag": lag}, self._expr))
 
     def any(self, skipna: bool = True):
@@ -3186,19 +3052,22 @@ class Series(FrameBase):
     # implementations (distributed sorts, position passes, index joins)
     # are the single source of truth.
     # ------------------------------------------------------------------
+    def _as_frame(self) -> "DataFrame":
+        """The Series as a one-column frame, its column named
+        ``_pos_col``.  A default positional index is materialized as the
+        anonymous rowid index first so pandas' label-preserving semantics
+        hold (tail keeps labels 4..5, sort keeps the permuted labels,
+        etc.)."""
+        if self._index_cols:
+            return Series.to_frame(self, self._pos_col)
+        sdf, _nm, _order, idx = self._ordered_base()
+        return DataFrame(sdf, Node("frame_base", {}, self._expr), idx)
+
     def _via_frame(self, fn, op: str, **params) -> "Series":
         """Run a DataFrame op over the one-column frame and re-wrap the
-        value column as a Series (keeps name + index metadata).  A
-        default positional index is materialized as the anonymous rowid
-        index first so pandas' label-preserving semantics hold (tail
-        keeps labels 4..5, sort keeps the permuted labels, etc.)."""
-        name = self._col_name if self._col_name is not None else "__v__"
-        if self._index_cols:
-            f = self.to_frame(name)
-        else:
-            sdf, _nm, _order, idx = self._ordered_base()
-            f = DataFrame(sdf, Node("frame_base", {}, self._expr),
-                          idx, (None,))
+        value column as a Series (keeps name + index metadata)."""
+        name = self._pos_col
+        f = self._as_frame()
         out = fn(f, name)
         node = Node(op, params, self._expr)
         s = Series(out._sdf, F.col(name), self._col_name, node,
@@ -4110,263 +3979,89 @@ class Series(FrameBase):
         return ser
 
 
-class _SeriesRolling:
-    """Global rolling window over a Series — see ``scan.rolling_agg``."""
-
-    def __init__(self, series: Series, window: int,
-                 min_periods: int | None, center: bool = False,
-                 result_shift: int = 0):
-        self._s, self._window, self._minp = series, window, min_periods
-        self._center = center
-        self._result_shift = result_shift
-
-    def _post(self, out: Series) -> Series:
-        """closed='left'/'neither' results shift one row down (the window
-        ends at the PRIOR row); a zero-width window is all-NaN."""
-        if self._window < 1:
-            return out._with_scol(F.lit(None).cast("double"), "rolling")
-        if self._result_shift:
-            return out.shift(self._result_shift)
-        return out
-
-    def _agg(self, fn: str) -> Series:
-        from .functions import scan
-        s = self._s
-        if self._window < 1:
-            return self._post(s)
-        sdf, name, order, idx = s._ordered_base()
-        out = scan.rolling_agg(sdf, name, order, self._window, fn,
-                               self._minp, out=name, center=self._center)
-        node = Node(f"rolling_{fn}", {"window": self._window}, s._expr)
-        return self._post(
-            Series(out, F.col(name), s._col_name, node, idx,
-                   s._index_names if s._index_cols else (None,)))
-
-    def sum(self) -> Series: return self._agg("sum")
-    def mean(self) -> Series: return self._agg("mean")
-    def count(self) -> Series: return self._agg("count")
-    def var(self) -> Series: return self._agg("var")
-    def std(self) -> Series: return self._agg("std")
-
-    def agg(self, spec):
-        """pandas ``rolling(...).agg``: a str delegates to the named
-        method; a list returns a frame with one column per function
-        (each an independent scan — they share the same ranged layout
-        so AQE reuses the shuffle)."""
-        if isinstance(spec, str):
-            return getattr(self, spec)()
-        if isinstance(spec, (list, tuple)):
-            from .operators.setops import concat
-            frames = [getattr(self, f)().to_frame(f) for f in spec]
-            return concat(frames, axis=1)
-        raise NotImplementedError(f"rolling.agg spec {type(spec).__name__}")
-
-    aggregate = agg
-
-    # order statistics / higher moments need the raw window values, so
-    # they ride the exact halo-block apply path (Arrow-batched pandas per
-    # block — the documented slow lane; the running-sum scans above stay
-    # the JVM fast lane)
-    def median(self) -> Series:
-        return self.apply(lambda s: s.median())
-
-    def quantile(self, q: float, interpolation: str = "linear") -> Series:
-        return self.apply(lambda s: s.quantile(q, interpolation))
-
-    def skew(self) -> Series:
-        return self.apply(lambda s: s.skew())
-
-    def kurt(self) -> Series:
-        return self.apply(lambda s: s.kurt())
-
-    def sem(self, ddof: int = 1) -> Series:
-        # pandas Rolling.sem normalizes by sqrt(count - ddof), NOT the
-        # Series.sem sqrt(count)
-        return self.apply(
-            lambda s: s.std(ddof=ddof) / (s.count() - ddof) ** 0.5)
-
-    def _minmax(self, fn: str) -> Series:
-        from .functions import scan
-        s = self._s
-        if self._window < 1:
-            return self._post(s)
-        sdf, name, order, idx = s._ordered_base()
-        out = scan.rolling_minmax(sdf, name, order, self._window, fn,
-                                  self._minp, out=name, center=self._center)
-        node = Node(f"rolling_{fn}", {"window": self._window}, s._expr)
-        return self._post(
-            Series(out, F.col(name), s._col_name, node, idx,
-                   s._index_names if s._index_cols else (None,)))
-
-    def min(self) -> Series: return self._minmax("min")
-    def max(self) -> Series: return self._minmax("max")
-
-    def _pairwise(self, other: "Series", want: str,
-                  ddof: int = 1) -> Series:
-        """Rolling cov/corr against another Series: pairwise-complete
-        masks feed FIVE running sums (x, y, xy, x², y²) plus the pair
-        count through ONE shared prefix scan + ONE position join
-        (``scan.rolling_agg_frame``) — the textbook moment identities do
-        the rest as column arithmetic.  ``other`` may come from a foreign
-        frame (index-aligned with one equi-join, like where/mask)."""
-        from .functions import scan
-        s = self._s
-        if not isinstance(other, Series):
-            raise NotImplementedError("rolling cov/corr needs a Series "
-                                      "other (frame-pairwise not "
-                                      "supported)")
-        if other._sdf is s._sdf:
-            base_f = DataFrame(
-                s._sdf.select(*_order_cols(s._sdf),
-                              *[F.col(c) for c in s._index_cols],
-                              s._scol.alias("__x__"),
-                              other._scol.alias("__y__")),
-                Node("rolling_pair", {}, s._expr),
-                s._index_cols, s._index_names)
-        else:
-            base_f = _align_frames(s.to_frame("__x__"),
-                                   other.to_frame("__y__"))
-        if base_f._index_cols:
-            sdf = base_f._sdf
-            # pandas windows over the presented rows — a sorted
-            # label-keeping frame's labels are not its presentation
-            order = [_ORDER] if _ORDER in sdf.columns \
-                else list(base_f._index_cols)
-            idx, names = base_f._index_cols, base_f._index_names
-        else:
-            sdf = positions(base_f)
-            order, idx, names = [_ROWID], (_ROWID,), (None,)
-        x, y = F.col("__x__").cast("double"), F.col("__y__").cast("double")
-        m = x.isNotNull() & y.isNotNull()
-        pair_cols = {"__px__": F.when(m, x), "__py__": F.when(m, y),
-                     "__pxy__": F.when(m, x * y),
-                     "__px2__": F.when(m, x * x),
-                     "__py2__": F.when(m, y * y),
-                     "__pn__": F.when(m, F.lit(1.0))}
-        base = sdf.withColumns(pair_cols)
-        out = scan.rolling_agg_frame(base, list(pair_cols), order,
-                                     self._window, "sum", self._minp,
-                                     self._center)
-        n = F.col("__pn__")
-        sx, sy = F.col("__px__"), F.col("__py__")
-        sxy, sx2, sy2 = F.col("__pxy__"), F.col("__px2__"), F.col("__py2__")
-        if want == "cov":
-            res = F.when(n > ddof, (sxy - sx * sy / n) / (n - ddof))
-        else:
-            den = (n * sx2 - sx * sx) * (n * sy2 - sy * sy)
-            res = F.when(den > 0,
-                         (n * sxy - sx * sy) / F.sqrt(den))
-        name = s._col_name or "__v__"
-        sel = out.select(*[F.col(c) for c in idx], *_order_cols(out),
-                         res.alias(name))
-        node = Node(f"rolling_{want}", {"window": self._window}, s._expr)
-        return self._post(
-            Series(sel, F.col(name), s._col_name, node, idx, names))
-
-    def cov(self, other: "Series", ddof: int = 1) -> Series:
-        return self._pairwise(other, "cov", ddof)
-
-    def corr(self, other: "Series") -> Series:
-        return self._pairwise(other, "corr")
-
-    def apply(self, func, raw: bool = False) -> Series:
-        """pandas ``rolling(...).apply(func)`` for an arbitrary Python
-        window function — the distributed halo-block pattern
-        (``scan.rolling_apply``): blocks of rows + a two-sided halo copy
-        (``window-1`` rows back, ``(w-1)//2`` forward when centered) run
-        exact pandas locally per block, Arrow-batched.  ``raw`` defaults
-        to False like pandas (func receives a Series).  This is the slow
-        path by construction — prefer the JVM aggs when the function is
-        expressible."""
-        from .functions import scan
-        s = self._s
-        if self._window < 1:
-            return self._post(s)
-        sdf, name, order, idx = s._ordered_base()
-        out = scan.rolling_apply(sdf, name, order, self._window, func,
-                                 self._minp, out="__ra__", raw=raw,
-                                 center=self._center)
-        res = out.select(*[F.col(c) for c in idx], *_order_cols(out),
-                         F.col("__ra__").alias(name))
-        node = Node("rolling_apply", {"window": self._window}, s._expr)
-        return self._post(
-            Series(res, F.col(name), s._col_name, node, idx,
-                   s._index_names if s._index_cols else (None,)))
-
-    def rank(self, method: str = "average", pct: bool = False) -> Series:
-        """pandas ``rolling(...).rank``: rank of the CURRENT row's value
-        within its window — needs the raw window values, so it rides the
-        same halo-block apply path as median/quantile."""
-        def _rk(win: pd.Series):
-            r = win.rank(method=method, pct=pct)
-            return r.iloc[-1]
-        return self.apply(_rk)
+def _chain_result(res: "DataFrame", series: "Series | None", cols):
+    """A rolling/expanding/ewm chain's result: the frame, or — when the
+    chain started from a Series — that Series' column of it."""
+    if series is None:
+        return res
+    return _frame_column(res, cols[0], series._col_name)
 
 
-class _SeriesTimeRolling:
-    """Time-offset rolling (pandas ``rolling("3D")``) over a
-    datetime-indexed Series — block-bucketed self-join, never a global
-    window (``functions/timeseries.py`` ``time_rolling``)."""
+def _window_cols(frame: "DataFrame", series: "Series | None",
+                 skip=()) -> list[str]:
+    """The columns a rolling/expanding/ewm chain aggregates: a Series'
+    own column, else every numeric column not in ``skip``."""
+    if series is not None:
+        return [series._pos_col]
+    schema = frame._sdf.schema
+    return [c for c in frame.columns
+            if c not in skip and is_numeric(schema[c].dataType)]
 
-    def __init__(self, series: Series, window: str,
-                 min_periods: int | None, closed: str = "right"):
+
+# pairwise-complete moment inputs of rolling/expanding cov/corr, in
+# _pair_stat's argument order: pair count, x, y, xy, x², y²
+_PAIR = ("__pn__", "__px__", "__py__", "__pxy__", "__px2__", "__py2__")
+
+
+def _pair_frame(s: "Series", other, op: str) -> "DataFrame":
+    """``s`` and ``other`` (rolling/expanding cov/corr) as the ``_PAIR``
+    columns of one frame, each null where either side is: a projection
+    when they share an anchor, else index-aligned with one equi-join,
+    like where/mask."""
+    if not isinstance(other, Series):
+        raise NotImplementedError(f"{op} cov/corr needs a Series other "
+                                  "(frame-pairwise not supported)")
+    if other._sdf is s._sdf:
+        f = DataFrame(
+            s._sdf.select(*_order_cols(s._sdf),
+                          *[F.col(c) for c in s._index_cols],
+                          s._scol.alias("__x__"), other._scol.alias("__y__")),
+            Node(f"{op}_pair", {}, s._expr), s._index_cols, s._index_names)
+    else:
+        f = _align_frames(s.to_frame("__x__"), other.to_frame("__y__"))
+    x, y = F.col("__x__").cast("double"), F.col("__y__").cast("double")
+    m = x.isNotNull() & y.isNotNull()
+    moments = (F.lit(1.0), x, y, x * y, x * x, y * y)
+    return f._derive(f._sdf.withColumns(
+        {c: F.when(m, v) for c, v in zip(_PAIR, moments)}), f"{op}_pair")
+
+
+def _pair_stat(want: str, ddof: int, n, sx, sy, sxy, sx2, sy2):
+    """cov/corr from the pairwise moment sums."""
+    if want == "cov":
+        return F.when(n > ddof, (sxy - sx * sy / n) / (n - ddof))
+    den = (n * sx2 - sx * sx) * (n * sy2 - sy * sy)
+    return F.when(den > 0, (n * sxy - sx * sy) / F.sqrt(den))
+
+
+class _FrameTimeRolling:
+    """Time-offset rolling (pandas ``rolling("3D")``) over every numeric
+    column of a datetime-indexed frame or over a Series (``series=``) —
+    block-bucketed self-join, never a global window
+    (``functions/timeseries.py`` ``time_rolling``).  Optionally grouped:
+    ``by`` adds the group keys to the block equi-join and the result
+    index."""
+
+    def __init__(self, frame: "DataFrame", window: str,
+                 min_periods: int | None, closed: str = "right",
+                 by: list[str] | None = None, cols=None,
+                 series: "Series | None" = None):
+        self._f, self._by, self._cols = frame, list(by or []), cols
         self._s = series
         self._wm = int(pd.Timedelta(window).value // 1000)
         self._mp = 1 if min_periods is None else min_periods
         self._closed = closed
         self._wstr = window
 
-    def _agg(self, how: str) -> Series:
-        from .functions.timeseries import time_rolling
-        s = self._s
-        if not s._index_cols:
-            raise ValueError("rolling(offset) needs a datetime index — "
-                             "set_index first")
-        ts_col = s._index_cols[0]
-        f = s.to_frame("__v__")
-        # duplicate-timestamp ties follow the presented order
-        sdf = positions(f)
-        out = time_rolling(sdf, [_ROWID, ts_col], ts_col, ["__v__"],
-                           self._wm, how, self._mp, closed=self._closed,
-                           pos_col=_ROWID)
-        node = Node(f"time_rolling_{how}", {"window": self._wstr},
-                    s._expr)
-        return Series(out, F.col("__v__"), s._col_name, node,
-                      (ts_col,), s._index_names)
-
-    def sum(self) -> Series: return self._agg("sum")
-    def mean(self) -> Series: return self._agg("mean")
-    def count(self) -> Series: return self._agg("count")
-    def min(self) -> Series: return self._agg("min")
-    def max(self) -> Series: return self._agg("max")
-    def var(self) -> Series: return self._agg("var")
-    def std(self) -> Series: return self._agg("std")
-
-
-class _FrameTimeRolling:
-    """Time-offset rolling over every numeric column of a
-    datetime-indexed frame (optionally grouped — ``by`` adds the group
-    keys to the block equi-join and the result index)."""
-
-    def __init__(self, frame: "DataFrame", window: str,
-                 min_periods: int | None, closed: str = "right",
-                 by: list[str] | None = None, cols=None):
-        self._f, self._by, self._cols = frame, list(by or []), cols
-        self._wm = int(pd.Timedelta(window).value // 1000)
-        self._mp = 1 if min_periods is None else min_periods
-        self._closed = closed
-        self._wstr = window
-
-    def _agg(self, how: str) -> "DataFrame":
+    def _agg(self, how: str):
         from .functions.timeseries import time_rolling
         f = self._f
-        if not f._index_cols:
+        if f._index_cols in ((), (_ROWID,)):
             raise ValueError("rolling(offset) needs a datetime index — "
                              "set_index first")
         ts_col = f._index_cols[0]
-        cols = self._cols if self._cols is not None else \
-            [c for c in f.columns
-             if c not in self._by and is_numeric(f._sdf.schema[c].dataType)]
+        cols = (self._cols if self._cols is not None
+                else _window_cols(f, self._s, skip=self._by))
         # duplicate-timestamp ties follow the presented order
         sdf = positions(f)
         out = time_rolling(sdf, [_ROWID, ts_col], ts_col, cols,
@@ -4376,7 +4071,8 @@ class _FrameTimeRolling:
                     f._expr)
         idx = tuple(self._by) + (ts_col,)
         names = tuple(self._by) + tuple(f._index_names)
-        return DataFrame(out.drop(_ROWID), node, idx, names)
+        return _chain_result(DataFrame(out.drop(_ROWID), node, idx, names),
+                             self._s, cols)
 
     def sum(self): return self._agg("sum")
     def mean(self): return self._agg("mean")
@@ -4392,135 +4088,103 @@ class _FrameTimeRolling:
                                  self._closed, self._by, cols)
 
 
-class _SeriesEwm:
-    """pandas ``Series.ewm(...)`` chain target — delegates to the
-    distributed global EWM segment scan."""
-
-    def __init__(self, series: Series, alpha: float, adjust: bool = True,
-                 ignore_na: bool = False):
-        self._s, self._alpha, self._adjust = series, alpha, adjust
-        self._ignore_na = ignore_na
-
-    def mean(self) -> Series:
-        from .functions import timeseries as _ts
-        s = self._s
-        sdf, name, order, idx = s._ordered_base()
-        if len(order) != 1:
-            raise ValueError("global ewm needs exactly one order column")
-        if self._ignore_na:
-            out = _ts.ewm_mean_ignore_na(sdf, [name], order[0], self._alpha,
-                                         adjust=self._adjust)
-        else:
-            out = _ts.ewm_mean_global(sdf, name, order[0], self._alpha,
-                                      name=name, adjust=self._adjust)
-        node = Node("ewm_mean", {"alpha": self._alpha}, s._expr)
-        return Series(out, F.col(name), s._col_name, node, idx,
-                      s._index_names if s._index_cols else (None,))
-
-    def var(self, bias: bool = False) -> Series:
-        """pandas ``ewm(...).var()`` — the 5-state distributed segment
-        scan (``timeseries.ewm_var_global``); debiased by default."""
-        from .functions import timeseries as _ts
-        if not self._adjust or self._ignore_na:
-            raise NotImplementedError(
-                "ewm.var supports adjust=True, ignore_na=False")
-        s = self._s
-        sdf, name, order, idx = s._ordered_base()
-        if len(order) != 1:
-            raise ValueError("global ewm needs exactly one order column")
-        out = _ts.ewm_var_global(sdf, name, order[0], self._alpha,
-                                 name=name, bias=bias)
-        node = Node("ewm_var", {"alpha": self._alpha}, s._expr)
-        return Series(out, F.col(name), s._col_name, node, idx,
-                      s._index_names if s._index_cols else (None,))
-
-    def std(self, bias: bool = False) -> Series:
-        out = self.var(bias=bias)
-        return out._with_scol(F.sqrt(out._scol), "ewm_std")
-
-
 class _FrameRolling:
-    """pandas ``DataFrame.rolling`` — every numeric column in ONE shared
-    prefix scan + ONE position join (``scan.rolling_agg_frame``); min/max
-    fall back to one van Herk block pass per column."""
+    """pandas ``rolling`` over a frame, or over a Series (``series=``:
+    ``frame`` is its one-column form and results come back as the
+    Series).  sum/mean/count/var/std: every column in ONE shared prefix
+    scan + ONE position join (``scan.rolling_agg_frame``); min/max: one
+    van Herk block pass per column; order statistics and ``apply``: the
+    halo-block path (``scan.rolling_apply``)."""
+
+    # closed= reduces to a window-size change plus a one-row shift of the
+    # result: the window CONTENTS are identical sets, so every aggregation
+    # composes exactly.  min_periods keeps pandas' default of the ORIGINAL
+    # window (closed='neither' without min_periods is all-NaN, like pandas)
+    _CLOSED = {None: (0, 0), "right": (0, 0), "left": (0, 1),
+               "both": (1, 0), "neither": (-1, 1)}
 
     def __init__(self, frame: "DataFrame", window: int,
                  min_periods: int | None, center: bool,
-                 on: str | None = None):
-        self._f, self._window = frame, window
-        self._minp, self._center = min_periods, center
-        self._on, self._sel = on, None
+                 on: str | None = None, closed: str | None = None,
+                 series: "Series | None" = None):
+        if closed not in self._CLOSED:
+            raise ValueError(f"closed must be 'right', 'left', 'both' or "
+                             f"'neither', got {closed!r}")
+        if center and closed not in (None, "right"):
+            # the (window, result shift) reduction assumes trailing
+            # windows; composing it with the centering shift would yield
+            # windows that silently differ from pandas
+            raise NotImplementedError(
+                "rolling(center=True) with closed= other than 'right' is "
+                "not supported")
+        grow, self._shift = self._CLOSED[closed]
+        self._f, self._s = frame, series
+        self._window = window + grow
+        self._minp = window if min_periods is None else min_periods
+        self._center, self._on, self._sel = center, on, None
 
     def __getitem__(self, key):
         """pandas ``df.rolling(...)[cols]`` column restriction."""
-        out = _FrameRolling(self._f, self._window, self._minp, self._center,
-                            self._on)
+        import copy
+        out = copy.copy(self)
         out._sel = key
         return out
 
-    def _base(self):
-        f = self._f
-        # pandas COUNT-window on=: the column is excluded from aggregation
-        # and kept in the output, but the window slides over ROW order —
-        # on= only becomes the window axis for OFFSET windows (r8 audit:
-        # ordering by on= diverged on any non-monotonic on column).  So
-        # the order source is identical with or without on=.
-        if _ORDER in f._sdf.columns:
-            # stamped presentation order (sort/nlargest) wins over the
-            # label-preserving index for window order, like pandas
-            if f._index_cols:
-                return f._sdf, [_ORDER], f._index_cols, f._index_names
-            # unindexed stamped: labels ARE the presented positions
-            # ((_ORDER,) as the result index would vanish at compute)
-            return positions(f), [_ORDER], (_ROWID,), (None,)
-        if f._index_cols:
-            return f._sdf, list(f._index_cols), f._index_cols, f._index_names
-        sdf = positions(f)
-        return sdf, [_ROWID], (_ROWID,), (None,)
-
     def _numeric(self):
-        f = self._f
-        cols = [c for c in f.columns
-                if is_numeric(f._sdf.schema[c].dataType) and c != self._on]
+        cols = _window_cols(self._f, self._s, skip=(self._on,))
         if self._sel is not None:
             keep = [self._sel] if isinstance(self._sel, str) else list(self._sel)
             cols = [c for c in cols if c in keep]
         return cols
 
-    def _agg(self, fn: str) -> "DataFrame":
-        from .functions import scan
-        sdf, order, idx, names = self._base()
+    def _run(self, op: str, kernel):
+        """Order the rows, run ``kernel(sdf, order, cols)`` (results
+        overwrite ``cols``) and finish the result."""
+        f = self._f
+        sdf, order, idx, names = _positional_order(f)
         num = self._numeric()
-        out = scan.rolling_agg_frame(sdf, num, order, self._window, fn,
-                                     self._minp, center=self._center)
-        # pandas keeps the on column unaggregated, at its ORIGINAL slot
+        out = kernel(sdf, order, num) if self._window >= 1 else sdf
+        # pandas COUNT-window on=: the column is excluded from aggregation
+        # and kept in the output at its ORIGINAL slot, but the window
+        # slides over ROW order — on= only becomes the window axis for
+        # OFFSET windows (r8 audit: ordering by on= diverged on any
+        # non-monotonic on column)
         want = set(num) | ({self._on} if self._on is not None
                            and self._on not in idx else set())
-        keep = [c for c in self._f.columns if c in want]
         out = out.select(*[F.col(c) for c in idx], *_order_cols(out),
-                         *keep)
-        node = Node(f"frame_rolling_{fn}", {"window": self._window},
-                    self._f._expr)
-        if isinstance(self._sel, str) and len(num) == 1:
-            return Series(out, F.col(num[0]), num[0], node, idx, names)
-        return DataFrame(out, node, idx, names)
+                         *[c for c in f.columns if c in want])
+        node = Node(f"rolling_{op}", {"window": self._window}, f._expr)
+        return self._post(DataFrame(out, node, idx, names), num)
 
-    def _minmax(self, fn: str) -> "DataFrame":
+    def _post(self, res: "DataFrame", cols: list[str]):
+        """closed='left'/'neither' results shift one row down (the window
+        ends at the PRIOR row); a zero-width window is all-NaN."""
+        if self._window < 1:
+            res = res._derive(res._sdf.withColumns(
+                {c: F.lit(None).cast("double") for c in cols}), "rolling")
+        elif self._shift:
+            res = res._frame_positional(self._shift, lambda c, prev: prev,
+                                        "shift", cols=cols)
+        if self._s is None and isinstance(self._sel, str) and len(cols) == 1:
+            return _frame_column(res, cols[0], cols[0])
+        return _chain_result(res, self._s, cols)
+
+    def _agg(self, fn: str):
         from .functions import scan
-        sdf, order, idx, names = self._base()
-        num = self._numeric()
-        cur = sdf
-        for c in num:
-            cur = scan.rolling_minmax(cur, c, order, self._window, fn,
-                                      self._minp, out=c,
-                                      center=self._center)
-        want = set(num) | ({self._on} if self._on is not None
-                           and self._on not in idx else set())
-        out = cur.select(*[F.col(c) for c in idx], *_order_cols(cur),
-                         *[c for c in self._f.columns if c in want])
-        return DataFrame(out, Node(f"frame_rolling_{fn}",
-                                   {"window": self._window}, self._f._expr),
-                         idx, names)
+        return self._run(fn, lambda sdf, order, cols: scan.rolling_agg_frame(
+            sdf, cols, order, self._window, fn, self._minp,
+            center=self._center))
+
+    def _minmax(self, fn: str):
+        from .functions import scan
+
+        def kernel(sdf, order, cols):
+            for c in cols:
+                sdf = scan.rolling_minmax(sdf, c, order, self._window, fn,
+                                          self._minp, out=c,
+                                          center=self._center)
+            return sdf
+        return self._run(fn, kernel)
 
     def sum(self): return self._agg("sum")
     def mean(self): return self._agg("mean")
@@ -4530,65 +4194,169 @@ class _FrameRolling:
     def min(self): return self._minmax("min")
     def max(self): return self._minmax("max")
 
+    def agg(self, spec):
+        """pandas ``rolling(...).agg``: a str delegates to the named
+        method; on a Series a list returns a frame with one column per
+        function (each an independent scan — they share the same ranged
+        layout so AQE reuses the shuffle)."""
+        if isinstance(spec, str):
+            return getattr(self, spec)()
+        if isinstance(spec, (list, tuple)) and self._s is not None:
+            from .operators.setops import concat
+            frames = [getattr(self, f)().to_frame(f) for f in spec]
+            return concat(frames, axis=1)
+        raise NotImplementedError(f"rolling.agg spec {type(spec).__name__}")
+
+    aggregate = agg
+
+    # order statistics / higher moments need the raw window values, so
+    # they ride the exact halo-block apply path (Arrow-batched pandas per
+    # block — the documented slow lane; the running-sum scans above stay
+    # the JVM fast lane)
+    def median(self):
+        return self.apply(lambda s: s.median())
+
+    def quantile(self, q: float, interpolation: str = "linear"):
+        return self.apply(lambda s: s.quantile(q, interpolation))
+
+    def skew(self):
+        return self.apply(lambda s: s.skew())
+
+    def kurt(self):
+        return self.apply(lambda s: s.kurt())
+
+    def sem(self, ddof: int = 1):
+        # pandas Rolling.sem normalizes by sqrt(count - ddof), NOT the
+        # Series.sem sqrt(count)
+        return self.apply(
+            lambda s: s.std(ddof=ddof) / (s.count() - ddof) ** 0.5)
+
+    def apply(self, func, raw: bool = False):
+        """pandas ``rolling(...).apply(func)`` for an arbitrary Python
+        window function — the distributed halo-block pattern
+        (``scan.rolling_apply``): blocks of rows + a two-sided halo copy
+        (``window-1`` rows back, ``(w-1)//2`` forward when centered) run
+        exact pandas locally per block, Arrow-batched.  ``raw`` defaults
+        to False like pandas (func receives a Series).  This is the slow
+        path by construction — prefer the JVM aggs when the function is
+        expressible."""
+        from .functions import scan
+        return self._run("apply", lambda sdf, order, cols: scan.rolling_apply(
+            sdf, cols, order, self._window, func, self._minp, out=cols,
+            raw=raw, center=self._center))
+
+    def rank(self, method: str = "average", pct: bool = False):
+        """pandas ``rolling(...).rank``: rank of the CURRENT row's value
+        within its window — needs the raw window values, so it rides the
+        same halo-block apply path as median/quantile."""
+        def _rk(win: pd.Series):
+            r = win.rank(method=method, pct=pct)
+            return r.iloc[-1]
+        return self.apply(_rk)
+
+    def _pairwise(self, other: "Series", want: str, ddof: int = 1):
+        """Rolling cov/corr of a Series against another Series:
+        pairwise-complete masks feed FIVE running sums (x, y, xy, x², y²)
+        plus the pair count through ONE shared prefix scan + ONE position
+        join (``scan.rolling_agg_frame``) — the textbook moment identities
+        do the rest as column arithmetic."""
+        from .functions import scan
+        s = self._s
+        if s is None:
+            raise NotImplementedError("rolling cov/corr is supported on a "
+                                      "Series")
+        sdf, order, idx, names = _positional_order(
+            _pair_frame(s, other, "rolling"))
+        out = scan.rolling_agg_frame(sdf, list(_PAIR), order, self._window,
+                                     "sum", self._minp, self._center)
+        res = _pair_stat(want, ddof, *[F.col(c) for c in _PAIR])
+        name = s._pos_col
+        sel = out.select(*[F.col(c) for c in idx], *_order_cols(out),
+                         res.alias(name))
+        node = Node(f"rolling_{want}", {"window": self._window}, s._expr)
+        return self._post(DataFrame(sel, node, idx, names), [name])
+
+    def cov(self, other: "Series", ddof: int = 1):
+        return self._pairwise(other, "cov", ddof)
+
+    def corr(self, other: "Series"):
+        return self._pairwise(other, "corr")
+
 
 class _FrameEwm:
-    """pandas ``DataFrame.ewm`` chain target — one shared ranged pass."""
+    """pandas ``ewm`` chain target over a frame or a Series (``series=``)
+    — every column through ONE shared ranged pass
+    (``timeseries.ewm_mean_global_multi``)."""
 
     def __init__(self, frame: "DataFrame", alpha: float,
-                 adjust: bool = True, ignore_na: bool = False):
+                 adjust: bool = True, ignore_na: bool = False,
+                 series: "Series | None" = None):
         self._f, self._alpha, self._adjust = frame, alpha, adjust
-        self._ignore_na = ignore_na
+        self._ignore_na, self._s = ignore_na, series
 
-    def mean(self) -> "DataFrame":
-        from .functions import timeseries as _ts
+    def _base(self):
         f = self._f
-        if _ORDER in f._sdf.columns and f._index_cols:
-            sdf, order = f._sdf, _ORDER
-            idx, names = f._index_cols, f._index_names
-        elif f._index_cols:
-            sdf, order = f._sdf, f._index_cols[0]
-            idx, names = f._index_cols, f._index_names
-            if len(f._index_cols) != 1:
-                raise ValueError("frame ewm needs a single-level index")
-        else:
-            sdf, order = positions(f), _ROWID
-            idx, names = (_ROWID,), (None,)
-        num = [c for c in f.columns
-               if is_numeric(f._sdf.schema[c].dataType)]
+        sdf, order, idx, names = _positional_order(f)
+        if len(order) != 1:
+            raise ValueError("ewm needs a single order column "
+                             "(a single-level index)")
+        return sdf, order[0], idx, names, _window_cols(f, self._s)
+
+    def _finish(self, out: SparkDF, op: str, idx, names, num):
+        out = out.select(*[F.col(c) for c in idx], *_order_cols(out), *num)
+        res = DataFrame(out, Node(op, {"alpha": self._alpha}, self._f._expr),
+                        idx, names)
+        return _chain_result(res, self._s, num)
+
+    def mean(self):
+        from .functions import timeseries as _ts
+        sdf, order, idx, names, num = self._base()
         if self._ignore_na:
             out = _ts.ewm_mean_ignore_na(sdf, num, order, self._alpha,
                                          adjust=self._adjust)
         else:
             out = _ts.ewm_mean_global_multi(sdf, num, order, self._alpha,
                                             adjust=self._adjust)
-        out = out.select(*[F.col(c) for c in idx], *_order_cols(out),
-                         *num)
-        return DataFrame(out, Node("frame_ewm_mean",
-                                   {"alpha": self._alpha}, f._expr),
-                         idx, names)
+        return self._finish(out, "ewm_mean", idx, names, num)
+
+    def var(self, bias: bool = False):
+        """pandas ``ewm(...).var()`` — the 5-state distributed segment
+        scan (``timeseries.ewm_var_global``), one per column; debiased
+        by default."""
+        return self._var(bias, sqrt=False)
+
+    def std(self, bias: bool = False):
+        return self._var(bias, sqrt=True)
+
+    def _var(self, bias: bool, sqrt: bool):
+        from .functions import timeseries as _ts
+        if not self._adjust or self._ignore_na:
+            raise NotImplementedError(
+                "ewm.var supports adjust=True, ignore_na=False")
+        out, order, idx, names, num = self._base()
+        for c in num:
+            out = _ts.ewm_var_global(out, c, order, self._alpha, name=c,
+                                     bias=bias)
+        if sqrt:
+            out = out.withColumns({c: F.sqrt(c) for c in num})
+        return self._finish(out, "ewm_std" if sqrt else "ewm_var", idx,
+                            names, num)
 
 
 class _FrameExpanding:
-    """pandas ``DataFrame.expanding`` — every numeric column in ONE
-    shared prefix scan (no join at all: the prefix IS the answer)."""
+    """pandas ``expanding`` over a frame or a Series (``series=``) —
+    every column in ONE shared prefix scan (no join at all: the prefix
+    IS the answer), guarded by the running non-null count."""
 
-    def __init__(self, frame: "DataFrame", min_periods: int):
-        self._f, self._minp = frame, min_periods
+    def __init__(self, frame: "DataFrame", min_periods: int,
+                 series: "Series | None" = None):
+        self._f, self._minp, self._s = frame, min_periods, series
 
-    def _agg(self, fn: str) -> "DataFrame":
+    def _agg(self, fn: str, ddof: int = 1):
         from .functions import scan
         f = self._f
-        if _ORDER in f._sdf.columns and f._index_cols:
-            sdf, order = f._sdf, [_ORDER]
-            idx, names = f._index_cols, f._index_names
-        elif f._index_cols:
-            sdf, order = f._sdf, list(f._index_cols)
-            idx, names = f._index_cols, f._index_names
-        else:
-            sdf, order = positions(f), [_ROWID]
-            idx, names = (_ROWID,), (None,)
-        num = [c for c in f.columns
-               if is_numeric(f._sdf.schema[c].dataType)]
+        sdf, order, idx, names = _positional_order(f)
+        num = _window_cols(f, self._s)
         base = sdf.withColumn("__one__", F.lit(1).cast("long"))
         specs = [("__one__", "sum", "__P__")]
         need_sq = fn in ("var", "std")
@@ -4604,6 +4372,10 @@ class _FrameExpanding:
                     f"__z2_{c}__", F.col(f"__z_{c}__") * F.col(f"__z_{c}__"))
                 specs.append((f"__z2_{c}__", "sum", f"__S2_{c}__"))
             if fn in ("min", "max"):
+                # prefix min/max IS the expanding extreme — same single
+                # scan.  Nulls take the identity (±inf) so the scan carries
+                # through them (expanding().min() emits no NaN AT a null,
+                # unlike cummin)
                 ident = float("inf") if fn == "min" else float("-inf")
                 base = base.withColumn(f"__zm_{c}__", F.coalesce(
                     F.col(c).cast("double"), F.lit(ident)))
@@ -4618,174 +4390,61 @@ class _FrameExpanding:
                 val = F.when(cnt > 0, F.col(f"__S_{c}__") / cnt)
             elif fn in ("var", "std"):
                 n = cnt.cast("double")
-                v = F.when(n >= 2, F.greatest(
+                # <=ddof-observation prefixes are NaN in pandas and a
+                # DIVIDE_BY_ZERO under ANSI — guard BEFORE dividing
+                # (ddof=0 needs one observation, like pandas)
+                v = F.when(n >= max(ddof + 1, 1), F.greatest(
                     (F.col(f"__S2_{c}__")
                      - F.col(f"__S_{c}__") * F.col(f"__S_{c}__") / n)
-                    / (n - F.lit(1)), F.lit(0.0)))
+                    / (n - F.lit(float(ddof))), F.lit(0.0)))
                 val = F.sqrt(v) if fn == "std" else v
             elif fn in ("min", "max"):
                 val = F.col(f"__M_{c}__")
             else:
                 val = cnt.cast("double")
+            # pandas: sum/mean guard on non-null observations, count on rows
             have = F.col("__P__") if fn == "count" else cnt
             updates[c] = F.when(have >= F.lit(self._minp), val)
         out = scanned.withColumns(updates).select(
             *[F.col(c) for c in idx], *_order_cols(scanned), *num)
-        return DataFrame(out, Node(f"frame_expanding_{fn}", {},
-                                   self._f._expr), idx, names)
+        res = DataFrame(out, Node(f"expanding_{fn}", {}, f._expr), idx, names)
+        return _chain_result(res, self._s, num)
 
     def sum(self): return self._agg("sum")
     def mean(self): return self._agg("mean")
     def count(self): return self._agg("count")
-    def var(self): return self._agg("var")
-    def std(self): return self._agg("std")
+    def var(self, ddof: int = 1): return self._agg("var", int(ddof))
+    def std(self, ddof: int = 1): return self._agg("std", int(ddof))
     def min(self): return self._agg("min")
     def max(self): return self._agg("max")
 
-
-class _SeriesExpanding:
-    """Global expanding window — the prefix scan itself (no join):
-    ``sum_i`` is the running null-zeroed sum, guarded by the running
-    non-null count ≥ min_periods."""
-
-    def __init__(self, series: Series, min_periods: int):
-        self._s, self._minp = series, min_periods
-        self._ddof = 1
-
-    def _agg(self, fn: str) -> Series:
+    def _pairwise(self, other: "Series", want: str, ddof: int = 1):
+        """Expanding cov/corr of a Series: the pairwise-masked moment sums
+        ARE prefix sums — one shared scan, no position join at all
+        (cheaper than the rolling form)."""
         from .functions import scan
         s = self._s
-        sdf, name, order, idx = s._ordered_base()
-        base = (sdf
-                .withColumn("__z__", F.coalesce(
-                    F.col(name).cast("double"), F.lit(0.0)))
-                .withColumn("__nn__", F.col(name).isNotNull().cast("long"))
-                .withColumn("__one__", F.lit(1).cast("long")))
-        specs = [("__z__", "sum", "__S__"), ("__nn__", "sum", "__C__"),
-                 ("__one__", "sum", "__P__")]
-        drop = ["__z__", "__nn__", "__one__", "__S__", "__C__", "__P__"]
-        if fn in ("var", "std"):
-            base = base.withColumn("__z2__", F.col("__z__") * F.col("__z__"))
-            specs.append(("__z2__", "sum", "__S2__"))
-            drop += ["__z2__", "__S2__"]
-        if fn in ("min", "max"):
-            # prefix min/max IS the expanding extreme — same single scan.
-            # Null inputs are filled with the identity (±inf) so the scan
-            # carries through them (pandas cummin/cummax would emit NaN AT
-            # the null positions, but expanding().min() does not).
-            ident = float("inf") if fn == "min" else float("-inf")
-            base = base.withColumn("__zm__", F.coalesce(
-                F.col(name).cast("double"), F.lit(ident)))
-            specs.append(("__zm__", fn, "__M__"))
-            drop += ["__zm__", "__M__"]
-        scanned = scan.prefix_scan(base, specs, order)
-        cnt = F.col("__C__")
-        if fn == "sum":
-            val = F.col("__S__")
-        elif fn == "mean":
-            val = F.col("__S__") / cnt
-        elif fn in ("var", "std"):
-            n = cnt.cast("double")
-            # general ddof: <=ddof-observation prefixes are NaN in
-            # pandas and a DIVIDE_BY_ZERO under ANSI — guard BEFORE
-            # dividing (ddof=0 needs one observation, like pandas)
-            dd = float(self._ddof)
-            v = F.when(n >= max(dd + 1, 1), F.greatest(
-                (F.col("__S2__") - F.col("__S__") * F.col("__S__") / n)
-                / (n - F.lit(dd)), F.lit(0.0)))
-            val = F.sqrt(v) if fn == "std" else v
-        elif fn in ("min", "max"):
-            val = F.col("__M__")
-        else:
-            val = cnt.cast("double")
-        # pandas: sum/mean guard on non-null observations, count on rows
-        have = F.col("__P__") if fn == "count" else cnt
-        guarded = F.when(have >= F.lit(self._minp), val).otherwise(F.lit(None))
-        out = (scanned.withColumn(name, guarded).drop(*drop))
-        node = Node(f"expanding_{fn}", {}, s._expr)
-        return Series(out, F.col(name), s._col_name, node, idx,
-                      s._index_names if s._index_cols else (None,))
-
-    def sum(self) -> Series: return self._agg("sum")
-    def mean(self) -> Series: return self._agg("mean")
-    def count(self) -> Series: return self._agg("count")
-    def var(self, ddof: int = 1) -> Series:
-        self._ddof = int(ddof)
-        try:
-            return self._agg("var")
-        finally:
-            self._ddof = 1
-
-    def std(self, ddof: int = 1) -> Series:
-        self._ddof = int(ddof)
-        try:
-            return self._agg("std")
-        finally:
-            self._ddof = 1
-
-    def min(self) -> Series: return self._agg("min")
-    def max(self) -> Series: return self._agg("max")
-
-    def _pairwise(self, other: "Series", want: str,
-                  ddof: int = 1) -> Series:
-        """Expanding cov/corr: the pairwise-masked moment sums ARE prefix
-        sums — one shared scan, no position join at all (cheaper than the
-        rolling form).  Foreign-frame ``other`` index-aligns first."""
-        from .functions import scan
-        s = self._s
-        if not isinstance(other, Series):
-            raise NotImplementedError("expanding cov/corr needs a Series")
-        if other._sdf is s._sdf:
-            base_f = DataFrame(
-                s._sdf.select(*_order_cols(s._sdf),
-                              *[F.col(c) for c in s._index_cols],
-                              s._scol.alias("__x__"),
-                              other._scol.alias("__y__")),
-                Node("expanding_pair", {}, s._expr),
-                s._index_cols, s._index_names)
-        else:
-            base_f = _align_frames(s.to_frame("__x__"),
-                                   other.to_frame("__y__"))
-        if base_f._index_cols:
-            sdf = base_f._sdf
-            # pandas windows over the presented rows (see rolling)
-            order = [_ORDER] if _ORDER in sdf.columns \
-                else list(base_f._index_cols)
-            idx, names = base_f._index_cols, base_f._index_names
-        else:
-            sdf = positions(base_f)
-            order, idx, names = [_ROWID], (_ROWID,), (None,)
-        x, y = F.col("__x__").cast("double"), F.col("__y__").cast("double")
-        m = x.isNotNull() & y.isNotNull()
-        z = lambda c: F.coalesce(F.when(m, c), F.lit(0.0))
-        base = (sdf.withColumn("__px__", z(x)).withColumn("__py__", z(y))
-                .withColumn("__pxy__", z(x * y))
-                .withColumn("__px2__", z(x * x))
-                .withColumn("__py2__", z(y * y))
-                .withColumn("__pn__", m.cast("long")))
-        specs = [(c, "sum", c.replace("__p", "__S")) for c in
-                 ("__px__", "__py__", "__pxy__", "__px2__", "__py2__",
-                  "__pn__")]
-        scanned = scan.prefix_scan(base, specs, order)
-        n = F.col("__Sn__").cast("double")
-        sx, sy = F.col("__Sx__"), F.col("__Sy__")
-        sxy, sx2, sy2 = F.col("__Sxy__"), F.col("__Sx2__"), F.col("__Sy2__")
-        if want == "cov":
-            res = F.when(n > ddof, (sxy - sx * sy / n) / (n - ddof))
-        else:
-            den = (n * sx2 - sx * sx) * (n * sy2 - sy * sy)
-            res = F.when(den > 0, (n * sxy - sx * sy) / F.sqrt(den))
-        res = F.when(n >= F.lit(max(self._minp, 1)), res)
-        name = s._col_name or "__v__"
+        if s is None:
+            raise NotImplementedError("expanding cov/corr is supported on "
+                                      "a Series")
+        sdf, order, idx, names = _positional_order(
+            _pair_frame(s, other, "expanding"))
+        sdf = sdf.withColumns({c: F.coalesce(F.col(c), F.lit(0.0))
+                               for c in _PAIR})
+        scanned = scan.prefix_scan(sdf, [(c, "sum", c) for c in _PAIR],
+                                   order)
+        res = F.when(F.col("__pn__") >= F.lit(max(self._minp, 1)),
+                     _pair_stat(want, ddof, *[F.col(c) for c in _PAIR]))
+        name = s._pos_col
         sel = scanned.select(*[F.col(c) for c in idx],
                              *_order_cols(scanned), res.alias(name))
         node = Node(f"expanding_{want}", {}, s._expr)
-        return Series(sel, F.col(name), s._col_name, node, idx, names)
+        return _chain_result(DataFrame(sel, node, idx, names), s, [name])
 
-    def cov(self, other: "Series", ddof: int = 1) -> Series:
+    def cov(self, other: "Series", ddof: int = 1):
         return self._pairwise(other, "cov", ddof)
 
-    def corr(self, other: "Series") -> Series:
+    def corr(self, other: "Series"):
         return self._pairwise(other, "corr")
 
 
@@ -6151,35 +5810,44 @@ class DataFrame(FrameBase):
         return self.sub(other, fill_value, axis)
 
     def _frame_positional(self, periods: int, build, op: str,
-                          extra_cols: dict | None = None) -> "DataFrame":
-        """Shared frame-wide positional helper: ONE distributed position
-        pass + ONE equi-join on (pos - periods) serves EVERY numeric
-        column (shift/diff/pct_change) — per-column marginal cost is an
-        expression, not a pass."""
+                          cols: list[str] | None = None) -> "DataFrame":
+        """Shared positional helper (shift/diff/pct_change, for frames
+        and Series alike): ONE distributed position pass + ONE equi-join
+        on (pos - periods) serves every column in ``cols`` (default: all)
+        — per-column marginal cost is an expression, not a pass.
+        ``build(col, prev)`` is the new value; ``__src__`` is null where
+        the row shifted in from beyond the boundary."""
         from .functions.scan import global_pos
-        if _ORDER in self._sdf.columns:
-            sdf, order, drop_rowid = self._sdf, [_ORDER], False
-        elif self._index_cols:
-            sdf, order, drop_rowid = self._sdf, list(self._index_cols), False
-        else:
-            sdf, order, drop_rowid = positions(self), [_ROWID], True
-        cols = [c for c in self.columns
-                if is_numeric(self._sdf.schema[c].dataType)]
+        sdf, order, idx, names = _positional_order(self)
+        cols = list(self.columns) if cols is None else cols
+        lag = {c: f"__lag{i}__" for i, c in enumerate(cols)}
         pos = global_pos(sdf, order)  # checkpoint-backed (r9), no persist
         lagged = pos.select(
             (F.col("__pos__") + F.lit(periods)).alias("__pos__"),
             F.lit(1).alias("__src__"),
-            *[F.col(c).alias(f"__lag_{c}__") for c in cols])
-        joined = pos.join(lagged, "__pos__", "left")
-        updates = {c: build(F.col(c), F.col(f"__lag_{c}__")) for c in cols}
-        out = (joined.withColumns(updates)
-               .drop("__pos__", "__src__", *[f"__lag_{c}__" for c in cols]))
-        if drop_rowid:
-            idx_cols, idx_names = (_ROWID,), (None,)
-        else:
-            idx_cols, idx_names = self._index_cols, self._index_names
+            *[F.col(c).alias(lag[c]) for c in cols])
+        out = (pos.join(lagged, "__pos__", "left")
+               .withColumns({c: build(F.col(c), F.col(lag[c])) for c in cols})
+               .drop("__pos__", "__src__", *lag.values()))
         node = Node(op, {"periods": periods}, self._expr)
-        return DataFrame(out, node, idx_cols, idx_names)
+        return DataFrame(out, node, idx, names)
+
+    def _require_types(self, op: str, ok, pandas_computes=()) -> dict:
+        """``{column: Spark type}``, after failing loudly on a column
+        ``op`` cannot compute rather than returning it unchanged:
+        NotImplementedError where pandas computes a result the engine
+        does not (types in ``pandas_computes``), else TypeError like
+        pandas."""
+        cols = set(self.columns)
+        types = {f.name: f.dataType for f in self._sdf.schema.fields
+                 if f.name in cols}
+        for c, dt in types.items():
+            if not ok(dt):
+                err = (NotImplementedError
+                       if isinstance(dt, pandas_computes) else TypeError)
+                raise err(f"{op}: column {c!r} of type "
+                          f"{dt.simpleString()} is not supported")
+        return types
 
     def shift(self, periods: int = 1, fill_value=None,
               axis: int = 0) -> "DataFrame":
@@ -6217,6 +5885,9 @@ class DataFrame(FrameBase):
         if fill_value is None:
             return self._frame_positional(periods, lambda c, lag: lag,
                                           "shift")
+        # pandas fills only positions shifted in from beyond the boundary
+        # — NaNs already in the data stay NaN, so key on the join-miss
+        # flag, not on null-ness of the value
         return self._frame_positional(
             periods,
             lambda c, lag: F.when(F.col("__src__").isNull(),
@@ -6236,6 +5907,9 @@ class DataFrame(FrameBase):
                               else F.lit(None).cast("double"))
             return self._derive(self._sdf.withColumns(updates),
                                 "diff_axis1", {"periods": periods})
+        self._require_types("diff", lambda dt: is_numeric(dt) or isinstance(
+            dt, (T.TimestampType, T.TimestampNTZType, T.DateType)),
+            T.BooleanType)
         return self._frame_positional(periods, lambda c, lag: c - lag,
                                       "diff")
 
@@ -6249,8 +5923,8 @@ class DataFrame(FrameBase):
         if fill_method is not None:
             raise ValueError(f"fill_method must be 'pad'/'ffill'/None, "
                              f"got {fill_method!r}")
-        return self._frame_positional(
-            periods, lambda c, lag: c / lag - 1, "pct_change")
+        self._require_types("pct_change", is_numeric, T.BooleanType)
+        return self._frame_positional(periods, _pct_ratio, "pct_change")
 
     def combine_first(self, other: "DataFrame") -> "DataFrame":
         """Reference CombineFirst ``_expr.py:1005-1031``: index-aligned null
@@ -8015,14 +7689,23 @@ class DataFrame(FrameBase):
 
     def _frame_cumop(self, op: str, skipna: bool = True) -> "DataFrame":
         from .functions import scan
-        num = [c for c in self.columns
-               if is_numeric(self._sdf.schema[c].dataType)]
-        if self._index_cols:
-            sdf, order = self._sdf, list(self._index_cols)
-            idx, names = self._index_cols, self._index_names
+        if op in ("sum", "prod"):
+            # pandas casts bool to int; a string cumsum concatenates
+            types = self._require_types(
+                f"cum{op}",
+                lambda dt: is_numeric(dt) or isinstance(dt, T.BooleanType),
+                T.StringType if op == "sum" else ())
         else:
-            sdf, order = positions(self), [_ROWID]
-            idx, names = (_ROWID,), (None,)
+            types = self._require_types(
+                f"cum{op}", lambda dt: is_numeric(dt) or isinstance(
+                    dt, (T.BooleanType, T.StringType, T.DateType,
+                         T.TimestampType, T.TimestampNTZType)))
+        sdf, order, idx, names = _positional_order(self)
+        num = list(types)
+        casts = {c: F.col(c).cast("long") for c, dt in types.items()
+                 if op in ("sum", "prod") and isinstance(dt, T.BooleanType)}
+        if casts:
+            sdf = sdf.withColumns(casts)
         specs = [(c, op, c) for c in num]
         flags = {}
         if not skipna:
@@ -8121,37 +7804,48 @@ class DataFrame(FrameBase):
         """pandas ``DataFrame.rolling``: all numeric columns share ONE
         distributed prefix scan + ONE position join (sum/mean/count/
         var/std); min/max run the van Herk block pass per column.
-        ``on=`` orders the window by that column (excluded from
-        aggregation, kept in the output).  A string window (``"3D"``) is
+        ``closed=`` follows pandas.  ``on=`` excludes that column from
+        aggregation and keeps it in the output; for an offset window it
+        is the window axis.  A string window (``"3D"``) is
         a TIME-offset window over the datetime index — block-bucketed
         self-join (``_FrameTimeRolling``), never a global window."""
         if isinstance(window, str):
             base = self.set_index(on) if on is not None else self
             return _FrameTimeRolling(base, window, min_periods,
                                      closed or "right")
-        return _FrameRolling(self, window, min_periods, center, on)
+        return _FrameRolling(self, window, min_periods, center, on, closed)
 
     def interpolate(self, method: str = "linear",
-                    limit: int | None = None) -> "DataFrame":
-        """pandas ``DataFrame.interpolate`` over the global order: every
-        numeric column shares ONE position pass and ONE pair of
-        sentinel-encoded neighbor scans (multi-spec ``prefix_scan``); only
-        the neighbor-value fetches (two position equi-joins per column)
-        are per-column.  Same semantics as ``Series.interpolate``
-        (linear/pad, forward limit direction)."""
+                    limit: int | None = None,
+                    limit_direction: str | None = None) -> "DataFrame":
+        """pandas ``interpolate`` over the global order: every numeric
+        column shares ONE position pass and ONE pair of sentinel-encoded
+        nearest-non-null-neighbor scans (multi-spec ``prefix_scan``; the
+        backward one runs forward over the negated position); only the
+        neighbor-value fetches (two position equi-joins per column) are
+        per-column.  No global window anywhere.
+
+        ``linear``: prev + (next-prev)·(pos-pp)/(np-pp); which edge runs
+        fill is ``limit_direction``'s call (pandas ``'forward'`` default:
+        trailing nulls take the last valid value, leading nulls stay
+        null).  ``pad``/``ffill``: previous valid value.  ``limit`` caps
+        the fill distance from the anchoring valid row."""
         if method not in ("linear", "pad", "ffill"):
-            raise ValueError(f"interpolate: method {method!r} not supported")
+            raise ValueError(f"interpolate: method {method!r} not supported "
+                             "(linear/pad/ffill)")
+        direction = limit_direction or "forward"
+        if direction not in ("forward", "backward", "both"):
+            raise ValueError(f"interpolate: limit_direction "
+                             f"{limit_direction!r} not supported")
+        if direction == "both" and limit is not None:
+            raise NotImplementedError(
+                "interpolate: limit with limit_direction='both' is not "
+                "supported (per-gap two-sided fill caps)")
         from .functions import scan
         SENT = -(1 << 62)
-        if self._index_cols:
-            sdf, order = self._sdf, list(self._index_cols)
-            idx, names = self._index_cols, self._index_names
-        else:
-            sdf, order = positions(self), [_ROWID]
-            idx, names = (_ROWID,), (None,)
+        sdf, order, idx, names = _positional_order(self)
         num = [c for c in self.columns
                if is_numeric(self._sdf.schema[c].dataType)]
-        other = [c for c in self.columns if c not in num]
         pos = scan.global_pos(sdf, order)
         base = pos.withColumn("__negpos__", -F.col("__pos__"))
         fwd_specs, bwd_specs = [], []
@@ -8188,17 +7882,29 @@ class DataFrame(FrameBase):
             pp, np_ = F.col(pp_c), F.col(np_c)
             prev, nxt = F.col(f"__prev_{c}__"), F.col(f"__next_{c}__")
             if method == "linear":
-                f_ = (F.when(np_.isNotNull(),
-                             prev + (nxt - prev) * (p - pp) / (np_ - pp))
-                      .otherwise(prev))
+                # interior gaps always interpolate; the direction picks
+                # which EDGE runs fill
+                interp = prev + (nxt - prev) * (p - pp) / (np_ - pp)
+                f_ = (F.when(np_.isNotNull(), interp).otherwise(prev)
+                      if direction == "forward" else
+                      F.when(pp.isNotNull(), interp).otherwise(nxt)
+                      if direction == "backward" else
+                      F.when(pp.isNull(), nxt).when(np_.isNull(), prev)
+                      .otherwise(interp))
             else:
-                f_ = prev
+                f_ = (prev if direction == "forward" else
+                      nxt if direction == "backward" else
+                      F.coalesce(prev, nxt))
             if limit is not None:
-                f_ = F.when((p - pp) <= F.lit(limit), f_)
+                dist = (p - pp) if direction == "forward" else (np_ - p)
+                f_ = F.when(dist <= F.lit(limit), f_)
+            anchor = (pp if direction == "forward" else
+                      np_ if direction == "backward" else
+                      F.coalesce(pp, np_))
             filled[c] = F.when(v.isNotNull(), v.cast("double")).otherwise(
-                F.when(pp.isNotNull(), f_))
+                F.when(anchor.isNotNull(), f_))
         out = j.withColumns(filled).select(
-            *[F.col(c) for c in idx],
+            *[F.col(c) for c in idx], *_order_cols(j),
             *[F.col(c) for c in self.columns])
         return DataFrame(out, Node("frame_interpolate", {"method": method},
                                    self._expr), idx, names)
@@ -8215,19 +7921,8 @@ class DataFrame(FrameBase):
         numeric column through ONE shared ranged pass — the per-partition
         recurrence carries per-column (num, den) state in the same Arrow
         stream (``timeseries.ewm_mean_global_multi``)."""
-        import math
-        given = [x is not None for x in (com, span, halflife, alpha)]
-        if sum(given) != 1:
-            raise ValueError("pass exactly one of com, span, halflife, alpha")
-        if com is not None:
-            a = 1.0 / (1.0 + com)
-        elif span is not None:
-            a = 2.0 / (span + 1.0)
-        elif halflife is not None:
-            a = 1.0 - math.exp(-math.log(2.0) / halflife)
-        else:
-            a = alpha
-        return _FrameEwm(self, a, adjust, ignore_na)
+        return _FrameEwm(self, _ewm_alpha(com, span, halflife, alpha),
+                         adjust, ignore_na)
 
     def ffill(self, limit: int | None = None) -> "DataFrame":
         """pandas ``DataFrame.ffill`` — every column forward-filled in the
@@ -8241,12 +7936,7 @@ class DataFrame(FrameBase):
     def _frame_fill(self, descending: bool,
                     limit: int | None = None) -> "DataFrame":
         from .functions import scan
-        if self._index_cols:
-            sdf, order = self._sdf, list(self._index_cols)
-            idx, names = self._index_cols, self._index_names
-        else:
-            sdf, order = positions(self), [_ROWID]
-            idx, names = (_ROWID,), (None,)
+        sdf, order, idx, names = _positional_order(self)
         out = scan.last_scan(sdf, list(self.columns), order,
                              descending=[descending] * len(order),
                              limit=limit)

@@ -38,8 +38,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["prefix_scan", "global_pos", "is_monotonic", "rolling_agg",
-           "rolling_minmax", "rolling_apply", "rolling_agg_frame", "last_scan"]
+__all__ = ["prefix_scan", "global_pos", "is_monotonic", "rolling_minmax",
+           "rolling_apply", "rolling_agg_frame", "last_scan"]
 
 _PID = "__pes_pid__"
 
@@ -449,131 +449,6 @@ def global_pos(sdf: SparkDF, order_by: list[str], name: str = "__pos__",
     return out
 
 
-def rolling_agg(sdf: SparkDF, col: str, order_by: list[str], window: int,
-                fn: str = "mean", min_periods: int | None = None,
-                out: str = "__roll__",
-                num_partitions: int | None = None,
-                center: bool = False) -> SparkDF:
-    """Global (un-partitioned) pandas ``rolling(window).fn()`` as a
-    **difference of prefix sums** — no window function anywhere.
-
-    ``rolling_sum_i = S_i - S_{i-w}`` where ``S`` is the running sum of the
-    null-zeroed values; the running count of non-null values gives both the
-    ``min_periods`` guard and the mean divisor.  Cost: ONE range shuffle for
-    the prefix scan (sum and count share it) + one equi-join on the global
-    position for the ``i-w`` lookback — each fully distributed.
-
-    ``center=True`` (pandas): the window at position ``i`` covers
-    ``[i-w+1+lead, i+lead]`` with ``lead = (w-1) // 2`` — the same prefix
-    difference read at two shifted positions, so it adds ONE more position
-    equi-join (the forward edge) plus a broadcast single-row total for the
-    tail windows that truncate at ``n``.
-
-    Known optimization path (not yet taken): when ``w`` is much smaller
-    than a partition, the ``i-w`` lookback is LOCAL for all but the first
-    ``w`` rows of each partition — a per-partition ``w``-row halo carry
-    (the last_scan carry generalized from 1 row to ``w``) would replace
-    the position hash join with a broadcast of ``w × #partitions`` rows.
-    The join is linear and fully distributed as is; revisit if profiles
-    ever show it dominating at extreme scale.
-
-    Supported fns: sum, mean, count, var, std (var/std add one more shared
-    prefix scan — sum of squares — and use the sufficient-statistic
-    identity; document the usual cancellation caveat for |mean| >> std).
-    min/max are not sum-decomposable — see ``rolling_minmax``.
-    """
-    if fn not in ("sum", "mean", "count", "var", "std"):
-        raise ValueError("rolling_agg: fn must be sum/mean/count/var/std "
-                         f"(got {fn!r}); min/max: rolling_minmax")
-    minp = window if min_periods is None else min_periods
-    lead = (window - 1) // 2 if center else 0
-    zeroed = "__z__"
-    nn = "__nn__"
-    need_sq = fn in ("var", "std")
-    base = (sdf
-            .withColumn(zeroed, F.coalesce(F.col(col).cast("double"),
-                                           F.lit(0.0)))
-            .withColumn(nn, F.col(col).isNotNull().cast("long"))
-            .withColumn("__one__", F.lit(1).cast("long")))
-    specs = [(zeroed, "sum", "__S__"), (nn, "sum", "__C__"),
-             ("__one__", "sum", "__P__")]
-    if need_sq:
-        base = base.withColumn("__z2__", F.col(zeroed) * F.col(zeroed))
-        specs.append(("__z2__", "sum", "__S2__"))
-    # the prefix sum of ones IS the (1-based) global position — all
-    # scans share one range shuffle.  No persist: prefix_scan's output is
-    # checkpoint-backed (r9), so every branch below reads the pinned
-    # blocks plus a cheap local-broadcast join — persisting it again
-    # would double-cache the table
-    pos = prefix_scan(base, specs, order_by, num_partitions)
-    lag_cols = [(F.col("__P__") + window - lead).alias("__P__"),
-                F.col("__S__").alias("__Sl__"),
-                F.col("__C__").alias("__Cl__")]
-    if need_sq:
-        lag_cols.append(F.col("__S2__").alias("__S2l__"))
-    lag = pos.select(*lag_cols)
-    j = pos.join(lag, "__P__", "left")
-    if lead:
-        # forward edge: prefix totals read at position P+lead; rows whose
-        # forward edge passes the end of the data fall back to the global
-        # totals (the window truncates at n) — one tiny broadcast row
-        fwd_cols = [(F.col("__P__") - lead).alias("__P__"),
-                    F.col("__S__").alias("__Sf__"),
-                    F.col("__C__").alias("__Cf__")]
-        if need_sq:
-            fwd_cols.append(F.col("__S2__").alias("__S2f__"))
-        j = j.join(pos.select(*fwd_cols), "__P__", "left")
-        tot_cols = [F.max("__P__").alias("__Pt__"),
-                    F.max_by("__S__", "__P__").alias("__St__"),
-                    F.max_by("__C__", "__P__").alias("__Ct__")]
-        if need_sq:
-            tot_cols.append(F.max_by("__S2__", "__P__").alias("__S2t__"))
-        j = j.crossJoin(F.broadcast(pos.agg(*tot_cols)))
-        hiS = F.coalesce(F.col("__Sf__"), F.col("__St__"))
-        hiC = F.coalesce(F.col("__Cf__"), F.col("__Ct__"))
-    else:
-        hiS, hiC = F.col("__S__"), F.col("__C__")
-    wsum = hiS - F.coalesce(F.col("__Sl__"), F.lit(0.0))
-    wcnt = hiC - F.coalesce(F.col("__Cl__"), F.lit(0))
-    if fn == "sum":
-        val = wsum
-    elif fn == "mean":
-        # empty-window guard (min_periods=0): pandas yields NaN, ANSI errors
-        val = F.when(wcnt > 0, wsum / wcnt)
-    elif fn in ("var", "std"):
-        hiS2 = (F.coalesce(F.col("__S2f__"), F.col("__S2t__")) if lead
-                else F.col("__S2__"))
-        wsq = hiS2 - F.coalesce(F.col("__S2l__"), F.lit(0.0))
-        n = wcnt.cast("double")
-        # ddof=1: a 0/1-observation window is NaN in pandas and a
-        # DIVIDE_BY_ZERO under ANSI — guard BEFORE dividing; the inner
-        # greatest() clips tiny negative cancellation residue
-        v = F.when(n >= 2, F.greatest(
-            (wsq - wsum * wsum / n) / (n - F.lit(1)), F.lit(0.0)))
-        val = F.sqrt(v) if fn == "std" else v
-    else:
-        val = wcnt.cast("double")
-    # pandas guard: sum/mean need min_periods NON-NULL observations in the
-    # window; count only needs that many ROWS in the (possibly truncated)
-    # window: min(P+lead, n) - max(P+lead-w, 0)
-    if fn == "count":
-        hi_pos = (F.least(F.col("__P__") + lead, F.col("__Pt__")) if lead
-                  else F.col("__P__"))
-        have = hi_pos - F.greatest(F.col("__P__") + lead - window, F.lit(0))
-    else:
-        have = wcnt
-    guarded = F.when(have >= F.lit(minp), val).otherwise(F.lit(None))
-    drop = ["__P__", "__S__", "__C__", "__Sl__", "__Cl__", zeroed, nn,
-            "__one__"]
-    if need_sq:
-        drop += ["__z2__", "__S2__", "__S2l__"]
-    if lead:
-        drop += ["__Sf__", "__Cf__", "__Pt__", "__St__", "__Ct__"]
-        if need_sq:
-            drop += ["__S2f__", "__S2t__"]
-    return j.withColumn(out, guarded).drop(*drop)
-
-
 def rolling_minmax(sdf: SparkDF, col: str, order_by: list[str], window: int,
                    fn="min", min_periods: int | None = None,
                    out="__roll__",
@@ -751,9 +626,9 @@ def is_monotonic(sdf: SparkDF, col: str, order_by: list[str],
     return True
 
 
-def rolling_apply(sdf: SparkDF, col: str, order_by: list[str], window: int,
-                  func, min_periods: int | None = None,
-                  out: str = "__roll__", raw: bool = False,
+def rolling_apply(sdf: SparkDF, col: str | list[str], order_by: list[str],
+                  window: int, func, min_periods: int | None = None,
+                  out: str | list[str] = "__roll__", raw: bool = False,
                   center: bool = False,
                   block_rows: int = 4096,
                   num_partitions: int | None = None) -> SparkDF:
@@ -772,7 +647,15 @@ def rolling_apply(sdf: SparkDF, col: str, order_by: list[str], window: int,
     Each block is an independent task — a 100 TB series runs
     ``n/block_rows``-wide, never through one executor.  The Python func
     runs Arrow-batched per block (this IS the slow path; use the
-    JVM rolling aggs whenever the function is expressible)."""
+    JVM rolling aggs whenever the function is expressible).
+
+    ``col``/``out`` may be equal-length lists — every column then shares
+    the position pass and the block apply; an ``out`` equal to its
+    ``col`` overwrites it."""
+    cols = [col] if isinstance(col, str) else list(col)
+    outs = [out] if isinstance(out, str) else list(out)
+    if len(cols) != len(outs):
+        raise ValueError("rolling_apply: col and out must have equal length")
     minp = window if min_periods is None else min_periods
     if window > block_rows:
         block_rows = window * 2
@@ -802,21 +685,32 @@ def rolling_apply(sdf: SparkDF, col: str, order_by: list[str], window: int,
     both = parts[0]
     for p in parts[1:]:
         both = both.unionByName(p)
+    # only the window inputs travel to the Python workers
+    both = both.select("__pos__", "__blk__", "__halo__",
+                       *[F.col(c).alias(f"__in{i}__")
+                         for i, c in enumerate(cols)])
 
-    schema = T.StructType([T.StructField("__pos__", T.LongType()),
-                           T.StructField(out, T.DoubleType())])
+    schema = T.StructType([T.StructField("__pos__", T.LongType())]
+                          + [T.StructField(f"__out{i}__", T.DoubleType())
+                             for i in range(len(cols))])
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("__pos__")
-        r = (pdf[col].rolling(window, min_periods=minp, center=center)
-             .apply(func, raw=raw))
         keep = ~pdf["__halo__"].to_numpy()
-        return pd.DataFrame({"__pos__": pdf["__pos__"].to_numpy()[keep],
-                             out: r.to_numpy()[keep]})
+        res = {"__pos__": pdf["__pos__"].to_numpy()[keep]}
+        for i, c in enumerate(cols):
+            r = (pdf[f"__in{i}__"].rename(c)
+                 .rolling(window, min_periods=minp, center=center)
+                 .apply(func, raw=raw))
+            res[f"__out{i}__"] = r.to_numpy()[keep]
+        return pd.DataFrame(res)
 
     res = both.groupBy("__blk__").applyInPandas(_block, schema)
     # join results back to the original rows by position
-    return (pos.join(res, "__pos__", "left").drop("__pos__"))
+    return (pos.drop(*[o for o in outs if o in pos.columns])
+            .join(res, "__pos__", "left")
+            .withColumnsRenamed({f"__out{i}__": o for i, o in enumerate(outs)})
+            .drop("__pos__"))
 
 
 def rolling_agg_frame(sdf: SparkDF, cols: list[str], order_by: list[str],

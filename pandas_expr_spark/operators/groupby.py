@@ -1034,19 +1034,9 @@ class GroupBy:
         """pandas ``groupby(keys).ewm(...)`` chain (``.mean()``): exact
         pandas ewm per group via ONE Arrow ``applyInPandas`` over all
         value columns — one shuffle on the keys."""
-        import math
-        given = [x is not None for x in (com, span, halflife, alpha)]
-        if sum(given) != 1:
-            raise ValueError("pass exactly one of com, span, halflife, alpha")
-        if com is not None:
-            a = 1.0 / (1.0 + com)
-        elif span is not None:
-            a = 2.0 / (span + 1.0)
-        elif halflife is not None:
-            a = 1.0 - math.exp(-math.log(2.0) / halflife)
-        else:
-            a = alpha
-        return _GroupEwm(self, a, adjust)
+        from .._collection import _ewm_alpha
+        return _GroupEwm(self, _ewm_alpha(com, span, halflife, alpha),
+                         adjust)
 
     def rolling(self, window: int | str, min_periods: int | None = None,
                 center: bool = False, closed: str | None = None):

@@ -73,11 +73,6 @@ def _dnf_to_condition(filters) -> Any:
     return disjuncts
 
 
-import os as _os
-
-# positional-label minting at the scan (default on; PES_POSITIONAL_LABELS=0
-# disables, restoring the renumber-on-filter behavior)
-_PES_LABELS = _os.environ.get("PES_POSITIONAL_LABELS", "1") != "0"
 # beyond this many data files the literal offset map stops being a
 # reasonable plan constant — labels fall back to renumber-on-filter
 _LABEL_MAX_FILES = 256
@@ -127,8 +122,6 @@ def _labeled_parquet_scan(spark, path: str) -> SparkDF:
     with pandas label preservation)."""
     from .._collection import _LABEL
     sdf = spark.read.parquet(path)
-    if not _PES_LABELS:
-        return sdf
     offs = _parquet_file_offsets(path)
     if offs is None:
         return sdf
@@ -172,7 +165,7 @@ def read_parquet(path: str, columns: Sequence[str] | None = None,
                  filters=None, **kwargs) -> DataFrame:
     """Reference ReadParquet ``io/parquet.py:79-197``."""
     from .._collection import _LABEL
-    token = tokenize("read_parquet", path, _PES_LABELS)
+    token = tokenize("read_parquet", path)
     sdf = _cached_scan(token, lambda spark: _labeled_parquet_scan(spark, path))
     node = Node("read_parquet", {"path": path})
     if filters is not None:
@@ -446,13 +439,10 @@ def from_pandas(pdf, npartitions: int | None = None) -> DataFrame:
     if stamp_order:
         from .._collection import _ORDER as _ORDER_COL
         pdf = pdf.assign(**{_ORDER_COL: range(len(pdf))})
-    if not index_cols and not stamp_order and _PES_LABELS:
+    if not index_cols and not stamp_order:
         # default RangeIndex: stamp the exact positional labels driver-
         # side (the input is already driver-held) so bare filter/dropna
-        # keep pandas' original labels instead of renumbering.  Gated on
-        # the same PES_POSITIONAL_LABELS kill switch as the parquet scan
-        # (r7 advice: the env var must disable EVERY label source, not
-        # just in-scan minting, for the renumbering contract to hold).
+        # keep pandas' original labels instead of renumbering.
         from .._collection import _LABEL as _LABEL_COL
         import numpy as _np
         pdf = pdf.assign(**{_LABEL_COL: _np.arange(len(pdf), dtype="int64")})

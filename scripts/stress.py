@@ -72,7 +72,8 @@ def stress_cc(spark) -> float:
 def stress_scan(spark) -> float:
     """10M-row global cumsum + rolling sum via the ranged segment scan.
     Round-2 measurement: ~1.2M rows/s/op, all 32-wide."""
-    from pandas_expr_spark.functions.scan import prefix_scan, rolling_agg
+    from pandas_expr_spark.functions.scan import (prefix_scan,
+                                                  rolling_agg_frame)
     base = (spark.range(10_000_000)
             .select(F.col("id").alias("k"),
                     (F.col("id") % 997).cast("double").alias("v"))
@@ -81,7 +82,7 @@ def stress_scan(spark) -> float:
     cum = prefix_scan(base, [("v", "sum", "cs")], ["k"])
     assert cum.filter(F.col("cs").isNull()).count() == 0
     _assert_wide(cum, "prefix-scan")
-    roll = rolling_agg(base, "v", ["k"], 100, "sum")
+    roll = rolling_agg_frame(base, ["v"], ["k"], 100, "sum")
     assert roll.count() == 10_000_000
     _assert_wide(roll, "rolling-agg")
     wall = time.perf_counter() - t0

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -16,6 +17,32 @@ def spark():
     from pandas_expr_spark import get_spark
     s = get_spark("pes-tests")
     yield s
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture()
+def jobs(spark):
+    """``jobs(fn) -> (fn(), n)``: run ``fn`` under its own Spark job group
+    and count the jobs it fired, then restore the caller's group."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+
+    def count(fn):
+        prev = {k: sc.getLocalProperty(k) for k in keys}
+        group = f"pes-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for k, v in prev.items():
+                sc.setLocalProperty(k, v)
+        # the status store is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return count
 
 
 @pytest.fixture()

@@ -104,26 +104,6 @@ def test_multifile_parquet_labels(spark, tmp_path):
     assert got["v"].tolist() == exp["v"].tolist()
 
 
-def test_no_label_env_fallback():
-    # PES_POSITIONAL_LABELS=0 restores the renumbering contract across
-    # EVERY label source — from_pandas driver-side stamps as well as the
-    # in-scan parquet labels (r8: the stamp is now gated on the same env
-    # var, so a bare filter renumbers 0..n-1)
-    import subprocess, sys
-    code = (
-        "import pandas as pd, pandas_expr_spark as pes\n"
-        "df = pes.from_pandas(pd.DataFrame({'a': [1,2,3,4]}))\n"
-        "out = df[df.a > 2].compute()\n"
-        "print(out.index.tolist())\n"
-    )
-    env = {"PES_POSITIONAL_LABELS": "0", "PATH": "/usr/bin:/bin",
-           "PYTHONPATH": "/root/repo", "HOME": "/root",
-           "JAVA_HOME": __import__("os").environ.get("JAVA_HOME", "")}
-    r = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                       text=True, env=env, timeout=300)
-    assert "[0, 1]" in r.stdout, r.stdout + r.stderr
-
-
 # ------------------------------------------------------- randomized chains
 _OPS = [
     "filter", "dropna", "head", "tail", "project", "assign", "fillna",

@@ -35,7 +35,7 @@ def eq_vals(got, exp):
         if pd.isna(b):
             assert pd.isna(a), (a, b)
         elif isinstance(b, (int, float, np.floating)) and not isinstance(b, bool):
-            assert abs(float(a) - float(b)) < 1e-9, (a, b)
+            assert float(a) == float(b) or abs(float(a) - float(b)) < 1e-9, (a, b)
         else:
             assert str(a) == str(b), (a, b)
 
@@ -250,3 +250,138 @@ def test_merge_asof_stamped_left():
     eq_vals(got["v"].tolist(), exp["v"].tolist())
     eq_vals(got["w"].tolist(), exp["w"].tolist())
     assert got.index.tolist() == exp.index.tolist()
+
+
+# ------------------------- positional ops: one kernel for Series and frame
+# Every positional op runs on presented row order: the stamp when there is
+# one, else the index, else file order.  Series and frame share one kernel;
+# these pins run both kinds over four frame shapes.
+_PP = pd.DataFrame({
+    "k": RNG.permutation(30),
+    "v": np.where(RNG.random(30) < 0.3, np.nan, RNG.normal(size=30).round(3)),
+    "w": RNG.normal(size=30).round(3),
+})
+
+_SHAPES = {
+    "file": (lambda: pes.from_pandas(_PP), lambda: _PP),
+    "sorted": (lambda: pes.from_pandas(_PP).sort_values("k"),
+               lambda: _PP.sort_values("k")),
+    "sorted_reset": (
+        lambda: pes.from_pandas(_PP).sort_values("k").reset_index(drop=True),
+        lambda: _PP.sort_values("k").reset_index(drop=True)),
+    "from_pandas_indexed": (lambda: pes.from_pandas(_PP.set_index("k")),
+                            lambda: _PP.set_index("k")),
+}
+
+_POS_OPS = {
+    "cumsum": lambda x: x.cumsum(),
+    "ffill": lambda x: x.ffill(),
+    "bfill": lambda x: x.bfill(),
+    "interpolate": lambda x: x.interpolate(),
+    "shift": lambda x: x.shift(1),
+    "diff": lambda x: x.diff(),
+    "rolling_mean": lambda x: x.rolling(3).mean(),
+    "expanding_sum": lambda x: x.expanding().sum(),
+    "ewm_mean": lambda x: x.ewm(alpha=.5).mean(),
+}
+
+
+@pytest.mark.parametrize("kind", ["series", "frame"])
+@pytest.mark.parametrize("op", sorted(_POS_OPS))
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_positional_presented_order(shape, op, kind):
+    eng, ref = (f() for f in _SHAPES[shape])
+    pick = (lambda d: d["v"]) if kind == "series" else (lambda d: d[["v", "w"]])
+    got = _POS_OPS[op](pick(eng)).compute()
+    exp = _POS_OPS[op](pick(ref))
+    eq_vals(got.index.tolist(), exp.index.tolist())
+    if kind == "series":
+        assert got.name == exp.name
+        eq_vals(got.tolist(), exp.tolist())
+    else:
+        assert list(got.columns) == list(exp.columns)
+        for c in exp.columns:
+            eq_vals(got[c].tolist(), exp[c].tolist())
+
+
+def test_frame_shift_moves_string_column():
+    p = pd.DataFrame({"s": list("abcde"), "v": [1.0, 2.0, None, 4.0, 5.0]})
+    got = pes.from_pandas(p)[["s", "v"]].shift(1).compute()
+    exp = p[["s", "v"]].shift(1)
+    eq_vals(got["s"].tolist(), exp["s"].tolist())
+    eq_vals(got["v"].tolist(), exp["v"].tolist())
+
+
+def test_frame_pct_change_zero_divisor():
+    p = pd.DataFrame({"a": [0.0, 1.0, 0.0, 0.0, -2.0], "b": [1.0, 0.0, 3.0, 0.0, 5.0]})
+    got = pes.from_pandas(p).pct_change(fill_method=None).compute()
+    exp = p.pct_change(fill_method=None)
+    for c in exp.columns:
+        eq_vals(got[c].tolist(), exp[c].tolist())
+
+
+def test_frame_cumsum_bool_dtype():
+    p = pd.DataFrame({"b": [True, False, True, True], "v": [1, 2, 3, 4]})
+    got = pes.from_pandas(p).cumsum().compute()
+    exp = p.cumsum()
+    assert got["b"].dtype == exp["b"].dtype == np.int64
+    assert got["b"].tolist() == exp["b"].tolist()
+
+
+def test_frame_rolling_closed_left():
+    p = pd.DataFrame({"v": np.arange(8.0), "w": np.arange(8.0) ** 2})
+    for closed in ("left", "both", "neither"):
+        got = pes.from_pandas(p).rolling(3, closed=closed).sum().compute()
+        exp = p.rolling(3, closed=closed).sum()
+        for c in exp.columns:
+            eq_vals(got[c].tolist(), exp[c].tolist())
+
+
+def test_frame_positional_fails_loudly():
+    f = pes.from_pandas(pd.DataFrame({"s": list("abc"), "v": [1.0, 2.0, 3.0]}))
+    with pytest.raises(TypeError):
+        f.diff()
+    with pytest.raises(TypeError):
+        f.pct_change(fill_method=None)
+    with pytest.raises(NotImplementedError):
+        f.cumsum()
+
+
+_FRAME_METHODS = {
+    "rolling_median": lambda x: x.rolling(3).median(),
+    "rolling_quantile": lambda x: x.rolling(3).quantile(0.25),
+    "rolling_skew": lambda x: x.rolling(4).skew(),
+    "rolling_kurt": lambda x: x.rolling(5).kurt(),
+    "rolling_sem": lambda x: x.rolling(3).sem(),
+    "rolling_apply": lambda x: x.rolling(3).apply(lambda a: a.max() - a.min()),
+    "rolling_rank": lambda x: x.rolling(3).rank(),
+    "ewm_var": lambda x: x.ewm(alpha=.5).var(),
+    "ewm_std": lambda x: x.ewm(alpha=.5).std(),
+    "expanding_var_ddof0": lambda x: x.expanding().var(ddof=0),
+    "interpolate_both": lambda x: x.interpolate(limit_direction="both"),
+}
+
+
+@pytest.mark.parametrize("meth", sorted(_FRAME_METHODS))
+def test_frame_positional_methods(meth):
+    eng, ref = (f() for f in _SHAPES["sorted"])
+    got = _FRAME_METHODS[meth](eng[["v", "w"]]).compute()
+    exp = _FRAME_METHODS[meth](ref[["v", "w"]])
+    eq_vals(got.index.tolist(), exp.index.tolist())
+    for c in exp.columns:
+        eq_vals(got[c].tolist(), exp[c].tolist())
+
+
+@pytest.mark.parametrize("op", ["cumsum", "ffill", "rolling_sum"])
+def test_sorted_reset_frame_build_jobs(jobs, op):
+    f = pes.from_pandas(_PP).sort_values("k").reset_index(drop=True)
+    run = {"cumsum": lambda: f.cumsum(), "ffill": lambda: f.ffill(),
+           "rolling_sum": lambda: f.rolling(3).sum()}[op]
+    out, n = jobs(run)
+    assert n <= 4, n
+    exp = {"cumsum": lambda d: d.cumsum(), "ffill": lambda d: d.ffill(),
+           "rolling_sum": lambda d: d.rolling(3).sum()}[op](
+        _PP.sort_values("k").reset_index(drop=True))
+    got = out.compute()
+    for c in exp.columns:
+        eq_vals(got[c].tolist(), exp[c].tolist())

@@ -50,29 +50,21 @@ def test_sort_ignore_index_head(base, base_pdf):
     assert_frame_eq(out, exp, check_index=True)
 
 
-def test_sort_tail_no_build_job(spark, base, base_pdf):
-    sc = spark.sparkContext
-    sc.setJobGroup("tailbuild-r6", "tail graph build must be lazy")
-    t = base.sort_values("x", ascending=False).tail(4)
-    jobs = sc.statusTracker().getJobIdsForGroup("tailbuild-r6")
-    sc.setJobGroup("", "")
-    assert len(jobs) == 0, "tail() ran an eager action at graph-build time"
+def test_sort_tail_no_build_job(jobs, base, base_pdf):
+    t, n = jobs(lambda: base.sort_values("x", ascending=False).tail(4))
+    assert n == 0, "tail() ran an eager action at graph-build time"
     exp = base_pdf.sort_values("x", ascending=False).tail(4)
     pd.testing.assert_frame_equal(t.compute(), exp, check_dtype=False)
     plan = _plan(t)
     assert "TakeOrderedAndProject" in plan
 
 
-def test_unsorted_tail_no_build_job(spark, base, base_pdf):
+def test_unsorted_tail_no_build_job(jobs, base, base_pdf):
     # the non-fused path (frame with rowid labels) reverse-TopKs on the
     # rowid — also no count action
-    sc = spark.sparkContext
     f = base.set_index("x").reset_index()  # plain derive, no fuse handle
-    sc.setJobGroup("tailbuild2-r6", "")
-    t = f.tail(6)
-    jobs = sc.statusTracker().getJobIdsForGroup("tailbuild2-r6")
-    sc.setJobGroup("", "")
-    assert len(jobs) == 0
+    t, n = jobs(lambda: f.tail(6))
+    assert n == 0
     pd.testing.assert_frame_equal(
         t.compute().reset_index(drop=True),
         base_pdf.tail(6).reset_index(drop=True), check_dtype=False)
