@@ -443,6 +443,114 @@ def _positional_order(frame):
     return positions(frame), [_ROWID], (_ROWID,), (None,)
 
 
+def _lag_value(op: str, fill_value=None):
+    """``build(col, prev)`` of a shift-family op over the equi-join on
+    position: shift's moved value, diff's difference or pct_change's
+    ratio.  A null ``__src__`` flags a row shifted in from beyond the
+    boundary — shift's ``fill_value`` fills only those, never NaNs
+    already in the data."""
+    if op == "diff":
+        return lambda c, prev: c - prev
+    if op == "pct_change":
+        return _pct_ratio
+    if fill_value is None:
+        return lambda c, prev: prev
+    return lambda c, prev: F.when(F.col("__src__").isNull(),
+                                  F.lit(fill_value)).otherwise(prev)
+
+
+def _fusable(spec: tuple, dt: T.DataType) -> bool:
+    """Whether ``assign`` may fuse positional op ``spec`` over a column of
+    type ``dt``: exactly the types its standalone kernel computes without
+    raising (shift moves any column)."""
+    kind = spec[0]
+    if kind == "lag" and spec[1] == "shift":
+        return True
+    if kind in ("cum", "roll"):
+        return is_numeric(dt) or isinstance(dt, T.BooleanType)
+    return is_numeric(dt)
+
+
+def _fused_positional(frame, values: dict):
+    """``(sdf, idx)``: ``frame``'s rows plus one column per entry of
+    ``values`` (``{column: _PendingSeries over frame}``), and the index
+    they carry (an unindexed frame gets its positions as the rowid
+    index).  The values are computed in ONE pass over the frame's own
+    rows — they sit next to the frame's columns, so no alignment join
+    is needed.
+
+    One ``prefix_scan`` over the rows in ``_positional_order`` carries
+    the running 1-based position, every cum spec and each rolling
+    sum/count; then one equi-join on the position per distinct offset
+    (a shift's period, a rolling window) fetches the earlier rows'
+    values and sums.  Each value reads the frame's columns as they are
+    before any assign, and every formula is its standalone kernel's."""
+    from .functions import scan
+    sdf, order, idx, _ = _positional_order(frame)
+    P, one = "__pes_fpos__", "__pes_fone__"
+    specs, post, temps = [], {}, [one, P]
+    lags: dict[int, dict] = {}      # offset -> {src: lagged name}
+    at: dict[int, list] = {}        # offset -> [(out, fn(lagged))]
+    for i, (out, v) in enumerate(values.items()):
+        kind, *par = v._spec
+        src = f"__pes_fsrc{i}__"
+        col = v._base._scol
+        if kind == "cum" and par[0] in ("sum", "prod") and isinstance(
+                v._base.spark_type, T.BooleanType):
+            col = col.cast("long")     # pandas cumsums bool as int
+        sdf = sdf.withColumn(src, col)
+        temps.append(src)
+        if kind == "cum":
+            op, skipna = par
+            specs.append((src, op, out))
+            if not skipna:
+                fl = f"__pes_fnull{i}__"
+                sdf = sdf.withColumn(fl, F.when(col.isNull(), F.lit(1))
+                                     .otherwise(F.lit(0)))
+                specs.append((fl, "max", fl))
+                post[out] = F.when(F.col(fl) == 1, F.lit(None)) \
+                    .otherwise(F.col(out))
+                temps.append(fl)
+            continue
+        if kind == "lag":
+            _op, k, build = par
+            lag = lags.setdefault(k, {}).setdefault(src, f"{src}l")
+            at.setdefault(k, []).append(
+                (out, lambda g, b=build, s=src, l=lag: b(F.col(s), F.col(l))))
+            continue
+        fn, w, minp = par
+        sdf, rspecs = scan.rolling_inputs(sdf, [src], fn in ("var", "std"))
+        specs += rspecs
+        sums = [o for _, _, o in rspecs]       # sum, count[, squares]
+        temps += [s for s, _, _ in rspecs] + sums
+        lags.setdefault(w, {}).update({o: f"{o}l" for o in sums})
+
+        def _roll(g, fn=fn, w=w, minp=minp, sums=sums):
+            # a window's sums: the running sums here minus w rows back
+            win = [F.col(x) - F.coalesce(F.col(g[x]), F.lit(0))
+                   for x in sums]
+            have = (F.col(P) - F.greatest(F.col(P) - w, F.lit(0))
+                    if fn == "count" else win[1])
+            return F.when(have >= F.lit(minp), scan.window_stat(fn, *win))
+        at.setdefault(w, []).append((out, _roll))
+    if lags:
+        sdf = sdf.withColumn(one, F.lit(1).cast("long"))
+        specs.insert(0, (one, "sum", P))
+    scanned = scan.prefix_scan(sdf, specs, order)
+    out = scanned
+    for k in sorted(lags):
+        g = lags[k]
+        lagged = scanned.select((F.col(P) + F.lit(k)).alias(P),
+                                F.lit(1).alias("__src__"),
+                                *[F.col(s).alias(l) for s, l in g.items()])
+        out = (out.join(lagged, P, "left")
+               .withColumns({o: fn(g) for o, fn in at[k]})
+               .drop("__src__", *g.values()))
+    if post:
+        out = out.withColumns(post)
+    return out.drop(*temps), idx
+
+
 def _frame_column(frame, col: str, name) -> "Series":
     """Column ``col`` of a positional op's frame result, as a Series
     named ``name``."""
@@ -2220,21 +2328,41 @@ class Series(FrameBase):
         n = self._col_name
         return n if isinstance(n, str) and n else "__v__"
 
+    def _positional(self, spec: tuple, lower) -> "Series":
+        """A positional op ``DataFrame.assign`` can fuse into one scan of
+        this Series' frame (``_fused_positional``): a ``_PendingSeries``
+        that runs ``lower()`` — the standalone kernel — on first use as a
+        Series.  Types the fused kernel does not compute lower now, so
+        their errors stay eager."""
+        if _fusable(spec, self.spark_type):
+            return _PendingSeries(self, spec, lower)
+        return lower()
+
+    def _cumop(self, op: str, skipna: bool) -> "Series":
+        return self._positional(
+            ("cum", op, skipna),
+            lambda: self._via_frame(
+                lambda f, _n: getattr(f, f"cum{op}")(skipna=skipna),
+                f"cum{op}"))
+
     def cumsum(self, skipna: bool = True):
-        return self._via_frame(lambda f, _n: f.cumsum(skipna=skipna),
-                               "cumsum")
+        return self._cumop("sum", skipna)
 
     def cumprod(self, skipna: bool = True):
-        return self._via_frame(lambda f, _n: f.cumprod(skipna=skipna),
-                               "cumprod")
+        return self._cumop("prod", skipna)
 
     def cummax(self, skipna: bool = True):
-        return self._via_frame(lambda f, _n: f.cummax(skipna=skipna),
-                               "cummax")
+        return self._cumop("max", skipna)
 
     def cummin(self, skipna: bool = True):
-        return self._via_frame(lambda f, _n: f.cummin(skipna=skipna),
-                               "cummin")
+        return self._cumop("min", skipna)
+
+    def _lagop(self, op: str, periods, lower, fill_value=None) -> "Series":
+        if isinstance(periods, bool) or \
+                not isinstance(periods, (int, np.integer)):
+            return lower()     # the fused kernel joins on whole offsets
+        return self._positional(
+            ("lag", op, int(periods), _lag_value(op, fill_value)), lower)
 
     def shift(self, periods: int = 1, fill_value=None,
               freq: str | None = None) -> "Series":
@@ -2255,18 +2383,23 @@ class Series(FrameBase):
                               self._index_cols, self._index_names)
             return self._with_scol(
                 self._scol + _freq_interval(freq, periods), "shift_freq")
-        return self._via_frame(lambda f, _n: f.shift(periods, fill_value),
-                               "shift", periods=periods)
+        return self._lagop("shift", periods, lambda: self._via_frame(
+            lambda f, _n: f.shift(periods, fill_value), "shift",
+            periods=periods), fill_value)
 
     def diff(self, periods: int = 1) -> "Series":
-        return self._via_frame(lambda f, _n: f.diff(periods), "diff",
-                               periods=periods)
+        return self._lagop("diff", periods, lambda: self._via_frame(
+            lambda f, _n: f.diff(periods), "diff", periods=periods))
 
     def pct_change(self, periods: int = 1,
                    fill_method: str | None = "pad") -> "Series":
-        return self._via_frame(
-            lambda f, _n: f.pct_change(periods, fill_method), "pct_change",
-            periods=periods)
+        def lower():
+            return self._via_frame(
+                lambda f, _n: f.pct_change(periods, fill_method),
+                "pct_change", periods=periods)
+        if fill_method is not None:
+            return lower()   # the pad fill is a scan of its own
+        return self._lagop("pct_change", periods, lower)
 
     def interpolate(self, method: str = "linear",
                     limit: int | None = None,
@@ -2308,12 +2441,11 @@ class Series(FrameBase):
         min/max; ``center=True`` shifts the window per pandas.  A string
         window (``"3D"``) is a TIME-offset window over the datetime
         index — block-bucketed self-join, see ``_FrameTimeRolling``."""
-        f = self._as_frame()
         if isinstance(window, str):
-            return _FrameTimeRolling(f, window, min_periods,
+            return _FrameTimeRolling(self._as_frame(), window, min_periods,
                                      closed or "right", series=self)
-        return _FrameRolling(f, window, min_periods, center, closed=closed,
-                             series=self)
+        return _FrameRolling(None, window, min_periods, center,
+                             closed=closed, series=self)
 
     def expanding(self, min_periods: int = 1):
         """pandas ``Series.expanding`` over the global order — the prefix
@@ -3987,15 +4119,25 @@ def _chain_result(res: "DataFrame", series: "Series | None", cols):
     return _frame_column(res, cols[0], series._col_name)
 
 
-def _window_cols(frame: "DataFrame", series: "Series | None",
-                 skip=()) -> list[str]:
-    """The columns a rolling/expanding/ewm chain aggregates: a Series'
-    own column, else every numeric column not in ``skip``."""
-    if series is not None:
-        return [series._pos_col]
+def _window_cols(frame: "DataFrame", skip=()) -> list[str]:
+    """The columns a rolling/expanding/ewm chain aggregates: every column
+    of ``frame`` (a Series' one-column frame) not in ``skip``.  Like
+    pandas, a column that is neither numeric nor bool fails with
+    DataError instead of being dropped."""
+    types = frame._require_types(
+        "window aggregation",
+        lambda dt: is_numeric(dt) or isinstance(dt, T.BooleanType),
+        error=pd.errors.DataError, skip=skip)
+    return [c for c in frame.columns if c in types]
+
+
+def _bools_as_double(sdf: SparkDF, frame: "DataFrame", cols) -> SparkDF:
+    """Window aggregations read bool columns as 0.0/1.0 (pandas: float64
+    results)."""
     schema = frame._sdf.schema
-    return [c for c in frame.columns
-            if c not in skip and is_numeric(schema[c].dataType)]
+    casts = {c: F.col(c).cast("double") for c in cols
+             if isinstance(schema[c].dataType, T.BooleanType)}
+    return sdf.withColumns(casts) if casts else sdf
 
 
 # pairwise-complete moment inputs of rolling/expanding cov/corr, in
@@ -4061,9 +4203,9 @@ class _FrameTimeRolling:
                              "set_index first")
         ts_col = f._index_cols[0]
         cols = (self._cols if self._cols is not None
-                else _window_cols(f, self._s, skip=self._by))
+                else _window_cols(f, skip=self._by))
         # duplicate-timestamp ties follow the presented order
-        sdf = positions(f)
+        sdf = _bools_as_double(positions(f), f, cols)
         out = time_rolling(sdf, [_ROWID, ts_col], ts_col, cols,
                            self._wm, how, self._mp, by=self._by,
                            closed=self._closed, pos_col=_ROWID)
@@ -4090,11 +4232,13 @@ class _FrameTimeRolling:
 
 class _FrameRolling:
     """pandas ``rolling`` over a frame, or over a Series (``series=``:
-    ``frame`` is its one-column form and results come back as the
-    Series).  sum/mean/count/var/std: every column in ONE shared prefix
-    scan + ONE position join (``scan.rolling_agg_frame``); min/max: one
-    van Herk block pass per column; order statistics and ``apply``: the
-    halo-block path (``scan.rolling_apply``)."""
+    ``frame`` is None, the Series' one-column form is built on first
+    use, and results come back as the Series).  sum/mean/count/var/std:
+    every column in ONE shared prefix scan + ONE position join
+    (``scan.rolling_agg_frame``) — a Series' trailing window is pending,
+    so ``assign`` can fuse it; min/max: one van Herk block pass per
+    column; order statistics and ``apply``: the halo-block path
+    (``scan.rolling_apply``)."""
 
     # closed= reduces to a window-size change plus a one-row shift of the
     # result: the window CONTENTS are identical sets, so every aggregation
@@ -4118,10 +4262,16 @@ class _FrameRolling:
                 "rolling(center=True) with closed= other than 'right' is "
                 "not supported")
         grow, self._shift = self._CLOSED[closed]
-        self._f, self._s = frame, series
+        self._frame, self._s = frame, series
         self._window = window + grow
         self._minp = window if min_periods is None else min_periods
         self._center, self._on, self._sel = center, on, None
+
+    @property
+    def _f(self) -> "DataFrame":
+        if self._frame is None:
+            self._frame = self._s._as_frame()
+        return self._frame
 
     def __getitem__(self, key):
         """pandas ``df.rolling(...)[cols]`` column restriction."""
@@ -4131,7 +4281,7 @@ class _FrameRolling:
         return out
 
     def _numeric(self):
-        cols = _window_cols(self._f, self._s, skip=(self._on,))
+        cols = _window_cols(self._f, skip=(self._on,))
         if self._sel is not None:
             keep = [self._sel] if isinstance(self._sel, str) else list(self._sel)
             cols = [c for c in cols if c in keep]
@@ -4143,6 +4293,7 @@ class _FrameRolling:
         f = self._f
         sdf, order, idx, names = _positional_order(f)
         num = self._numeric()
+        sdf = _bools_as_double(sdf, f, num)
         out = kernel(sdf, order, num) if self._window >= 1 else sdf
         # pandas COUNT-window on=: the column is excluded from aggregation
         # and kept in the output at its ORIGINAL slot, but the window
@@ -4171,9 +4322,17 @@ class _FrameRolling:
 
     def _agg(self, fn: str):
         from .functions import scan
-        return self._run(fn, lambda sdf, order, cols: scan.rolling_agg_frame(
-            sdf, cols, order, self._window, fn, self._minp,
-            center=self._center))
+
+        def lower():
+            return self._run(fn, lambda sdf, order, cols:
+                             scan.rolling_agg_frame(
+                                 sdf, cols, order, self._window, fn,
+                                 self._minp, center=self._center))
+        if (self._s is None or self._center or self._shift
+                or self._window < 1 or self._sel is not None):
+            return lower()
+        return self._s._positional(
+            ("roll", fn, self._window, self._minp), lower)
 
     def _minmax(self, fn: str):
         from .functions import scan
@@ -4300,7 +4459,8 @@ class _FrameEwm:
         if len(order) != 1:
             raise ValueError("ewm needs a single order column "
                              "(a single-level index)")
-        return sdf, order[0], idx, names, _window_cols(f, self._s)
+        num = _window_cols(f)
+        return (_bools_as_double(sdf, f, num), order[0], idx, names, num)
 
     def _finish(self, out: SparkDF, op: str, idx, names, num):
         out = out.select(*[F.col(c) for c in idx], *_order_cols(out), *num)
@@ -4356,21 +4516,12 @@ class _FrameExpanding:
         from .functions import scan
         f = self._f
         sdf, order, idx, names = _positional_order(f)
-        num = _window_cols(f, self._s)
-        base = sdf.withColumn("__one__", F.lit(1).cast("long"))
-        specs = [("__one__", "sum", "__P__")]
-        need_sq = fn in ("var", "std")
+        num = _window_cols(f)
+        base, specs = scan.rolling_inputs(
+            sdf.withColumn("__one__", F.lit(1).cast("long")), num,
+            fn in ("var", "std"))
+        specs.insert(0, ("__one__", "sum", "__P__"))
         for c in num:
-            base = (base.withColumn(f"__z_{c}__", F.coalesce(
-                        F.col(c).cast("double"), F.lit(0.0)))
-                    .withColumn(f"__nn_{c}__",
-                                F.col(c).isNotNull().cast("long")))
-            specs += [(f"__z_{c}__", "sum", f"__S_{c}__"),
-                      (f"__nn_{c}__", "sum", f"__C_{c}__")]
-            if need_sq:
-                base = base.withColumn(
-                    f"__z2_{c}__", F.col(f"__z_{c}__") * F.col(f"__z_{c}__"))
-                specs.append((f"__z2_{c}__", "sum", f"__S2_{c}__"))
             if fn in ("min", "max"):
                 # prefix min/max IS the expanding extreme — same single
                 # scan.  Nulls take the identity (±inf) so the scan carries
@@ -4446,6 +4597,42 @@ class _FrameExpanding:
 
     def corr(self, other: "Series"):
         return self._pairwise(other, "corr")
+
+
+class _PendingSeries(Series):
+    """A Series positional op (cum*, shift/diff/pct_change, a trailing
+    count-window rolling sum/mean/count/var/std) that has not run yet.
+    ``_base`` is the Series it was called on and ``_spec`` the op.  Its
+    first use as a Series lowers it through ``lower`` — the standalone
+    kernel, unchanged, with the same result and Spark jobs — and from
+    then on it is that Series.  ``DataFrame.assign`` on the frame
+    ``_base`` came from reads the spec instead and computes the value
+    next to the frame's columns (``_fused_positional``)."""
+
+    _LAZY = frozenset({"_sdf", "_scol", "_expr", "_index_cols",
+                       "_index_names"})
+
+    def __init__(self, base: Series, spec: tuple, lower):
+        self._base, self._spec, self._lower = base, spec, lower
+        self._col_name = base._col_name
+
+    def __getattr__(self, name: str):
+        if name not in _PendingSeries._LAZY or "_lower" not in self.__dict__:
+            raise AttributeError(name)
+        try:
+            low = self._lower()
+        except AttributeError as exc:   # never read as a missing attribute
+            raise RuntimeError(f"lowering {self._spec[0]} failed") from exc
+        for k, v in low.__dict__.items():
+            self.__dict__.setdefault(k, v)
+        return self.__dict__[name]
+
+    def _over(self, frame: "DataFrame") -> bool:
+        """Whether this op runs over ``frame``'s own rows in its order:
+        the same Spark plan object and the same index."""
+        b = self._base
+        return (b._sdf is frame._sdf
+                and tuple(b._index_cols) == tuple(frame._index_cols))
 
 
 class Index(Series):
@@ -4756,23 +4943,26 @@ class DataFrame(FrameBase):
     def __setitem__(self, key: str, value):
         """In-place assign rebinds the wrapper (reference
         ``_collection.py:341-352``)."""
-        out = self.assign(**{key: value})
+        self._rebind(self.assign(**{key: value}))
+
+    def _rebind(self, out: "DataFrame") -> None:
+        """Become ``out`` in place — rows, plan and index: assigning a
+        positional value to an unindexed frame gives it the positional
+        rowid index its presented order now rests on."""
         self._sdf, self._expr = out._sdf, out._expr
+        self._index_cols, self._index_names = (out._index_cols,
+                                               out._index_names)
         self.__dict__.pop("_sort_fuse", None)
 
     def __delitem__(self, key: str):
         """``del df[col]`` rebinds to a drop (reference ``test_del``)."""
-        out = self.drop(columns=[key])
-        self._sdf, self._expr = out._sdf, out._expr
-        self.__dict__.pop("_sort_fuse", None)
+        self._rebind(self.drop(columns=[key]))
 
     def pop(self, key: str) -> "Series":
         """pandas ``pop``: return the column as a Series and drop it from
         the frame in place."""
         s = self._col(key)
-        out = self.drop(columns=[key])
-        self._sdf, self._expr = out._sdf, out._expr
-        self.__dict__.pop("_sort_fuse", None)
+        self._rebind(self.drop(columns=[key]))
         return s
 
     def insert(self, loc: int, column: str, value) -> None:
@@ -4782,9 +4972,7 @@ class DataFrame(FrameBase):
         out = self.assign(**{column: value})
         cols = [c for c in out.columns if c != column]
         cols.insert(loc, column)
-        out = out[cols]
-        self._sdf, self._expr = out._sdf, out._expr
-        self.__dict__.pop("_sort_fuse", None)
+        self._rebind(out[cols])
 
     def take(self, indices) -> "DataFrame":
         """pandas ``take``: rows by ordinal position, in the requested
@@ -4899,9 +5087,45 @@ class DataFrame(FrameBase):
     def assign(self, **kwargs) -> "DataFrame":
         """Reference Assign ``_expr.py:1309-1341`` → ``withColumn`` per
         kwarg, applied IN ORDER so later callables see earlier assigns
-        (pandas assign chaining: ``assign(z=..., y=lambda d: d.z + 1)``)."""
+        (pandas assign chaining: ``assign(z=..., y=lambda d: d.z + 1)``).
+
+        A positional value computed from this frame's own column
+        (``df.assign(cs=df.v.cumsum(), prev=df.v.shift(1),
+        roll=df.v.rolling(3).sum())``: cum*, shift/diff/pct_change with
+        integer periods, trailing rolling sum/mean/count/var/std) is
+        fused: every such value comes out of ONE scan over the frame's
+        rows (``_fused_positional``) and is written next to its columns,
+        reading them as they were before the assign.  Any other Series
+        aligns by index label, like pandas."""
         sdf = self._sdf
         made_rowid_index = False
+        # Values computed up front into hidden columns read the frame as
+        # it is before any assign (pandas evaluates every Series argument
+        # first): this frame's positional values, fused into one scan,
+        # and same-frame expressions that follow an overwrite.  Callables
+        # see the frame as assigned so far, which must not show those
+        # columns, so with a callable every value takes the in-order path.
+        fused: dict[str, str] = {}
+        pre: dict[str, str] = {}
+        if not any(callable(v) and not isinstance(v, Series)
+                   for v in kwargs.values()):
+            cols, overwrote = set(self.columns), False
+            for i, (k, v) in enumerate(kwargs.items()):
+                if isinstance(v, _PendingSeries):
+                    if v._over(self):
+                        fused[k] = f"__pes_fused{i}__"
+                elif (overwrote and isinstance(v, Series)
+                        and v._sdf is self._sdf):
+                    pre[k] = f"__pes_pre{i}__"
+                overwrote = overwrote or k in cols
+        if fused:
+            sdf, idx = _fused_positional(
+                self, {t: kwargs[k] for k, t in fused.items()})
+            made_rowid_index = tuple(idx) != tuple(self._index_cols)
+        if pre:
+            sdf = sdf.withColumns({t: kwargs[k]._scol
+                                   for k, t in pre.items()})
+        held = {**fused, **pre}
 
         def _current():
             # the frame as assigned so far (late-bound on sdf)
@@ -4911,6 +5135,9 @@ class DataFrame(FrameBase):
                              self._index_names)
 
         for k, v in kwargs.items():
+            if k in held:
+                sdf = sdf.withColumn(k, F.col(held[k]))
+                continue
             if callable(v) and not isinstance(v, Series):
                 res = v(_current())
                 if not isinstance(res, Series):
@@ -5045,6 +5272,8 @@ class DataFrame(FrameBase):
             else:
                 col = F.lit(v)
             sdf = sdf.withColumn(k, col)
+        if held:
+            sdf = sdf.drop(*held.values())
         if made_rowid_index and not self._index_cols:
             node = Node("assign", {"columns": list(kwargs)}, self._expr)
             out = DataFrame(sdf, node, (_ROWID,), (None,))
@@ -5832,19 +6061,20 @@ class DataFrame(FrameBase):
         node = Node(op, {"periods": periods}, self._expr)
         return DataFrame(out, node, idx, names)
 
-    def _require_types(self, op: str, ok, pandas_computes=()) -> dict:
-        """``{column: Spark type}``, after failing loudly on a column
-        ``op`` cannot compute rather than returning it unchanged:
-        NotImplementedError where pandas computes a result the engine
-        does not (types in ``pandas_computes``), else TypeError like
-        pandas."""
-        cols = set(self.columns)
+    def _require_types(self, op: str, ok, pandas_computes=(),
+                       error=TypeError, skip=()) -> dict:
+        """``{column: Spark type}`` of the columns not in ``skip``, after
+        failing loudly on a column ``op`` cannot compute rather than
+        returning it unchanged: NotImplementedError where pandas computes
+        a result the engine does not (types in ``pandas_computes``), else
+        ``error`` like pandas."""
+        cols = set(self.columns) - set(skip)
         types = {f.name: f.dataType for f in self._sdf.schema.fields
                  if f.name in cols}
         for c, dt in types.items():
             if not ok(dt):
                 err = (NotImplementedError
-                       if isinstance(dt, pandas_computes) else TypeError)
+                       if isinstance(dt, pandas_computes) else error)
                 raise err(f"{op}: column {c!r} of type "
                           f"{dt.simpleString()} is not supported")
         return types
@@ -5882,17 +6112,8 @@ class DataFrame(FrameBase):
                         updates[c] = lit
             return self._derive(self._sdf.withColumns(updates), "shift",
                                 {"axis": 1, "periods": periods})
-        if fill_value is None:
-            return self._frame_positional(periods, lambda c, lag: lag,
-                                          "shift")
-        # pandas fills only positions shifted in from beyond the boundary
-        # — NaNs already in the data stay NaN, so key on the join-miss
-        # flag, not on null-ness of the value
         return self._frame_positional(
-            periods,
-            lambda c, lag: F.when(F.col("__src__").isNull(),
-                                  F.lit(fill_value)).otherwise(lag),
-            "shift")
+            periods, _lag_value("shift", fill_value), "shift")
 
     def diff(self, periods: int = 1, axis: int = 0) -> "DataFrame":
         if axis in (1, "columns"):
@@ -5910,8 +6131,7 @@ class DataFrame(FrameBase):
         self._require_types("diff", lambda dt: is_numeric(dt) or isinstance(
             dt, (T.TimestampType, T.TimestampNTZType, T.DateType)),
             T.BooleanType)
-        return self._frame_positional(periods, lambda c, lag: c - lag,
-                                      "diff")
+        return self._frame_positional(periods, _lag_value("diff"), "diff")
 
     def pct_change(self, periods: int = 1,
                    fill_method: str | None = "pad") -> "DataFrame":
@@ -5924,7 +6144,8 @@ class DataFrame(FrameBase):
             raise ValueError(f"fill_method must be 'pad'/'ffill'/None, "
                              f"got {fill_method!r}")
         self._require_types("pct_change", is_numeric, T.BooleanType)
-        return self._frame_positional(periods, _pct_ratio, "pct_change")
+        return self._frame_positional(periods, _lag_value("pct_change"),
+                                      "pct_change")
 
     def combine_first(self, other: "DataFrame") -> "DataFrame":
         """Reference CombineFirst ``_expr.py:1005-1031``: index-aligned null

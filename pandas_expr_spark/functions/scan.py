@@ -78,6 +78,32 @@ def _ranged(sdf: SparkDF, order_by: list[str],
             .withColumn(_PID, F.spark_partition_id()))
 
 
+def _map_in_pandas(part: SparkDF, fn, schema: T.StructType,
+                   reads=()) -> SparkDF:
+    """``part.mapInPandas(fn, schema)`` for a local pass that carries
+    every column of ``part`` through and reads only ``reads``.
+
+    A nullable bigint column reaches pandas as float64 whenever its
+    Arrow batch holds a null, and comes back without the digits beyond
+    2**53.  Each such column the pass only carries travels as its value
+    (0 where null) plus a null flag instead, and is restored after."""
+    held = [f.name for f in part.schema.fields
+            if isinstance(f.dataType, T.LongType) and f.nullable
+            and f.name not in reads]
+    if not held:
+        return part.mapInPandas(fn, schema)
+    flag = {c: f"__pes_null_{c}__" for c in held}
+    part = part.withColumns(
+        {**{fl: F.col(c).isNull() for c, fl in flag.items()},
+         **{c: F.coalesce(F.col(c), F.lit(0).cast("long")) for c in held}})
+    schema = T.StructType(list(schema.fields) + [
+        T.StructField(fl, T.BooleanType(), False) for fl in flag.values()])
+    return (part.mapInPandas(fn, schema)
+            .withColumns({c: F.when(~F.col(fl), F.col(c))
+                          for c, fl in flag.items()})
+            .drop(*flag.values()))
+
+
 def _out_type(dt: T.DataType, op: str) -> T.DataType:
     if op in ("sum", "prod") and isinstance(
             dt, (T.ByteType, T.ShortType, T.IntegerType)):
@@ -198,7 +224,8 @@ def prefix_scan(sdf: SparkDF, specs: list[tuple[str, str, str]],
             last[_MARK] = True
             yield last
 
-    scanned = part.mapInPandas(_local, local_schema)
+    scanned = _map_in_pandas(part, _local, local_schema,
+                             {src for src, _, _ in specs})
     data, summ = _split_scanned(scanned, [out for _, _, out in specs])
 
     # exclusive prefix fold of the per-partition totals over the
@@ -297,7 +324,7 @@ def last_scan(sdf: SparkDF, cols: list[str], order_by: list[str],
             summ[_MARK] = True
             yield summ
 
-    scanned = part.mapInPandas(_local, local_schema)
+    scanned = _map_in_pandas(part, _local, local_schema, cols)
     data, summ = _split_scanned(scanned, cols)
     w = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     carries = summ.select(F.col(_PID), *[
@@ -370,7 +397,7 @@ def _last_scan_limited(part: SparkDF, cols: list[str], limit: int) -> SparkDF:
             last[_MARK] = True
             yield last
 
-    scanned = part.mapInPandas(_local, local_schema)
+    scanned = _map_in_pandas(part, _local, local_schema, cols)
     data, summ = _split_scanned(
         scanned, [loff] + cols + [f"__t_{c}__" for c in cols])
     # exclusive fold over the marker rows: __S__ = rows before this
@@ -437,7 +464,7 @@ def global_pos(sdf: SparkDF, order_by: list[str], name: str = "__pos__",
             last[_MARK] = True
             yield last
 
-    local = part.mapInPandas(_local, schema)
+    local = _map_in_pandas(part, _local, schema)
     data, summ = _split_scanned(local, [name])
     w = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     offsets = summ.select(  # marker rows carry the partition row counts
@@ -713,6 +740,41 @@ def rolling_apply(sdf: SparkDF, col: str | list[str], order_by: list[str],
             .drop("__pos__"))
 
 
+def rolling_inputs(sdf: SparkDF, cols: list[str], need_sq: bool):
+    """``(sdf, specs)``: the running sums a count-window rolling
+    sum/mean/count/var/std differences, as ``prefix_scan`` specs — per
+    column ``c`` the null-as-zero sum ``__S_c__``, the non-null count
+    ``__C_c__`` and, for var/std, the sum of squares ``__S2_c__``."""
+    specs = []
+    for c in cols:
+        z = f"__z_{c}__"
+        sdf = (sdf.withColumn(z, F.coalesce(F.col(c).cast("double"),
+                                            F.lit(0.0)))
+               .withColumn(f"__nn_{c}__", F.col(c).isNotNull().cast("long")))
+        specs += [(z, "sum", f"__S_{c}__"),
+                  (f"__nn_{c}__", "sum", f"__C_{c}__")]
+        if need_sq:
+            sdf = sdf.withColumn(f"__z2_{c}__", F.col(z) * F.col(z))
+            specs.append((f"__z2_{c}__", "sum", f"__S2_{c}__"))
+    return sdf, specs
+
+
+def window_stat(fn: str, wsum: Column, wcnt: Column,
+                wsq: Column | None = None) -> Column:
+    """One window's sum/mean/count/var/std from its sum, non-null count
+    and (var/std) sum of squares."""
+    if fn == "sum":
+        return wsum
+    if fn == "mean":
+        return F.when(wcnt > 0, wsum / wcnt)
+    if fn == "count":
+        return wcnt.cast("double")
+    n = wcnt.cast("double")
+    v = F.when(n >= 2, F.greatest((wsq - wsum * wsum / n) / (n - F.lit(1)),
+                                  F.lit(0.0)))
+    return F.sqrt(v) if fn == "std" else v
+
+
 def rolling_agg_frame(sdf: SparkDF, cols: list[str], order_by: list[str],
                       window: int, fn: str = "mean",
                       min_periods: int | None = None,
@@ -727,20 +789,9 @@ def rolling_agg_frame(sdf: SparkDF, cols: list[str], order_by: list[str],
     minp = window if min_periods is None else min_periods
     lead = (window - 1) // 2 if center else 0
     need_sq = fn in ("var", "std")
-    base = sdf.withColumn("__one__", F.lit(1).cast("long"))
-    specs = [("__one__", "sum", "__P__")]
-    for c in cols:
-        base = (base
-                .withColumn(f"__z_{c}__", F.coalesce(
-                    F.col(c).cast("double"), F.lit(0.0)))
-                .withColumn(f"__nn_{c}__",
-                            F.col(c).isNotNull().cast("long")))
-        specs += [(f"__z_{c}__", "sum", f"__S_{c}__"),
-                  (f"__nn_{c}__", "sum", f"__C_{c}__")]
-        if need_sq:
-            base = base.withColumn(f"__z2_{c}__",
-                                   F.col(f"__z_{c}__") * F.col(f"__z_{c}__"))
-            specs.append((f"__z2_{c}__", "sum", f"__S2_{c}__"))
+    base, specs = rolling_inputs(
+        sdf.withColumn("__one__", F.lit(1).cast("long")), cols, need_sq)
+    specs.insert(0, ("__one__", "sum", "__P__"))
     pos = prefix_scan(base, specs, order_by, num_partitions)  # ckpt-backed
 
     sc_cols = [f"__S_{c}__" for c in cols] + [f"__C_{c}__" for c in cols] \
@@ -768,21 +819,13 @@ def rolling_agg_frame(sdf: SparkDF, cols: list[str], order_by: list[str],
             hiS, hiC = F.col(S), F.col(C)
         wsum = hiS - F.coalesce(F.col(f"{S}l"), F.lit(0.0))
         wcnt = hiC - F.coalesce(F.col(f"{C}l"), F.lit(0))
-        if fn == "sum":
-            val = wsum
-        elif fn == "mean":
-            val = F.when(wcnt > 0, wsum / wcnt)
-        elif fn == "count":
-            val = wcnt.cast("double")
-        else:
+        wsq = None
+        if need_sq:
             S2 = f"__S2_{c}__"
             hiS2 = (F.when(truncated, F.col(f"{S2}t"))
                     .otherwise(F.col(f"{S2}f")) if lead else F.col(S2))
             wsq = hiS2 - F.coalesce(F.col(f"{S2}l"), F.lit(0.0))
-            n = wcnt.cast("double")
-            v = F.when(n >= 2, F.greatest(
-                (wsq - wsum * wsum / n) / (n - F.lit(1)), F.lit(0.0)))
-            val = F.sqrt(v) if fn == "std" else v
+        val = window_stat(fn, wsum, wcnt, wsq)
         if fn == "count":
             hi_pos = (F.least(F.col("__P__") + lead, F.col("__Pt__"))
                       if lead else F.col("__P__"))

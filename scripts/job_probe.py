@@ -18,6 +18,11 @@ import bench
 import __spark_entry__ as entrymod
 
 
+# the thread-local properties setJobGroup sets
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel")
+
+
 def main() -> None:
     names = sys.argv[1:]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -34,11 +39,14 @@ def main() -> None:
         except Exception as exc:
             print(f"[warm] {name}: {exc}", file=sys.stderr)
         group = f"probe:{name}"
-        spark.sparkContext.setJobGroup(group, name)
+        sc = spark.sparkContext
+        prev = {k: sc.getLocalProperty(k) for k in _GROUP_PROPS}
+        sc.setJobGroup(group, name)
         t0 = time.perf_counter()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
-        spark.sparkContext.setJobGroup(None, None)
+        for k, v in prev.items():   # restore the caller's group
+            sc.setLocalProperty(k, v)
         jids = sorted(st.getJobIdsForGroup(group))
         print(f"=== {name}: {len(jids)} jobs, {wall:.3f}s")
         for j in jids:

@@ -172,11 +172,14 @@ def test_frame_rolling_all_aggs(spark, center):
                         "s": ["x"] * 40})
     pdf.loc[rng.rand(40) < 0.2, "a"] = np.nan
     df = pes.from_pandas(pdf)
+    with pytest.raises(pd.errors.DataError):   # like pandas: no silent drop
+        df.rolling(4, min_periods=2, center=center).sum()
     for agg in ("sum", "mean", "count", "var", "std", "min", "max"):
         exp = getattr(pdf[["a", "b"]].rolling(4, min_periods=2,
                                               center=center), agg)()
-        got = getattr(df.rolling(4, min_periods=2, center=center),
-                      agg)().compute().sort_index()[["a", "b"]]
+        got = getattr(df[["a", "b"]].rolling(4, min_periods=2,
+                                             center=center),
+                      agg)().compute().sort_index()
         # atol: var/std via sufficient statistics carry ~1e-13 cancellation
         # residue whose exact value depends on partition summation order
         np.testing.assert_allclose(got.to_numpy(), exp.to_numpy(),
@@ -286,8 +289,10 @@ def test_frame_ewm_mean(spark):
     pdf = pd.DataFrame({"a": rng.rand(60), "b": rng.rand(60) * 4,
                         "s": ["x"] * 60})
     exp = pdf[["a", "b"]].ewm(span=7).mean()
-    got = (pes.from_pandas(pdf).ewm(span=7).mean()
-           .compute().sort_index()[["a", "b"]])
+    df = pes.from_pandas(pdf)
+    with pytest.raises(pd.errors.DataError):   # like pandas: no silent drop
+        df.ewm(span=7).mean()
+    got = df[["a", "b"]].ewm(span=7).mean().compute().sort_index()
     np.testing.assert_allclose(got.to_numpy(), exp.to_numpy(), rtol=1e-9)
 
 

@@ -179,6 +179,27 @@ def test_rolling_no_full_data_window(spark):
     assert "NestedLoop" not in plan, plan
 
 
+def test_fused_assign_no_alignment_join(spark):
+    """A frame's own cumsum/shift/rolling values assigned to it come out
+    of one scan over its rows: the only joins are on the scan's running
+    position (never the rowid label of an alignment join), and the only
+    windows are the scan's carry folds over the per-partition summary."""
+    import pandas as pd
+    import pandas_expr_spark as pes
+    df = pes.from_pandas(pd.DataFrame({"k": range(200)[::-1],
+                                       "v": range(200)})).sort_values("k")
+    out = df.assign(cs=df.v.cumsum(), prev=df.v.shift(1),
+                    roll=df.v.rolling(3).sum())
+    lines = out._sdf._jdf.queryExecution().executedPlan().toString() \
+        .splitlines()
+    joins = [ln for ln in lines if "Join [" in ln]
+    windows = [ln for ln in lines if "Window [" in ln]
+    assert joins and windows, lines
+    assert not any("__pes_rowid__" in ln for ln in joins), joins
+    assert all("windowspecdefinition(__pes_pid__" in ln
+               for ln in windows), windows
+
+
 def test_visualize_dot_source(base):
     out = base[base.x > 10][["x"]]
     dot = out.expr.to_dot()

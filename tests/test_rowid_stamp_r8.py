@@ -385,3 +385,171 @@ def test_sorted_reset_frame_build_jobs(jobs, op):
     got = out.compute()
     for c in exp.columns:
         eq_vals(got[c].tolist(), exp[c].tolist())
+
+
+# ------------------- assign fuses a frame's own positional values
+# df.assign(x=df.v.<op>()) computes x in one scan over df's own rows and
+# writes it next to df's columns (no alignment join); every case must
+# match pandas, index included, on every frame shape.
+_FZ = pd.DataFrame({
+    "k": RNG.permutation(40),
+    "v": np.where(RNG.random(40) < 0.2, np.nan,
+                  RNG.integers(-3, 4, 40).astype(float)),
+    "w": RNG.normal(size=40).round(3),
+})
+
+_FUSE_SHAPES = {
+    "file": (lambda: pes.from_pandas(_FZ), lambda: _FZ),
+    "filtered": (lambda: (lambda f: f[f.w > -0.5])(pes.from_pandas(_FZ)),
+                 lambda: _FZ[_FZ.w > -0.5]),
+    "sorted": (lambda: pes.from_pandas(_FZ).sort_values("k"),
+               lambda: _FZ.sort_values("k")),
+    "sorted_reset": (
+        lambda: pes.from_pandas(_FZ).sort_values("k").reset_index(drop=True),
+        lambda: _FZ.sort_values("k").reset_index(drop=True)),
+    "from_pandas_indexed": (lambda: pes.from_pandas(_FZ.set_index("k")),
+                            lambda: _FZ.set_index("k")),
+}
+
+_FUSE_OPS = {
+    "cumsum": lambda s: s.cumsum(),
+    "cummax": lambda s: s.cummax(),
+    "shift_fill": lambda s: s.shift(2, fill_value=0),
+    "diff": lambda s: s.diff(),
+    "pct_change": lambda s: s.pct_change(fill_method=None),
+    "rolling_mean": lambda s: s.rolling(3).mean(),
+    "rolling_std_minp": lambda s: s.rolling(4, min_periods=2).std(),
+}
+
+
+def _frames_eq(got, exp):
+    eq_vals(got.index.tolist(), exp.index.tolist())
+    assert list(got.columns) == list(exp.columns)
+    for c in exp.columns:
+        eq_vals(got[c].tolist(), exp[c].tolist())
+
+
+def _is_fused(value) -> bool:
+    # the value was computed inside assign, never lowered on its own
+    from pandas_expr_spark._collection import _PendingSeries
+    return isinstance(value, _PendingSeries) and "_sdf" not in vars(value)
+
+
+@pytest.mark.parametrize("op", sorted(_FUSE_OPS))
+@pytest.mark.parametrize("shape", sorted(_FUSE_SHAPES))
+def test_assign_fused_positional(shape, op):
+    eng, ref = (f() for f in _FUSE_SHAPES[shape])
+    val = _FUSE_OPS[op](eng.v)
+    got = eng.assign(r=val).compute()
+    assert _is_fused(val)
+    _frames_eq(got, ref.assign(r=_FUSE_OPS[op](ref.v)))
+
+
+@pytest.mark.parametrize("shape", sorted(_FUSE_SHAPES))
+def test_assign_fused_many_values(shape):
+    eng, ref = (f() for f in _FUSE_SHAPES[shape])
+    got = eng.assign(**{o: f(eng.v) for o, f in _FUSE_OPS.items()},
+                     ws=eng.w.shift(-1)).compute()
+    exp = ref.assign(**{o: f(ref.v) for o, f in _FUSE_OPS.items()},
+                     ws=ref.w.shift(-1))
+    _frames_eq(got, exp)
+
+
+def test_assign_fused_value_also_standalone():
+    f = pes.from_pandas(_FZ).sort_values("k")
+    r = _FZ.sort_values("k")
+    cs = f.v.cumsum()
+    eq_vals(cs.compute().tolist(), r.v.cumsum().tolist())
+    _frames_eq(f.assign(cs=cs).compute(), r.assign(cs=r.v.cumsum()))
+    roll = f.v.rolling(3).sum()
+    _frames_eq(f.assign(roll=roll).compute(),
+               r.assign(roll=r.v.rolling(3).sum()))
+    got = roll.compute()
+    eq_vals(got.index.tolist(), r.index.tolist())
+    eq_vals(got.tolist(), r.v.rolling(3).sum().tolist())
+
+
+def test_assign_other_frame_positional_aligns_by_label():
+    f = pes.from_pandas(_FZ)
+    val = f.v.cumsum()
+    got = f[f.k > 2].assign(cs=val).compute()
+    assert not _is_fused(val)
+    _frames_eq(got, _FZ[_FZ.k > 2].assign(cs=_FZ.v.cumsum()))
+
+
+def test_assign_fused_reads_pre_assign_columns():
+    for shape in ("file", "sorted"):
+        eng, ref = (f() for f in _FUSE_SHAPES[shape])
+        got = eng.assign(v=eng.v * 2, roll=eng.v.rolling(3).sum()).compute()
+        _frames_eq(got, ref.assign(v=ref.v * 2, roll=ref.v.rolling(3).sum()))
+        # a plain expression of the frame after an overwrite reads the
+        # column as it was before the assign too, like pandas
+        got = eng.assign(v=eng.v.cumsum(), w=eng.v * 2, z=1).compute()
+        _frames_eq(got, ref.assign(v=ref.v.cumsum(), w=ref.v * 2, z=1))
+        got = eng.assign(w=eng.w * 2, x=eng.w + 1).compute()
+        _frames_eq(got, ref.assign(w=ref.w * 2, x=ref.w + 1))
+
+
+@pytest.mark.parametrize("shape", ["file", "sorted"])
+def test_setitem_fused_positional(shape):
+    eng, ref = (f() for f in _FUSE_SHAPES[shape])
+    ref = ref.copy()
+    eng["cs"] = eng.v.cumsum()
+    ref["cs"] = ref.v.cumsum()
+    _frames_eq(eng.compute(), ref)
+    # the frame keeps its presented order for the next positional op
+    eng["prev"] = eng.cs.shift(1)
+    ref["prev"] = ref.cs.shift(1)
+    _frames_eq(eng.compute(), ref)
+
+
+def test_assign_fused_build_jobs_sorted(jobs):
+    s = pes.from_pandas(_FZ).sort_values("k")
+    out, n = jobs(lambda: s.assign(cs=s.v.cumsum()))
+    assert n <= 4, n      # 12 through the alignment join
+    got, m = jobs(out.compute)
+    assert n + m <= 10, (n, m)
+    _frames_eq(got, _FZ.sort_values("k").assign(cs=_FZ.sort_values("k").v.cumsum()))
+
+
+def test_assign_fused_build_jobs_file_order(jobs):
+    f = pes.from_pandas(_FZ)
+    out, n = jobs(lambda: f.assign(prev=f.v.shift(1),
+                                   roll=f.v.rolling(3).sum()))
+    assert n <= 2, n
+    got, m = jobs(out.compute)
+    assert n + m <= 11, (n, m)
+    _frames_eq(got, _FZ.assign(prev=_FZ.v.shift(1),
+                               roll=_FZ.v.rolling(3).sum()))
+
+
+def test_standalone_positional_job_count(jobs):
+    # outside assign a pending value lowers through its own kernel: the
+    # jobs move from the call into compute(), their number stays
+    s = pes.from_pandas(_FZ).sort_values("k")
+    got, n = jobs(lambda: s.v.cumsum().compute())
+    assert n <= 9, n
+    eq_vals(got.tolist(), _FZ.sort_values("k").v.cumsum().tolist())
+
+
+_WINDOWS = {
+    "rolling": lambda d: d.rolling(2).sum(),
+    "expanding": lambda d: d.expanding().sum(),
+    "ewm": lambda d: d.ewm(alpha=.5).mean(),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_WINDOWS))
+def test_frame_window_bool_and_string_columns(kind):
+    p = pd.DataFrame({"b": [True, False, True, True, False],
+                      "v": [1.0, 2.0, None, 4.0, 5.0],
+                      "s": list("abcde")})
+    f = pes.from_pandas(p)
+    got = _WINDOWS[kind](f[["b", "v"]]).compute()
+    exp = _WINDOWS[kind](p[["b", "v"]])
+    assert got["b"].dtype == exp["b"].dtype == np.float64
+    _frames_eq(got, exp)
+    with pytest.raises(pd.errors.DataError):
+        _WINDOWS[kind](p[["s", "v"]])
+    with pytest.raises(pd.errors.DataError):
+        _WINDOWS[kind](f[["s", "v"]])

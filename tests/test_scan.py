@@ -238,3 +238,22 @@ def test_series_rolling_apply(spark):
            .apply(lambda a: (a * a).sum()).compute().sort_index())
     np.testing.assert_allclose(got.to_numpy(), exp.to_numpy(),
                                rtol=1e-12, equal_nan=True)
+
+
+def test_scans_carry_nullable_bigints_exactly(spark):
+    """A nullable bigint column the scan only carries keeps every digit:
+    next to a null in one batch it would reach pandas as float64, which
+    holds 2**53 at most."""
+    from pandas_expr_spark.functions import scan
+    big = 2 ** 62 + 1
+    sdf = spark.createDataFrame([(big, 1.0), (None, 2.0), (big + 2, 3.0)],
+                                "id long, v double")
+    exp = [big, None, big + 2]
+    for out in (scan.prefix_scan(sdf, [("v", "sum", "cs")], ["v"],
+                                 num_partitions=1),
+                scan.global_pos(sdf, ["v"], num_partitions=1),
+                scan.last_scan(sdf, ["v"], ["v"], num_partitions=1)):
+        assert [r["id"] for r in out.orderBy("v").collect()] == exp
+    f = pes.DataFrame(sdf)
+    got = f.assign(cs=f.v.cumsum(), prev=f.v.shift(1)).to_spark()
+    assert [r["id"] for r in got.orderBy("v").collect()] == exp
