@@ -13,7 +13,9 @@ streaming, and the LLM-data-pipeline operators under ``functions``).
 
 from __future__ import annotations
 
+from . import _dtypes
 from ._collection import DataFrame as _DataFrameImpl, Index, Scalar, Series
+from ._collection import _value_key
 from ._expr import Expr, Node, tokenize
 from ._session import get_spark
 from .operators.joins import (interval_join, merge, merge_asof,
@@ -324,20 +326,17 @@ class DataFrame(_DataFrameImpl):
     """User-facing constructor accepts in-memory data (reference
     ``_collection.py:326-339`` → ``PandasIO`` leaf) or a Spark DataFrame."""
 
-    def __init__(self, data=None, expr=None, index_cols=(), index_names=None):
+    def __init__(self, data=None, expr=None, index_cols=(), index_names=None,
+                 dtypes=None):
         from pyspark.sql import DataFrame as SparkDF
         if isinstance(data, SparkDF):
-            super().__init__(data, expr, index_cols, index_names)
+            super().__init__(data, expr, index_cols, index_names, dtypes)
             return
         import pandas as pd
         pdf = data if isinstance(data, pd.DataFrame) else pd.DataFrame(data)
         f = from_pandas(pdf)
-        super().__init__(f._sdf, f._expr, f._index_cols, f._index_names or ())
-        # carry driver-side dtype metadata (period freqs, known categories)
-        for attr in ("_index_period_freq", "_period_value_freq", "_cat_meta"):
-            v = getattr(f, attr, None)
-            if v:
-                setattr(self, attr, v)
+        super().__init__(f._sdf, f._expr, f._index_cols,
+                         f._index_names or (), f._dtypes)
 
 
 def isna(obj):
@@ -523,9 +522,8 @@ def period_range(start, end=None, periods: int | None = None,
     col = period_start_col(F.col(name or "__pr__"), freq)
     sdf = base.select(col.alias(name or "__pr__"))
     node = _Node("period_range", {"freq": freq})
-    out = Series(sdf, sdf[name or "__pr__"], name, node, (), (None,))
-    out._period_value_freq = {out._col_name: freq}
-    return out
+    return Series(sdf, sdf[name or "__pr__"], name, node, (), (None,),
+                  {_value_key(name): _dtypes.Presented("period", freq=freq)})
 
 
 class Grouper:

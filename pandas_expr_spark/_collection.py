@@ -21,6 +21,13 @@ Design notes (SURVEY §1.5 — the index problem):
 * At 100 TB, positional-index materialization is the one op that cannot scale
   (it is a global ordering); everything else lowers to shuffle-free column
   expressions or ordinary shuffled joins/aggs that AQE handles.
+* pandas dtypes Spark has no type for (categorical, period, tz-aware,
+  exploded object) live in one immutable **dtype record** per wrapper,
+  ``_dtypes``: Spark column name (value or index) → ``Presented``.  A
+  frame derived from one parent keeps the entries of its surviving
+  columns (``_derive``); a Series keeps its value's entry under the name
+  its ``to_frame`` column gets; ``compute()`` presents them all through
+  ``_dtypes.present``.
 """
 
 from __future__ import annotations
@@ -33,6 +40,7 @@ from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import _dtypes as D
 from ._dtypes import is_numeric, to_pandas_dtype, to_spark_type
 from ._expr import Node
 from ._order import _LABEL, _ORDER, _ROWID, order_key, positions
@@ -90,18 +98,6 @@ def _var_fn(ddof: int):
                       (F.sum(x * x) - F.sum(x) * F.sum(x) / n)
                       / (n - F.lit(ddof)))
     return fn
-
-
-def _restore_period_index(idx, index_cols, period_freq: dict):
-    """Re-wrap a computed DatetimeIndex as a PeriodIndex when the engine
-    carries period freq metadata (single-level only; the stored values are
-    period starts, so ``to_period`` is exact)."""
-    if period_freq and len(index_cols) == 1 and index_cols[0] in period_freq:
-        try:
-            return idx.to_period(period_freq[index_cols[0]])
-        except Exception:
-            return idx
-    return idx
 
 
 _FREQ_UNIT = {  # pandas offset alias → make_interval slot + per-period count
@@ -551,11 +547,21 @@ def _fused_positional(frame, values: dict):
     return out.drop(*temps), idx
 
 
-def _frame_column(frame, col: str, name) -> "Series":
-    """Column ``col`` of a positional op's frame result, as a Series
-    named ``name``."""
-    return Series(frame._sdf, F.col(col), name, frame._expr,
-                  frame._index_cols, frame._index_names)
+def _value_key(name) -> str:
+    """The name a Series' value takes in ``to_frame()``: the key its
+    dtype record entry is kept under."""
+    return name or "0"
+
+
+def _frame_column(frame, col: str, name, expr: Node | None = None
+                  ) -> "Series":
+    """Column ``col`` of ``frame`` as a Series named ``name``, with the
+    frame's index and the column's dtype record entry."""
+    return Series(frame._sdf, F.col(col), name,
+                  frame._expr if expr is None else expr,
+                  frame._index_cols, frame._index_names,
+                  {**frame._entries(frame._index_cols),
+                   _value_key(name): frame._dtypes.get(col)})
 
 
 def _ewm_alpha(com, span, halflife, alpha) -> float:
@@ -586,6 +592,12 @@ def _pct_ratio(c: Column, prev: Column) -> Column:
              .otherwise(F.lit(float("inf")) * inf_sign))
     return ratio - F.lit(1)
 
+
+# the value column's name while a Series crosses the frame boundary
+_VALUES = "__values__"
+
+# ``Series._with_scol``'s default: the new value keeps the Series' name
+_SAME_NAME = object()
 
 # Node ops whose boolean output is a pandas MASK (False at missing
 # operands), as opposed to a nullable boolean data column — consulted by
@@ -815,21 +827,24 @@ class FrameBase:
     """Common machinery for DataFrame/Series/Index/Scalar
     (reference ``FrameBase``, ``_collection.py:66-320``)."""
 
-    # Period representation (SURVEY §1.4; reference ToTimestamp
-    # _expr.py:1159-1168): Spark has no PeriodDtype, so a period index
-    # column is stored as its START timestamp with freq metadata here
-    # (driver-side, {index_col_name: pandas freqstr}).  See
-    # functions/timeseries.py period_* helpers.
-    _index_period_freq: dict = {}
-
     def __init__(self, sdf: SparkDF, expr: Node,
                  index_cols: tuple[str, ...] = (),
-                 index_names: tuple | None = None):
+                 index_names: tuple | None = None,
+                 dtypes: Mapping | None = None):
         self._sdf = sdf
         self._expr = expr
         self._index_cols = tuple(index_cols)
         self._index_names = tuple(index_names) if index_names is not None \
             else tuple(None for _ in index_cols)
+        # the dtype record (module docstring): driver-side only
+        self._dtypes = D.dtype_record(dtypes or ())
+
+    def _entries(self, cols, renames: Mapping | None = None) -> dict:
+        """This record's entries for the Spark columns ``cols``, keyed
+        through ``renames``."""
+        ren = renames or {}
+        return {ren.get(c, c): self._dtypes[c] for c in cols
+                if c in self._dtypes}
 
     def pipe(self, func, *args, **kwargs):
         """pandas ``pipe``: ``df.pipe(f, *a)`` == ``f(df, *a)`` — method
@@ -848,13 +863,13 @@ class FrameBase:
         so ``how='start'`` is the identity and ``how='end'`` is pure
         column arithmetic (start + one period - 1µs) — no shuffle."""
         from .functions.timeseries import period_to_timestamp_col
-        freqs = dict(self._index_period_freq)
+        freqs = {c: e.freq for c, e in self._entries(self._index_cols).items()
+                 if e.kind == "period"}
         if not freqs:
             # a period-VALUED Series (from dt.to_period) converts its
             # values — same as .dt.to_timestamp()
-            vf = getattr(self, "_period_value_freq", None) or {}
-            if isinstance(self, Series) and (freq or vf.get(self._col_name)):
-                f = freq or vf[self._col_name]
+            if isinstance(self, Series) and (freq or self._period_freq):
+                f = freq or self._period_freq
                 return self._with_scol(
                     period_to_timestamp_col(self._scol, f, how),
                     "to_timestamp")
@@ -868,13 +883,12 @@ class FrameBase:
             sdf = sdf.withColumn(
                 c, period_to_timestamp_col(F.col(c), freq or f, how))
         node = Node("to_timestamp", {"freq": freq, "how": how}, self._expr)
+        rest = {c: e for c, e in self._dtypes.items() if c not in freqs}
         if isinstance(self, Series):
-            out = type(self)(sdf, self._scol, self._col_name, node,
-                             self._index_cols, self._index_names)
-        else:
-            out = DataFrame(sdf, node, self._index_cols, self._index_names)
-        out._index_period_freq = {}
-        return out
+            return type(self)(sdf, self._scol, self._col_name, node,
+                              self._index_cols, self._index_names, rest)
+        return DataFrame(sdf, node, self._index_cols, self._index_names,
+                         rest)
 
     # -- plan introspection (reference _collection.py:115-124, _expr.py:103-108)
     @property
@@ -1058,8 +1072,9 @@ class Series(FrameBase):
 
     def __init__(self, sdf: SparkDF, scol: Column, name: str | None,
                  expr: Node, index_cols: tuple[str, ...] = (),
-                 index_names: tuple | None = None):
-        super().__init__(sdf, expr, index_cols, index_names)
+                 index_names: tuple | None = None,
+                 dtypes: Mapping | None = None):
+        super().__init__(sdf, expr, index_cols, index_names, dtypes)
         self._scol = scol
         self._col_name = name
 
@@ -1072,20 +1087,40 @@ class Series(FrameBase):
     def spark_column(self) -> Column:
         return self._scol
 
-    def _with_scol(self, scol: Column, op: str, name: str | None = None,
+    def _with_scol(self, scol: Column, op: str, name=_SAME_NAME, *,
+                   entry: "D.Presented | None" = None,
                    **params) -> "Series":
-        node = Node(op, {"name": name or self._col_name, **params}, self._expr)
-        out = Series(self._sdf, scol, name or self._col_name, node,
-                     self._index_cols, self._index_names)
+        """A new value over the same rows and index; ``entry`` is the
+        new value's dtype record entry (none: its stored type)."""
+        if name is _SAME_NAME:
+            name = self._col_name
+        node = Node(op, {"name": name, **params}, self._expr)
+        out = Series(self._sdf, scol, name, node, self._index_cols,
+                     self._index_names,
+                     {**self._entries(self._index_cols),
+                      _value_key(name): entry})
         out._mask_anchor = getattr(self, "_mask_anchor", None)
         return out
 
     @property
-    def dtype(self) -> str:
-        if getattr(self, "_is_categorical", False):
-            return "category"
-        out = self._sdf.select(self._scol.alias("__c__")).schema[0].dataType
-        return to_pandas_dtype(out)
+    def _vkey(self) -> str:
+        """The key of the value's dtype record entry."""
+        return _value_key(self._col_name)
+
+    @property
+    def _value_dtype(self) -> "D.Presented | None":
+        return self._dtypes.get(self._vkey)
+
+    @property
+    def _period_freq(self) -> str | None:
+        """The freq of a period-valued Series, else None."""
+        e = self._value_dtype
+        return e.freq if e is not None else None
+
+    @property
+    def dtype(self):
+        e = self._value_dtype
+        return e.dtype if e is not None else to_pandas_dtype(self.spark_type)
 
     @property
     def spark_type(self) -> T.DataType:
@@ -1195,8 +1230,7 @@ class Series(FrameBase):
                     and not isinstance(other, (bool, np.bool_))):
                 return self._with_scol(F.repeat(self._scol, int(other)),
                                        op)
-        vf = getattr(self, "_period_value_freq", None) or {}
-        pfreq = vf.get(self._col_name)
+        pfreq = self._period_freq
         if (pfreq is not None and op in ("add", "sub")
                 and isinstance(other, (int, np.integer))
                 and not isinstance(other, (bool, np.bool_))):
@@ -1208,10 +1242,9 @@ class Series(FrameBase):
             num, iunit = interval.split(" ", 1)
             n = int(other) * int(num) * (-1 if op == "sub" else 1)
             iv = F.expr(f"INTERVAL {abs(n)} {iunit}")
-            out = self._with_scol(
-                (self._scol - iv) if n < 0 else (self._scol + iv), op)
-            out._period_value_freq = {out._col_name: pfreq}
-            return out
+            return self._with_scol(
+                (self._scol - iv) if n < 0 else (self._scol + iv), op,
+                entry=self._value_dtype)
         if (isinstance(other, pd.offsets.BaseOffset)
                 and op in ("add", "sub")
                 and isinstance(self.spark_type,
@@ -1224,10 +1257,10 @@ class Series(FrameBase):
         if isinstance(other, Series):
             if other._sdf is self._sdf:
                 l, r = (other._scol, self._scol) if reflexive else (self._scol, other._scol)
-                out = self._with_scol(fn(l, r), op)
-                if self._col_name != other._col_name:
-                    out._col_name = None   # pandas: differing names drop
-                return out
+                # pandas: differing names drop
+                return self._with_scol(
+                    fn(l, r), op, self._col_name
+                    if self._col_name == other._col_name else None)
             return self._aligned_binop(other, fn, op, reflexive)
         if isinstance(other, Scalar):
             # `s > s.mean()` — the 1×1 scalar frame broadcast-cross-joins
@@ -1664,7 +1697,8 @@ class Series(FrameBase):
                 # composes directly; foreign frames align on the index
                 if value._sdf is self._sdf:
                     return self._with_scol(
-                        F.coalesce(self._scol, value._scol), "fillna")
+                        F.coalesce(self._scol, value._scol), "fillna",
+                        entry=self._value_dtype)
                 lf = self.to_frame("__l__")
                 rf = value.to_frame("__r__")
                 joined = _align_frames(lf, rf, how="left")
@@ -1688,8 +1722,14 @@ class Series(FrameBase):
                               F.coalesce(self._scol, F.col("__fill__")),
                               self._col_name, node, self._index_cols,
                               self._index_names)
+            e = self._value_dtype
+            if (e is not None and e.categories is not None
+                    and value not in e.categories):
+                raise TypeError(
+                    f"Cannot setitem on a Categorical with a new category "
+                    f"({value}), set the categories first")
             return self._with_scol(F.coalesce(self._scol, F.lit(value)),
-                                   "fillna", value=value)
+                                   "fillna", entry=e, value=value)
         # pandas limit=n: fill only the first n nulls along the WHOLE axis
         # (not per-run) — null-rank via one distributed prefix-sum scan
         from .functions import scan
@@ -1752,18 +1792,15 @@ class Series(FrameBase):
         (``_expr.py:1177-1195``).  A ``pd.CategoricalDtype`` with explicit
         categories arrives already *known*."""
         if str(dtype) == "category":
-            out = self._with_scol(self._scol, "astype", dtype="category")
-            out._is_categorical = True
-            cats = getattr(dtype, "categories", None)
-            out._cat_categories = list(cats) if cats is not None else None
-            out._cat_ordered = bool(getattr(dtype, "ordered", False) or False)
-            return out
+            return self._with_scol(
+                self._scol, "astype", dtype="category",
+                entry=D.category(getattr(dtype, "categories", None),
+                                 getattr(dtype, "ordered", False)))
         st = to_spark_type(dtype)
         if isinstance(st, T.StringType):
             # pandas astype(str) stringifies missing values by SOURCE dtype:
             # float NaN → 'nan', datetime NaT → 'NaT', object None → 'None'
-            vf = getattr(self, "_period_value_freq", None) or {}
-            pfreq = vf.get(self._col_name)
+            pfreq = self._period_freq
             if pfreq is not None:
                 # period-valued series: pandas Period labels ('2024Q1'),
                 # not the stored period-start timestamp
@@ -1865,7 +1902,8 @@ class Series(FrameBase):
             return self._where_aligned(cond, other, keep_on_true=False)
         return self._with_scol(
             F.when(cond._scol, self._other_expr(other))
-            .otherwise(self._scol), "mask")
+            .otherwise(self._scol), "mask",
+            entry=self._value_dtype if other is None else None)
 
     def where(self, cond: "Series", other=None):
         if callable(cond) and not isinstance(cond, FrameBase):
@@ -1876,7 +1914,8 @@ class Series(FrameBase):
             return self._where_aligned(cond, other, keep_on_true=True)
         return self._with_scol(
             F.when(cond._scol, self._scol)
-            .otherwise(self._other_expr(other)), "where")
+            .otherwise(self._other_expr(other)), "where",
+            entry=self._value_dtype if other is None else None)
 
     def _where_aligned(self, cond: "Series", other: "Series",
                       keep_on_true: bool) -> "Series":
@@ -1927,10 +1966,11 @@ class Series(FrameBase):
                  else positions(self, upto="pass"))
         if lbase is not None:
             return Series(lbase.filter(self._scol.isNotNull()), self._scol,
-                          self._col_name, node, (_ROWID,), (None,))
+                          self._col_name, node, (_ROWID,), (None,),
+                          self._dtypes)
         return Series(self._sdf.filter(self._scol.isNotNull()), self._scol,
                       self._col_name, node,
-                      self._index_cols, self._index_names)
+                      self._index_cols, self._index_names, self._dtypes)
 
     def memory_usage(self, index: bool = True, deep: bool = False) -> Scalar:
         """pandas ``Series.memory_usage``: value bytes (= ``nbytes``)
@@ -2043,10 +2083,28 @@ class Series(FrameBase):
     product = prod
 
     def min(self, skipna: bool = True):
-        return self._reduce(F.min(self._scol), "min", skipna)
+        return self._extreme("min", skipna)
 
     def max(self, skipna: bool = True):
-        return self._reduce(F.max(self._scol), "max", skipna)
+        return self._extreme("max", skipna)
+
+    def _extreme(self, op: str, skipna: bool) -> Scalar:
+        """min/max; a categorical reduces in CATEGORY order, and only
+        when ordered (pandas)."""
+        agg = (F.min if op == "min" else F.max)(self._scol)
+        e = self._value_dtype
+        if e is not None and e.kind == "category":
+            if not e.ordered:
+                raise TypeError(
+                    f"Categorical is not ordered for operation {op}\n"
+                    "you can use .as_ordered() to change the Categorical "
+                    "to an ordered one\n")
+            if e.categories:
+                pos = F.array_position(
+                    F.array(*[F.lit(c) for c in e.categories]), self._scol)
+                agg = (F.min_by if op == "min" else F.max_by)(
+                    self._scol, F.when(pos > 0, pos))
+        return self._reduce(agg, op, skipna)
 
     def mean(self, skipna: bool = True):
         """Correct kwargs — the reference's Mean silently ignores them
@@ -2925,9 +2983,7 @@ class Series(FrameBase):
         dedup machinery, not a bare ``distinct()`` (which loses both)."""
         name = self._col_name if self._col_name is not None else "__v__"
         f = self.to_frame(name).drop_duplicates(subset=[name], keep=keep)
-        s = f[name]
-        s._col_name = self._col_name
-        return s
+        return _frame_column(f, name, self._col_name)
 
     def value_counts(self, sort: bool = True, ascending: bool = False,
                      dropna: bool = True, normalize: bool = False,
@@ -2993,8 +3049,8 @@ class Series(FrameBase):
                  else F.min(F.struct(*[F.col(c) for c in order])))
         out = sdf.groupBy(name).agg(F.count(F.lit(1)).alias("count"),
                                     first.alias("__vc_first__"))
-        cats = getattr(self, "_cat_categories", None)
-        is_cat = getattr(self, "_is_categorical", False) and cats
+        cats = getattr(self._value_dtype, "categories", None)
+        is_cat = bool(cats)
         if is_cat:
             # pandas: a KNOWN categorical's value_counts includes every
             # unobserved category with count 0 (wave U) — the category
@@ -3082,12 +3138,14 @@ class Series(FrameBase):
     # ------------------------------------------------------------------
     def to_frame(self, name: str | None = None) -> "DataFrame":
         """Reference ToFrame ``_expr.py:1073-1084``."""
-        name = name or self._col_name or "0"
+        name = name or self._vkey
         cols = [F.col(c) for c in self._index_cols] + \
             _order_cols(self._sdf) + [self._scol.alias(name)]
         node = Node("to_frame", {"name": name}, self._expr)
         return DataFrame(self._sdf.select(*cols), node,
-                         self._index_cols, self._index_names)
+                         self._index_cols, self._index_names,
+                         {**self._entries(self._index_cols),
+                          name: self._value_dtype})
 
     def rename(self, name=None, index=None) -> "Series":
         """pandas ``Series.rename``: a scalar renames the SERIES; a dict
@@ -3119,13 +3177,12 @@ class Series(FrameBase):
             sdf = self._sdf.withColumn(self._index_cols[0], out)
             node = Node("rename_index", {}, self._expr)
             return Series(sdf, self._scol, self._col_name, node,
-                          self._index_cols, self._index_names)
+                          self._index_cols, self._index_names,
+                          {self._vkey: self._value_dtype})
         # pandas: rename() / rename(None) UNNAMES the series (the no-arg
         # form is not a no-op — r8 name hunt)
-        out = self._with_scol(self._scol, "rename", name=name)
-        if name is None:
-            out._col_name = None
-        return out
+        return self._with_scol(self._scol, "rename", name,
+                               entry=self._value_dtype)
 
     def to_list(self) -> list:
         """Eager values as a Python list (pandas ``tolist``)."""
@@ -3135,21 +3192,16 @@ class Series(FrameBase):
 
     def head(self, n: int = 5) -> "Series":
         name = self._col_name if self._col_name is not None else "__v__"
+        node = Node("head", {"n": n}, self._expr)
+        f = self.to_frame(name)
         fuse = getattr(self, "_sort_fuse", None)
         if fuse is not None and n >= 0:
             # sort_values/_index parent (fuse carried through _via_frame):
             # distributed TopK over the sort keys, no global sort
-            f = self.to_frame(name)
             f._sort_fuse = fuse
-            out = f.head(n)
-            return Series(out._sdf, F.col(name), self._col_name,
-                          Node("head", {"n": n}, self._expr),
-                          out._index_cols, out._index_names)
-        f = self.to_frame(name)
-        out = f._sdf.limit(n)
-        return Series(out, F.col(name), self._col_name,
-                      Node("head", {"n": n}, self._expr),
-                      self._index_cols, self._index_names)
+            return _frame_column(f.head(n), name, self._col_name, node)
+        return Series(f._sdf.limit(n), F.col(name), self._col_name, node,
+                      self._index_cols, self._index_names, self._dtypes)
 
     def explode(self, ignore_index: bool = False) -> "Series":
         # delegate through the one-column frame so labels behave like
@@ -3157,9 +3209,7 @@ class Series(FrameBase):
         # (r5 hunt pin — the old scol-level explode renumbered)
         name = self._col_name if self._col_name is not None else "__v__"
         f = self.to_frame(name).explode(name, ignore_index=ignore_index)
-        s = f[name]
-        s._col_name = self._col_name
-        return s
+        return _frame_column(f, name, self._col_name)
 
     def repeat(self, repeats: int) -> "Series":
         """pandas ``Series.repeat`` (scalar count): one generator
@@ -3176,7 +3226,8 @@ class Series(FrameBase):
                 .drop("__rep__")
         node = Node("repeat", {"repeats": repeats}, self._expr)
         return Series(out, F.col(name), self._col_name, node, idx,
-                      self._index_names if self._index_cols else (None,))
+                      self._index_names if self._index_cols else (None,),
+                      self._dtypes)
 
     # ------------------------------------------------------------------
     # pandas API fill (round 3): ordered ops, index surgery, conversions.
@@ -3192,18 +3243,17 @@ class Series(FrameBase):
         etc.)."""
         if self._index_cols:
             return Series.to_frame(self, self._pos_col)
-        sdf, _nm, _order, idx = self._ordered_base()
-        return DataFrame(sdf, Node("frame_base", {}, self._expr), idx)
+        sdf, nm, _order, idx = self._ordered_base()
+        return DataFrame(sdf, Node("frame_base", {}, self._expr), idx,
+                         dtypes={nm: self._value_dtype})
 
     def _via_frame(self, fn, op: str, **params) -> "Series":
         """Run a DataFrame op over the one-column frame and re-wrap the
-        value column as a Series (keeps name + index metadata)."""
+        value column as a Series (keeps name, index and dtype entries)."""
         name = self._pos_col
-        f = self._as_frame()
-        out = fn(f, name)
-        node = Node(op, params, self._expr)
-        s = Series(out._sdf, F.col(name), self._col_name, node,
-                   out._index_cols, out._index_names)
+        out = fn(self._as_frame(), name)
+        s = _frame_column(out, name, self._col_name,
+                          Node(op, params, self._expr))
         fuse = getattr(out, "_sort_fuse", None)
         if fuse is not None:
             # sort parent: carry the TopK fusion handle so a directly
@@ -3227,18 +3277,6 @@ class Series(FrameBase):
                     na_position: str = "last",
                     ignore_index: bool = False, key=None,
                     kind: str | None = None) -> "Series":
-        if (key is None and getattr(self, "_is_categorical", False)
-                and getattr(self, "_cat_ordered", False)
-                and getattr(self, "_cat_categories", None)):
-            # ordered categorical sorts by CATEGORY order, not value
-            # order — the category-position code is the sort key (wave U)
-            cats = list(self._cat_categories)
-
-            def key(s):  # noqa: F811
-                return s._with_scol(
-                    F.array_position(
-                        F.array(*[F.lit(c) for c in cats]), s._scol),
-                    "cat_code")
         return self._via_frame(
             lambda f, n: f.sort_values(n, ascending=ascending,
                                        na_position=na_position,
@@ -3259,10 +3297,8 @@ class Series(FrameBase):
             name = self._col_name if self._col_name is not None else "__v__"
             f = self.to_frame(name)
             f._sort_fuse = fuse
-            out = f.tail(n)
-            return Series(out._sdf, F.col(name), self._col_name,
-                          Node("tail", {"n": n}, self._expr),
-                          out._index_cols, out._index_names)
+            return _frame_column(f.tail(n), name, self._col_name,
+                                 Node("tail", {"n": n}, self._expr))
         return self._via_frame(lambda f, _n: f.tail(n), "tail", n=n)
 
     def sample(self, frac: float | None = None, n: int | None = None,
@@ -3296,7 +3332,7 @@ class Series(FrameBase):
         sdf = self.to_frame(name)._sdf.filter(cond)
         node = Node("filter", {"like": like, "regex": regex}, self._expr)
         return Series(sdf, F.col(name), self._col_name, node,
-                      self._index_cols, self._index_names)
+                      self._index_cols, self._index_names, self._dtypes)
 
     def reset_index(self, drop: bool = False, name=None):
         """``drop=True`` → Series on a fresh positional index;
@@ -3319,7 +3355,8 @@ class Series(FrameBase):
             else:
                 sdf = self._sdf.select(self._scol.alias(vname))
             node = Node("reset_index", {"drop": True}, self._expr)
-            return Series(sdf, F.col(vname), self._col_name, node, (), ())
+            return Series(sdf, F.col(vname), self._col_name, node, (), (),
+                          {self._vkey: self._value_dtype})
         col = name if name is not None else (
             self._col_name if self._col_name is not None else "0")
         if self._index_cols:
@@ -3330,7 +3367,7 @@ class Series(FrameBase):
         if nm != str(col):
             sdf = sdf.withColumnRenamed(nm, str(col))
         f = DataFrame(sdf, Node("reset_index_base", {}, self._expr),
-                      idx, (None,))
+                      idx, (None,), {str(col): self._value_dtype})
         return f.reset_index()
 
     def drop(self, labels=None, errors: str = "raise") -> "Series":
@@ -3349,7 +3386,7 @@ class Series(FrameBase):
         out = base.filter(~F.col(icol).isin(labels) | F.col(icol).isNull())
         node = Node("drop", {"n_labels": len(labels)}, self._expr)
         return Series(out, F.col(name), self._col_name, node,
-                      self._index_cols, self._index_names)
+                      self._index_cols, self._index_names, self._dtypes)
 
     def duplicated(self, keep: str = "first") -> "Series":
         name = self._col_name if self._col_name is not None else "__v__"
@@ -3383,13 +3420,13 @@ class Series(FrameBase):
             # duplicate labels: pandas returns the matching sub-Series
             node = Node("xs", {"key": key}, self._expr)
             return Series(base, F.col(name), self._col_name, node,
-                          self._index_cols, self._index_names)
+                          self._index_cols, self._index_names, self._dtypes)
         cols = tuple(c for c in self._index_cols if c != icol)
         names = tuple(n for c, n in zip(self._index_cols, self._index_names)
                       if c != icol)
         node = Node("xs", {"key": key, "level": level}, self._expr)
         return Series(base.drop(icol), F.col(name), self._col_name, node,
-                      cols, names)
+                      cols, names, self._dtypes)
 
     def get(self, key, default=None):
         """Label lookup with a default (eager, like pandas)."""
@@ -3435,7 +3472,8 @@ class Series(FrameBase):
         out = sdf.withColumn(idx[0], fn(F.col(idx[0])))
         node = Node(op, {}, self._expr)
         return Series(out, F.col(name), self._col_name, node, idx,
-                      self._index_names if self._index_cols else (None,))
+                      self._index_names if self._index_cols else (None,),
+                      {self._vkey: self._value_dtype})
 
     def reindex(self, index, fill_value=None) -> "Series":
         return self._via_frame(
@@ -3841,22 +3879,14 @@ class Series(FrameBase):
                 if lbase is not None:
                     # pandas keeps original positional labels (see the
                     # frame getitem promotion)
-                    out = Series(lbase.filter(key._scol),
-                                 self._scol, self._col_name, node,
-                                 (_ROWID,), (None,))
-                else:
-                    out = Series(self._sdf.filter(key._scol), self._scol,
-                                 self._col_name, node,
-                                 self._index_cols, self._index_names)
-            else:
-                tmp = self.to_frame("__v__")[key]["__v__"]
-                tmp._col_name = self._col_name
-                out = tmp
-            for a in ("_is_categorical", "_cat_categories", "_cat_ordered",
-                      "_period_value_freq", "_tz_value"):
-                if hasattr(self, a):
-                    setattr(out, a, getattr(self, a))
-            return out
+                    return Series(lbase.filter(key._scol),
+                                  self._scol, self._col_name, node,
+                                  (_ROWID,), (None,), self._dtypes)
+                return Series(self._sdf.filter(key._scol), self._scol,
+                              self._col_name, node, self._index_cols,
+                              self._index_names, self._dtypes)
+            return _frame_column(self.to_frame("__v__")[key], "__v__",
+                                 self._col_name)
         if isinstance(key, slice):
             if all(x is None or isinstance(x, int)
                    for x in (key.start, key.stop, key.step)):
@@ -3985,10 +4015,10 @@ class Series(FrameBase):
         sdf = self.to_frame(name)._sdf.withColumn(
             icol, period_start_col(F.col(icol), freq))
         node = Node("to_period", {"freq": freq}, self._expr)
-        out = Series(sdf, F.col(name), self._col_name, node,
-                     self._index_cols, self._index_names)
-        out._index_period_freq = {icol: freq}
-        return out
+        return Series(sdf, F.col(name), self._col_name, node,
+                      self._index_cols, self._index_names,
+                      {**self._dtypes,
+                       icol: D.Presented("period", freq=freq)})
 
     to_period_index = to_period
 
@@ -4032,82 +4062,19 @@ class Series(FrameBase):
 
     # ------------------------------------------------------------------
     def compute(self) -> pd.Series:
-        name = self._col_name if self._col_name is not None else "__values__"
-        cols = [F.col(c) for c in self._index_cols] + [self._scol.alias(name)]
-        base = self._sdf
-        if _ORDER in base.columns:
-            pdf = base.orderBy(_ORDER).select(*cols).toPandas()
-        elif tuple(self._index_cols) == (_ROWID,):
-            pdf = base.orderBy(_ROWID).select(*cols).toPandas()
-        else:
-            pdf = base.select(*cols).toPandas()
-        if self._index_cols:
-            pdf = pdf.set_index(list(self._index_cols))
-            pdf.index.names = [_scrub_name(n) for n in self._index_names]
-            pdf.index = _restore_period_index(
-                pdf.index, self._index_cols, self._index_period_freq)
-            if (not isinstance(pdf.index, pd.MultiIndex)
-                    and pdf.index.dtype == object and pdf.index.hasnans):
-                # Arrow None → pandas' NaN missing marker, same
-                # normalization as object VALUE columns (r8)
-                pdf.index = pd.Index(
-                    [np.nan if x is None else x for x in pdf.index],
-                    name=pdf.index.name)
-        ser = pdf[name]
-        if ser.dtype == object and ser.isna().any():
-            # Arrow delivers null strings as None; pandas' missing marker
-            # in object columns is NaN — normalize at the boundary.
-            # EXCEPT boolean MASKS (null comparison results): pandas
-            # masks are bool dtype with False at missing operands.  A
-            # genuine nullable-boolean DATA column (read from parquet)
-            # keeps its missing values (r5 advice: the unconditional fill
-            # silently rewrote data nulls to False) — only series whose
-            # own expression node is a comparison/mask op get the fill.
-            if (isinstance(self.spark_type, T.BooleanType)
-                    and getattr(self._expr, "op", None) in _MASK_OPS):
-                ser = ser.fillna(False).astype(bool)
-            else:
-                ser = ser.where(ser.notna())
-        vfreq = getattr(self, "_period_value_freq", None) or {}
-        pf = vfreq.get(name, vfreq.get(self._col_name))
-        if pf is not None:
-            # unnamed series key their metadata on None (wave X:
-            # period_range / to_period on a nameless series computed as
-            # raw timestamps instead of PeriodDtype)
-            ser = ser.dt.to_period(pf)
-        tzmeta = getattr(self, "_tz_value", None) or {}
-        m = tzmeta.get(name) or tzmeta.get(self._col_name)
-        if m:
-            # tz_localize/tz_convert boundary metadata: stored values are
-            # UTC instants ("utc") or tz wall clock ("wall") — re-attach
-            # pandas tz-awareness; DST-ambiguous walls stay naive rather
-            # than raise (documented best-effort)
-            mode, tz = m
-            try:
-                if mode == "utc":
-                    ser = ser.dt.tz_localize("UTC").dt.tz_convert(tz)
-                else:
-                    ser = ser.dt.tz_localize(tz)
-            except Exception:
-                pass
-        if self._col_name is None:
-            ser.name = None
-        ser.name = _scrub_name(ser.name)
-        # exploded values present as OBJECT dtype like pandas (see the
-        # DataFrame boundary)
-        objc = getattr(self, "_object_cols", None) or {}
-        kind = objc.get(name, objc.get(self._col_name))
-        if kind is not None and ser.dtype != object:
-            if kind == "int" and ser.dtype.kind == "f":
-                ser = pd.Series(
-                    [np.nan if pd.isna(x) else int(x) for x in ser],
-                    index=ser.index, dtype=object, name=ser.name)
-            else:
-                ser = ser.astype(object)
-        if getattr(self, "_is_categorical", False):
-            cats = getattr(self, "_cat_categories", None)
-            ser = ser.astype(pd.CategoricalDtype(
-                categories=cats, ordered=getattr(self, "_cat_ordered", False)))
+        # the one-column frame through the frame boundary (order, index,
+        # dtype record), then the column
+        ser = Series.to_frame(self, _VALUES).compute()[_VALUES]
+        if (ser.dtype == object and ser.isna().any()
+                and isinstance(self.spark_type, T.BooleanType)
+                and getattr(self._expr, "op", None) in _MASK_OPS):
+            # pandas boolean MASKS (null comparison results) are bool
+            # dtype with False at missing operands.  A genuine nullable-
+            # boolean DATA column (read from parquet) keeps its missing
+            # values (r5 advice): only a series whose own expression node
+            # is a comparison/mask op gets the fill.
+            ser = ser.fillna(False).astype(bool)
+        ser.name = _scrub_name(self._col_name)
         return ser
 
 
@@ -4615,6 +4582,12 @@ class _PendingSeries(Series):
     def __init__(self, base: Series, spec: tuple, lower):
         self._base, self._spec, self._lower = base, spec, lower
         self._col_name = base._col_name
+        # shift moves values and keeps their dtype; the other ops compute
+        # new values: only the index entries carry
+        self._dtypes = D.dtype_record({
+            **base._entries(base._index_cols),
+            base._vkey: base._value_dtype if spec[:2] == ("lag", "shift")
+            else None})
 
     def __getattr__(self, name: str):
         if name not in _PendingSeries._LAZY or "_lower" not in self.__dict__:
@@ -4665,10 +4638,7 @@ class Index(Series):
         spelling, r8 name hunt)."""
         eff = name if name is not None else self._col_name
         f = self.to_frame(index=True, name=eff or "index")
-        col = f.columns[0]
-        s = f[col]
-        s._col_name = eff
-        return s
+        return _frame_column(f, f.columns[0], eff)
 
 
 # --------------------------------------------------------------------------
@@ -4700,15 +4670,16 @@ class DataFrame(FrameBase):
         sel = [F.col(c) for c in self._index_cols] + \
             _order_cols(self._sdf) + \
             [F.col(c).alias(mapping.get(c, c)) for c in cur]
-        self._sdf = self._sdf.select(*sel)
-        self._expr = Node("rename", {"columns": mapping}, self._expr)
-        self.__dict__.pop("_sort_fuse", None)
+        self._rebind(self._derive(self._sdf.select(*sel), "rename",
+                                  {"columns": mapping}, renames=mapping))
 
     @property
     def dtypes(self) -> pd.Series:
-        return pd.Series({f.name: to_pandas_dtype(f.dataType)
+        cols, rec = set(self.columns), self._dtypes
+        return pd.Series({f.name: rec[f.name].dtype if f.name in rec
+                          else to_pandas_dtype(f.dataType)
                           for f in self._sdf.schema.fields
-                          if f.name in self.columns})
+                          if f.name in cols})
 
     @property
     def schema(self) -> T.StructType:
@@ -4747,57 +4718,34 @@ class DataFrame(FrameBase):
 
     # ------------------------------------------------------------------
     def _derive(self, sdf: SparkDF, op: str, params: dict | None = None,
-                index_cols=None, index_names=None) -> "DataFrame":
+                index_cols=None, index_names=None,
+                renames: Mapping | None = None,
+                dtypes: Mapping | None = None) -> "DataFrame":
+        """A frame over ``sdf`` built from this one.  Its dtype record
+        keeps the entries of the columns that survive under their stored
+        type — renamed through ``renames`` — then takes ``dtypes``: the
+        entries of columns the op rewrote (``None`` drops one)."""
         node = Node(op, params or {}, self._expr)
-        out = DataFrame(sdf, node,
-                        self._index_cols if index_cols is None else tuple(index_cols),
-                        self._index_names if index_names is None else tuple(index_names))
-        # carry period metadata for surviving columns (driver-side only)
-        if self._index_period_freq:
-            pf = {c: f for c, f in self._index_period_freq.items()
-                  if c in out._index_cols}
-            if pf:
-                out._index_period_freq = pf
-        vfreq = getattr(self, "_period_value_freq", None) or {}
-        if vfreq:
-            names = set(sdf.columns)
-            vf = {c: f for c, f in vfreq.items() if c in names}
-            if vf:
-                out._period_value_freq = vf
-        cmeta = getattr(self, "_cat_meta", None) or {}
-        if cmeta:
-            names = set(sdf.columns)
-            cm = {c: v for c, v in cmeta.items() if c in names}
-            if cm:
-                out._cat_meta = cm
-        objc = getattr(self, "_object_cols", None) or {}
-        if objc:
-            names = set(sdf.columns)
-            oc = {c: k for c, k in objc.items() if c in names}
-            if oc:
-                out._object_cols = oc
-        return out
+        rec = {}
+        if self._dtypes:
+            old = {f.name: f.dataType for f in self._sdf.schema.fields}
+            new = {f.name: f.dataType for f in sdf.schema.fields}
+            for c, e in self._dtypes.items():
+                n = (renames or {}).get(c, c)
+                if c in old and n in new and new[n] == old[c]:
+                    rec[n] = e
+        return DataFrame(
+            sdf, node,
+            self._index_cols if index_cols is None else tuple(index_cols),
+            self._index_names if index_names is None else tuple(index_names),
+            {**rec, **(dtypes or {})})
 
     def _col(self, name: str) -> Series:
-        node = Node("projection", {"columns": name}, self._expr)
-        s = Series(self._sdf, F.col(name), name, node,
-                   self._index_cols, self._index_names)
+        s = _frame_column(self, name, name,
+                          Node("projection", {"columns": name}, self._expr))
         # lineage token: lets __getitem__ accept scalar-augmented masks
         # derived from THIS frame while rejecting same-schema foreign frames
         s._mask_anchor = self._sdf
-        if self._index_period_freq:
-            s._index_period_freq = dict(self._index_period_freq)
-        vfreq = getattr(self, "_period_value_freq", None) or {}
-        if name in vfreq:
-            s._period_value_freq = {name: vfreq[name]}
-        cmeta = getattr(self, "_cat_meta", None) or {}
-        if name in cmeta:
-            # from_pandas Categorical columns keep their category ORDER
-            s._is_categorical = True
-            s._cat_categories = list(cmeta[name])
-        objc = getattr(self, "_object_cols", None) or {}
-        if name in objc:
-            s._object_cols = {name: objc[name]}
         return s
 
     @property
@@ -4842,10 +4790,9 @@ class DataFrame(FrameBase):
                     # labels — promote them to the rowid index (in-scan
                     # label rename, or a stamp-position pass; pushdown
                     # intact either way)
-                    node = Node("filter", {"predicate": key._expr.op},
-                                self._expr)
-                    return DataFrame(lbase.filter(key._scol),
-                                     node, (_ROWID,), (None,))
+                    return self._derive(lbase.filter(key._scol), "filter",
+                                        {"predicate": key._expr.op},
+                                        (_ROWID,), (None,))
                 return self._derive(self._sdf.filter(key._scol), "filter",
                                     {"predicate": key._expr.op})
             # scalar-augmented mask (`df[df.v > df.v.mean()]`): the mask's
@@ -4861,11 +4808,11 @@ class DataFrame(FrameBase):
                     and all(c in key._sdf.columns for c in needed)):
                 lbase = positions(key, upto="label")
                 if lbase is not None:
-                    node = Node("filter", {"predicate": key._expr.op},
-                                self._expr)
                     out = (lbase.filter(key._scol)
                            .select(*[F.col(c) for c in needed], _ROWID))
-                    return DataFrame(out, node, (_ROWID,), (None,))
+                    return self._derive(out, "filter",
+                                        {"predicate": key._expr.op},
+                                        (_ROWID,), (None,))
                 out = (key._sdf.filter(key._scol)
                        .select(*[F.col(c) for c in needed]))
                 return self._derive(out, "filter",
@@ -4893,8 +4840,8 @@ class DataFrame(FrameBase):
                           .filter(F.coalesce(F.col("__mask__"),
                                              F.lit(False)))
                           .drop("__mask__").orderBy(_ROWID))
-                node = Node("filter", {"aligned_mask": True}, self._expr)
-                return DataFrame(joined, node, (_ROWID,), (None,))
+                return self._derive(joined, "filter", {"aligned_mask": True},
+                                    (_ROWID,), (None,))
             if bool(self._index_cols) != bool(mf._index_cols):
                 raise ValueError(
                     "Boolean mask from another frame needs an index on "
@@ -4920,8 +4867,8 @@ class DataFrame(FrameBase):
                 # the join scrambles rows, and dropping the anchor made
                 # downstream positional ops silently misalign (r5 wave Q)
                 joined = joined.orderBy(_ROWID)
-                node = Node("filter", {"aligned_mask": True}, self._expr)
-                return DataFrame(joined, node, (_ROWID,), (None,))
+                return self._derive(joined, "filter", {"aligned_mask": True},
+                                    (_ROWID,), (None,))
             return self._derive(joined, "filter", {"aligned_mask": True})
         if isinstance(key, int) and str(key) in self.columns:
             # Spark column labels are strings; ops that produce pandas
@@ -4946,12 +4893,13 @@ class DataFrame(FrameBase):
         self._rebind(self.assign(**{key: value}))
 
     def _rebind(self, out: "DataFrame") -> None:
-        """Become ``out`` in place — rows, plan and index: assigning a
-        positional value to an unindexed frame gives it the positional
-        rowid index its presented order now rests on."""
+        """Become ``out`` in place — rows, plan, index and dtype record:
+        assigning a positional value to an unindexed frame gives it the
+        positional rowid index its presented order now rests on."""
         self._sdf, self._expr = out._sdf, out._expr
         self._index_cols, self._index_names = (out._index_cols,
                                                out._index_names)
+        self._dtypes = out._dtypes
         self.__dict__.pop("_sort_fuse", None)
 
     def __delitem__(self, key: str):
@@ -4990,12 +4938,12 @@ class DataFrame(FrameBase):
                .withColumn(_ORDER, F.array_position(
                    F.lit(idx), F.col("__take_pos__")).cast("long"))
                .orderBy(_ORDER))
-        node = Node("take", {"n": len(idx)}, self._expr)
         if self._index_cols:
-            return DataFrame(out.drop("__take_pos__"), node,
-                             self._index_cols, self._index_names)
+            return self._derive(out.drop("__take_pos__"), "take",
+                                {"n": len(idx)})
         # default index: the position IS the pandas label — keep it
-        return DataFrame(out, node, ("__take_pos__",), (None,))
+        return self._derive(out, "take", {"n": len(idx)},
+                            ("__take_pos__",), (None,))
 
     def reindex(self, index=None, columns=None,
                 fill_value=None) -> "DataFrame":
@@ -5103,21 +5051,21 @@ class DataFrame(FrameBase):
         # it is before any assign (pandas evaluates every Series argument
         # first): this frame's positional values, fused into one scan,
         # and same-frame expressions that follow an overwrite.  Callables
-        # see the frame as assigned so far, which must not show those
-        # columns, so with a callable every value takes the in-order path.
+        # see the frame as assigned so far, without those columns; with a
+        # callable, positional values take the in-order path.
         fused: dict[str, str] = {}
         pre: dict[str, str] = {}
-        if not any(callable(v) and not isinstance(v, Series)
-                   for v in kwargs.values()):
-            cols, overwrote = set(self.columns), False
-            for i, (k, v) in enumerate(kwargs.items()):
-                if isinstance(v, _PendingSeries):
-                    if v._over(self):
-                        fused[k] = f"__pes_fused{i}__"
-                elif (overwrote and isinstance(v, Series)
-                        and v._sdf is self._sdf):
-                    pre[k] = f"__pes_pre{i}__"
-                overwrote = overwrote or k in cols
+        fuse = not any(callable(v) and not isinstance(v, Series)
+                       for v in kwargs.values())
+        cols, overwrote = set(self.columns), False
+        for i, (k, v) in enumerate(kwargs.items()):
+            if fuse and isinstance(v, _PendingSeries):
+                if v._over(self):
+                    fused[k] = f"__pes_fused{i}__"
+            elif (overwrote and isinstance(v, Series)
+                    and v._sdf is self._sdf):
+                pre[k] = f"__pes_pre{i}__"
+            overwrote = overwrote or k in cols
         if fused:
             sdf, idx = _fused_positional(
                 self, {t: kwargs[k] for k, t in fused.items()})
@@ -5126,12 +5074,16 @@ class DataFrame(FrameBase):
             sdf = sdf.withColumns({t: kwargs[k]._scol
                                    for k, t in pre.items()})
         held = {**fused, **pre}
+        # each assigned column's dtype record entry
+        entries = {k: kwargs[k]._value_dtype for k in held}
+        view = None
 
         def _current():
             # the frame as assigned so far (late-bound on sdf)
+            cur = sdf.drop(*held.values()) if held else sdf
             if made_rowid_index and not self._index_cols:
-                return DataFrame(sdf, self._expr, (_ROWID,), (None,))
-            return DataFrame(sdf, self._expr, self._index_cols,
+                return DataFrame(cur, self._expr, (_ROWID,), (None,))
+            return DataFrame(cur, self._expr, self._index_cols,
                              self._index_names)
 
         for k, v in kwargs.items():
@@ -5139,15 +5091,19 @@ class DataFrame(FrameBase):
                 sdf = sdf.withColumn(k, F.col(held[k]))
                 continue
             if callable(v) and not isinstance(v, Series):
-                res = v(_current())
-                if not isinstance(res, Series):
+                cur = _current()
+                view = cur._sdf
+                v = v(cur)
+                if not isinstance(v, Series):
                     raise TypeError("assign callable must return a Series")
-                v = res    # fall through: same-anchor fast path below, or
-                           # the foreign-Series alignment for scan outputs
-                           # (the raw _scol would resolve BY NAME against
-                           # the original frame — silent wrong data)
+                # fall through: same-anchor fast path below (the view's
+                # columns resolve by name on sdf), or the foreign-Series
+                # alignment for scan outputs (the raw _scol would resolve
+                # BY NAME against the original frame — silent wrong data)
+            entries[k] = v._value_dtype if isinstance(v, Series) else None
             if isinstance(v, Series):
-                if v._sdf is not sdf and v._sdf is not self._sdf:
+                if (v._sdf is not sdf and v._sdf is not self._sdf
+                        and v._sdf is not view):
                     # foreign Series: pandas aligns on the index.  Indexed
                     # frames align via one left equi-join; default-index
                     # frames align POSITIONALLY (label==position), the
@@ -5274,28 +5230,10 @@ class DataFrame(FrameBase):
             sdf = sdf.withColumn(k, col)
         if held:
             sdf = sdf.drop(*held.values())
-        if made_rowid_index and not self._index_cols:
-            node = Node("assign", {"columns": list(kwargs)}, self._expr)
-            out = DataFrame(sdf, node, (_ROWID,), (None,))
-        else:
-            out = self._derive(sdf, "assign", {"columns": list(kwargs)})
-        # a Series produced by dt.to_period carries period-value metadata;
-        # a categorical Series with known categories carries _cat_meta
-        vf = dict(getattr(out, "_period_value_freq", None) or {})
-        cm = dict(getattr(out, "_cat_meta", None) or {})
-        for k, v in kwargs.items():
-            if isinstance(v, Series):
-                svf = getattr(v, "_period_value_freq", None) or {}
-                if svf:
-                    vf[k] = next(iter(svf.values()))
-                if getattr(v, "_is_categorical", False) and \
-                        getattr(v, "_cat_categories", None):
-                    cm[k] = list(v._cat_categories)
-        if vf:
-            out._period_value_freq = vf
-        if cm:
-            out._cat_meta = cm
-        return out
+        idx = ((_ROWID,), (None,)) if (made_rowid_index
+                                       and not self._index_cols) else ()
+        return self._derive(sdf, "assign", {"columns": list(kwargs)}, *idx,
+                            dtypes=entries)
 
     def drop(self, labels=None, columns=None, axis: int = 0,
              errors: str = "raise") -> "DataFrame":
@@ -5356,17 +5294,21 @@ class DataFrame(FrameBase):
                 else:
                     raise TypeError("rename(index=) takes a mapping or "
                                     "callable")
-            out = DataFrame(sdf, Node("rename", {"index": True},
-                                      self._expr),
-                            self._index_cols, self._index_names)
+            out = self._derive(sdf, "rename", {"index": True})
         if columns is None:
             return out
         if callable(columns):
             columns = {c: columns(c) for c in out.columns}
-        if not columns:
+        ren = {c: n for c, n in dict(columns or {}).items()
+               if c in out.columns}
+        if not ren:
             return out
-        return out._derive(out._sdf.withColumnsRenamed(dict(columns)),
-                           "rename", {"columns": dict(columns)})
+        # one projection: every name maps from the input at once, so a
+        # swap or a chain renames like pandas (one-by-one renames collide)
+        sdf = out._sdf.select(*[F.col(c).alias(ren[c]) if c in ren
+                                else F.col(c) for c in out._sdf.columns])
+        return out._derive(sdf, "rename", {"columns": dict(columns)},
+                           renames=ren)
 
     def select_dtypes(self, include=None, exclude=None) -> "DataFrame":
         """Reference ``_collection.py:489-491``."""
@@ -5509,9 +5451,8 @@ class DataFrame(FrameBase):
                     keep.append(c)
             sel = [F.col(c) for c in self._index_cols] + \
                   [F.col(c) for c in keep]
-            return DataFrame(self._sdf.select(*sel),
-                             Node("dropna", {"axis": 1}, self._expr),
-                             self._index_cols, self._index_names)
+            return self._derive(self._sdf.select(*sel), "dropna",
+                                {"axis": 1})
         # pandas considers DATA columns only — defaulting the subset keeps
         # hidden engine columns (order stamp, labels) and index levels out
         # of the how='all'/thresh counts
@@ -5520,11 +5461,11 @@ class DataFrame(FrameBase):
         sub = _ensure_list(subset) or self.columns
         if lbase is not None:
             # pandas keeps the surviving rows' original positional labels
-            return DataFrame(lbase.dropna(how=how, thresh=thresh,
-                                          subset=sub),
-                             Node("dropna", {"how": how, "thresh": thresh,
-                                             "subset": subset}, self._expr),
-                             (_ROWID,), (None,))
+            return self._derive(lbase.dropna(how=how, thresh=thresh,
+                                             subset=sub),
+                                "dropna", {"how": how, "thresh": thresh,
+                                           "subset": subset},
+                                (_ROWID,), (None,))
         return self._derive(
             self._sdf.dropna(how=how, thresh=thresh, subset=sub),
             "dropna", {"how": how, "thresh": thresh, "subset": subset})
@@ -5594,28 +5535,19 @@ class DataFrame(FrameBase):
         return self._derive(sdf, "replace", {})
 
     def astype(self, dtype) -> "DataFrame":
-        # "category" is engine metadata over the physical type (SURVEY §1.4)
-        # — a frame-level no-op here; select the column as a Series for the
-        # known/unknown category machinery.
-        cat_meta = dict(getattr(self, "_cat_meta", None) or {})
-        if isinstance(dtype, Mapping):
-            casts = {c: _astype_expr(F.col(c), self._sdf.schema[c].dataType,
-                                     to_spark_type(t))
-                     for c, t in dtype.items() if str(t) != "category"}
-            for c, t in dtype.items():
-                cats = getattr(t, "categories", None)
-                if str(t) == "category" and cats is not None:
-                    cat_meta[c] = list(cats)
-        elif str(dtype) == "category":
-            casts = {}
-        else:
-            st = to_spark_type(dtype)
-            casts = {c: _astype_expr(F.col(c), self._sdf.schema[c].dataType,
-                                     st) for c in self.columns}
-        out = self._derive(self._sdf.withColumns(casts), "astype", {})
-        if cat_meta:
-            out._cat_meta = cat_meta
-        return out
+        # "category" is a dtype record entry over the physical type
+        # (SURVEY §1.4): the values keep their Spark type
+        spec = dict(dtype) if isinstance(dtype, Mapping) else \
+            {c: dtype for c in self.columns}
+        casts = {c: _astype_expr(F.col(c), self._sdf.schema[c].dataType,
+                                 to_spark_type(t))
+                 for c, t in spec.items() if str(t) != "category"}
+        entries = {c: D.category(getattr(t, "categories", None),
+                                 getattr(t, "ordered", False))
+                   if str(t) == "category" else None
+                   for c, t in spec.items()}
+        return self._derive(self._sdf.withColumns(casts), "astype", {},
+                            dtypes=entries)
 
     def map(self, func, na_action=None) -> "DataFrame":
         """pandas ``DataFrame.map`` (elementwise, née applymap): the
@@ -6058,8 +5990,7 @@ class DataFrame(FrameBase):
         out = (pos.join(lagged, "__pos__", "left")
                .withColumns({c: build(F.col(c), F.col(lag[c])) for c in cols})
                .drop("__pos__", "__src__", *lag.values()))
-        node = Node(op, {"periods": periods}, self._expr)
-        return DataFrame(out, node, idx, names)
+        return self._derive(out, op, {"periods": periods}, idx, names)
 
     def _require_types(self, op: str, ok, pandas_computes=(),
                        error=TypeError, skip=()) -> dict:
@@ -6419,9 +6350,9 @@ class DataFrame(FrameBase):
         """Wrap a draw: a ``labeled`` draw keeps its rowid labels as the
         index (``replace=True`` can emit DUPLICATE labels, as pandas
         does)."""
-        node = Node("sample", params, self._expr)
         if labeled:
-            return DataFrame(sampled, node, (_ROWID,), (None,))
+            return self._derive(sampled, "sample", params, (_ROWID,),
+                                (None,))
         return self._derive(sampled, "sample", params)
 
     def drop_duplicates(self, subset: Sequence[str] | None = None,
@@ -6453,9 +6384,8 @@ class DataFrame(FrameBase):
                     (None,)
             out = (sdf.withColumn("__n__", F.count(F.lit(1)).over(w))
                    .filter(F.col("__n__") == 1).drop("__n__"))
-            node = Node("drop_duplicates",
-                        {"subset": subset, "keep": keep}, self._expr)
-            return DataFrame(out, node, idx, names)
+            return self._derive(out, "drop_duplicates",
+                                {"subset": subset, "keep": keep}, idx, names)
         if _ORDER in self._sdf.columns:
             # first/last follow the PRESENTED order after a sort (pandas)
             sdf, order_col = self._sdf, _ORDER
@@ -6475,9 +6405,8 @@ class DataFrame(FrameBase):
         w = Window.partitionBy(*subset).orderBy(order)
         out = (sdf.withColumn("__rn__", F.row_number().over(w))
                .filter(F.col("__rn__") == 1).drop("__rn__"))
-        node = Node("drop_duplicates", {"subset": subset, "keep": keep},
-                    self._expr)
-        return DataFrame(out, node, idx, names)
+        return self._derive(out, "drop_duplicates",
+                            {"subset": subset, "keep": keep}, idx, names)
 
     def duplicated(self, subset: Sequence[str] | None = None,
                    keep: str = "first") -> Series:
@@ -6517,6 +6446,21 @@ class DataFrame(FrameBase):
         multi-column explode) via ``arrays_zip`` — one generator, no
         cartesian blow-up.  ``ignore_index=True`` skips the label anchor
         and relabels 0..n-1 (the cheaper plan)."""
+
+        def _object_entries(targets):
+            # pandas explode ALWAYS yields object dtype (r8 dtype hunt) —
+            # a dtype record entry; the Spark column stays typed
+            out = {}
+            for c in targets:
+                try:
+                    et = self._sdf.schema[c].dataType.elementType
+                except Exception:
+                    continue
+                out[c] = D.Presented("object", stored="int" if isinstance(
+                    et, (T.ByteType, T.ShortType, T.IntegerType,
+                         T.LongType)) else "other")
+            return out
+
         if ignore_index:
             cols = [F.explode_outer(F.col(c)).alias(c)
                     if (c == column or (isinstance(column, (list, tuple))
@@ -6525,8 +6469,9 @@ class DataFrame(FrameBase):
             if isinstance(column, (list, tuple)) and len(column) > 1:
                 return self.explode(column).reset_index(drop=True)
             sel = self._sdf.select(*cols)
-            return DataFrame(sel, Node("explode", {"ignore_index": True},
-                                       self._expr), (), ())
+            return self._derive(sel, "explode", {"ignore_index": True},
+                                (), (), dtypes=_object_entries(
+                                    _ensure_list(column)))
         if self._index_cols:
             src, idx_cols, idx_names = \
                 self._sdf, self._index_cols, self._index_names
@@ -6568,25 +6513,9 @@ class DataFrame(FrameBase):
                                    name="__eorder__")
                    .drop(_ORDER, "__epos__")
                    .withColumnRenamed("__eorder__", _ORDER))
-        res = DataFrame(out, Node("explode", meta, self._expr),
-                        idx_cols, idx_names)
-        # pandas explode ALWAYS yields object dtype (r8 dtype hunt) —
-        # boundary-only metadata; the Spark column stays typed
         targets = meta.get("columns") or [meta.get("column")]
-        objc = {}
-        for c in targets:
-            try:
-                et = self._sdf.schema[c].dataType.elementType
-            except Exception:
-                continue
-            kind = "int" if isinstance(
-                et, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)) \
-                else "other"
-            objc[c] = kind
-        if objc:
-            res._object_cols = dict(getattr(self, "_object_cols", None)
-                                    or {}, **objc)
-        return res
+        return self._derive(out, "explode", meta, idx_cols, idx_names,
+                            dtypes=_object_entries(targets))
 
     # -- ordering / limits (`IX` family, SURVEY §2.7) --------------------
     def sort_values(self, by, ascending: bool | Sequence[bool] = True,
@@ -6612,27 +6541,25 @@ class DataFrame(FrameBase):
         if inplace:
             out = self.sort_values(by, ascending, na_position,
                                    ignore_index, key)
-            self._sdf, self._expr = out._sdf, out._expr
-            self._index_cols = out._index_cols
-            self._index_names = out._index_names
+            self._rebind(out)
             self._sort_fuse = out._sort_fuse
             return None
         by = _ensure_list(by)
         asc = ascending if isinstance(ascending, (list, tuple)) else [ascending] * len(by)
-        cmeta = getattr(self, "_cat_meta", None) or {}
         cols, raw = [], []
         for b, a in zip(by, asc):
+            cats = getattr(self._dtypes.get(b), "categories", None)
             if key is not None:
                 ks = key(self[b])
                 if not isinstance(ks, Series):
                     raise TypeError("sort_values(key=) must return an "
                                     "engine Series")
                 c = ks._scol
-            elif b in cmeta:
+            elif cats:
                 # categorical columns sort by CATEGORY order (pandas) —
                 # a literal CASE mapping value → code
                 c = F.lit(None).cast("int")
-                for i, cat in enumerate(cmeta[b]):
+                for i, cat in enumerate(cats):
                     c = F.when(F.col(b) == F.lit(cat), F.lit(i)) \
                          .otherwise(c)
             else:
@@ -6678,9 +6605,9 @@ class DataFrame(FrameBase):
                 # the existing index — drop the index columns (the stamp
                 # carries the sorted presentation order)
                 sorted_sdf = sorted_sdf.drop(*self._index_cols)
-                node = Node("sort", {"by": by, "ascending": list(asc),
-                                     "ignore_index": True}, self._expr)
-                out = DataFrame(sorted_sdf, node, (), ())
+                out = self._derive(sorted_sdf, "sort",
+                                   {"by": by, "ascending": list(asc),
+                                    "ignore_index": True}, (), ())
             else:
                 out = self._derive(sorted_sdf, "sort",
                                    {"by": by, "ascending": list(asc)})
@@ -6696,8 +6623,8 @@ class DataFrame(FrameBase):
         # self-join (assign after sort)
         sdf = (pre.orderBy(*cols, F.col(_ROWID))
                .withColumn(_ORDER, F.monotonically_increasing_id()))
-        node = Node("sort", {"by": by, "ascending": list(asc)}, self._expr)
-        out = DataFrame(sdf, node, (_ROWID,), (None,))
+        out = self._derive(sdf, "sort", {"by": by, "ascending": list(asc)},
+                           (_ROWID,), (None,))
         out._sort_fuse = (pre, raw, na_position, _ROWID)
         return out
 
@@ -6800,8 +6727,8 @@ class DataFrame(FrameBase):
                                             - F.row_number().over(w))
                                    .cast("long"))
                        .drop("__n__"))
-                return DataFrame(out, Node("tail", {"n": n}, self._expr),
-                                 (_ROWID,), (None,))
+                return self._derive(out, "tail", {"n": n}, (_ROWID,),
+                                    (None,))
             return self._derive(sdf, "tail", {"n": n})
         base = self._sdf
         ocol = _ORDER if _ORDER in base.columns else (
@@ -6830,15 +6757,15 @@ class DataFrame(FrameBase):
                                             - F.row_number().over(w))
                                    .cast("long"))
                        .drop("__n__"))
-                return DataFrame(out, Node("tail", {"n": n}, self._expr),
-                                 (_ROWID,), (None,))
+                return self._derive(out, "tail", {"n": n}, (_ROWID,),
+                                    (None,))
         if n < 0:
             if ocol is not None:
                 base = base.orderBy(ocol)
             out = base.offset(-n)
             if lab:
-                return DataFrame(out, Node("tail", {"n": n}, self._expr),
-                                 (_ROWID,), (None,))
+                return self._derive(out, "tail", {"n": n}, (_ROWID,),
+                                    (None,))
             return self._derive(out, "tail", {"n": n})
         if ocol is None:
             # natural order: monotonically_increasing_id is order-
@@ -6851,8 +6778,7 @@ class DataFrame(FrameBase):
         sdf = (base.orderBy(F.col(ocol).desc()).limit(n)
                .orderBy(F.col(ocol).asc()))
         if lab:
-            return DataFrame(sdf, Node("tail", {"n": n}, self._expr),
-                             (_ROWID,), (None,))
+            return self._derive(sdf, "tail", {"n": n}, (_ROWID,), (None,))
         return self._derive(sdf, "tail", {"n": n})
 
     def limit(self, n: int) -> "DataFrame":
@@ -6881,8 +6807,7 @@ class DataFrame(FrameBase):
             # ties break at the PRESENTED order after a sort (pandas
             # keep='first' means first in the current row order)
             pos = F.col(_ORDER)
-        node = Node(op, {"n": n, "columns": cols, "keep": keep},
-                    self._expr)
+        params = {"n": n, "columns": cols, "keep": keep}
         if keep == "all":
             if len(cols) != 1:
                 raise NotImplementedError(f"{op}(keep='all') supports a "
@@ -6893,7 +6818,7 @@ class DataFrame(FrameBase):
             cond = (c >= F.col("__b__")) if desc else (c <= F.col("__b__"))
             out = sdf.crossJoin(F.broadcast(bound)).filter(cond) \
                 .drop("__b__")
-            return DataFrame(out, node, idx, names)
+            return self._derive(out, op, params, idx, names)
         if keep not in ("first", "last"):
             raise ValueError(f"keep={keep!r}")
         tie = pos.asc() if keep == "first" else pos.desc()
@@ -6904,7 +6829,7 @@ class DataFrame(FrameBase):
         # sorted order, so monotonically_increasing_id IS the order —
         # no window, the TakeOrderedAndProject plan shape survives
         out = out.withColumn(_ORDER, F.monotonically_increasing_id())
-        return DataFrame(out, node, idx, names)
+        return self._derive(out, op, params, idx, names)
 
     def nlargest(self, n: int, columns, keep: str = "first") -> "DataFrame":
         return self._extreme_rows(n, _ensure_list(columns), True,
@@ -6943,26 +6868,21 @@ class DataFrame(FrameBase):
             # must not ride dormant under the new index.
             demoted = positions(self, _ORDER, upto="label")
             sdf = demoted if demoted is not None else sdf.drop(_LABEL)
-        node = Node("set_index", {"keys": keys, "drop": drop}, self._expr)
-        if not drop:
-            # pandas keeps the data column AND indexes by it: the INDEX
-            # side gets the physical copy (named after the key via
-            # _index_names), the original stays a data column
-            icols = []
-            for k in keys:
-                ic = f"__idxcopy_{k}__"
-                sdf = sdf.withColumn(ic, F.col(k))
-                icols.append(ic)
-            out = DataFrame(sdf, node, tuple(icols), tuple(keys))
-        else:
-            out = DataFrame(sdf, node, tuple(keys), tuple(keys))
-        # a period-valued data column (from dt.to_period) becomes a
-        # period index: carry its freq into the index metadata
-        vfreq = getattr(self, "_period_value_freq", None) or {}
-        pf = {k: vfreq[k] for k in keys if k in vfreq}
-        if pf:
-            out._index_period_freq = pf
-        return out
+        params = {"keys": keys, "drop": drop}
+        if drop:
+            # the key columns become the index under their own names:
+            # their dtype record entries carry as they are
+            return self._derive(sdf, "set_index", params, keys, keys)
+        # pandas keeps the data column AND indexes by it: the INDEX side
+        # gets the physical copy (named after the key via _index_names),
+        # the original stays a data column
+        icols = {}
+        for k in keys:
+            icols[k] = f"__idxcopy_{k}__"
+            sdf = sdf.withColumn(icols[k], F.col(k))
+        return self._derive(sdf, "set_index", params, icols.values(), keys,
+                            dtypes={ic: self._dtypes.get(k)
+                                    for k, ic in icols.items()})
 
     def reset_index(self, drop: bool = False) -> "DataFrame":
         sdf = self._sdf
@@ -6988,9 +6908,9 @@ class DataFrame(FrameBase):
             # the positional labels as an "index" column
             sdf = positions(self, "index")
             stamp = [F.col(_ORDER)] if _ORDER in sdf.columns else []
-            node = Node("reset_index", {"drop": False}, self._expr)
-            return DataFrame(sdf.select(*stamp, F.col("index"),
-                                        *self.columns), node, (), ())
+            return self._derive(sdf.select(*stamp, F.col("index"),
+                                           *self.columns),
+                                "reset_index", {"drop": False}, (), ())
         else:
             # pandas naming for unnamed levels: single index -> "index",
             # MultiIndex levels -> "level_{i}" (r5 hunt pin).  The internal
@@ -7013,15 +6933,15 @@ class DataFrame(FrameBase):
                 # arrival order without it); the LABEL column does NOT —
                 # it may be stale under an index (resurrection guard)
                 order = [_ORDER] + order
-            sdf = sdf.select(*order)
-        node = Node("reset_index", {"drop": drop}, self._expr)
-        return DataFrame(sdf, node, (), ())
+            return self._derive(sdf.select(*order), "reset_index",
+                                {"drop": drop}, (), (), renames=ren)
+        return self._derive(sdf, "reset_index", {"drop": drop}, (), ())
 
     def rename_axis(self, index=None) -> "DataFrame":
         """Reference RenameAxis ``_expr.py:1227-1237`` — metadata only."""
         names = _ensure_list(index)
-        node = Node("rename_axis", {"index": names}, self._expr)
-        return DataFrame(self._sdf, node, self._index_cols, tuple(names))
+        return self._derive(self._sdf, "rename_axis", {"index": names},
+                            index_names=names)
 
     def squeeze(self, axis=None):
         """pandas ``squeeze``: a 1-column frame collapses to its Series,
@@ -7439,9 +7359,8 @@ class DataFrame(FrameBase):
             raise ValueError("to_period needs a datetime index")
         icol = self._index_cols[0]
         sdf = self._sdf.withColumn(icol, period_start_col(F.col(icol), freq))
-        out = self._derive(sdf, "to_period", {"freq": freq})
-        out._index_period_freq = {icol: freq}
-        return out
+        return self._derive(sdf, "to_period", {"freq": freq},
+                            dtypes={icol: D.Presented("period", freq=freq)})
 
     @property
     def at(self):
@@ -9910,25 +9829,13 @@ class DataFrame(FrameBase):
         if self._index_cols:
             pdf = pdf.set_index(list(self._index_cols))
             pdf.index.names = [_scrub_name(n) for n in self._index_names]
-            pdf.index = _restore_period_index(
-                pdf.index, self._index_cols, self._index_period_freq)
             if (not isinstance(pdf.index, pd.MultiIndex)
                     and pdf.index.dtype == object and pdf.index.hasnans):
-                # Arrow None -> pandas NaN missing marker, matching the
-                # Series boundary (r8 review)
+                # Arrow None -> pandas NaN missing marker, as for object
+                # value columns (r8 review)
                 pdf.index = pd.Index(
                     [np.nan if x is None else x for x in pdf.index],
                     name=pdf.index.name)
-        if _NAME_PLACEHOLDER in pdf.columns:
-            pdf = pdf.rename(columns={_NAME_PLACEHOLDER: None})
-        for c, f in (getattr(self, "_period_value_freq", None) or {}).items():
-            if c in pdf.columns:
-                pdf[c] = pdf[c].dt.to_period(f)
-        # pandas int column labels (str.split(expand)/partition/extract):
-        # Spark columns are strings "0","1",… — restore the int labels
-        ints = getattr(self, "_int_label_cols", None)
-        if ints:
-            pdf.columns = [int(c) if c in ints else c for c in pdf.columns]
         # Arrow delivers null strings as None; pandas' missing marker in
         # object columns is NaN — normalize at the boundary (list-valued
         # object columns pass through: notna on them is elementwise-safe
@@ -9937,23 +9844,16 @@ class DataFrame(FrameBase):
             col = pdf[c]
             if col.dtype == object and col.isna().any():
                 pdf[c] = col.where(col.notna())
-        # engine categorical metadata (astype("category"), merge
-        # indicator) → real pandas categoricals at the boundary
-        for c, cats in (getattr(self, "_cat_meta", None) or {}).items():
-            if c in pdf.columns:
-                pdf[c] = pd.Categorical(pdf[c], categories=cats)
-        # exploded columns present as OBJECT dtype like pandas; integral
-        # element types keep int objects (NaN for empty lists) instead of
-        # the float64 that Spark's nullable long round-trip produces
-        for c, kind in (getattr(self, "_object_cols", None) or {}).items():
-            if c in pdf.columns and pdf[c].dtype != object:
-                col = pdf[c]
-                if kind == "int" and col.dtype.kind == "f":
-                    pdf[c] = pd.Series(
-                        [np.nan if pd.isna(x) else int(x) for x in col],
-                        index=col.index, dtype=object)
-                else:
-                    pdf[c] = col.astype(object)
+        # the dtype record: categorical, period, tz-aware and exploded
+        # object columns and index levels
+        pdf = D.present(pdf, self._index_cols, self._dtypes)
+        if _NAME_PLACEHOLDER in pdf.columns:
+            pdf = pdf.rename(columns={_NAME_PLACEHOLDER: None})
+        # pandas int column labels (str.split(expand)/partition/extract):
+        # Spark columns are strings "0","1",… — restore the int labels
+        ints = getattr(self, "_int_label_cols", None)
+        if ints:
+            pdf.columns = [int(c) if c in ints else c for c in pdf.columns]
         # pivot/unstack carry the pivot key as the columns-axis NAME
         cn = getattr(self, "_columns_name", None)
         if cn is not None:
@@ -9977,7 +9877,7 @@ def _frame_with_index(df: DataFrame) -> DataFrame:
     if df._index_cols:
         return df
     sdf = positions(df)
-    return DataFrame(sdf, df._expr, (_ROWID,), (None,))
+    return DataFrame(sdf, df._expr, (_ROWID,), (None,), df._dtypes)
 
 
 def _index_outer_join(left: DataFrame, right: DataFrame, how: str = "outer"):
@@ -10063,14 +9963,7 @@ class _SeriesLocIndexer:
         if not isinstance(key, (list, tuple, slice, Series)):
             return s.xs(key)
         name = s._col_name if s._col_name is not None else "__v__"
-        if isinstance(key, Series):
-            mask_frame = s.to_frame(name)
-            out = mask_frame.loc[key]
-        else:
-            out = s.to_frame(name).loc[key]
-        ser = out[name]
-        ser._col_name = s._col_name
-        return ser
+        return _frame_column(s.to_frame(name).loc[key], name, s._col_name)
 
 
 class _SeriesILocIndexer:
@@ -10485,7 +10378,6 @@ class _ILocIndexer:
                         & (F.col("__pos__") > stop)
                         & ((start - F.col("__pos__")) % s == 0))
                 hit = pos.filter(cond)
-                node = Node("iloc", {"step": step}, f._expr)
                 # pandas keeps labels through a reversal; the reversed
                 # presentation rides the _ORDER stamp (downstream scans
                 # prefer the stamp; a bare orderBy would be elided by
@@ -10494,10 +10386,11 @@ class _ILocIndexer:
                              / F.lit(s)).cast("long")
                 out = hit.withColumn(_ORDER, new_stamp)
                 if not f._index_cols:
-                    return DataFrame(out.withColumnRenamed("__pos__", _ROWID),
-                                     node, (_ROWID,), (None,))
-                return DataFrame(out.drop("__pos__"), node, f._index_cols,
-                                 f._index_names)
+                    return f._derive(
+                        out.withColumnRenamed("__pos__", _ROWID), "iloc",
+                        {"step": step}, (_ROWID,), (None,))
+                return f._derive(out.drop("__pos__"), "iloc",
+                                 {"step": step})
             start, stop = key.start, key.stop
             if (start is not None and start < 0) or \
                     (stop is not None and stop < 0):
@@ -10529,14 +10422,12 @@ class _ILocIndexer:
             if step != 1:
                 cond = cond & ((F.col("__pos__") - start) % step == 0)
             hit = pos.filter(cond)
-            node = Node("iloc", {"start": start, "stop": stop,
-                                 "step": step}, f._expr)
+            params = {"start": start, "stop": stop, "step": step}
             if not f._index_cols:
                 # pandas keeps the sliced rows' ORIGINAL positional labels
-                out = hit.withColumnRenamed("__pos__", _ROWID)
-                return DataFrame(out, node, (_ROWID,), (None,))
-            return f._derive(hit.drop("__pos__"), "iloc",
-                             {"start": start, "stop": stop, "step": step})
+                return f._derive(hit.withColumnRenamed("__pos__", _ROWID),
+                                 "iloc", params, (_ROWID,), (None,))
+            return f._derive(hit.drop("__pos__"), "iloc", params)
         if isinstance(key, (int, np.integer)):
             # pandas: df.iloc[i] is the ROW as a Series (name = the index
             # label at that position); one bounded 1-row collect

@@ -7,8 +7,12 @@ exercise plus the Spark-native extras (decimal/map/struct/array) we get free.
 
 from __future__ import annotations
 
-from typing import Any
+from dataclasses import dataclass
+from types import MappingProxyType
+from typing import Any, Mapping
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import types as T
 
 _PANDAS_TO_SPARK: dict[str, T.DataType] = {
@@ -78,7 +82,6 @@ def to_pandas_dtype(dt: T.DataType):
     ``.dtypes``).  A real ``np.dtype`` — pandas exposes ``.kind``/
     ``.itemsize`` on it and user code relies on that; ``np.dtype ==
     "int64"`` string comparisons still hold."""
-    import numpy as np
     for cls, name in _SPARK_TO_PANDAS.items():
         if isinstance(dt, cls):
             return np.dtype(name)
@@ -87,3 +90,94 @@ def to_pandas_dtype(dt: T.DataType):
 
 def is_numeric(dt: T.DataType) -> bool:
     return isinstance(dt, T.NumericType)
+
+
+# --------------------------------------------------------------------------
+# The dtype record: pandas dtypes Spark has no type for
+# --------------------------------------------------------------------------
+@dataclass(frozen=True)
+class Presented:
+    """The pandas dtype ``compute()`` presents for one Spark column whose
+    stored type lacks it (SURVEY §1.4).  ``kind`` is one of
+
+    - ``"category"``: values stored as the category type; ``categories``
+      is ``None`` while unknown (``astype("category")``);
+    - ``"period"``: values stored as period-START timestamps; ``freq`` is
+      the engine freq string (``"M"``, ``"Q-DEC"``, ...);
+    - ``"datetimetz"``: ``stored`` is ``"utc"`` (UTC instants) or
+      ``"wall"`` (the zone's wall clock);
+    - ``"object"``: exploded list elements; ``stored`` is the element
+      kind, ``"int"`` or ``"other"``.
+    """
+    kind: str
+    categories: tuple | None = None
+    ordered: bool = False
+    freq: str | None = None
+    tz: str | None = None
+    stored: str | None = None
+
+    @property
+    def dtype(self):
+        if self.kind == "category":
+            cats = None if self.categories is None else list(self.categories)
+            return pd.CategoricalDtype(cats, self.ordered)
+        if self.kind == "period":
+            return pd.PeriodDtype(self.freq)
+        if self.kind == "datetimetz":
+            return pd.DatetimeTZDtype("ns", self.tz)
+        return np.dtype(object)
+
+    def present(self, ser):
+        """``ser`` (a column as Arrow delivered it) in this dtype."""
+        if self.kind == "category":
+            return ser.astype(self.dtype)
+        if self.kind == "object":
+            if ser.dtype == object:
+                return ser
+            if self.stored == "int" and ser.dtype.kind == "f":
+                # integral elements stay int objects (NaN for empty lists)
+                # instead of the float64 a nullable long round-trip gives
+                return pd.Series([np.nan if pd.isna(x) else int(x)
+                                  for x in ser], index=ser.index,
+                                 dtype=object, name=ser.name)
+            return ser.astype(object)
+        if ser.dtype.kind != "M":
+            return ser
+        if self.kind == "period":
+            return ser.dt.to_period(self.freq)
+        try:
+            if self.stored == "utc":
+                return ser.dt.tz_localize("UTC").dt.tz_convert(self.tz)
+            return ser.dt.tz_localize(self.tz)
+        except Exception:   # DST-ambiguous wall clocks stay naive
+            return ser
+
+
+def category(categories=None, ordered: bool = False) -> Presented:
+    cats = None if categories is None else tuple(pd.Index(categories).tolist())
+    return Presented("category", categories=cats, ordered=bool(ordered))
+
+
+def dtype_record(entries=()) -> Mapping[str, Presented]:
+    """An immutable record ``{spark column: Presented}``; ``None``
+    entries are left out."""
+    return MappingProxyType({k: v for k, v in dict(entries).items()
+                             if v is not None})
+
+
+def present(pdf, index_cols, rec: Mapping[str, Presented]):
+    """Present ``pdf`` (its index already set from ``index_cols``) in the
+    record's dtypes: value columns and index levels alike."""
+    if not rec:
+        return pdf
+    for c in pdf.columns:
+        if c in rec:
+            pdf[c] = rec[c].present(pdf[c])
+    if any(c in rec for c in index_cols):
+        idx = pdf.index
+        levels = [idx.get_level_values(i) for i in range(idx.nlevels)]
+        levels = [pd.Index(rec[c].present(pd.Series(lv)), name=lv.name)
+                  if c in rec else lv for c, lv in zip(index_cols, levels)]
+        pdf.index = (levels[0] if len(levels) == 1
+                     else pd.MultiIndex.from_arrays(levels))
+    return pdf

@@ -19,13 +19,15 @@ import pandas as pd
 from pyspark.sql import Column, Window, functions as F
 from pyspark.sql import types as T
 
+from .. import _dtypes
+
 
 class _Accessor:
     def __init__(self, series):
         self._s = series
 
-    def _wrap(self, scol: Column, op: str):
-        return self._s._with_scol(scol, op)
+    def _wrap(self, scol: Column, op: str, entry=None):
+        return self._s._with_scol(scol, op, entry=entry)
 
 
 class StringAccessor(_Accessor):
@@ -892,21 +894,17 @@ class DatetimeAccessor(_Accessor):
         just dropping the boundary metadata (wave V — it previously fell
         into to_utc_timestamp(None) and nulled every value)."""
         if tz is None:
-            vt = dict(getattr(self._s, "_tz_value", None) or {})
-            cur = vt.get(self._s._col_name)
+            cur = self._s._value_dtype
             col = self._s._scol
-            if cur is not None and cur[0] == "utc" and cur[1] not in (
-                    "UTC", "utc"):
+            if (cur is not None and cur.stored == "utc"
+                    and cur.tz not in ("UTC", "utc")):
                 # stored as UTC instants of a non-UTC zone: pandas
                 # tz_localize(None) keeps the LOCAL wall clock
-                col = F.from_utc_timestamp(col, cur[1])
-            out = self._wrap(col, "dt.tz_localize_none")
-            out._tz_value = {}
-            return out
-        out = self._wrap(F.to_utc_timestamp(self._s._scol, tz),
-                         "dt.tz_localize")
-        out._tz_value = {out._col_name: ("utc", tz)}
-        return out
+                col = F.from_utc_timestamp(col, cur.tz)
+            return self._wrap(col, "dt.tz_localize_none")
+        return self._wrap(F.to_utc_timestamp(self._s._scol, tz),
+                          "dt.tz_localize", _dtypes.Presented(
+                              "datetimetz", tz=tz, stored="utc"))
 
     def tz_convert(self, tz: str):
         """Render UTC instants as ``tz`` wall-clock values
@@ -914,10 +912,9 @@ class DatetimeAccessor(_Accessor):
         so "converting" produces the shifted wall clock (JVM calendar
         fields like ``.dt.hour`` read correctly).  The tz rides as
         boundary metadata so ``compute()`` re-attaches awareness (r5)."""
-        out = self._wrap(F.from_utc_timestamp(self._s._scol, tz),
-                         "dt.tz_convert")
-        out._tz_value = {out._col_name: ("wall", tz)}
-        return out
+        return self._wrap(F.from_utc_timestamp(self._s._scol, tz),
+                          "dt.tz_convert", _dtypes.Presented(
+                              "datetimetz", tz=tz, stored="wall"))
 
     def strftime(self, fmt: str):
         # full strftime → JVM pattern translation (shared with
@@ -933,13 +930,12 @@ class DatetimeAccessor(_Accessor):
         metadata, so a later ``to_timestamp`` can reconstruct either edge.
         Pure column expression — whole-stage codegen, no shuffle."""
         from .timeseries import period_start_col
-        s = self._wrap(period_start_col(self._s._scol, freq), "dt.to_period")
-        s._period_value_freq = {s._col_name: freq}
-        return s
+        return self._wrap(period_start_col(self._s._scol, freq),
+                          "dt.to_period",
+                          _dtypes.Presented("period", freq=freq))
 
     def _period_edge(self, how: str):
-        vf = getattr(self._s, "_period_value_freq", {}) or {}
-        f = vf.get(self._s._col_name)
+        f = self._s._period_freq
         if f is None:
             raise AttributeError(
                 f"{'start' if how == 'start' else 'end'}_time is only "
@@ -967,8 +963,7 @@ class DatetimeAccessor(_Accessor):
         for PeriodDtype).  Uses the freq recorded by ``to_period`` /
         ``from_pandas`` unless overridden."""
         from .timeseries import period_to_timestamp_col
-        vf = getattr(self._s, "_period_value_freq", {}) or {}
-        f = freq or vf.get(self._s._col_name)
+        f = freq or self._s._period_freq
         if f is None:
             raise ValueError("dt.to_timestamp: series has no period freq "
                              "metadata; pass freq=")
@@ -1027,24 +1022,30 @@ class TimedeltaAccessor(_Accessor):
 class CategoricalAccessor(_Accessor):
     """Reference ``CategoricalAccessor`` (``_categorical.py:39-120``).
 
-    Categories live as driver-side metadata on the Series (``_cat_known``);
-    ``as_known`` computes them via ``distinct()`` exactly as the reference's
-    ``as_known`` computes ``.unique()`` (``_categorical.py:55-76``).
+    Categories live in the Series' dtype record entry (``categories`` is
+    ``None`` while unknown); ``as_known`` computes them via ``distinct()``
+    exactly as the reference's ``as_known`` computes ``.unique()``
+    (``_categorical.py:55-76``).
     """
 
     @property
     def known(self) -> bool:
-        return getattr(self._s, "_cat_categories", None) is not None
+        return self._cats is not None
 
     @property
     def ordered(self) -> bool:
-        return getattr(self._s, "_cat_ordered", False)
+        e = self._s._value_dtype
+        return e is not None and e.ordered
 
-    def _tagged(self, out, cats, ordered=None):
-        out._is_categorical = True
-        out._cat_categories = cats
-        out._cat_ordered = self.ordered if ordered is None else ordered
-        return out
+    @property
+    def _cats(self) -> list | None:
+        e = self._s._value_dtype
+        return None if e is None or e.categories is None \
+            else list(e.categories)
+
+    def _tagged(self, scol, op: str, cats, ordered=None):
+        return self._wrap(scol, op, _dtypes.category(
+            cats, self.ordered if ordered is None else ordered))
 
     def as_known(self):
         # pandas: null is NEVER a category (it stays code -1), so the
@@ -1053,21 +1054,18 @@ class CategoricalAccessor(_Accessor):
                 self._s._sdf.select(self._s._scol.alias("__c__"))
                 .filter(self._s._scol.isNotNull())
                 .distinct().orderBy("__c__").collect()]
-        return self._tagged(self._s._with_scol(self._s._scol, "cat.as_known"),
-                            cats)
+        return self._tagged(self._s._scol, "cat.as_known", cats)
 
     def as_unknown(self):
-        return self._tagged(self._s._with_scol(self._s._scol, "cat.as_unknown"),
-                            None)
+        return self._tagged(self._s._scol, "cat.as_unknown", None)
 
     def as_ordered(self):
-        return self._tagged(self._s._with_scol(self._s._scol, "cat.as_ordered"),
-                            getattr(self._s, "_cat_categories", None), True)
+        return self._tagged(self._s._scol, "cat.as_ordered", self._cats,
+                            True)
 
     def as_unordered(self):
-        return self._tagged(
-            self._s._with_scol(self._s._scol, "cat.as_unordered"),
-            getattr(self._s, "_cat_categories", None), False)
+        return self._tagged(self._s._scol, "cat.as_unordered", self._cats,
+                            False)
 
     def set_categories(self, cats, ordered: bool | None = None):
         """pandas ``cat.set_categories``: values outside the new list become
@@ -1075,34 +1073,31 @@ class CategoricalAccessor(_Accessor):
         cats = list(cats)
         c = self._s._scol
         scol = F.when(c.isin(cats), c).otherwise(F.lit(None))
-        return self._tagged(self._wrap(scol, "cat.set_categories"),
-                            cats, ordered)
+        return self._tagged(scol, "cat.set_categories", cats, ordered)
 
     def reorder_categories(self, cats, ordered: bool | None = None):
-        if self.known and sorted(map(str, cats)) != sorted(map(str, self._s._cat_categories)):
+        if self.known and sorted(map(str, cats)) != sorted(map(str, self._cats)):
             raise ValueError("items in new_categories are not the same as in "
                              "old categories")
-        return self._tagged(
-            self._s._with_scol(self._s._scol, "cat.reorder_categories"),
-            list(cats), ordered)
+        return self._tagged(self._s._scol, "cat.reorder_categories",
+                            list(cats), ordered)
 
     @property
     def categories(self):
         if not self.known:
             raise ValueError("categories are unknown; call .cat.as_known() first")
-        return list(self._s._cat_categories)
+        return self._cats
 
     @property
     def codes(self):
         """Dictionary-encode: dense_rank over the category ordering.  At scale
         this is a broadcast-join against the (small) category list."""
         if self.known:
-            cats = self._s._cat_categories
             c = self._s._scol
             # pandas: null and out-of-category values code to -1 (r5 pin;
             # the old None base surfaced as NaN)
             out = F.lit(-1)
-            for i, cat in enumerate(cats):
+            for i, cat in enumerate(self._cats):
                 out = F.when(c == F.lit(cat), F.lit(i)).otherwise(out)
             return self._wrap(out.cast("int"), "cat.codes")
         # unknown categories: codes depend only on the VALUE, so rank the
@@ -1118,18 +1113,17 @@ class CategoricalAccessor(_Accessor):
         out = c
         for k, v in mapping.items():
             out = F.when(c == F.lit(k), F.lit(v)).otherwise(out)
-        res = self._wrap(out, "cat.rename_categories")
-        cats = ([mapping.get(c_, c_) for c_ in self._s._cat_categories]
+        cats = ([mapping.get(c_, c_) for c_ in self._cats]
                 if self.known else None)
-        return self._tagged(res, cats)
+        return self._tagged(out, "cat.rename_categories", cats)
 
     def add_categories(self, new):
         # pandas works off DISCOVERED categories when they're unknown —
         # run the as_known discovery scan first (wave U)
-        src = self._s if self.known else self.as_known()
-        out = src._with_scol(src._scol, "cat.add_categories")
+        src = (self._s if self.known else self.as_known()).cat
         new = new if isinstance(new, list) else [new]
-        return self._tagged(out, list(src._cat_categories) + new)
+        return src._tagged(src._s._scol, "cat.add_categories",
+                           src._cats + new)
 
     def remove_unused_categories(self):
         """pandas ``cat.remove_unused_categories``: keep only categories
@@ -1143,10 +1137,8 @@ class CategoricalAccessor(_Accessor):
         observed = {r[0] for r in
                     self._s._sdf.select(self._s._scol.alias("__c__"))
                     .filter(self._s._scol.isNotNull()).distinct().collect()}
-        out = self._s._with_scol(self._s._scol,
-                                 "cat.remove_unused_categories")
-        return self._tagged(
-            out, [c for c in self._s._cat_categories if c in observed])
+        return self._tagged(self._s._scol, "cat.remove_unused_categories",
+                            [c for c in self._cats if c in observed])
 
     def remove_categories(self, removals):
         if not self.known:
@@ -1154,9 +1146,8 @@ class CategoricalAccessor(_Accessor):
         removals = removals if isinstance(removals, list) else [removals]
         c = self._s._scol
         scol = F.when(c.isin(removals), F.lit(None)).otherwise(c)
-        out = self._wrap(scol, "cat.remove_categories")
-        return self._tagged(
-            out, [x for x in self._s._cat_categories if x not in removals])
+        return self._tagged(scol, "cat.remove_categories",
+                            [x for x in self._cats if x not in removals])
 
 
 class ListAccessor(_Accessor):

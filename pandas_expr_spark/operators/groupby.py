@@ -126,12 +126,11 @@ class GroupBy:
         self._sets = sets
         # pandas groupby(observed=False) on categorical keys: emit a row for
         # every known category even if absent from the data.  Known
-        # categories come from the frame's categorical metadata (_cat_meta,
-        # populated by assign/astype with a known CategoricalDtype).
+        # categories come from the frame's dtype record; they also order
+        # the keys (pandas sorts a categorical by category position).
         self._observed = observed
-        self._cats = {b: cats for b, cats in
-                      (getattr(frame, "_cat_meta", None) or {}).items()
-                      if b in by and cats}
+        self._cats = {b: list(e.categories) for b, e in
+                      frame._entries(by).items() if e.categories}
 
     # -- slicing (reference `_groupby.py:320-335`) -----------------------
     def __getitem__(self, key):
@@ -184,23 +183,34 @@ class GroupBy:
         if self._kind == "groupby" and not self._observed and self._cats:
             out = self._complete_unobserved(out)
         if self._sort:
-            out = out.orderBy(*[F.col(b).asc() for b in self._by])
+            out = out.orderBy(*[self._key_order(b).asc() for b in self._by])
         node = Node("groupby_" + op, {"by": self._by}, self._frame._expr)
         idx = tuple(self._by) if self._as_index else ()
         names = tuple(self._by) if self._as_index else None
+        keys = self._frame._entries(self._by)
         value_cols = [c for c in out.columns if c not in self._by]
         # pandas: only a STRING slice (SeriesGroupBy) collapses to a
         # Series; gb[["v"]] stays a one-column DataFrame
         if self._as_index and getattr(self, "_slice_scalar", False) \
                 and len(value_cols) == 1:
-            return Series(out, F.col(value_cols[0]), value_cols[0], node, idx, names)
-        res = DataFrame(out, node, idx, names)
+            return Series(out, F.col(value_cols[0]), value_cols[0], node,
+                          idx, names, keys)
+        res = DataFrame(out, node, idx, names, keys)
         mi = getattr(self, "_mi_tuples", None)
         if mi:
             # boundary metadata: compute() restores pandas' MultiIndex
             # columns for list/dict-of-list agg specs
             res._col_tuples = dict(mi)
         return res
+
+    def _key_order(self, b: str):
+        """The sort key of group key ``b``: a known categorical sorts by
+        category position."""
+        cats = self._cats.get(b)
+        if not cats:
+            return F.col(b)
+        return F.array_position(F.array(*[F.lit(c) for c in cats]),
+                                F.col(b))
 
     def _complete_unobserved(self, out):
         """Left-join the aggregate onto the full category spine so

@@ -23,6 +23,7 @@ from typing import Sequence
 
 from pyspark.sql import functions as F, types as T
 
+from .. import _dtypes
 from .._expr import Node
 
 
@@ -57,7 +58,11 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
         if broadcast:
             r2 = F.broadcast(r2)
         node = Node("merge", {"how": "cross"}, left._expr, right._expr)
-        return DataFrame(l2.crossJoin(r2), node, (), None)
+        dtypes = {**left._entries(left.columns,
+                                  {c: c + suffixes[0] for c in collide}),
+                  **right._entries(right.columns,
+                                   {c: c + suffixes[1] for c in collide})}
+        return DataFrame(l2.crossJoin(r2), node, (), None, dtypes)
 
     if left_index:
         left = _frame_with_index(left)
@@ -171,12 +176,14 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
     if how in ("semi", "anti"):
         sel = [F.col(lmap[c]).alias(c) for c in left.columns]
         node = Node("merge", {"how": how, "on": left_keys}, left._expr, right._expr)
-        return DataFrame(joined.select(*sel), node, (), None)
+        return DataFrame(joined.select(*sel), node, (), None,
+                         left._entries(left.columns))
 
     # ---- output projection --------------------------------------------
     sel = []
     out_index: list[str] = []
     override: dict = {}
+    dtypes: dict = {}     # the output's dtype record
 
     if on is not None and not (left_index or right_index):
         # single coalesced key column per `on` key (pandas `on` semantics).
@@ -199,6 +206,9 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
             # hoisted to the front) — emit it through the left value
             # loop's override hook (wave T)
             override[("l", k)] = coal
+            # a key keeps its dtype only where both sides agree on it
+            if left._dtypes.get(k) != right._dtypes.get(k):
+                dtypes[k] = None
         key_left = set()
         key_right = set(on)
     elif left_index and right_index:
@@ -220,6 +230,7 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
         for ic in keep._index_cols:
             sel.append(F.col(cmap[ic]).alias(ic))
             out_index.append(ic)
+            dtypes[ic] = keep._dtypes.get(ic)
         for lk, rk in zip(left_keys, right_keys):
             coal = F.coalesce(F.col(lmap[lk]), F.col(rmap[rk]))
             override[("l" if right_index else "r",
@@ -236,9 +247,11 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
     for c in lvalue:
         out_name = c + suffixes[0] if c in collide else c
         sel.append(override.get(("l", c), F.col(lmap[c])).alias(out_name))
+        dtypes.setdefault(out_name, left._dtypes.get(c))
     for c in rvalue:
         out_name = c + suffixes[1] if c in collide else c
         sel.append(override.get(("r", c), F.col(rmap[c])).alias(out_name))
+        dtypes.setdefault(out_name, right._dtypes.get(c))
 
     if indicator:
         lp, rp = F.col("__L_present__"), F.col("__R_present__")
@@ -246,6 +259,9 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
             F.when(lp.isNotNull() & rp.isNotNull(), F.lit("both"))
              .when(lp.isNotNull(), F.lit("left_only"))
              .otherwise(F.lit("right_only")).alias("_merge"))
+        # pandas: _merge is CATEGORICAL with this fixed category order
+        dtypes["_merge"] = _dtypes.category(
+            ["left_only", "right_only", "both"])
 
     if carry_order:
         sel.append(F.col(_ORDER))
@@ -255,12 +271,7 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
                 left._expr, right._expr)
     idx = tuple(out_index) if (left_index or right_index) else ()
     names = tuple(n if not n.startswith("__") else None for n in idx) if idx else None
-    out = DataFrame(joined.select(*sel), node, idx, names)
-    if indicator:
-        # pandas: _merge is CATEGORICAL with this fixed category order
-        out._cat_meta = {**(getattr(out, "_cat_meta", None) or {}),
-                         "_merge": ["left_only", "right_only", "both"]}
-    return out
+    return DataFrame(joined.select(*sel), node, idx, names, dtypes)
 
 
 def join(left, other, on=None, how: str = "left", lsuffix: str = "",

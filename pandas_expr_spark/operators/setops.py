@@ -36,7 +36,8 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
         # shared-index check and silently drops the key level (r5 pin)
         from .._collection import _ROWID, positions
         norm = [f if f._index_cols
-                else DataFrame(positions(f), f._expr, (_ROWID,), (None,))
+                else DataFrame(positions(f), f._expr, (_ROWID,), (None,),
+                               f._dtypes)
                 for f in frames]
         depth = len(norm[0]._index_cols)
         if any(len(f._index_cols) != depth for f in norm):
@@ -55,7 +56,8 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
                 *f.columns)
             tagged.append(DataFrame(sdf, f._expr,
                                     ("__concat_key__",) + tuple(canon),
-                                    (None,) + inner_names))
+                                    (None,) + inner_names,
+                                    f._entries(f.columns)))
         return concat(tagged, join=join, axis=0, ignore_index=False)
     if axis in (1, "columns"):
         # BEYOND the reference (which rejects axis=1,
@@ -89,6 +91,9 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
         raise ValueError(f"axis must be 0 or 1, got {axis!r}")
     all_series = all(isinstance(f, Series) for f in frames)
     frames = [f.to_frame() if isinstance(f, Series) else f for f in frames]
+    # pandas keeps a dtype record entry only where every input agrees
+    dtypes = {c: e for c, e in frames[0]._dtypes.items()
+              if all(f._dtypes.get(c) == e for f in frames[1:])}
     # each input's presentation-order stamp/anchor is only meaningful
     # WITHIN that input — union'd stamps collide.  Re-anchor every
     # default/rowid-index input to a DENSE within-input position
@@ -172,7 +177,7 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
         data_cols = sorted(c for c in out.columns
                            if c not in idx and c != _ORD)
         out = out.select(*list(idx), *data_cols, *stamp_col)
-    res = DataFrame(out, node, idx, names)
+    res = DataFrame(out, node, idx, names, dtypes)
     if all_series and len(res.columns) == 1:
         # pandas: concat of Series along axis=0 stays a Series
         return res[res.columns[0]]
@@ -199,8 +204,9 @@ def _concat_axis1(frames: Sequence, join: str):
                          "supported (rename first)")
 
     IDX = "__cidx__"
-    sides = []
+    sides, dtypes = [], {}
     for f in frames:
+        dtypes.update(f._entries(f.columns))
         if f._index_cols:
             sdf = f._sdf.select(F.col(f._index_cols[0]).alias(IDX), *f.columns)
         else:
@@ -215,8 +221,8 @@ def _concat_axis1(frames: Sequence, join: str):
         if first._index_cols else None
     if idx_name:
         out = out.withColumnRenamed(IDX, idx_name)
-        return DataFrame(out, node, (idx_name,), (idx_name,))
-    return DataFrame(out, node, (IDX,), (None,))
+        return DataFrame(out, node, (idx_name,), (idx_name,), dtypes)
+    return DataFrame(out, node, (IDX,), (None,), dtypes)
 
 
 def union(left, right, distinct: bool = False):

@@ -24,6 +24,7 @@ from typing import Any, Sequence
 
 from pyspark.sql import DataFrame as SparkDF, functions as F
 
+from .. import _dtypes
 from .._collection import DataFrame
 from .._expr import Node, tokenize
 from .._session import get_spark
@@ -410,9 +411,7 @@ def from_pandas(pdf, npartitions: int | None = None) -> DataFrame:
         col = "__series__" if name is None else name
         frame = from_pandas(pdf.to_frame(col), npartitions)
         s = frame[col]
-        if name is None:
-            s._col_name = None
-        return s
+        return s if name is not None else s.rename(None)
     spark = get_spark()
     index_cols: tuple[str, ...] = ()
     index_names: tuple = ()
@@ -446,22 +445,22 @@ def from_pandas(pdf, npartitions: int | None = None) -> DataFrame:
         from .._collection import _LABEL as _LABEL_COL
         import numpy as _np
         pdf = pdf.assign(**{_LABEL_COL: _np.arange(len(pdf), dtype="int64")})
-    cat_meta: dict[str, list] = {}
+    # the dtype record (SURVEY §1.4): categories and period freqs are
+    # driver-side entries; the values are stored as the physical
+    # category type and as period-start timestamps
+    dtypes = {}
     for c in pdf.columns:
-        if isinstance(pdf[c].dtype, _pd.CategoricalDtype):
-            # categories are engine metadata (SURVEY §1.4); values are
-            # stored as the physical category dtype
-            cat_meta[c] = list(pdf[c].dtype.categories)
-            pdf = pdf.assign(**{c: pdf[c].astype(
-                pdf[c].dtype.categories.dtype)})
-    period_freq: dict[str, str] = {}
-    for c in pdf.columns:
-        if isinstance(pdf[c].dtype, _pd.PeriodDtype):
+        dt = pdf[c].dtype
+        if isinstance(dt, _pd.CategoricalDtype):
+            dtypes[c] = _dtypes.category(dt.categories, dt.ordered)
+            pdf = pdf.assign(**{c: pdf[c].astype(dt.categories.dtype)})
+        elif isinstance(dt, _pd.PeriodDtype):
             # freq.freqstr is offset-style in pandas 2.2+ ('ME'); periods
             # use the un-suffixed alias ('M') — normalize for to_period
-            base, _, anchor = pdf[c].dtype.freq.freqstr.partition("-")
+            base, _, anchor = dt.freq.freqstr.partition("-")
             base = {"ME": "M", "QE": "Q", "YE": "Y"}.get(base, base)
-            period_freq[c] = base + ("-" + anchor if anchor else "")
+            dtypes[c] = _dtypes.Presented(
+                "period", freq=base + ("-" + anchor if anchor else ""))
             pdf = pdf.assign(**{c: pdf[c].dt.to_timestamp(how="start")})
     if len(pdf) == 0:
         # Spark cannot infer a schema from zero rows — build it from the
@@ -499,16 +498,7 @@ def from_pandas(pdf, npartitions: int | None = None) -> DataFrame:
     if npartitions:
         sdf = sdf.repartition(npartitions)
     node = Node("from_pandas", {"columns": list(pdf.columns)})
-    out = DataFrame(sdf, node, index_cols, index_names or None)
-    idx_pf = {c: f for c, f in period_freq.items() if c in index_cols}
-    val_pf = {c: f for c, f in period_freq.items() if c not in index_cols}
-    if idx_pf:
-        out._index_period_freq = idx_pf
-    if val_pf:
-        out._period_value_freq = val_pf
-    if cat_meta:
-        out._cat_meta = cat_meta
-    return out
+    return DataFrame(sdf, node, index_cols, index_names or None, dtypes)
 
 
 def _is_default_index(pdf) -> bool:
