@@ -28,6 +28,12 @@ Design notes (SURVEY §1.5 — the index problem):
   columns (``_derive``); a Series keeps its value's entry under the name
   its ``to_frame`` column gets; ``compute()`` presents them all through
   ``_dtypes.present``.
+* Engine columns are flat Spark names.  A frame's pandas column labels
+  that differ from them (MultiIndex tuples, ints) and the axis name live
+  in its immutable **column-axis record**, ``_axis`` (``_dtypes.Axis``):
+  ``_derive`` keeps the labels of surviving columns and the name, ops
+  that define a new axis pass one in, and ``compute()`` presents it
+  through ``_dtypes.present_axis``.
 """
 
 from __future__ import annotations
@@ -830,14 +836,16 @@ class FrameBase:
     def __init__(self, sdf: SparkDF, expr: Node,
                  index_cols: tuple[str, ...] = (),
                  index_names: tuple | None = None,
-                 dtypes: Mapping | None = None):
+                 dtypes: Mapping | None = None,
+                 axis: "D.Axis" = D.NO_AXIS):
         self._sdf = sdf
         self._expr = expr
         self._index_cols = tuple(index_cols)
         self._index_names = tuple(index_names) if index_names is not None \
             else tuple(None for _ in index_cols)
-        # the dtype record (module docstring): driver-side only
+        # the dtype and column-axis records (module docstring): driver-side
         self._dtypes = D.dtype_record(dtypes or ())
+        self._axis = axis
 
     def _entries(self, cols, renames: Mapping | None = None) -> dict:
         """This record's entries for the Spark columns ``cols``, keyed
@@ -888,7 +896,7 @@ class FrameBase:
             return type(self)(sdf, self._scol, self._col_name, node,
                               self._index_cols, self._index_names, rest)
         return DataFrame(sdf, node, self._index_cols, self._index_names,
-                         rest)
+                         rest, self._axis)
 
     # -- plan introspection (reference _collection.py:115-124, _expr.py:103-108)
     @property
@@ -1818,7 +1826,10 @@ class Series(FrameBase):
                                   T.DateType)):
                 null_repr = "NaT"
             else:
-                null_repr = getattr(self, "_null_str_repr", None) or "None"
+                # a categorical's missing value is NaN
+                e = self._value_dtype
+                null_repr = "nan" if e is not None and e.kind == "category" \
+                    else "None"
             out = F.coalesce(self._scol.cast(st), F.lit(null_repr))
             return self._with_scol(out, "astype", dtype=str(dtype))
         return self._with_scol(_astype_expr(self._scol, self.spark_type, st),
@@ -2240,7 +2251,9 @@ class Series(FrameBase):
             out = out.fillna(fill_value,
                              subset=[c for c in out.columns if c not in keep])
         node = Node("unstack", {"level": lvl}, self._expr)
-        return DataFrame(out, node, tuple(keep), keep_names)
+        # pandas names the column axis after the unstacked level
+        return DataFrame(out, node, tuple(keep), keep_names,
+                         axis=D.axis_record(name=_scrub_name(names[lvl])))
 
     def rank(self, method: str = "average", ascending: bool = True,
              pct: bool = False, na_option: str = "keep") -> "Series":
@@ -2836,28 +2849,22 @@ class Series(FrameBase):
             raise ValueError("labels must have len(bins) - 1 entries")
         disp = _interval_display(edges, precision, _first_edge_adjust)
         c = self._scol
-        out_type = "int" if labels is False else "string"
-        expr = F.lit(None).cast(out_type)
+        if labels is None:
+            labels = [f"({disp[i]}, {disp[i + 1]}]" if right
+                      else f"[{disp[i]}, {disp[i + 1]})"
+                      for i in range(len(edges) - 1)]
+        expr = F.lit(None).cast("int" if labels is False else "string")
         for i in range(len(edges) - 2, -1, -1):
             lo, hi = edges[i], edges[i + 1]
-            if right:
-                cond = (c > lo) & (c <= hi)
-                lab = f"({disp[i]}, {disp[i + 1]}]"
-            else:
-                cond = (c >= lo) & (c < hi)
-                lab = f"[{disp[i]}, {disp[i + 1]})"
-            if labels is False:
-                val = F.lit(i)
-            elif labels is not None:
-                val = F.lit(str(labels[i]))
-            else:
-                val = F.lit(lab)
+            cond = (c > lo) & (c <= hi) if right else (c >= lo) & (c < hi)
+            val = F.lit(i) if labels is False else F.lit(str(labels[i]))
             expr = F.when(cond, val).otherwise(expr)
-        out = self._with_scol(expr, "cut", n_bins=len(edges) - 1)
-        # pandas cut returns a Categorical: astype(str) renders missing
-        # (out-of-range) values as 'nan', not the object-dtype 'None'
-        out._null_str_repr = "nan"
-        return out
+        # pandas cut returns an ordered Categorical of the bin labels
+        # (integer codes for labels=False)
+        return self._with_scol(
+            expr, "cut", n_bins=len(edges) - 1,
+            entry=None if labels is False
+            else D.category([str(x) for x in labels], ordered=True))
 
     def qcut(self, q: int | Sequence[float],
              labels: Sequence[str] | None = None,
@@ -2913,7 +2920,9 @@ class Series(FrameBase):
                 # pandas: every quantile edge equal → zero usable bins →
                 # ALL values bin to NaN (verified against pandas 2.2)
                 t = "double" if labels is False else "string"
-                return self._with_scol(F.lit(None).cast(t), "qcut")
+                return self._with_scol(
+                    F.lit(None).cast(t), "qcut", entry=None
+                    if labels is False else D.category((), ordered=True))
             raise ValueError("qcut: all values identical — no bins")
         # pandas includes the minimum in the first bin: nudge the left edge
         edges[0] = edges[0] - abs(edges[0]) * 1e-9 - 1e-12
@@ -2995,10 +3004,9 @@ class Series(FrameBase):
         if bins is not None:
             # pandas lowers bins=n to pd.cut(s, n): equal-width edges over
             # [min, max] with the left edge pulled down 0.1% of the range
-            # (include_lowest); zero-count bins ARE emitted.  One min/max
-            # scan for the edges (a tiny eager action, like pandas), then
-            # the JVM CASE-chain cut + groupBy + a broadcast zero-fill join
-            # against the literal label list.
+            # (include_lowest).  One min/max scan for the edges (a tiny
+            # eager action, like pandas), then the categorical counts of
+            # the JVM CASE-chain cut: zero-count bins ARE emitted.
             row = (self.to_frame("__v__")._sdf
                    .agg(F.min("__v__").alias("mn"),
                         F.max("__v__").alias("mx")).first())
@@ -3009,29 +3017,9 @@ class Series(FrameBase):
             edges = [mn + step * i for i in range(bins + 1)]
             edges[-1] = mx
             edges[0] = mn - (mx - mn) * 0.001
-            disp = _interval_display(edges, 3, True)
-            all_labels = [f"({disp[i]}, {disp[i + 1]}]"
-                          for i in range(len(edges) - 1)]
-            binned = self.cut(edges, _first_edge_adjust=True)
-            counted = binned.value_counts(sort=False, dropna=dropna,
-                                          normalize=normalize)
-            spark = self._sdf.sparkSession
-            name = counted._index_cols[0]
-            val = counted._col_name
-            lab_sdf = spark.createDataFrame([(l,) for l in all_labels],
-                                            f"`{name}` string")
-            filled = (F.broadcast(lab_sdf)
-                      .join(counted._sdf, name, "left")
-                      .withColumn(val, F.coalesce(
-                          F.col(val),
-                          F.lit(0.0 if normalize else 0).cast(
-                              dict(counted._sdf.dtypes)[val]))))
-            if sort:
-                filled = filled.orderBy(
-                    F.col(val).asc() if ascending else F.col(val).desc(),
-                    F.col(name).asc())
-            node = Node("value_counts", {"bins": bins}, self._expr)
-            return Series(filled, F.col(val), val, node, (name,), (name,))
+            return self.cut(edges, _first_edge_adjust=True).value_counts(
+                sort=sort, ascending=ascending, dropna=dropna,
+                normalize=normalize)
         # tie order is FIRST-APPEARANCE order in the presented row order
         # (pandas' own tie order under sort=True is unstable-quicksort
         # UNDEFINED; sort=False appearance order is pandas-defined) — one
@@ -3089,7 +3077,9 @@ class Series(FrameBase):
             out = out.orderBy(tie.asc())
         out = out.select(name, val_col)
         node = Node("value_counts", {"normalize": normalize}, self._expr)
-        return Series(out, F.col(val_col), val_col, node, (name,), (name,))
+        # the counted values index the result in their own dtype
+        return Series(out, F.col(val_col), val_col, node, (name,), (name,),
+                      {name: self._value_dtype})
 
     def _topk(self, n: int, keep: str, largest: bool, op: str) -> "Series":
         """Distributed TopK (TakeOrderedAndProject).  pandas drops nulls;
@@ -3263,10 +3253,12 @@ class Series(FrameBase):
 
     @property
     def index(self) -> "Index":
+        """The first index level, presented in its dtype record entry."""
         if self._index_cols:
-            c = self._index_cols[0]
-            return Index(self._sdf, F.col(c), self._index_names[0],
-                         Node("index", {"col": c}, self._expr))
+            c, name = self._index_cols[0], self._index_names[0]
+            return Index(self._sdf, F.col(c), name,
+                         Node("index", {"col": c}, self._expr), (), None,
+                         {_value_key(name): self._dtypes.get(c)})
         sdf = positions(self)
         return Index(sdf, F.col(_ROWID), None, Node("index", {}, self._expr))
 
@@ -4657,11 +4649,12 @@ class DataFrame(FrameBase):
     @columns.setter
     def columns(self, new) -> None:
         """pandas ``df.columns = [...]`` — an in-place positional rename
-        (pure projection, no shuffle).  MultiIndex-style tuples flatten
-        to their string repr (engine columns are flat strings)."""
-        cur = self.columns
+        (pure projection, no shuffle).  Engine columns stay flat strings
+        (tuples join with ``_``); the given labels go to the column-axis
+        record, so ``compute()`` presents the MultiIndex or int labels."""
+        cur, labels = self.columns, list(new)
         new = ["_".join(map(str, c)) if isinstance(c, tuple) else str(c)
-               for c in list(new)]
+               for c in labels]
         if len(new) != len(cur):
             raise ValueError(
                 f"Length mismatch: Expected axis has {len(cur)} elements, "
@@ -4670,8 +4663,9 @@ class DataFrame(FrameBase):
         sel = [F.col(c) for c in self._index_cols] + \
             _order_cols(self._sdf) + \
             [F.col(c).alias(mapping.get(c, c)) for c in cur]
-        self._rebind(self._derive(self._sdf.select(*sel), "rename",
-                                  {"columns": mapping}, renames=mapping))
+        self._rebind(self._derive(
+            self._sdf.select(*sel), "rename", {"columns": mapping},
+            renames=mapping, axis=D.axis_record(zip(new, labels))))
 
     @property
     def dtypes(self) -> pd.Series:
@@ -4707,24 +4701,20 @@ class DataFrame(FrameBase):
         return Scalar(self._sdf.agg((F.count(F.lit(1)) * ncols).alias("size")),
                       Node("size", {"ncols": ncols}, self._expr))
 
-    @property
-    def index(self) -> Index:
-        if self._index_cols:
-            c = self._index_cols[0]
-            return Index(self._sdf, F.col(c), self._index_names[0],
-                         Node("index", {"col": c}, self._expr))
-        sdf = positions(self)
-        return Index(sdf, F.col(_ROWID), None, Node("index", {}, self._expr))
+    index = Series.index
 
     # ------------------------------------------------------------------
     def _derive(self, sdf: SparkDF, op: str, params: dict | None = None,
                 index_cols=None, index_names=None,
                 renames: Mapping | None = None,
-                dtypes: Mapping | None = None) -> "DataFrame":
+                dtypes: Mapping | None = None,
+                axis: "D.Axis | None" = None) -> "DataFrame":
         """A frame over ``sdf`` built from this one.  Its dtype record
         keeps the entries of the columns that survive under their stored
         type — renamed through ``renames`` — then takes ``dtypes``: the
-        entries of columns the op rewrote (``None`` drops one)."""
+        entries of columns the op rewrote (``None`` drops one).  Its
+        column axis is ``axis``, else this one's over the surviving
+        columns."""
         node = Node(op, params or {}, self._expr)
         rec = {}
         if self._dtypes:
@@ -4734,11 +4724,14 @@ class DataFrame(FrameBase):
                 n = (renames or {}).get(c, c)
                 if c in old and n in new and new[n] == old[c]:
                     rec[n] = e
+        if axis is None:
+            axis = self._axis.keep(sdf.columns, renames) \
+                if self._axis.labels else self._axis
         return DataFrame(
             sdf, node,
             self._index_cols if index_cols is None else tuple(index_cols),
             self._index_names if index_names is None else tuple(index_names),
-            {**rec, **(dtypes or {})})
+            {**rec, **(dtypes or {})}, axis)
 
     def _col(self, name: str) -> Series:
         s = _frame_column(self, name, name,
@@ -4899,7 +4892,7 @@ class DataFrame(FrameBase):
         self._sdf, self._expr = out._sdf, out._expr
         self._index_cols, self._index_names = (out._index_cols,
                                                out._index_names)
-        self._dtypes = out._dtypes
+        self._dtypes, self._axis = out._dtypes, out._axis
         self.__dict__.pop("_sort_fuse", None)
 
     def __delitem__(self, key: str):
@@ -8629,7 +8622,8 @@ class DataFrame(FrameBase):
             f"stack({len(stats)}, {', '.join(parts)}) as "
             f"(stat, {', '.join(f'`{c}`' for c in cols)})")
         node = Node("describe", {"columns": cols}, self._expr)
-        return DataFrame(stacked, node, ("stat",), (None,))
+        return DataFrame(stacked, node, ("stat",), (None,), None,
+                         self._axis.keep(cols))
 
     def _pairwise(self, fn, op: str) -> "DataFrame":
         """Pairwise statistic matrix in ONE aggregation pass: n² aggregate
@@ -9072,10 +9066,8 @@ class DataFrame(FrameBase):
                                     "aggfunc": aggfunc}, self._expr)
         # pandas sets the index= columns as the result's index and names
         # the COLUMN axis after the pivot key
-        res = DataFrame(out, node, tuple(idx), tuple(idx))
-        if columns is not None and not margins:
-            res._columns_name = columns
-        return res
+        return DataFrame(out, node, tuple(idx), tuple(idx),
+                         axis=D.axis_record(name=None if margins else columns))
 
     def crosstab(self, index: str, columns: str,
                  values: str | None = None, aggfunc: str = "count",
@@ -9138,9 +9130,8 @@ class DataFrame(FrameBase):
         node = Node("crosstab", {"index": index, "columns": columns}, self._expr)
         # pandas crosstab indexes on the row key and names the columns
         # axis after the column key (r5 parity)
-        res = DataFrame(out, node, (index,), (index,))
-        res._columns_name = columns
-        return res
+        return DataFrame(out, node, (index,), (index,),
+                         axis=D.axis_record(name=columns))
 
     _RESAMPLE_TRUNC = {"s": "second", "min": "minute", "t": "minute",
                        "h": "hour", "d": "day", "w": "week",
@@ -9296,12 +9287,9 @@ class DataFrame(FrameBase):
         from .operators.groupby import Resampler
         out = self._derive(self._sdf.withColumn(on, bucket),
                            "resample", {"freq": freq, "on": on})
-        r = Resampler(out, on, step_sql, fill_empty=fill_empty,
-                      sort=True, label_shift=label_shift)
-        # pre-bucket state for resample().asfreq() (values AT bin edges)
-        r._orig_sdf = self._sdf
-        r._bucket_expr = bucket
-        return r
+        return Resampler(out, on, step_sql, fill_empty=fill_empty,
+                         sort=True, label_shift=label_shift,
+                         orig_sdf=self._sdf, bucket_expr=bucket)
 
     def asfreq(self, freq: str, on: str,
                method: str | None = None) -> "DataFrame":
@@ -9441,8 +9429,7 @@ class DataFrame(FrameBase):
             # MultiIndex (row labels, stacked column) — the stacked
             # column level takes the columns-axis name (usually None)
             idx = tuple(id_vars) + (var_name,)
-            names = tuple(base._index_names) + \
-                (getattr(self, "_columns_name", None),)
+            names = tuple(base._index_names) + (self._axis.name,)
             return Series(sdf, F.col(value_name), None, node, idx, names)
         # explicit id_vars: engine extension, melt-flavored long frame
         return DataFrame(sdf, node, (), None)
@@ -9849,24 +9836,7 @@ class DataFrame(FrameBase):
         pdf = D.present(pdf, self._index_cols, self._dtypes)
         if _NAME_PLACEHOLDER in pdf.columns:
             pdf = pdf.rename(columns={_NAME_PLACEHOLDER: None})
-        # pandas int column labels (str.split(expand)/partition/extract):
-        # Spark columns are strings "0","1",… — restore the int labels
-        ints = getattr(self, "_int_label_cols", None)
-        if ints:
-            pdf.columns = [int(c) if c in ints else c for c in pdf.columns]
-        # pivot/unstack carry the pivot key as the columns-axis NAME
-        cn = getattr(self, "_columns_name", None)
-        if cn is not None:
-            pdf.columns.name = cn
-        # groupby/resample .agg with a list (or dict-of-list) spec: pandas
-        # returns MultiIndex columns; the flat col_fn Spark names map back
-        # through the recorded (col, fn) tuples.  Unrecorded columns (e.g.
-        # as_index=False keys) take pandas' ('col', '') form.
-        tups = getattr(self, "_col_tuples", None)
-        if tups:
-            pdf.columns = pd.MultiIndex.from_tuples(
-                [tups.get(c, (c, "")) for c in pdf.columns])
-        return pdf
+        return D.present_axis(pdf, self._axis)
 
 
 # --------------------------------------------------------------------------

@@ -181,3 +181,53 @@ def present(pdf, index_cols, rec: Mapping[str, Presented]):
         pdf.index = (levels[0] if len(levels) == 1
                      else pd.MultiIndex.from_arrays(levels))
     return pdf
+
+
+# --------------------------------------------------------------------------
+# The column-axis record: pandas column labels Spark names cannot spell
+# --------------------------------------------------------------------------
+@dataclass(frozen=True)
+class Axis:
+    """The pandas column axis ``compute()`` presents.  ``labels`` maps a
+    Spark column to its pandas label where the two differ (an int, or a
+    MultiIndex tuple); ``name`` is the axis name."""
+    labels: Mapping[str, Any]
+    name: Any = None
+
+    def keep(self, cols, renames: Mapping | None = None) -> "Axis":
+        """This axis over the Spark columns ``cols`` of a derived frame.
+        A column renamed through ``renames`` takes its new name as its
+        label."""
+        ren = renames or {}
+        cols = set(cols)
+        return axis_record({c: lab for c, lab in self.labels.items()
+                            if c in cols and c not in ren}, self.name)
+
+
+def axis_record(labels=(), name=None) -> Axis:
+    """An immutable column-axis record; labels equal to their Spark name
+    are left out."""
+    return Axis(MappingProxyType({k: v for k, v in dict(labels).items()
+                                  if v != k}), name)
+
+
+NO_AXIS = axis_record()
+
+
+def present_axis(pdf, axis: Axis):
+    """Present ``pdf``'s columns as the record's pandas axis: its labels
+    (a MultiIndex when any is a tuple; other columns take pandas'
+    ``(col, '')`` form) and its name."""
+    if axis.labels:
+        labels = [axis.labels.get(c, c) for c in pdf.columns]
+        width = max((len(x) for x in labels if isinstance(x, tuple)),
+                    default=0)
+        if width:
+            pdf.columns = pd.MultiIndex.from_tuples(
+                [x if isinstance(x, tuple) else (x,) + ("",) * (width - 1)
+                 for x in labels])
+        else:
+            pdf.columns = pd.Index(labels)
+    if axis.name is not None:
+        pdf.columns.name = axis.name
+    return pdf

@@ -21,6 +21,9 @@ from pyspark.sql import types as T
 
 from .. import _dtypes
 
+# str.partition/rpartition(expand) columns: Spark "0".."2", pandas 0..2
+_PARTS_AXIS = _dtypes.axis_record({str(i): i for i in range(3)})
+
 
 class _Accessor:
     def __init__(self, series):
@@ -280,18 +283,18 @@ class StringAccessor(_Accessor):
         names = {v: k for k, v in cpat.groupindex.items()}
         if cpat.groups <= 1 and not expand:
             return self._wrap(one(1), "str.extract")
-        from .._collection import DataFrame as _PDF
+        from .._collection import DataFrame as _PDF, _order_cols
         from .._expr import Node
         s = self._s
         sdf = s._sdf.select(
-            *[F.col(ic) for ic in s._index_cols],
+            *[F.col(ic) for ic in s._index_cols], *_order_cols(s._sdf),
             *[one(i).alias(names.get(i, str(i - 1)))
               for i in range(1, cpat.groups + 1)])
         node = Node("str.extract", {"pat": pat}, s._expr)
-        out = _PDF(sdf, node, s._index_cols, s._index_names)
-        out._int_label_cols = {str(i - 1) for i in range(1, cpat.groups + 1)
-                               if i not in names}
-        return out
+        return _PDF(sdf, node, s._index_cols, s._index_names,
+                    s._entries(s._index_cols), _dtypes.axis_record(
+                        {str(i - 1): i - 1 for i in range(1, cpat.groups + 1)
+                         if i not in names}))
 
     def split(self, pat: str | None = None, regex: bool | None = None,
               n: int = -1, expand: bool = False):
@@ -325,20 +328,20 @@ class StringAccessor(_Accessor):
             arr = F.split(self._s._scol, p, limit)
         if not expand:
             return self._wrap(arr, "str.split")
-        s = self._s
-        base = s._sdf.select(*[F.col(ic) for ic in s._index_cols],
-                             arr.alias("__toks__"))
-        width = base.agg(F.max(F.size("__toks__"))).collect()[0][0] or 0
-        from .._collection import DataFrame as _PDF
+        from .._collection import DataFrame as _PDF, _order_cols
         from .._expr import Node
+        s = self._s
+        keep = [F.col(ic) for ic in s._index_cols] + _order_cols(s._sdf)
+        base = s._sdf.select(*keep, arr.alias("__toks__"))
+        width = base.agg(F.max(F.size("__toks__"))).collect()[0][0] or 0
         sdf = base.select(
-            *[F.col(ic) for ic in s._index_cols],
+            *keep,
             *[F.try_element_at("__toks__", F.lit(i + 1)).alias(str(i))
               for i in range(width)])
         node = Node("str.split", {"pat": pat, "expand": True}, s._expr)
-        out = _PDF(sdf, node, s._index_cols, s._index_names)
-        out._int_label_cols = {str(i) for i in range(width)}
-        return out
+        return _PDF(sdf, node, s._index_cols, s._index_names,
+                    s._entries(s._index_cols),
+                    _dtypes.axis_record({str(i): i for i in range(width)}))
 
     def partition(self, sep: str = " "):
         """pandas ``str.partition``: (before, sep, after) — three pure
@@ -355,15 +358,14 @@ class StringAccessor(_Accessor):
         after = F.when(c.isNull(), null) \
             .when(pos > 0, F.substring(c, pos + F.lit(len(sep)),
                                        F.length(c))).otherwise(F.lit(""))
-        from .._collection import DataFrame as _PDF
+        from .._collection import DataFrame as _PDF, _order_cols
         from .._expr import Node
         sdf = s._sdf.select(*[F.col(ic) for ic in s._index_cols],
-                            before.alias("0"), mid.alias("1"),
-                            after.alias("2"))
+                            *_order_cols(s._sdf), before.alias("0"),
+                            mid.alias("1"), after.alias("2"))
         node = Node("str.partition", {"sep": sep}, s._expr)
-        out = _PDF(sdf, node, s._index_cols, s._index_names)
-        out._int_label_cols = {"0", "1", "2"}
-        return out
+        return _PDF(sdf, node, s._index_cols, s._index_names,
+                    s._entries(s._index_cols), _PARTS_AXIS)
 
     def rpartition(self, sep: str = " "):
         """pandas ``str.rpartition``: split at the LAST occurrence of
@@ -383,15 +385,14 @@ class StringAccessor(_Accessor):
         after = F.when(c.isNull(), null) \
             .when(found, F.substring(c, pos + F.lit(len(sep)),
                                      F.length(c))).otherwise(c)
-        from .._collection import DataFrame as _PDF
+        from .._collection import DataFrame as _PDF, _order_cols
         from .._expr import Node
         sdf = s._sdf.select(*[F.col(ic) for ic in s._index_cols],
-                            before.alias("0"), mid.alias("1"),
-                            after.alias("2"))
+                            *_order_cols(s._sdf), before.alias("0"),
+                            mid.alias("1"), after.alias("2"))
         node = Node("str.rpartition", {"sep": sep}, s._expr)
-        out = _PDF(sdf, node, s._index_cols, s._index_names)
-        out._int_label_cols = {"0", "1", "2"}
-        return out
+        return _PDF(sdf, node, s._index_cols, s._index_names,
+                    s._entries(s._index_cols), _PARTS_AXIS)
 
     def extractall(self, pat: str):
         """pandas ``str.extractall``: every regex match becomes a row —

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
+from .. import _dtypes as D
 from .._dtypes import is_numeric, to_spark_type
 from .._expr import Node
 
@@ -112,13 +113,16 @@ class GroupBy:
                  as_index: bool = True, dropna: bool = True,
                  slice_: list[str] | None = None, kind: str = "groupby",
                  sets: list[list[str]] | None = None,
-                 observed: bool = True):
+                 observed: bool = True, slice_scalar: bool = False):
         self._frame = frame
         self._by = by
         self._sort = sort
         self._as_index = as_index
         self._dropna = dropna
         self._slice = slice_
+        # a STRING slice is a SeriesGroupBy in pandas (bare stat names in
+        # describe etc.); a 1-list slice stays a DataFrameGroupBy
+        self._slice_scalar = slice_scalar
         # "groupby" | "rollup" | "cube" | "grouping_sets" — the latter three
         # lower to Spark's native multi-grouping-set aggregation (one
         # shuffle, subtotal rows marked by NULL keys; SURVEY §2.5 noted gap)
@@ -138,13 +142,13 @@ class GroupBy:
         missing = [k for k in keys if k not in self._frame.columns]
         if missing:
             raise KeyError(missing)
-        out = GroupBy(self._frame, self._by, self._sort, self._as_index,
-                      self._dropna, slice_=keys, kind=self._kind,
-                      sets=self._sets, observed=self._observed)
-        # a STRING slice is a SeriesGroupBy in pandas (bare stat names in
-        # describe etc.); a 1-list slice stays a DataFrameGroupBy
-        out._slice_scalar = isinstance(key, str)
-        return out
+        return self._sliced(keys, isinstance(key, str))
+
+    def _sliced(self, keys, scalar: bool):
+        return GroupBy(self._frame, self._by, self._sort, self._as_index,
+                       self._dropna, slice_=keys, kind=self._kind,
+                       sets=self._sets, observed=self._observed,
+                       slice_scalar=scalar)
 
     def __getattr__(self, name: str):
         if name.startswith("_"):
@@ -178,10 +182,15 @@ class GroupBy:
             return sdf.groupingSets(self._sets, *self._by)
         return sdf.groupBy(*self._by)
 
-    def _finish(self, out, op: str):
+    def _finish(self, out, op: str, count_like=(), fill_ident=None,
+                labels=None):
+        """The grouped result over ``out``.  Empty groups fill the
+        ``count_like`` columns with 0 and the ``fill_ident`` ones with
+        their agg identity; ``labels`` maps flat result columns to
+        pandas' MultiIndex tuples (list/dict-of-list agg specs)."""
         from .._collection import DataFrame, Series
         if self._kind == "groupby" and not self._observed and self._cats:
-            out = self._complete_unobserved(out)
+            out = self._complete_unobserved(out, count_like, fill_ident)
         if self._sort:
             out = out.orderBy(*[self._key_order(b).asc() for b in self._by])
         node = Node("groupby_" + op, {"by": self._by}, self._frame._expr)
@@ -191,17 +200,11 @@ class GroupBy:
         value_cols = [c for c in out.columns if c not in self._by]
         # pandas: only a STRING slice (SeriesGroupBy) collapses to a
         # Series; gb[["v"]] stays a one-column DataFrame
-        if self._as_index and getattr(self, "_slice_scalar", False) \
-                and len(value_cols) == 1:
+        if self._as_index and self._slice_scalar and len(value_cols) == 1:
             return Series(out, F.col(value_cols[0]), value_cols[0], node,
                           idx, names, keys)
-        res = DataFrame(out, node, idx, names, keys)
-        mi = getattr(self, "_mi_tuples", None)
-        if mi:
-            # boundary metadata: compute() restores pandas' MultiIndex
-            # columns for list/dict-of-list agg specs
-            res._col_tuples = dict(mi)
-        return res
+        return DataFrame(out, node, idx, names, keys,
+                         D.axis_record(labels or ()))
 
     def _key_order(self, b: str):
         """The sort key of group key ``b``: a known categorical sorts by
@@ -212,7 +215,7 @@ class GroupBy:
         return F.array_position(F.array(*[F.lit(c) for c in cats]),
                                 F.col(b))
 
-    def _complete_unobserved(self, out):
+    def _complete_unobserved(self, out, count_like, fill_ident):
         """Left-join the aggregate onto the full category spine so
         unobserved categories appear (count-like aggs filled with 0, the
         rest NULL — pandas semantics).  The spine is driver-side category
@@ -231,11 +234,10 @@ class GroupBy:
             spine = cdf if spine is None else spine.crossJoin(cdf)
         filled = F.broadcast(spine).join(out, self._by, "left")
         zero = {c: F.coalesce(F.col(c), F.lit(0))
-                for c in getattr(self, "_count_like", set())
-                if c in filled.columns}
+                for c in count_like if c in filled.columns}
         # unobserved categories take the agg identity too (pandas:
         # sum → 0, prod → 1 for empty groups)
-        for c, ident in (getattr(self, "_fill_ident", None) or {}).items():
+        for c, ident in (fill_ident or {}).items():
             if c in filled.columns and c not in zero:
                 zero[c] = F.coalesce(F.col(c), F.lit(ident))
         return filled.withColumns(zero) if zero else filled
@@ -249,12 +251,11 @@ class GroupBy:
         aggs = [(F.coalesce(fn(F.col(c)), F.lit(ident)) if ident is not None
                  else fn(F.col(c))).alias(c) for c in cols]
         out = self._grouping(self._grouped_sdf()).agg(*aggs)
-        self._count_like = set(cols) if fn_name in _COUNT_LIKE_FNS else set()
         # empty SPINE bins (Resampler fill_empty / unobserved categories)
         # take the same identity pandas gives an empty bin: sum→0, prod→1
-        self._fill_ident = {c: ident for c in cols} if ident is not None \
-            else {}
-        return self._finish(out, fn_name)
+        return self._finish(
+            out, fn_name, cols if fn_name in _COUNT_LIKE_FNS else (),
+            {c: ident for c in cols} if ident is not None else None)
 
     def _min_count_agg(self, fn_name: str, numeric_only: bool,
                        min_count: int):
@@ -266,7 +267,6 @@ class GroupBy:
         aggs = [F.when(F.count(F.col(c)) >= min_count,
                        fn(F.col(c))).alias(c) for c in cols]
         out = self._grouping(self._grouped_sdf()).agg(*aggs)
-        self._count_like = set()
         return self._finish(out, fn_name)
 
     # -- the reference's grouped reductions (`_groupby.py:193-238`) ------
@@ -334,7 +334,6 @@ class GroupBy:
             return DataFrame(out, node, idx, names)
         aggs = [F.percentile(F.col(c), F.lit(q)).alias(c) for c in cols]
         out = self._grouping(self._grouped_sdf()).agg(*aggs)
-        self._count_like = set()
         return self._finish(out, "quantile")
 
     def _moment_agg(self, ddof: int, sqrt: bool):
@@ -352,7 +351,6 @@ class GroupBy:
                        / (n - F.lit(ddof)))
             aggs.append((F.sqrt(v) if sqrt else v).alias(c))
         out = self._grouping(self._grouped_sdf()).agg(*aggs)
-        self._count_like = set()
         return self._finish(out, "std" if sqrt else "var")
     def first(self): return self._single_agg("first")
     def last(self): return self._single_agg("last")
@@ -406,7 +404,6 @@ class GroupBy:
                 # non-numeric extremes: keep min_by/max_by (tie arbitrary)
                 aggs.append(fn(idx, v).alias(c))
         out = grouped.agg(*aggs)
-        self._count_like = set()
         return self._finish(out, op)
 
     def size(self):
@@ -496,14 +493,14 @@ class GroupBy:
         # pandas returns MultiIndex columns for frame-level list specs and
         # for dict specs containing a list.  Spark columns are flat
         # ``col_fn`` strings (SURVEY §7.4 naming); the (col, fn) tuples are
-        # carried as boundary metadata so ``compute()`` restores the
+        # the result's column-axis labels, so ``compute()`` presents the
         # pandas MultiIndex (engine-side ops keep using the flat names).
-        mi_tuples: dict[str, tuple] = {}
+        col_labels: dict[str, tuple] = {}
         if named and spec is None:
             # pandas named-agg: out_name=("col", "fn") on a frame groupby;
             # on a SeriesGroupBy slice the kwarg value is the BARE fn
             # (gb["x"].agg(mn="min")) — r5 hunt fix
-            scalar_slice = getattr(self, "_slice_scalar", False)
+            scalar_slice = self._slice_scalar
             for out_name, spec_v in named.items():
                 if scalar_slice and (isinstance(spec_v, str)
                                      or callable(spec_v)):
@@ -520,7 +517,7 @@ class GroupBy:
             # (name, fn) tuples are pandas named entries — the given name
             # IS the label (bare for a SeriesGroupBy string slice)
             numeric = set(self._value_columns(numeric_only=True))
-            scalar_slice = getattr(self, "_slice_scalar", False)
+            scalar_slice = self._slice_scalar
             # pandas numbers anonymous lambdas per list spec: <lambda_0>,
             # <lambda_1>, … (even a single one)
             lam_labels: dict[int, str] = {}
@@ -537,7 +534,7 @@ class GroupBy:
                         one(c, f_, label if scalar_slice
                             else f"{c}_{label}")
                         if not scalar_slice:
-                            mi_tuples[f"{c}_{label}"] = (c, label)
+                            col_labels[f"{c}_{label}"] = (c, label)
                         continue
                     if fn_name in self._ANY_DTYPE_AGGS or c in numeric:
                         # a string slice is a SeriesGroupBy: pandas labels
@@ -551,31 +548,31 @@ class GroupBy:
                         one(c, fn_name,
                             label if scalar_slice else f"{c}_{label}")
                         if not scalar_slice:
-                            mi_tuples[f"{c}_{label}"] = (c, label)
+                            col_labels[f"{c}_{label}"] = (c, label)
         elif isinstance(spec, Mapping):
             # pandas: if ANY column maps to a list, the output columns are
             # a MultiIndex for ALL columns ({"v": ["sum"], "w": "max"} →
             # ('v','sum'), ('w','max')); flat names stay col_fn.
             flatten_all = any(not isinstance(f, str) and not callable(f)
                               for f in spec.values())
-            scalar_slice = getattr(self, "_slice_scalar", False)
+            scalar_slice = self._slice_scalar
             for c, fns in spec.items():
                 if isinstance(fns, str):
                     one(c, fns, f"{c}_{fns}" if flatten_all else c)
                     if flatten_all and not scalar_slice:
-                        mi_tuples[f"{c}_{fns}"] = (c, fns)
+                        col_labels[f"{c}_{fns}"] = (c, fns)
                 elif callable(fns):
                     fn_label = getattr(fns, "__name__", "fn")
                     one(c, fns, f"{c}_{fn_label}" if flatten_all else c)
                     if flatten_all and not scalar_slice:
-                        mi_tuples[f"{c}_{fn_label}"] = (c, fn_label)
+                        col_labels[f"{c}_{fn_label}"] = (c, fn_label)
                 else:
                     for fn_name in fns:
                         label = fn_name if isinstance(fn_name, str) \
                             else getattr(fn_name, "__name__", "fn")
                         one(c, fn_name, f"{c}_{label}")
                         if not scalar_slice:
-                            mi_tuples[f"{c}_{label}"] = (c, label)
+                            col_labels[f"{c}_{label}"] = (c, label)
         elif callable(spec):
             # bare callable (gb["v"].agg(lambda s: ...)): one Arrow
             # GROUPED_AGG per value column, pandas' bare column labels
@@ -604,10 +601,7 @@ class GroupBy:
             out = self._grouping(sdf).agg(*udf_aggs)
         else:
             out = self._grouping(sdf).agg(*aggs)
-        self._count_like = count_like
-        self._fill_ident = fill_ident
-        self._mi_tuples = mi_tuples
-        return self._finish(out, "agg")
+        return self._finish(out, "agg", count_like, fill_ident, col_labels)
 
     aggregate = agg
 
@@ -633,7 +627,7 @@ class GroupBy:
             def _vis(pdf):
                 return inner(pdf.drop(columns=hidden, errors="ignore"))
             func = _vis
-        sl = list(getattr(self, "_slice", None) or [])
+        sl = list(self._slice or [])
         if sl:
             # pandas: gb[["x", "y"]].apply(f) hands f ONLY the sliced
             # columns (the old path leaked every column into f — r5 pin).
@@ -755,7 +749,7 @@ class GroupBy:
         if self._slice is not None:
             keep = [c for c in self._slice if c in cols]
             out = out.select(*pos_cols, *keep)
-            if getattr(self, "_slice_scalar", False) and len(keep) == 1:
+            if self._slice_scalar and len(keep) == 1:
                 # string slice → pandas returns a SERIES
                 from .._collection import Series
                 return Series(out, F.col(keep[0]), keep[0], node,
@@ -807,7 +801,7 @@ class GroupBy:
             if self._slice is not None:
                 keep = [c for c in self._slice if c in out.columns]
                 out = out.select(*idx, *keep)
-                if getattr(self, "_slice_scalar", False) and len(keep) == 1:
+                if self._slice_scalar and len(keep) == 1:
                     return Series(out, F.col(keep[0]), keep[0], node,
                                   idx, names)
                 return DataFrame(out, node, idx, names)
@@ -851,7 +845,7 @@ class GroupBy:
             idx = [drop_col] if drop_col else list(self._frame._index_cols)
             keep = [c for c in self._slice if c in out.columns]
             out = out.select(*idx, *_oc(out), *keep)
-            if getattr(self, "_slice_scalar", False) and len(keep) == 1:
+            if self._slice_scalar and len(keep) == 1:
                 # string slice → pandas returns a SERIES
                 idx_t = ((drop_col,) if drop_col
                          else tuple(self._frame._index_cols))
@@ -1030,13 +1024,11 @@ class GroupBy:
             on = self._frame._index_cols[0]
         base = self._frame.resample(freq, on,
                                     fill_empty=False)  # bucketize only
-        r = Resampler(base._frame, on, base._step_sql,
-                      fill_empty=fill_empty,
-                      sort=self._sort, extra_by=self._by,
-                      label_shift=base._label_shift)
-        r._slice = self._slice
-        r._slice_scalar = getattr(self, "_slice_scalar", False)
-        return r
+        return Resampler(base._frame, on, base._step_sql,
+                         fill_empty=fill_empty,
+                         sort=self._sort, extra_by=self._by,
+                         label_shift=base._label_shift, slice_=self._slice,
+                         slice_scalar=self._slice_scalar)
 
     def ewm(self, com: float | None = None, span: float | None = None,
             halflife: float | None = None, alpha: float | None = None,
@@ -1277,31 +1269,29 @@ class GroupBy:
         first/last, so the whole thing is ONE agg shuffle (columns named
         ``col_open`` … ``col_close``, pandas' MultiIndex flattened)."""
         sdf, order_cols, tmp = self._positional()
-        pos = F.struct(*[F.col(c) for c in order_cols])
-        aggs = []
-        vcols = self._value_columns(numeric_only=True)
-        # a scalar slice (s.resample(...).ohlc()) gets pandas' BARE
-        # open/high/low/close column names
-        bare = getattr(self, "_slice_scalar", False) and len(vcols) == 1
-        for c in vcols:
-            col = F.col(c)
-            pre = "" if bare else f"{c}_"
-            aggs += [F.min_by(col, pos).alias(f"{pre}open"),
-                     F.max(col).alias(f"{pre}high"),
-                     F.min(col).alias(f"{pre}low"),
-                     F.max_by(col, pos).alias(f"{pre}close")]
-        grouped = sdf
         if self._dropna:
             for b in self._by:
-                grouped = grouped.filter(F.col(b).isNotNull())
-        out = grouped.groupBy(*self._by).agg(*aggs)
-        self._count_like = set()
-        if not bare:
-            # pandas frame ohlc returns MultiIndex (col, open..close)
-            # columns — boundary metadata, same contract as agg specs
-            self._mi_tuples = {f"{c}_{st}": (c, st) for c in vcols
-                               for st in ("open", "high", "low", "close")}
-        return self._finish(out, "ohlc")
+                sdf = sdf.filter(F.col(b).isNotNull())
+        return self._ohlc(sdf.groupBy(*self._by),
+                          self._value_columns(numeric_only=True),
+                          F.struct(*[F.col(c) for c in order_cols]))
+
+    def _ohlc(self, grouped, vcols, pos):
+        """open/high/low/close of ``vcols`` per group, first and last by
+        ``pos``.  A scalar slice (``s.resample(...).ohlc()``) gets pandas'
+        BARE column names; a frame, pandas' (col, open..close) labels."""
+        bare = self._slice_scalar and len(vcols) == 1
+        aggs, labels = [], {}
+        for c in vcols:
+            col = F.col(c)
+            for st, agg in (("open", F.min_by(col, pos)),
+                            ("high", F.max(col)), ("low", F.min(col)),
+                            ("close", F.max_by(col, pos))):
+                name = st if bare else f"{c}_{st}"
+                aggs.append(agg.alias(name))
+                labels[name] = (c, st)
+        return self._finish(grouped.agg(*aggs), "ohlc",
+                            labels=None if bare else labels)
 
     def describe(self, percentiles: Sequence[float] = (0.25, 0.5, 0.75)):
         """pandas ``groupby.describe`` (count/mean/std/min/percentiles/max
@@ -1312,7 +1302,7 @@ class GroupBy:
         cols = self._value_columns(numeric_only=True)
         # bare stat names ONLY for the string slice (SeriesGroupBy);
         # a 1-list slice keeps the col prefix like DataFrameGroupBy
-        single = getattr(self, "_slice_scalar", False) and len(cols) == 1
+        single = self._slice_scalar and len(cols) == 1
         name = (lambda c, stat: stat) if single else \
             (lambda c, stat: f"{c}_{stat}")
         aggs = []
@@ -1327,14 +1317,11 @@ class GroupBy:
                             .alias(name(c, f"{int(p * 100)}%")))
             aggs.append(F.max(col).cast("double").alias(name(c, "max")))
         out = self._grouping(self._grouped_sdf()).agg(*aggs)
-        self._count_like = set()
-        if not single:
-            # pandas frame describe returns MultiIndex (col, stat) columns
-            stats = (["count", "mean", "std", "min"]
-                     + [f"{int(p * 100)}%" for p in percentiles] + ["max"])
-            self._mi_tuples = {f"{c}_{st}": (c, st)
-                               for c in cols for st in stats}
-        return self._finish(out, "describe")
+        # pandas frame describe returns MultiIndex (col, stat) columns
+        stats = (["count", "mean", "std", "min"]
+                 + [f"{int(p * 100)}%" for p in percentiles] + ["max"])
+        return self._finish(out, "describe", labels=None if single else {
+            f"{c}_{st}": (c, st) for c in cols for st in stats})
 
     def sample(self, n: int | None = None, frac: float | None = None,
                replace: bool = False, seed: int | None = None,
@@ -1405,7 +1392,6 @@ class GroupBy:
         both = a0.isNotNull() & b0.isNotNull()
         a, b = F.when(both, a0), F.when(both, b0)
         out = self._grouping(self._grouped_sdf()).agg(fn(a, b).alias(op))
-        self._count_like = set()
         res = self._finish(out, op)
         from .._collection import DataFrame
         if isinstance(res, DataFrame):
@@ -1562,13 +1548,16 @@ class Resampler(GroupBy):
     def __init__(self, frame, on: str, step_sql: str,
                  fill_empty: bool = False, sort: bool = True,
                  extra_by: list[str] | None = None,
-                 label_shift: str | None = None):
+                 label_shift: str | None = None,
+                 slice_: list[str] | None = None, slice_scalar: bool = False,
+                 orig_sdf=None, bucket_expr=None):
         # grouped resample (pandas ``groupby(k).resample(freq)``): the
         # group keys precede the time bucket; fill_empty generates one
         # calendar spine PER GROUP (each group's own min..max, pandas
         # semantics) — see _finish
         self._extra_by = list(extra_by or [])
-        super().__init__(frame, self._extra_by + [on], sort=sort)
+        super().__init__(frame, self._extra_by + [on], sort=sort,
+                         slice_=slice_, slice_scalar=slice_scalar)
         self._on = on
         self._step_sql = step_sql
         self._fill_empty = fill_empty
@@ -1576,24 +1565,24 @@ class Resampler(GroupBy):
         # to the bucket AFTER aggregation + spine fill (month ends are
         # not a fixed-step sequence, so the spine must run on starts)
         self._label_shift = label_shift
+        # the pre-bucket frame and the bucket expression, for ohlc and
+        # asfreq (values AT bin edges); None on a grouped resample
+        self._orig_sdf = orig_sdf
+        self._bucket_expr = bucket_expr
 
-    def __getitem__(self, key):
-        keys = [key] if isinstance(key, str) else list(key)
-        missing = [k for k in keys if k not in self._frame.columns]
-        if missing:
-            raise KeyError(missing)
-        r = Resampler(self._frame, self._on, self._step_sql,
-                      self._fill_empty, self._sort,
-                      extra_by=self._extra_by,
-                      label_shift=self._label_shift)
-        r._slice = keys
-        r._slice_scalar = isinstance(key, str)
-        r._orig_sdf = getattr(self, "_orig_sdf", None)
-        r._bucket_expr = getattr(self, "_bucket_expr", None)
-        return r
+    def _sliced(self, keys, scalar: bool):
+        return Resampler(self._frame, self._on, self._step_sql,
+                         self._fill_empty, self._sort,
+                         extra_by=self._extra_by,
+                         label_shift=self._label_shift, slice_=keys,
+                         slice_scalar=scalar, orig_sdf=self._orig_sdf,
+                         bucket_expr=self._bucket_expr)
 
-    def _finish(self, out, op: str):
-        if self._fill_empty:
+    def _finish(self, out, op: str, count_like=(), fill_ident=None,
+                labels=None, fill_empty: bool = False):
+        """``GroupBy._finish`` after the calendar-spine fill, which runs
+        when the resampler or the call (``fill_empty``) asks for it."""
+        if self._fill_empty or fill_empty:
             on = self._on
             out = out.persist()
             if self._extra_by:
@@ -1614,11 +1603,10 @@ class Resampler(GroupBy):
                     F.expr(self._step_sql))).alias(on))
                 filled = spine.join(out, on, "left")
             zero = {c: F.coalesce(F.col(c), F.lit(0))
-                    for c in getattr(self, "_count_like", set())
-                    if c in filled.columns}
+                    for c in count_like if c in filled.columns}
             # empty bins take the agg's pandas identity (sum→0, prod→1);
             # everything else stays null (pandas NaN)
-            for c, ident in (getattr(self, "_fill_ident", None) or {}).items():
+            for c, ident in (fill_ident or {}).items():
                 if c in filled.columns and c not in zero:
                     zero[c] = F.coalesce(F.col(c), F.lit(ident))
             if zero:
@@ -1632,7 +1620,7 @@ class Resampler(GroupBy):
             sql = f"`{self._on}` - INTERVAL 1 DAY" if shift.startswith("-") \
                 else f"`{self._on}` + {shift}"
             out = out.withColumn(self._on, F.expr(sql))
-        return super()._finish(out, op)
+        return super()._finish(out, op, count_like, fill_ident, labels)
 
     def ohlc(self):
         """Resampled OHLC must order rows INSIDE each bin by their
@@ -1641,36 +1629,19 @@ class Resampler(GroupBy):
         index value.  One agg over the pre-bucket frame with min_by/
         max_by keyed on the raw timestamp."""
         from pyspark.sql import types as T
-        orig = getattr(self, "_orig_sdf", None)
-        bucket = getattr(self, "_bucket_expr", None)
+        orig, bucket = self._orig_sdf, self._bucket_expr
         if orig is None or bucket is None:
             return super().ohlc()
         on = self._on
-        if getattr(self, "_slice", None):
+        if self._slice:
             vcols = list(self._slice)
         else:
             vcols = [c for c in self._frame.columns
                      if c != on and c not in self._extra_by
                      and isinstance(orig.schema[c].dataType,
                                     T.NumericType)]
-        bare = getattr(self, "_slice_scalar", False) and len(vcols) == 1
-        pos = F.col(on)
-        aggs = []
-        for c in vcols:
-            col = F.col(c)
-            pre = "" if bare else f"{c}_"
-            aggs += [F.min_by(col, pos).alias(f"{pre}open"),
-                     F.max(col).alias(f"{pre}high"),
-                     F.min(col).alias(f"{pre}low"),
-                     F.max_by(col, pos).alias(f"{pre}close")]
-        out = orig.groupBy(*self._extra_by, bucket.alias(on)).agg(*aggs)
-        self._count_like = set()
-        self._fill_ident = {}
-        if not bare:
-            # pandas MultiIndex (col, open..close) at the boundary
-            self._mi_tuples = {f"{c}_{st}": (c, st) for c in vcols
-                               for st in ("open", "high", "low", "close")}
-        return self._finish(out, "ohlc")
+        return self._ohlc(orig.groupBy(*self._extra_by, bucket.alias(on)),
+                          vcols, F.col(on))
 
     def asfreq(self, method=None):
         """pandas ``resample(freq).asfreq()``: the value exactly AT each
@@ -1682,25 +1653,18 @@ class Resampler(GroupBy):
         standard calendar-spine fill."""
         if method is not None:
             raise NotImplementedError("resample().asfreq(method=)")
-        orig = getattr(self, "_orig_sdf", None)
-        bucket = getattr(self, "_bucket_expr", None)
+        orig, bucket = self._orig_sdf, self._bucket_expr
         if orig is None or bucket is None or self._extra_by:
             raise NotImplementedError(
                 "asfreq needs the pre-bucket frame (grouped resample "
                 "asfreq unsupported)")
         on = self._on
-        vcols = (list(self._slice) if getattr(self, "_slice", None)
+        vcols = (list(self._slice) if self._slice
                  else [c for c in orig.columns if c != on])
         # group ALL rows by bucket (so the spine spans the full data
         # range), but only edge-matching rows contribute a value
         out = (orig.groupBy(bucket.alias(on))
                .agg(*[F.max(F.when(F.col(on) == bucket, F.col(c)))
                       .alias(c) for c in vcols]))
-        self._count_like = set()
-        self._fill_ident = {}
-        was = self._fill_empty
-        self._fill_empty = True   # asfreq ALWAYS materializes the grid
-        try:
-            return self._finish(out, "asfreq")
-        finally:
-            self._fill_empty = was
+        # asfreq ALWAYS materializes the grid
+        return self._finish(out, "asfreq", fill_empty=True)

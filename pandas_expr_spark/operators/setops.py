@@ -12,6 +12,7 @@ from __future__ import annotations
 from functools import reduce as _reduce
 from typing import Sequence
 
+from .. import _dtypes as D
 from .._expr import Node
 
 
@@ -66,34 +67,40 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
         if keys is not None:
             # pandas keys= on axis=1 → MultiIndex columns (key, col).
             # Engine-side the columns stay flat "key__col" Spark names
-            # (which also disambiguates duplicate input names); compute()
-            # restores the pandas MultiIndex from _col_tuples — the same
-            # boundary-metadata contract as agg-list columns.
+            # (which also disambiguates duplicate input names); the
+            # column-axis record holds the (key, col) labels.
             from pyspark.sql import functions as F
             if len(keys) != len(frames):
                 raise ValueError("keys must match the number of frames")
             frames = [f.to_frame() if isinstance(f, Series) else f
                       for f in frames]
-            renamed, tuples = [], {}
+            renamed = []
             for key, f in zip(keys, frames):
                 m = {c: f"{key}__{c}" for c in f.columns}
                 sdf = f._sdf.select(
                     *[F.col(ic) for ic in f._index_cols],
                     *[F.col(c).alias(m[c]) for c in f.columns])
+                labels = {}
+                for c in f.columns:
+                    lab = f._axis.labels.get(c, c)
+                    labels[m[c]] = (key,) + (lab if isinstance(lab, tuple)
+                                             else (lab,))
                 renamed.append(DataFrame(sdf, f._expr, f._index_cols,
-                                         f._index_names))
-                tuples.update({m[c]: (key, c) for c in f.columns})
-            out = _concat_axis1(renamed, join)
-            out._col_tuples = tuples
-            return out
+                                         f._index_names, None,
+                                         D.axis_record(labels)))
+            return _concat_axis1(renamed, join)
         return _concat_axis1(frames, join)
     if axis not in (0, "index"):
         raise ValueError(f"axis must be 0 or 1, got {axis!r}")
     all_series = all(isinstance(f, Series) for f in frames)
     frames = [f.to_frame() if isinstance(f, Series) else f for f in frames]
-    # pandas keeps a dtype record entry only where every input agrees
+    # pandas keeps a dtype record entry or a column label only where
+    # every input agrees
     dtypes = {c: e for c, e in frames[0]._dtypes.items()
               if all(f._dtypes.get(c) == e for f in frames[1:])}
+    axis = D.axis_record({c: lab for c, lab in frames[0]._axis.labels.items()
+                          if all(f._axis.labels.get(c) == lab
+                                 for f in frames[1:])})
     # each input's presentation-order stamp/anchor is only meaningful
     # WITHIN that input — union'd stamps collide.  Re-anchor every
     # default/rowid-index input to a DENSE within-input position
@@ -177,7 +184,7 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
         data_cols = sorted(c for c in out.columns
                            if c not in idx and c != _ORD)
         out = out.select(*list(idx), *data_cols, *stamp_col)
-    res = DataFrame(out, node, idx, names, dtypes)
+    res = DataFrame(out, node, idx, names, dtypes, axis)
     if all_series and len(res.columns) == 1:
         # pandas: concat of Series along axis=0 stays a Series
         return res[res.columns[0]]
@@ -186,11 +193,12 @@ def concat(frames: Sequence, join: str = "outer", axis: int = 0,
 
 def _concat_axis1(frames: Sequence, join: str):
     """pandas ``concat(axis=1)``: align frames on their index and lay the
-    columns side by side.  Each frame contributes its engine index (or an
-    attached positional rowid); the alignment is ONE n-way equi-join on the
-    index — Catalyst plans/reorders it like any join (broadcasts small
-    frames, sort-merges large ones).  Duplicate output column names raise
-    (Spark columns must be unique; pandas would keep both)."""
+    columns side by side, under their labels.  Each frame contributes its
+    engine index (or an attached positional rowid); the alignment is ONE
+    n-way equi-join on the index — Catalyst plans/reorders it like any
+    join (broadcasts small frames, sort-merges large ones).  Duplicate
+    output column names raise (Spark columns must be unique; pandas would
+    keep both)."""
     from functools import reduce as _reduce
     from pyspark.sql import functions as F
     from .._collection import DataFrame, Series, _ROWID, positions
@@ -204,9 +212,10 @@ def _concat_axis1(frames: Sequence, join: str):
                          "supported (rename first)")
 
     IDX = "__cidx__"
-    sides, dtypes = [], {}
+    sides, dtypes, labels = [], {}, {}
     for f in frames:
         dtypes.update(f._entries(f.columns))
+        labels.update(f._axis.labels)
         if f._index_cols:
             sdf = f._sdf.select(F.col(f._index_cols[0]).alias(IDX), *f.columns)
         else:
@@ -216,13 +225,14 @@ def _concat_axis1(frames: Sequence, join: str):
                                       else "inner"), sides)
     node = Node("concat_axis1", {"join": join, "n": len(frames)},
                 *[f._expr for f in frames])
+    axis = D.axis_record(labels)
     first = frames[0]
     idx_name = (first._index_names[0] if first._index_names else None) \
         if first._index_cols else None
     if idx_name:
         out = out.withColumnRenamed(IDX, idx_name)
-        return DataFrame(out, node, (idx_name,), (idx_name,), dtypes)
-    return DataFrame(out, node, (IDX,), (None,), dtypes)
+        return DataFrame(out, node, (idx_name,), (idx_name,), dtypes, axis)
+    return DataFrame(out, node, (IDX,), (None,), dtypes, axis)
 
 
 def union(left, right, distinct: bool = False):

@@ -175,6 +175,34 @@ def test_from_pandas_keeps_ordered_flag(frames):
     assert efs["ordc"].c.cat.categories == CATS
 
 
+# -- the index and value_counts carry the record ------------------------
+INDEXES = [
+    ("period_index", lambda f: _period_frame(f).set_index("p").index),
+    ("categorical_index",
+     lambda f: _frame_cat_assign(f).set_index("c").index),
+    ("series_categorical_index",
+     lambda f: _frame_cat_assign(f).set_index("c").x.index),
+]
+
+
+@pytest.mark.parametrize("op", [c[1] for c in INDEXES],
+                         ids=[c[0] for c in INDEXES])
+def test_index_keeps_dtype(frames, op):
+    pdfs, efs = frames
+    got, want = op(efs["plain"]).compute(), op(pdfs["plain"])
+    assert got.dtype == want.dtype
+    assert list(got) == list(want)
+
+
+def test_categorical_value_counts_index(frames):
+    pdfs, efs = frames
+    got = _cat_series(efs["plain"]).value_counts().compute()
+    want = _cat_series(pdfs["plain"]).value_counts()
+    assert isinstance(got.index, pd.CategoricalIndex)
+    assert list(got.index.categories) == list(want.index.categories)
+    _same(got, want)
+
+
 # -- rename, assign and categorical reductions --------------------------
 @pytest.mark.parametrize("mapping", [{"x": "c", "c": "x"},
                                      {"x": "c", "c": "d"}],

@@ -32,7 +32,6 @@ def test_pivot_table_sum(shop, shop_pdf):
     exp = (shop_pdf.pivot_table(values="sales", index="store", columns="item",
                                 aggfunc="sum").reset_index()
            [["store", "pen", "ink", "cap"]])
-    exp.columns.name = None
     assert_frame_eq(got[["store", "pen", "ink", "cap"]], exp, sort_by=["store"])
 
 
