@@ -854,6 +854,54 @@ class FrameBase:
         return {ren.get(c, c): self._dtypes[c] for c in cols
                 if c in self._dtypes}
 
+    def _hint(self, *ops: str):
+        """The objects this collection's plan node recorded for a later
+        peephole (``_expr`` module docstring): only while the node's op
+        is one of ``ops`` and this collection reads the plan the node
+        produced, else None."""
+        node = self._expr
+        if (node.op in ops and node.hint is not None
+                and node.hint[0] is self._sdf):
+            return node.hint[1]
+        return None
+
+    def _sorted_limit(self, n: int, tail: bool = False) -> SparkDF | None:
+        """``head``/``tail`` directly after ``sort_values``/``sort_index``
+        (the sort node's hint): a distributed TopK over the SORT KEYS on
+        the pre-sort plan — ``TakeOrderedAndProject(n, keys)``, map-side
+        partial top-k, no global Exchange+Sort — with the order stamp
+        re-minted over the n output rows.  The tail is the reverse TopK
+        (every direction and NULL placement flipped) re-sorted forward;
+        no count action, no global sort.  None for any other plan."""
+        hint = self._hint("sort", "sort_index")
+        if hint is None or n < 0:
+            return None
+        pre, raw, na_position, tie = hint
+        fwd = [_sort_dir(c, a, na_position) for c, a in raw]
+        fwd += [F.col(tie).asc()] if tie is not None else []
+        if not tail:
+            return (pre.orderBy(*fwd).limit(n)
+                    .withColumn(_ORDER, F.monotonically_increasing_id()))
+        flip = "first" if na_position == "last" else "last"
+        rev = [_sort_dir(c, not a, flip) for c, a in raw]
+        rev += [F.col(tie).desc()] if tie is not None else []
+        sdf = (pre.orderBy(*rev).limit(n).orderBy(*fwd)
+               .withColumn(_ORDER, F.monotonically_increasing_id()))
+        if self._index_cols:
+            return sdf
+        # ignore_index-sorted parent: pandas labels are the dense
+        # positions in the FULL sorted order — for the tail's k rows that
+        # is N - rank_from_the_end, with N a LAZY 1-row count branch (no
+        # driver action; the reverse-TopK plan shape survives).  (head
+        # needs nothing: its labels 0..k-1 equal the renumber the default
+        # index already presents.)  r7 hunt seed 40142.
+        cnt = pre.agg(F.count(F.lit(1)).alias("__n__"))
+        w = Window.orderBy(F.col(_ORDER).desc())
+        return (sdf.crossJoin(F.broadcast(cnt))
+                .withColumn(_ROWID, (F.col("__n__") - F.row_number().over(w))
+                            .cast("long"))
+                .drop("__n__"))
+
     def pipe(self, func, *args, **kwargs):
         """pandas ``pipe``: ``df.pipe(f, *a)`` == ``f(df, *a)`` — method
         chaining for user functions; ``(f, 'name')`` form supported."""
@@ -983,7 +1031,15 @@ class FrameBase:
 # --------------------------------------------------------------------------
 class Scalar(FrameBase):
     """A lazy 0-dimensional result (reference ``_collection.py:582-586``):
-    a 1×1 Spark DataFrame collected on ``.compute()``."""
+    a 1×1 Spark DataFrame collected on ``.compute()``.  As an operand it
+    is one more expression in the consumer's plan, ``_scol``: Spark's
+    uncorrelated scalar subquery over that frame (``_lit`` is the one
+    conversion every operand goes through) — no join, the consumer keeps
+    its own plan, and the aggregate still runs distributed."""
+
+    @property
+    def _scol(self) -> Column:
+        return self._sdf.select(self._sdf.columns[0]).scalar()
 
     def compute(self):
         rows = self._sdf.collect()
@@ -1021,28 +1077,19 @@ class Scalar(FrameBase):
         return str(self.compute())
 
     # -- lazy scalar algebra (reference scalars stay expressions) --------
-    # scalar∘scalar cross-joins two 1×1 frames (Catalyst folds it into a
-    # single plan; both aggregates still run distributed), scalar∘literal
-    # is a projection — no eager collect anywhere.
+    # a projection of this 1×1 frame; a Scalar operand is its scalar
+    # subquery — no eager collect anywhere.
     def _binop(self, other, fn, op: str, reverse: bool = False):
         if isinstance(other, (Series, DataFrame)):
             # let Series/DataFrame reflected dunders handle scalar∘frame
             return NotImplemented
-        a = F.col("__a__")
         if isinstance(other, Scalar):
-            lhs = self._sdf.select(F.col(self._sdf.columns[0]).alias("__a__"))
-            rhs = other._sdf.select(
-                F.col(other._sdf.columns[0]).alias("__b__"))
-            pair = lhs.crossJoin(rhs)
-            b = F.col("__b__")
             node = Node("scalar_" + op, {}, self._expr, other._expr)
         else:
-            pair = self._sdf.select(
-                F.col(self._sdf.columns[0]).alias("__a__"))
-            b = F.lit(other)
             node = Node("scalar_" + op, {"other": other}, self._expr)
+        a, b = F.col(self._sdf.columns[0]), _lit(other)
         expr = fn(b, a) if reverse else fn(a, b)
-        return Scalar(pair.select(expr.alias("__r__")), node)
+        return Scalar(self._sdf.select(expr.alias("__r__")), node)
 
     def __add__(self, o): return self._binop(o, lambda a, b: a + b, "add")
     def __radd__(self, o): return self._binop(o, lambda a, b: a + b, "add", True)
@@ -1070,6 +1117,32 @@ class Scalar(FrameBase):
     # identity hash: a lazy Scalar stays usable as a dict key/cache token
     # (pandas scalars are plain hashable numbers; Node-keyed caches here)
     __hash__ = object.__hash__  # type: ignore[assignment]
+
+
+def _lit(v) -> Column:
+    """An operand as a Spark Column: a lazy Scalar's scalar subquery,
+    anything else but a collection a literal."""
+    if isinstance(v, Scalar):
+        return v._scol
+    if isinstance(v, FrameBase):
+        raise TypeError(f"expected a scalar value here, got a "
+                        f"{type(v).__name__}")
+    return F.lit(v)
+
+
+def _node(op: str, params: dict, *children: Node,
+          hint: tuple | None = None) -> Node:
+    """``Node(op, params, *children)`` with every collection among the
+    param values (a lazy Scalar operand, a Series bound, a frame
+    ``other``) moved into the children and named by its kind in the
+    params: an operand is one more expression in the tree, so walk,
+    pprint and the token reach its whole subtree."""
+    kids = [v._expr for v in params.values() if isinstance(v, FrameBase)]
+    params = {k: ("<scalar>" if isinstance(v, Scalar) else
+                  "<series>" if isinstance(v, Series) else "<frame>")
+              if isinstance(v, FrameBase) else v
+              for k, v in params.items()}
+    return Node(op, params, *children, *kids, hint=hint)
 
 
 # --------------------------------------------------------------------------
@@ -1102,13 +1175,11 @@ class Series(FrameBase):
         new value's dtype record entry (none: its stored type)."""
         if name is _SAME_NAME:
             name = self._col_name
-        node = Node(op, {"name": name, **params}, self._expr)
-        out = Series(self._sdf, scol, name, node, self._index_cols,
-                     self._index_names,
-                     {**self._entries(self._index_cols),
-                      _value_key(name): entry})
-        out._mask_anchor = getattr(self, "_mask_anchor", None)
-        return out
+        node = _node(op, {"name": name, **params}, self._expr)
+        return Series(self._sdf, scol, name, node, self._index_cols,
+                      self._index_names,
+                      {**self._entries(self._index_cols),
+                       _value_key(name): entry})
 
     @property
     def _vkey(self) -> str:
@@ -1270,23 +1341,11 @@ class Series(FrameBase):
                     fn(l, r), op, self._col_name
                     if self._col_name == other._col_name else None)
             return self._aligned_binop(other, fn, op, reflexive)
-        if isinstance(other, Scalar):
-            # `s > s.mean()` — the 1×1 scalar frame broadcast-cross-joins
-            # in (Catalyst: BroadcastNestedLoopJoin over ONE row); both
-            # sides stay lazy, the aggregate still runs distributed
-            rhs = F.broadcast(other._sdf.select(
-                F.col(other._sdf.columns[0]).alias("__scalar__")))
-            joined = self._sdf.crossJoin(rhs)
-            lit = F.col("__scalar__")
-            l, r = (lit, self._scol) if reflexive else (self._scol, lit)
-            node = Node(op, {"scalar": True}, self._expr, other._expr)
-            out = Series(joined, fn(l, r), self._col_name, node,
-                         self._index_cols, self._index_names)
-            out._mask_anchor = getattr(self, "_mask_anchor", None)
-            return out
-        lit = F.lit(other)
+        # `s > s.mean()`: a lazy Scalar is a scalar subquery over its
+        # 1×1 frame, so the result stays on this frame's plan
+        lit = _lit(other)
         l, r = (lit, self._scol) if reflexive else (self._scol, lit)
-        return self._with_scol(fn(l, r), op, params_other=repr(other))
+        return self._with_scol(fn(l, r), op, params_other=other)
 
     def _aligned_binop(self, other: "Series", fn, op: str,
                        reflexive: bool) -> "Series":
@@ -1571,26 +1630,8 @@ class Series(FrameBase):
         double, which would turn missing values into the clip bounds —
         pandas keeps them missing.  A foreign-frame Series bound is
         index-aligned with one equi-join per bound (like where/mask).
-        A lazy Scalar bound (``s.clip(lower=s.quantile(.2))``) broadcasts
-        its 1×1 frame in, like Series._binop's Scalar branch — both sides
-        stay lazy."""
-        if isinstance(lower, Scalar) or isinstance(upper, Scalar):
-            sdf = self._sdf
-
-            def _attach(b, alias):
-                nonlocal sdf
-                sdf = sdf.crossJoin(F.broadcast(
-                    b._sdf.select(F.col(b._sdf.columns[0]).alias(alias))))
-                return F.col(alias)
-
-            lo = _attach(lower, "__clip_lo__") \
-                if isinstance(lower, Scalar) else lower
-            hi = _attach(upper, "__clip_hi__") \
-                if isinstance(upper, Scalar) else upper
-            base = Series(sdf, self._scol, self._col_name,
-                          Node("clip_scalar_bound", {}, self._expr),
-                          self._index_cols, self._index_names)
-            return base.clip(lo, hi)
+        A lazy Scalar bound (``s.clip(lower=s.quantile(.2))``) is its
+        scalar subquery (``_lit``), like any other literal bound."""
         ser_bounds = [b for b in (lower, upper) if isinstance(b, Series)]
         if any(b._sdf is not self._sdf for b in ser_bounds):
             cur = self.to_frame("__self__")
@@ -1603,27 +1644,24 @@ class Series(FrameBase):
             if lower is not None:
                 clipped = F.greatest(clipped, F.col("__lo__") if
                                      isinstance(lower, Series)
-                                     else F.lit(lower))
+                                     else _lit(lower))
             if upper is not None:
                 clipped = F.least(clipped, F.col("__hi__") if
                                    isinstance(upper, Series)
-                                   else F.lit(upper))
+                                   else _lit(upper))
             guard = c.isNull()
             if isinstance(self.spark_type, (T.DoubleType, T.FloatType)):
                 guard = guard | F.isnan(c)
-            node = Node("clip", {"aligned": True}, self._expr)
+            node = _node("clip", {"aligned": True, "lower": lower,
+                                  "upper": upper}, self._expr)
             return Series(cur._sdf, F.when(guard, c).otherwise(clipped),
                           self._col_name, node, cur._index_cols,
                           cur._index_names)
 
         def _bound(b):
             # Series bound: same-anchor column composes directly (pandas
-            # elementwise clip); Column = an already-attached Scalar bound
-            if isinstance(b, Series):
-                return b._scol
-            if isinstance(b, Column):
-                return b
-            return F.lit(b)
+            # elementwise clip)
+            return b._scol if isinstance(b, Series) else _lit(b)
 
         c = self._scol
         clipped = c
@@ -1634,10 +1672,8 @@ class Series(FrameBase):
         guard = c.isNull()
         if isinstance(self.spark_type, (T.DoubleType, T.FloatType)):
             guard = guard | F.isnan(c)
-        def _p(b):
-            return "<series>" if isinstance(b, (Series, Column)) else b
         return self._with_scol(F.when(guard, c).otherwise(clipped),
-                               "clip", lower=_p(lower), upper=_p(upper))
+                               "clip", lower=lower, upper=upper)
 
     def isna(self):
         """Reference IsNa ``_expr.py:1209-1212``; NaN counts as missing for
@@ -1692,13 +1728,18 @@ class Series(FrameBase):
         row-set is identical either way, and dunder predicates stay raw
         for parquet pushdown (see the pushdown lesson in NOTES_r3)."""
         c = self._scol
-        lo = (c >= F.lit(left)) if inclusive in ("both", "left") else (c > F.lit(left))
-        hi = (c <= F.lit(right)) if inclusive in ("both", "right") else (c < F.lit(right))
+        lo, hi = _lit(left), _lit(right)
+        lo = (c >= lo) if inclusive in ("both", "left") else (c > lo)
+        hi = (c <= hi) if inclusive in ("both", "right") else (c < hi)
         return self._with_scol(F.coalesce(lo & hi, F.lit(False)),
                                "between", left=left, right=right,
                                inclusive=inclusive)
 
     def fillna(self, value, limit: int | None = None):
+        """pandas ``Series.fillna``: a Series value fills from the aligned
+        other Series; any other value — a lazy Scalar too, as its scalar
+        subquery (``_lit``) — is one coalesce on this plan.  ``limit=n``
+        fills only the first n missing values."""
         if limit is None:
             if isinstance(value, Series):
                 # pandas: fill from the aligned other series — same-anchor
@@ -1716,27 +1757,14 @@ class Series(FrameBase):
                               F.coalesce(F.col("__l__"), F.col("__r__")),
                               self._col_name, node, joined._index_cols,
                               joined._index_names)
-            if isinstance(value, Scalar):
-                # s.fillna(s.mean()) — the lazy 1×1 scalar frame broadcast
-                # cross-joins (same pattern as Series._binop); both sides
-                # stay lazy, the aggregate runs distributed (r5 hunt fix:
-                # F.lit(Scalar) crashed)
-                rhs = F.broadcast(value._sdf.select(
-                    F.col(value._sdf.columns[0]).alias("__fill__")))
-                joined = self._sdf.crossJoin(rhs)
-                node = Node("fillna", {"scalar": True}, self._expr,
-                            value._expr)
-                return Series(joined,
-                              F.coalesce(self._scol, F.col("__fill__")),
-                              self._col_name, node, self._index_cols,
-                              self._index_names)
             e = self._value_dtype
             if (e is not None and e.categories is not None
+                    and not isinstance(value, Scalar)
                     and value not in e.categories):
                 raise TypeError(
                     f"Cannot setitem on a Categorical with a new category "
                     f"({value}), set the categories first")
-            return self._with_scol(F.coalesce(self._scol, F.lit(value)),
+            return self._with_scol(F.coalesce(self._scol, _lit(value)),
                                    "fillna", entry=e, value=value)
         # pandas limit=n: fill only the first n nulls along the WHOLE axis
         # (not per-run) — null-rank via one distributed prefix-sum scan
@@ -1747,9 +1775,9 @@ class Series(FrameBase):
             flag, F.when(F.col(name).isNull(), F.lit(1)).otherwise(F.lit(0)))
         out = scan.prefix_scan(base, [(flag, "sum", flag)], order)
         filled = F.when(F.col(name).isNull() & (F.col(flag) <= F.lit(limit)),
-                        F.lit(value)).otherwise(F.col(name))
+                        _lit(value)).otherwise(F.col(name))
         out = out.withColumn(name, filled).drop(flag)
-        node = Node("fillna", {"value": value, "limit": limit}, self._expr)
+        node = _node("fillna", {"value": value, "limit": limit}, self._expr)
         return Series(out, F.col(name), self._col_name, node, idx,
                       self._index_names if self._index_cols else (None,))
 
@@ -1896,13 +1924,14 @@ class Series(FrameBase):
 
     def _other_expr(self, other):
         """Replacement value for where/mask: a same-anchor Series lowers
-        to its column expression; scalars to a literal."""
+        to its column expression; scalars, lazy or not, through
+        ``_lit``."""
         if isinstance(other, Series):
             if other._sdf is not self._sdf:
                 raise ValueError("where/mask with a foreign-frame 'other' "
                                  "is not supported; align first")
             return other._scol
-        return F.lit(other)
+        return _lit(other)
 
     def mask(self, cond: "Series", other=None):
         if callable(cond) and not isinstance(cond, FrameBase):
@@ -1913,7 +1942,7 @@ class Series(FrameBase):
             return self._where_aligned(cond, other, keep_on_true=False)
         return self._with_scol(
             F.when(cond._scol, self._other_expr(other))
-            .otherwise(self._scol), "mask",
+            .otherwise(self._scol), "mask", other=other,
             entry=self._value_dtype if other is None else None)
 
     def where(self, cond: "Series", other=None):
@@ -1925,7 +1954,7 @@ class Series(FrameBase):
             return self._where_aligned(cond, other, keep_on_true=True)
         return self._with_scol(
             F.when(cond._scol, self._scol)
-            .otherwise(self._other_expr(other)), "where",
+            .otherwise(self._other_expr(other)), "where", other=other,
             entry=self._value_dtype if other is None else None)
 
     def _where_aligned(self, cond: "Series", other: "Series",
@@ -2243,10 +2272,12 @@ class Series(FrameBase):
             if dup:
                 raise ValueError(
                     "Index contains duplicate entries, cannot reshape")
+        # pandas presents the rows sorted by the kept levels
         out = (sdf.groupBy(*keep)
                .pivot(piv, list(pivot_values) if pivot_values is not None
                       else None)
-               .agg(F.first(name)))
+               .agg(F.first(name))
+               .orderBy(*keep))
         if fill_value is not None:
             out = out.fillna(fill_value,
                              subset=[c for c in out.columns if c not in keep])
@@ -3181,15 +3212,13 @@ class Series(FrameBase):
     tolist = to_list
 
     def head(self, n: int = 5) -> "Series":
-        name = self._col_name if self._col_name is not None else "__v__"
         node = Node("head", {"n": n}, self._expr)
+        sdf = self._sorted_limit(n)
+        if sdf is not None:
+            return Series(sdf, self._scol, self._col_name, node,
+                          self._index_cols, self._index_names, self._dtypes)
+        name = self._col_name if self._col_name is not None else "__v__"
         f = self.to_frame(name)
-        fuse = getattr(self, "_sort_fuse", None)
-        if fuse is not None and n >= 0:
-            # sort_values/_index parent (fuse carried through _via_frame):
-            # distributed TopK over the sort keys, no global sort
-            f._sort_fuse = fuse
-            return _frame_column(f.head(n), name, self._col_name, node)
         return Series(f._sdf.limit(n), F.col(name), self._col_name, node,
                       self._index_cols, self._index_names, self._dtypes)
 
@@ -3242,14 +3271,8 @@ class Series(FrameBase):
         value column as a Series (keeps name, index and dtype entries)."""
         name = self._pos_col
         out = fn(self._as_frame(), name)
-        s = _frame_column(out, name, self._col_name,
-                          Node(op, params, self._expr))
-        fuse = getattr(out, "_sort_fuse", None)
-        if fuse is not None:
-            # sort parent: carry the TopK fusion handle so a directly
-            # following head()/tail() skips the full global sort
-            s._sort_fuse = fuse
-        return s
+        return _frame_column(out, name, self._col_name,
+                             Node(op, params, self._expr))
 
     @property
     def index(self) -> "Index":
@@ -3265,32 +3288,31 @@ class Series(FrameBase):
     def keys(self) -> "Index":
         return self.index
 
+    # sort_values/sort_index keep the frame sort's node (not a Series op
+    # node over it): its hint is what lets head()/tail() TopK
     def sort_values(self, ascending: bool = True,
                     na_position: str = "last",
                     ignore_index: bool = False, key=None,
                     kind: str | None = None) -> "Series":
-        return self._via_frame(
-            lambda f, n: f.sort_values(n, ascending=ascending,
-                                       na_position=na_position,
-                                       ignore_index=ignore_index,
-                                       key=key, kind=kind),
-            "sort_values", ascending=ascending)
+        out = self._as_frame().sort_values(
+            self._pos_col, ascending=ascending, na_position=na_position,
+            ignore_index=ignore_index, key=key, kind=kind)
+        return _frame_column(out, self._pos_col, self._col_name)
 
     def sort_index(self, ascending: bool = True,
                    na_position: str = "last") -> "Series":
-        return self._via_frame(
-            lambda f, n: f.sort_index(ascending=ascending,
-                                      na_position=na_position),
-            "sort_index", ascending=ascending)
+        out = self._as_frame().sort_index(ascending=ascending,
+                                          na_position=na_position)
+        return _frame_column(out, self._pos_col, self._col_name)
 
     def tail(self, n: int = 5) -> "Series":
-        fuse = getattr(self, "_sort_fuse", None)
-        if fuse is not None and n >= 0:
-            name = self._col_name if self._col_name is not None else "__v__"
-            f = self.to_frame(name)
-            f._sort_fuse = fuse
-            return _frame_column(f.tail(n), name, self._col_name,
-                                 Node("tail", {"n": n}, self._expr))
+        sdf = self._sorted_limit(n, tail=True)
+        if sdf is not None:
+            return Series(sdf, self._scol, self._col_name,
+                          Node("tail", {"n": n}, self._expr),
+                          self._index_cols or (_ROWID,),
+                          self._index_names if self._index_cols else (None,),
+                          self._dtypes)
         return self._via_frame(lambda f, _n: f.tail(n), "tail", n=n)
 
     def sample(self, frac: float | None = None, n: int | None = None,
@@ -3572,7 +3594,6 @@ class Series(FrameBase):
             *[F.col(c) for c in joined._index_cols], scol.alias(name))
         self._sdf = sdf
         self._scol = F.col(name)
-        self.__dict__.pop("_sort_fuse", None)
         self._index_cols = joined._index_cols
         self._index_names = joined._index_names
         self._expr = Node("update", {}, self._expr, other._expr)
@@ -4708,14 +4729,19 @@ class DataFrame(FrameBase):
                 index_cols=None, index_names=None,
                 renames: Mapping | None = None,
                 dtypes: Mapping | None = None,
-                axis: "D.Axis | None" = None) -> "DataFrame":
+                axis: "D.Axis | None" = None, deps: tuple = (),
+                hint: tuple | None = None) -> "DataFrame":
         """A frame over ``sdf`` built from this one.  Its dtype record
         keeps the entries of the columns that survive under their stored
         type — renamed through ``renames`` — then takes ``dtypes``: the
         entries of columns the op rewrote (``None`` drops one).  Its
         column axis is ``axis``, else this one's over the surviving
-        columns."""
-        node = Node(op, params or {}, self._expr)
+        columns.  ``deps`` are further child nodes (operands not named in
+        ``params``); ``hint`` is the objects a later peephole reads,
+        recorded on the node against ``sdf`` (``_expr`` module
+        docstring)."""
+        node = _node(op, params or {}, self._expr, *deps,
+                     hint=None if hint is None else (sdf, hint))
         rec = {}
         if self._dtypes:
             old = {f.name: f.dataType for f in self._sdf.schema.fields}
@@ -4734,12 +4760,9 @@ class DataFrame(FrameBase):
             {**rec, **(dtypes or {})}, axis)
 
     def _col(self, name: str) -> Series:
-        s = _frame_column(self, name, name,
-                          Node("projection", {"columns": name}, self._expr))
-        # lineage token: lets __getitem__ accept scalar-augmented masks
-        # derived from THIS frame while rejecting same-schema foreign frames
-        s._mask_anchor = self._sdf
-        return s
+        return _frame_column(self, name, name,
+                             Node("projection", {"columns": name},
+                                  self._expr))
 
     @property
     def loc(self) -> "_LocIndexer":
@@ -4788,34 +4811,11 @@ class DataFrame(FrameBase):
                                         (_ROWID,), (None,))
                 return self._derive(self._sdf.filter(key._scol), "filter",
                                     {"predicate": key._expr.op})
-            # scalar-augmented mask (`df[df.v > df.v.mean()]`): the mask's
-            # plan is this frame's plan + broadcast scalar column(s) — it
-            # still CARRIES every frame column, so filter there and
-            # project this frame's columns back out.  The _mask_anchor
-            # lineage token (set in _col, propagated through _with_scol and
-            # the Scalar cross-join) restricts this to masks actually
-            # derived from THIS frame: a same-schema FOREIGN frame's mask
-            # would silently return the foreign frame's rows otherwise.
-            needed = list(self._index_cols) + self.columns
-            if (getattr(key, "_mask_anchor", None) is self._sdf
-                    and all(c in key._sdf.columns for c in needed)):
-                lbase = positions(key, upto="label")
-                if lbase is not None:
-                    out = (lbase.filter(key._scol)
-                           .select(*[F.col(c) for c in needed], _ROWID))
-                    return self._derive(out, "filter",
-                                        {"predicate": key._expr.op},
-                                        (_ROWID,), (None,))
-                out = (key._sdf.filter(key._scol)
-                       .select(*[F.col(c) for c in needed]))
-                return self._derive(out, "filter",
-                                    {"predicate": key._expr.op})
-            # genuinely FOREIGN mask: pandas aligns it on the index
-            # (missing labels → False); default-index frames align
-            # positionally via rowids — same contract as where/mask.
-            # (The silent wrong-rows bug the _mask_anchor guard closed
-            # was ACCEPTING a foreign frame's rows unaligned; an explicit
-            # alignment join is the correct semantics, not that bug.)
+            # FOREIGN mask: pandas aligns it on the index (missing labels
+            # → False); default-index frames align positionally via
+            # rowids — same contract as where/mask.  (A mask against a
+            # lazy Scalar, `df[df.v > df.v.mean()]`, is not foreign: the
+            # Scalar is a scalar subquery on this frame's plan.)
             mf = key.to_frame("__mask__")
             # a rowid-indexed mask (groupby cumcount/ngroup, scan outputs)
             # over a default-index frame aligns POSITIONALLY — the rowid
@@ -4893,7 +4893,6 @@ class DataFrame(FrameBase):
         self._index_cols, self._index_names = (out._index_cols,
                                                out._index_names)
         self._dtypes, self._axis = out._dtypes, out._axis
-        self.__dict__.pop("_sort_fuse", None)
 
     def __delitem__(self, key: str):
         """``del df[col]`` rebinds to a drop (reference ``test_del``)."""
@@ -5070,6 +5069,7 @@ class DataFrame(FrameBase):
         # each assigned column's dtype record entry
         entries = {k: kwargs[k]._value_dtype for k in held}
         view = None
+        scalars = []    # the plan nodes of lazy Scalar values
 
         def _current():
             # the frame as assigned so far (late-bound on sdf)
@@ -5087,8 +5087,6 @@ class DataFrame(FrameBase):
                 cur = _current()
                 view = cur._sdf
                 v = v(cur)
-                if not isinstance(v, Series):
-                    raise TypeError("assign callable must return a Series")
                 # fall through: same-anchor fast path below (the view's
                 # columns resolve by name on sdf), or the foreign-Series
                 # alignment for scan outputs (the raw _scol would resolve
@@ -5219,14 +5217,16 @@ class DataFrame(FrameBase):
                 sdf = _assign_positional(_current(), k, v)
                 continue
             else:
-                col = F.lit(v)
+                col = _lit(v)
+                if isinstance(v, Scalar):
+                    scalars.append(v._expr)
             sdf = sdf.withColumn(k, col)
         if held:
             sdf = sdf.drop(*held.values())
         idx = ((_ROWID,), (None,)) if (made_rowid_index
                                        and not self._index_cols) else ()
         return self._derive(sdf, "assign", {"columns": list(kwargs)}, *idx,
-                            dtypes=entries)
+                            dtypes=entries, deps=tuple(scalars))
 
     def drop(self, labels=None, columns=None, axis: int = 0,
              errors: str = "raise") -> "DataFrame":
@@ -5411,6 +5411,13 @@ class DataFrame(FrameBase):
 
     # -- null handling ---------------------------------------------------
     def fillna(self, value) -> "DataFrame":
+        """pandas ``DataFrame.fillna``.  A dict fills per column (keys
+        that are not columns are ignored).  Any other value — a lazy
+        Scalar too, as its scalar subquery (``_lit``) — fills the data
+        columns Spark's na.fill fills for a value of its type: a numeric
+        value the numeric columns, any other the columns of its type;
+        NaN counts as missing.  Index and hidden columns are never
+        filled (pandas fills values only)."""
         if isinstance(value, Mapping):
             # pandas silently ignores dict keys that aren't columns;
             # Spark's fillna raises UNRESOLVED_COLUMN
@@ -5418,7 +5425,24 @@ class DataFrame(FrameBase):
             if not value:
                 return self
             return self._derive(self._sdf.fillna(dict(value)), "fillna", {})
-        return self._derive(self._sdf.fillna(value), "fillna", {"value": value})
+        if value is None:
+            raise ValueError("Must specify a fill 'value' or 'method'.")
+        if isinstance(value, (list, tuple)):
+            raise TypeError('"value" parameter must be a scalar or dict, '
+                            f'but you passed a "{type(value).__name__}"')
+        fill = _lit(value)
+        st = self._sdf.select(fill).schema[0].dataType
+        data = set(self.columns)
+        upd = {}
+        for f in self._sdf.schema.fields:
+            if f.name in data and (f.dataType == st or (
+                    is_numeric(f.dataType) and is_numeric(st))):
+                c = F.col(f.name)
+                if isinstance(f.dataType, (T.DoubleType, T.FloatType)):
+                    c = F.nanvl(c, F.lit(None))
+                upd[f.name] = F.coalesce(c, fill.cast(f.dataType))
+        return self._derive(self._sdf.withColumns(upd), "fillna",
+                            {"value": value})
 
     def dropna(self, how: str = "any", thresh: int | None = None,
                subset: Sequence[str] | None = None,
@@ -5601,41 +5625,24 @@ class DataFrame(FrameBase):
             # eager pandas Series other (r5 hunt fix: this previously fell
             # through to F.lit(series) -> HashMap literal -> runtime crash)
             return self._binop_axis1_eager(other, fn, op, reflexive)
-        if isinstance(other, Scalar):
-            # `df * df.stack().mean()` — the 1×1 scalar frame broadcast
-            # cross-joins in (same lazy pattern as Series._binop): both
-            # sides stay lazy, the aggregate runs distributed
-            rhs = F.broadcast(other._sdf.select(
-                F.col(other._sdf.columns[0]).alias("__scalar__")))
-            joined = self._sdf.crossJoin(rhs)
-            lit = F.col("__scalar__")
-            sc_type = other._sdf.schema[0].dataType
-            updates = {}
-            for c in self.columns:
-                a, b = (lit, F.col(c)) if reflexive else (F.col(c), lit)
-                dts = ((sc_type, self._sdf.schema[c].dataType) if reflexive
-                       else (self._sdf.schema[c].dataType, sc_type))
-                updates[c] = fn(a, b, dts) if typed else fn(a, b)
-            node = Node(op, {"frame": True, "scalar": True},
-                        self._expr, other._expr)
-            out = DataFrame(joined.withColumns(updates).drop("__scalar__"),
-                            node, self._index_cols, self._index_names)
-            return out
         bad = [c for c in self.columns
                if not is_numeric(self._sdf.schema[c].dataType)]
         if bad:
             raise TypeError(f"frame arithmetic needs numeric columns; "
                             f"non-numeric: {bad}")
-        lit = F.lit(other)
+        # `df * df.stack().mean()`: a lazy Scalar is its scalar subquery
+        lit = _lit(other)
+        odt = ((other._sdf.schema[0].dataType,)
+               if isinstance(other, Scalar) else ())
         updates = {}
         for c in self.columns:
             a, b = F.col(c), lit
             if reflexive:
                 a, b = b, a
-            updates[c] = (fn(a, b, (self._sdf.schema[c].dataType,))
+            updates[c] = (fn(a, b, (self._sdf.schema[c].dataType, *odt))
                           if typed else fn(a, b))
         return self._derive(self._sdf.withColumns(updates), op,
-                            {"other": repr(other)})
+                            {"other": other})
 
     def __add__(self, o): return self._frame_binop(o, lambda a, b: a + b, "add")
     def __radd__(self, o): return self._frame_binop(o, lambda a, b: a + b, "add", True)
@@ -5659,19 +5666,16 @@ class DataFrame(FrameBase):
     # comparisons produce a boolean frame; strings compare fine, so no
     # numeric guard — scalar compare is a pure projection
     def _frame_cmp(self, other, fn, op: str) -> "DataFrame":
-        if isinstance(other, (Series, Scalar, DataFrame, pd.Series)) or (
+        if isinstance(other, (Series, DataFrame, pd.Series)) or (
                 isinstance(other, (list, tuple, np.ndarray))
                 and not isinstance(other, str) and np.ndim(other) == 1):
             return self._frame_binop(other, fn, op)
-        lit = F.lit(other)
+        lit = _lit(other)
         updates = {c: fn(F.col(c), lit) for c in self.columns}
-        out = self._derive(self._sdf.withColumns(updates), op,
-                           {"other": repr(other)})
-        # lineage for df.where(df > 0): the per-column boolean exprs are
-        # re-applicable on THIS frame's sdf — where/mask check the anchor
-        out._cmp_anchor = self._sdf
-        out._cmp_exprs = dict(updates)
-        return out
+        # for df.where(df > 0): the per-column predicates re-apply on
+        # THIS frame's plan — where/mask check that plan is theirs
+        return self._derive(self._sdf.withColumns(updates), op,
+                            {"other": other}, hint=(self._sdf, updates))
 
     def __eq__(self, o):  # type: ignore[override]
         return self._frame_cmp(o, lambda a, b: a == b, "eq")
@@ -6116,7 +6120,6 @@ class DataFrame(FrameBase):
                    out_cols[len(joined._index_cols):]
         self._sdf = joined._sdf.select(*out_cols)
         self._expr = node
-        self.__dict__.pop("_sort_fuse", None)
         self._index_cols = tuple(own_idx)
         if not had_idx:
             self._index_names = joined._index_names
@@ -6125,24 +6128,26 @@ class DataFrame(FrameBase):
     def _framewise_cond(self, cond: "DataFrame", keep_on_true: bool,
                         other) -> "DataFrame":
         """Boolean-FRAME cond (``df.where(df > 0)``): per-column CASE —
-        pure projection when the cond carries comparison lineage anchored
-        to this frame; otherwise one index equi-join with the cond
+        pure projection when the cond is a comparison of this frame
+        (its node's hint); otherwise one index equi-join with the cond
         columns renamed alongside."""
-        exprs = getattr(cond, "_cmp_exprs", None)
+        hint = cond._hint("eq", "ne", "lt", "le", "gt", "ge")
         other_is_frame = isinstance(other, DataFrame)
-        if exprs is not None and getattr(cond, "_cmp_anchor",
-                                         None) is self._sdf \
-                and not other_is_frame:
+        if (hint is not None and hint[0] is self._sdf
+                and not other_is_frame):
+            exprs = hint[1]
+
             def rep(c):
                 e = exprs.get(c)
                 flag = F.coalesce(e, F.lit(False)) if e is not None \
                     else F.lit(False)
-                return (F.when(flag, F.col(c)).otherwise(F.lit(other))
+                return (F.when(flag, F.col(c)).otherwise(_lit(other))
                         if keep_on_true else
-                        F.when(flag, F.lit(other)).otherwise(F.col(c)))
+                        F.when(flag, _lit(other)).otherwise(F.col(c)))
             return self._derive(
                 self._sdf.withColumns({c: rep(c) for c in self.columns}),
-                "where" if keep_on_true else "mask", {"frame_cond": True})
+                "where" if keep_on_true else "mask",
+                {"frame_cond": True, "other": other})
         # alignment path: named index when present; default-index frames
         # align POSITIONALLY via attached rowids (pandas label==position)
         sides = [bool(self._index_cols), bool(cond._index_cols)] + \
@@ -6177,7 +6182,7 @@ class DataFrame(FrameBase):
                 oc = (F.col(f"__o_{c}__") if c in other.columns
                       else F.lit(None))
             else:
-                oc = F.lit(other)
+                oc = _lit(other)
             return (F.when(flag, F.col(c)).otherwise(oc)
                     if keep_on_true else
                     F.when(flag, oc).otherwise(F.col(c)))
@@ -6188,7 +6193,8 @@ class DataFrame(FrameBase):
         if drop_rowid:
             out = out.drop(_ROWID)
         return self._derive(out, "where" if keep_on_true else "mask",
-                            {"frame_cond": True, "aligned": True})
+                            {"frame_cond": True, "aligned": True,
+                             "other": other})
 
     def where(self, cond, other=None) -> "DataFrame":
         """pandas ``DataFrame.where``: same-anchor boolean Series lowers
@@ -6209,10 +6215,11 @@ class DataFrame(FrameBase):
             # str(other)) — Spark-typed columns can't hold pandas' mixed
             # object cells
             reps = {c: F.when(cond._scol, F.col(c)).otherwise(
-                        F.lit(other).cast(self._sdf.schema[c].dataType)
+                        _lit(other).cast(self._sdf.schema[c].dataType)
                         if other is not None else F.lit(None))
                     for c in self.columns}
-            return self._derive(self._sdf.withColumns(reps), "where", {})
+            return self._derive(self._sdf.withColumns(reps), "where",
+                                {"other": other})
         if bool(self._index_cols) != bool(cond._index_cols):
             raise ValueError("DataFrame.where with a foreign cond needs "
                              "an index on both sides (or on neither — "
@@ -6236,11 +6243,11 @@ class DataFrame(FrameBase):
             joined = joined.drop(_ROWID)
         flag = F.coalesce(F.col("__cond__"), F.lit(False))
         reps = {c: F.when(flag, F.col(c)).otherwise(
-                    F.lit(other).cast(self._sdf.schema[c].dataType)
+                    _lit(other).cast(self._sdf.schema[c].dataType)
                     if other is not None else F.lit(None))
                 for c in self.columns}
         return self._derive(joined.withColumns(reps).drop("__cond__"),
-                            "where", {"aligned": True})
+                            "where", {"aligned": True, "other": other})
 
     def mask(self, cond, other=None) -> "DataFrame":
         """pandas ``DataFrame.mask`` — complement of ``where``.  A null
@@ -6535,7 +6542,6 @@ class DataFrame(FrameBase):
             out = self.sort_values(by, ascending, na_position,
                                    ignore_index, key)
             self._rebind(out)
-            self._sort_fuse = out._sort_fuse
             return None
         by = _ensure_list(by)
         asc = ascending if isinstance(ascending, (list, tuple)) else [ascending] * len(by)
@@ -6593,19 +6599,19 @@ class DataFrame(FrameBase):
                 _ORDER, F.monotonically_increasing_id())
             if ignore_index and tie == _LABEL:
                 sorted_sdf = sorted_sdf.drop(_LABEL)
+            hint = (self._sdf, raw, na_position, tie)
             if ignore_index and self._index_cols:
                 # pandas ignore_index=True RENUMBERS 0..n-1 regardless of
                 # the existing index — drop the index columns (the stamp
                 # carries the sorted presentation order)
                 sorted_sdf = sorted_sdf.drop(*self._index_cols)
-                out = self._derive(sorted_sdf, "sort",
-                                   {"by": by, "ascending": list(asc),
-                                    "ignore_index": True}, (), ())
-            else:
-                out = self._derive(sorted_sdf, "sort",
-                                   {"by": by, "ascending": list(asc)})
-            out._sort_fuse = (self._sdf, raw, na_position, tie)
-            return out
+                return self._derive(sorted_sdf, "sort",
+                                    {"by": by, "ascending": list(asc),
+                                     "ignore_index": True}, (), (),
+                                    hint=hint)
+            return self._derive(sorted_sdf, "sort",
+                                {"by": by, "ascending": list(asc)},
+                                hint=hint)
         # pandas keeps each row's positional label through the sort
         pre = positions(self)
         if _ORDER in pre.columns:
@@ -6616,10 +6622,9 @@ class DataFrame(FrameBase):
         # self-join (assign after sort)
         sdf = (pre.orderBy(*cols, F.col(_ROWID))
                .withColumn(_ORDER, F.monotonically_increasing_id()))
-        out = self._derive(sdf, "sort", {"by": by, "ascending": list(asc)},
-                           (_ROWID,), (None,))
-        out._sort_fuse = (pre, raw, na_position, _ROWID)
-        return out
+        return self._derive(sdf, "sort", {"by": by, "ascending": list(asc)},
+                            (_ROWID,), (None,),
+                            hint=(pre, raw, na_position, _ROWID))
 
     def sort_index(self, ascending: bool | Sequence[bool] = True,
                    na_position: str = "last") -> "DataFrame":
@@ -6638,44 +6643,22 @@ class DataFrame(FrameBase):
             raw.append((c, a))
         tie = _ORDER if _ORDER in self._sdf.columns else None
         tcols = [F.col(tie)] if tie else []
-        out = self._derive(
+        return self._derive(
             self._sdf.orderBy(*cols, *tcols).withColumn(
                 _ORDER, F.monotonically_increasing_id()),
-            "sort_index", {"ascending": list(asc)})
-        out._sort_fuse = (self._sdf, raw, na_position, tie)
-        return out
-
-    def _fuse_order_cols(self, reverse: bool = False):
-        """Directioned sort columns for a frame whose direct parent op was
-        a sort (``_sort_fuse`` is only ever set by sort_values/sort_index
-        and never survives a derive — so presence proves the parent)."""
-        _pre, raw, na_position, tie = self._sort_fuse
-        if reverse:
-            flip = "first" if na_position == "last" else "last"
-            cols = [_sort_dir(c, not a, flip) for c, a in raw]
-            if tie is not None:
-                cols.append(F.col(tie).desc())
-        else:
-            cols = [_sort_dir(c, a, na_position) for c, a in raw]
-            if tie is not None:
-                cols.append(F.col(tie).asc())
-        return cols
+            "sort_index", {"ascending": list(asc)},
+            hint=(self._sdf, raw, na_position, tie))
 
     def head(self, n: int = 5) -> "DataFrame":
         """Reference Head ``_expr.py:1471-1492``.  Directly after
         ``sort_values``/``sort_index`` this FUSES into a distributed TopK
-        over the SORT KEYS — ``TakeOrderedAndProject(n, keys)`` on the
-        pre-sort plan, map-side partial top-k, no global Exchange+Sort
-        (the r5 presentation-stamp work accidentally forced a full sort
-        here; the stamp only needs to reflect the presented order of the
-        n OUTPUT rows, so it is re-minted after the limit).  On an
-        unsorted frame it is natural (file) order, like the reference's
-        single partition.  Negative n (pandas: all but the last |n| rows)
-        costs one count action."""
-        fuse = getattr(self, "_sort_fuse", None)
-        if fuse is not None and n >= 0:
-            sdf = (fuse[0].orderBy(*self._fuse_order_cols()).limit(n)
-                   .withColumn(_ORDER, F.monotonically_increasing_id()))
+        over the sort keys (``_sorted_limit``; the r5 presentation-stamp
+        work accidentally forced a full sort here).  On an unsorted frame
+        it is natural (file) order, like the reference's single
+        partition.  Negative n (pandas: all but the last |n| rows) costs
+        one count action."""
+        sdf = self._sorted_limit(n)
+        if sdf is not None:
             return self._derive(sdf, "head", {"n": n})
         base = self._sdf
         if _ORDER in base.columns:
@@ -6699,30 +6682,11 @@ class DataFrame(FrameBase):
         order column.  Only the natural-order fallback still needs the
         count+offset pass.  Negative n (pandas: all but the first |n|
         rows) is a pure offset — no count needed."""
-        fuse = getattr(self, "_sort_fuse", None)
-        if fuse is not None and n >= 0:
-            fwd = self._fuse_order_cols()
-            sdf = (fuse[0].orderBy(*self._fuse_order_cols(reverse=True))
-                   .limit(n).orderBy(*fwd)
-                   .withColumn(_ORDER, F.monotonically_increasing_id()))
-            if not self._index_cols:
-                # ignore_index-sorted parent: pandas labels are the dense
-                # positions in the FULL sorted order — for the tail's k
-                # rows that is N - rank_from_the_end, with N a LAZY 1-row
-                # count branch (no driver action; the reverse-TopK plan
-                # shape survives).  (head needs nothing: its labels
-                # 0..k-1 equal the renumber the default index already
-                # presents.)  r7 hunt seed 40142.
-                cnt = fuse[0].agg(F.count(F.lit(1)).alias("__n__"))
-                w = Window.orderBy(F.col(_ORDER).desc())
-                out = (sdf.crossJoin(F.broadcast(cnt))
-                       .withColumn(_ROWID, (F.col("__n__")
-                                            - F.row_number().over(w))
-                                   .cast("long"))
-                       .drop("__n__"))
-                return self._derive(out, "tail", {"n": n}, (_ROWID,),
-                                    (None,))
-            return self._derive(sdf, "tail", {"n": n})
+        sdf = self._sorted_limit(n, tail=True)
+        if sdf is not None:
+            return self._derive(
+                sdf, "tail", {"n": n}, self._index_cols or (_ROWID,),
+                self._index_names if self._index_cols else (None,))
         base = self._sdf
         ocol = _ORDER if _ORDER in base.columns else (
             _ROWID if tuple(self._index_cols) == (_ROWID,) else None)
@@ -7492,9 +7456,9 @@ class DataFrame(FrameBase):
             col = F.col(c)
             clipped = col
             if lower is not None:
-                clipped = F.greatest(clipped, F.lit(lower))
+                clipped = F.greatest(clipped, _lit(lower))
             if upper is not None:
-                clipped = F.least(clipped, F.lit(upper))
+                clipped = F.least(clipped, _lit(upper))
             # greatest/least skip nulls and rank NaN above all doubles —
             # guard so missing values stay missing (pandas)
             guard = col.isNull()
@@ -8997,6 +8961,7 @@ class DataFrame(FrameBase):
                     if pivot_values is not None else None)
                 out = piv.agg(*[_AGG_FNS[a](F.col(values)).alias(a)
                                 for a in fns])
+            out = out.orderBy(*idx)
             if fill_value is not None:
                 out = out.fillna(fill_value,
                                  subset=[c for c in out.columns
@@ -9009,8 +8974,10 @@ class DataFrame(FrameBase):
             # pandas pivot_table without a columns axis: a plain grouped
             # aggregation over the value column(s) (+ the All margin row)
             vals = _ensure_list(values)
-            out = self._sdf.groupBy(*idx).agg(
-                *[fn(F.col(v)).alias(v) for v in vals])
+            # pandas presents sorted group keys (with All last)
+            out = (self._sdf.groupBy(*idx)
+                   .agg(*[fn(F.col(v)).alias(v) for v in vals])
+                   .orderBy(*idx))
             if margins:
                 row = self._sdf.agg(*[fn(F.col(v)).alias(v) for v in vals])
                 for c in idx:
@@ -9018,8 +8985,7 @@ class DataFrame(FrameBase):
                 for i, c in enumerate(idx):
                     row = row.withColumn(
                         c, F.lit(margins_name if i == 0 else ""))
-                # pandas presents sorted group keys with All last
-                out = out.orderBy(*idx).unionByName(row.select(out.columns))
+                out = out.unionByName(row.select(out.columns))
             if fill_value is not None:
                 out = out.fillna(fill_value,
                                  subset=[c for c in out.columns
@@ -9035,6 +9001,9 @@ class DataFrame(FrameBase):
             col_margin = (self._sdf.groupBy(*idx)
                           .agg(fn(F.col(values)).alias(margins_name)))
             out = out.join(col_margin, idx, "left")
+        # pandas presents sorted group keys (with the All row last)
+        out = out.orderBy(*idx)
+        if margins:
             # All row: aggfunc grouped by pivot column only (+ the corner)
             row_vals = (self._sdf
                         .withColumn(columns, F.col(columns).cast("string"))
@@ -9054,9 +9023,8 @@ class DataFrame(FrameBase):
             for i, c in enumerate(idx):
                 row = row.withColumn(
                     c, F.lit(margins_name if i == 0 else ""))
-            # pandas presents sorted group keys with the All row last
-            out = out.orderBy(*idx).unionByName(row.select(out.columns),
-                                                allowMissingColumns=True)
+            out = out.unionByName(row.select(out.columns),
+                                  allowMissingColumns=True)
         if fill_value is not None:
             # pandas fill_value: empty cells (absent combinations) take
             # the fill — applies to every pivoted value column
@@ -10037,7 +10005,7 @@ class _LocIndexer:
                     "frame")
             val = (value._scol
                    if isinstance(value, Series) and value._sdf is f._sdf
-                   else F.lit(value))
+                   else _lit(value))
             updates = {}
             for c in cols:
                 if c in f.columns:
@@ -10046,9 +10014,8 @@ class _LocIndexer:
                 else:
                     updates[c] = F.when(rows._scol, val)
             out = f._derive(f._sdf.withColumns(updates), "loc_setitem",
-                            {"columns": cols})
+                            {"columns": cols, "value": value})
             f._sdf, f._expr = out._sdf, out._expr
-            f.__dict__.pop("_sort_fuse", None)
             return
         raise TypeError(
             "loc assignment supports df.loc[:, col] and "

@@ -15,6 +15,18 @@ Tungsten the executor; the ``Expr`` tree here exists for
 * ``pprint``/``tree_repr`` plan introspection (reference ``_expr.py:103-108``),
 * ``walk``/``find_operations`` (reference ``_expr.py:816-857``).
 
+Each ``Node`` also has one attribute outside its identity, ``hint``:
+``None``, or ``(plan, objects)`` — the Spark DataFrame the op produced and
+the Spark objects a later peephole reads (the sort keys and pre-sort plan a
+following ``head``/``tail`` turns into a TopK; the per-column predicates a
+following ``where``/``mask`` inlines).  It is set once, by the
+constructor's ``hint=`` argument, and is not tokenized.  A collection
+reads it only while its own plan ``is`` the recorded one
+(``FrameBase._hint``): a node is shared with frames over other plans
+(``assign``'s callable view, set ops and ``_frame_with_index`` rebuild a
+frame over a new plan under the parent's node), and a hint read there would
+apply to the wrong rows.
+
 Lowering is *eager but lazy-in-Spark*: constructing a node immediately builds
 the (unexecuted) Spark DataFrame, which gives us analyzer-validated schemas for
 free — the Spark analogue of the reference's eager ``_meta``
@@ -210,9 +222,10 @@ class Node(Expr):
     """
 
     def __init__(self, op: str, params: dict[str, Any] | None = None,
-                 *children: "Expr"):
+                 *children: "Expr", hint: tuple | None = None):
         self.op = op
         self.params = params or {}
+        self.hint = hint
         super().__init__(op, self.params, *children)
 
     @property

@@ -5,8 +5,9 @@ new in-scan label machinery.
 Unlike hunt_prop.py, the terminal compares BOTH values and the row-label
 sequence (`.index.tolist()`), so silent label drift is a failure.
 
-Targets: _sort_fuse invalidation (mutation after sort, fuse surviving
-astype/rename/copy, groupby on a fused frame), _ORDER arithmetic
+Targets: the sort node's TopK hint (read by head/tail only while the
+frame still reads the sort's plan: mutation after sort, astype/rename/copy
+of a sorted frame, groupby on a sorted frame), _ORDER arithmetic
 (concat-of-concat, melt-of-sorted), label promotion/resurrection
 (filter→reset→filter, dedup→binop, sample→filter), Series dedup order.
 

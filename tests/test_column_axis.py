@@ -8,6 +8,7 @@ the end keep the retired ad-hoc attributes out of the package and keep
 import ast
 import pathlib
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -84,7 +85,6 @@ CASES = [
     ("groupby_agg_then_max", "f", _stale_groupby, None),
     ("resample_ohlc_then_sum", "ft", _stale_resampler, None),
     # the axis name survives and is set by every op that defines it
-    # (the engine's pivot rows come unsorted: sort_index first)
     ("pivot_table_fillna", "f",
      lambda f: _pivot(pes, f).fillna(0).sort_index(),
      lambda f: _pivot(pd, f).fillna(0)),
@@ -92,6 +92,15 @@ CASES = [
      lambda f: _pivot(pd, f).head(2)),
     ("groupby_unstack", "f",
      lambda f: f.groupby(["k", "w"]).v.sum().unstack().sort_index(), None),
+    # the pivot rows come sorted by the index keys, like pandas
+    ("pivot_table_rows_sorted", "f", lambda f: _pivot(pes, f).fillna(0),
+     lambda f: _pivot(pd, f).fillna(0)),
+    ("pivot_table_rows_sorted_head", "f", lambda f: _pivot(pes, f).head(2),
+     lambda f: _pivot(pd, f).head(2)),
+    ("groupby_unstack_rows_sorted", "f",
+     lambda f: f.groupby(["k", "w"]).v.sum().unstack(), None),
+    ("pivot_table_no_columns_rows_sorted", "f",
+     lambda f: f.pivot_table(values="v", index="k", aggfunc="sum"), None),
     # int labels of expanded string ops survive the next op
     ("split_head", "s", lambda f: _split(f).head(2), None),
     ("split_sort_values", "s", lambda f: _split(f).sort_values("1"),
@@ -118,6 +127,35 @@ def test_column_axis_presented(frames, src, op, pd_op):
                                   check_index_type=False,
                                   check_column_type=False,
                                   check_names=False, check_freq=False)
+
+
+# a list aggfunc flattens pandas' (fn, value[, pivot]) labels to one level:
+# compare the row order and the cells
+@pytest.mark.parametrize("kw", [dict(columns="w", aggfunc=["sum"]),
+                                dict(aggfunc=["sum", "mean"])],
+                         ids=["columns", "no_columns"])
+def test_pivot_table_list_aggfunc_rows_sorted(frames, kw):
+    pdfs, efs = frames
+    want = pd.pivot_table(pdfs["f"], values="v", index="k", **kw)
+    got = efs["f"].pivot_table(values="v", index="k", **kw).compute()
+    assert list(got.index) == list(want.index)
+    np.testing.assert_array_equal(got.to_numpy(), want.to_numpy())
+
+
+# with margins the int keys sort as numbers before the All row (the
+# engine presents the labels as strings, pandas as objects)
+@pytest.mark.parametrize("kw", [dict(), dict(columns="w")],
+                         ids=["no_columns", "columns"])
+def test_pivot_table_margins_int_keys_sorted(spark, kw):
+    pdf = pd.DataFrame({"k": [10, 2, 10, 2, 3], "w": ["x", "y", "x", "x", "y"],
+                        "v": [1.0, 2.0, 3.0, 4.0, 5.0]})
+    want = pdf.pivot_table(values="v", index="k", aggfunc="sum",
+                           margins=True, **kw)
+    got = pes.from_pandas(pdf).pivot_table(
+        values="v", index="k", aggfunc="sum", margins=True, **kw).compute()
+    assert [str(x) for x in got.index] == [str(x) for x in want.index]
+    np.testing.assert_array_equal(got.to_numpy(dtype=float),
+                                  want.to_numpy(dtype=float))
 
 
 # pandas cut returns an ordered categorical: astype(str) renders the

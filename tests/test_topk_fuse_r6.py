@@ -119,12 +119,30 @@ def test_inplace_mutation_clears_fuse(base, base_pdf):
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
+def _assert_topk(out):
+    plan = _plan(out)
+    assert "TakeOrderedAndProject" in plan
+    assert "rangepartitioning" not in plan
+
+
 def test_inplace_sort_keeps_fuse(base, base_pdf):
-    f = base
-    f2 = f.sort_values("y", ascending=False)  # build fresh handle
-    assert getattr(f2, "_sort_fuse", None) is not None
-    g = base.sort_values("y", ascending=False)
-    assert "rangepartitioning" not in _plan(g.head(3))
+    # sort_values(inplace=True) rebinds the frame to the sort's plan and
+    # node together, so the following head still lowers to a TopK
+    f = base.copy()
+    f.sort_values("y", ascending=False, inplace=True)
+    out = f.head(3)
+    _assert_topk(out)
+    exp = base_pdf.sort_values("y", ascending=False).head(3)
+    pd.testing.assert_frame_equal(out.compute(), exp, check_dtype=False)
+
+
+@pytest.mark.parametrize("op", ["head", "tail"])
+def test_series_sort_head_tail_fuse_to_topk(base, base_pdf, op):
+    out = getattr(base["y"].sort_values(ascending=False), op)(5)
+    _assert_topk(out)
+    exp = getattr(base_pdf["y"].sort_values(ascending=False), op)(5)
+    pd.testing.assert_series_equal(out.compute(), exp, check_dtype=False,
+                                   check_index_type=False)
 
 
 def test_series_sort_head_tail(base, base_pdf):
