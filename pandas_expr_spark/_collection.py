@@ -1300,9 +1300,11 @@ class Series(FrameBase):
         if isinstance(self.spark_type, T.StringType):
             # pandas string semantics: + concatenates, * int repeats —
             # Spark's ANSI +/* on strings is a numeric-cast type error
-            other_str = isinstance(other, str) or (
-                isinstance(other, Series)
-                and isinstance(other.spark_type, T.StringType))
+            otype = (other.spark_type if isinstance(other, Series) else
+                     other._sdf.schema[0].dataType
+                     if isinstance(other, Scalar) else None)
+            other_str = (isinstance(other, str)
+                         or isinstance(otype, T.StringType))
             if op == "add" and other_str:
                 fn = lambda a, b: F.concat(a, b)          # noqa: E731
             elif (op == "mul" and isinstance(other, (int, np.integer))
@@ -3217,6 +3219,8 @@ class Series(FrameBase):
         if sdf is not None:
             return Series(sdf, self._scol, self._col_name, node,
                           self._index_cols, self._index_names, self._dtypes)
+        if n < 0:  # all but the last |n| rows: the frame's counted head
+            return self._via_frame(lambda f, _n: f.head(n), "head", n=n)
         name = self._col_name if self._col_name is not None else "__v__"
         f = self.to_frame(name)
         return Series(f._sdf.limit(n), F.col(name), self._col_name, node,
@@ -4425,7 +4429,7 @@ class _FrameRolling:
 class _FrameEwm:
     """pandas ``ewm`` chain target over a frame or a Series (``series=``)
     — every column through ONE shared ranged pass
-    (``timeseries.ewm_mean_global_multi``)."""
+    (``timeseries.ewm_global``)."""
 
     def __init__(self, frame: "DataFrame", alpha: float,
                  adjust: bool = True, ignore_na: bool = False,
@@ -4451,18 +4455,14 @@ class _FrameEwm:
     def mean(self):
         from .functions import timeseries as _ts
         sdf, order, idx, names, num = self._base()
-        if self._ignore_na:
-            out = _ts.ewm_mean_ignore_na(sdf, num, order, self._alpha,
-                                         adjust=self._adjust)
-        else:
-            out = _ts.ewm_mean_global_multi(sdf, num, order, self._alpha,
-                                            adjust=self._adjust)
+        out = _ts.ewm_global(sdf, num, order, self._alpha,
+                             adjust=self._adjust, ignore_na=self._ignore_na)
         return self._finish(out, "ewm_mean", idx, names, num)
 
     def var(self, bias: bool = False):
-        """pandas ``ewm(...).var()`` — the 5-state distributed segment
-        scan (``timeseries.ewm_var_global``), one per column; debiased
-        by default."""
+        """pandas ``ewm(...).var()`` — the distributed segment scan
+        (``timeseries.ewm_global``) with a 5-component state per column,
+        every column in the same pass; debiased by default."""
         return self._var(bias, sqrt=False)
 
     def std(self, bias: bool = False):
@@ -4474,9 +4474,7 @@ class _FrameEwm:
             raise NotImplementedError(
                 "ewm.var supports adjust=True, ignore_na=False")
         out, order, idx, names, num = self._base()
-        for c in num:
-            out = _ts.ewm_var_global(out, c, order, self._alpha, name=c,
-                                     bias=bias)
+        out = _ts.ewm_global(out, num, order, self._alpha, "var", bias=bias)
         if sqrt:
             out = out.withColumns({c: F.sqrt(c) for c in num})
         return self._finish(out, "ewm_std" if sqrt else "ewm_var", idx,
@@ -8017,7 +8015,7 @@ class DataFrame(FrameBase):
         """pandas ``DataFrame.ewm(...)`` chain (``.mean()``): every
         numeric column through ONE shared ranged pass — the per-partition
         recurrence carries per-column (num, den) state in the same Arrow
-        stream (``timeseries.ewm_mean_global_multi``)."""
+        stream (``timeseries.ewm_global``)."""
         return _FrameEwm(self, _ewm_alpha(com, span, halflife, alpha),
                          adjust, ignore_na)
 
@@ -9422,9 +9420,9 @@ class DataFrame(FrameBase):
         else:
             if len(ob) != 1:
                 raise ValueError("global ewm needs exactly one order_by column")
-            out = _ts.ewm_mean_global(self._sdf, col, ob[0], alpha,
-                                      name=name, num_partitions=num_partitions,
-                                      adjust=adjust)
+            staged = self._sdf.withColumn(name, F.col(col).cast("double"))
+            out = _ts.ewm_global(staged, [name], ob[0], alpha, adjust=adjust,
+                                 num_partitions=num_partitions)
         return self._derive(out, "ewm", {"col": col, "alpha": alpha,
                                          "partition_by": pb})
 

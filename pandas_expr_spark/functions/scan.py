@@ -4,17 +4,21 @@ pandas' positional ops (``cumsum``/``cummax``/``shift``/``diff``…) assume one
 totally ordered sequence.  The naive Spark translation — a global
 ``Window.orderBy(...)`` with no partition key — funnels every row through a
 single task and is unusable at 100 TB.  This module implements the classic
-two-phase parallel scan instead (same machinery as ``timeseries.py``'s EWM):
+two-phase parallel scan instead (Blelloch, "Prefix Sums and Their
+Applications", 1990); ``timeseries.py``'s global EWM kernels run on the
+same helpers (``_ranged``, ``_map_in_pandas``, ``_split_scanned``):
 
 1. ``repartitionByRange(order)`` + local sort → partitions are globally
    ordered and ``spark_partition_id()`` is monotone in the order key.
 2. **Local phase**: each partition computes its own running accumulation
    (Arrow-batched ``mapInPandas``, numpy-vectorized, state carried across
-   batches within the partition).
-3. **Carry phase**: one tiny row per partition (a JVM ``groupBy(pid)``
-   aggregate of the *source* column — Spark reuses the range-shuffle
-   exchange for both branches) is folded into exclusive prefix carries with
-   a window over the partition-summary table — thousands of rows at 100 TB,
+   batches within the partition) and ends with one marker row carrying
+   the partition's summary (totals / last non-null / row count) in the
+   regular output columns.
+3. **Carry phase**: the pass's output is pinned once
+   (``_split_scanned``) and split into the data rows and the #partitions
+   marker rows; the marker rows are folded into exclusive prefix carries
+   with a window over that tiny table — thousands of rows at 100 TB,
    never the data itself — then broadcast-joined back and combined.
 
 Total cost: one range shuffle + one tiny reduction, independent of how much

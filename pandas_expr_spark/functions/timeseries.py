@@ -1,4 +1,4 @@
-"""Time-series smoothing: exponentially weighted means at scale.
+"""Time-series smoothing: exponentially weighted statistics at scale.
 
 pandas ``ewm`` is inherently sequential (each output depends on every prior
 row), which Spark's window functions cannot express without numeric overflow
@@ -10,25 +10,33 @@ hundred rows).  Two scale-aware implementations:
   ``applyInPandas`` running pandas' exact ``ewm`` per group is both honest
   and as scalable as the window family — one shuffle on the keys.
 
-* **Global** (one huge ordered series): a distributed **segment scan**.
-  With ``d = 1 - alpha`` and ``adjust=True`` semantics,
+* **Global** (one huge ordered series, ``ewm_global``): a distributed
+  segment scan on ``scan.py``'s two-phase machinery (range partitions,
+  one local ``mapInPandas`` pass whose last row per partition is that
+  partition's marker row, a pinned split into data and markers).  With
+  ``d = 1 - alpha`` and ``adjust=True`` semantics,
 
       num_i = sum_{j<=i} d^(i-j) x_j      y_i = num_i / den_i
       den_i = sum_{j<=i} d^(i-j)
 
-  both satisfy the linear recurrence ``s_i = x_i + d * s_{i-1}``.  We
-  range-partition by the ordering key (partitions are then globally ordered
-  and ``spark_partition_id`` is monotone), run the recurrence *locally* per
-  partition from a zero carry, reduce each partition to a 1-row summary
-  ``(last_num, last_den, d^n_rows)``, fold the tiny summary table into
-  exclusive prefix carries (single small task — thousands of rows at 100 TB,
-  never the data itself), broadcast-join the carries back, and patch:
+  both satisfy the linear recurrence ``s_i = x_i + d * s_{i-1}``; the
+  variance adds ``x²``, the squared-weight sum (decaying by ``d²``) and
+  the observation count (not decaying).  Each partition runs the
+  recurrences *locally* from a zero state; a Python fold over the
+  #partitions marker rows (one tiny task — thousands of rows at 100 TB,
+  never the data itself) turns them into the state entering each
+  partition, and a broadcast join patches every row:
 
-      num_i = local_num_i + carry_num * d^(local_pos_i + 1)
+      s_i = local_s_i + carry_s * d^(local_steps_i)
 
-  ``d^(pos+1)`` underflows to 0 deep inside a partition — mathematically
-  negligible exactly when it happens.  Total cost: one range shuffle + one
-  tiny reduction, independent of series length per executor.
+  ``d^k`` underflows to 0 deep inside a partition — mathematically
+  negligible exactly when it happens.  Folding the carries in Spark
+  instead would need the ``d^-n`` closed form ruled out above.
+  ``adjust=False`` is not linear in the state (every observation resets
+  the old weight), but each row is affine in the partition's first
+  blended value; it runs the same skeleton with its own local pass and
+  fold.  Total cost: one range shuffle + one tiny fold, independent of
+  series length per executor.
 
 The reference has no time-series ops at all (SURVEY §2.7: no rolling /
 expanding / ewm); this is part of the Spark-native superset.
@@ -36,15 +44,20 @@ expanding / ewm); this is part of the Spark-native superset.
 
 from __future__ import annotations
 
-from typing import Iterator
+from itertools import accumulate
+from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["ewm_mean_global", "ewm_mean_global_multi", "ewm_mean_grouped",
-           "period_start_col", "period_to_timestamp_col"]
+from .scan import _MARK, _PID, _map_in_pandas, _ranged, _split_scanned
+
+__all__ = ["ewm_global", "ewm_mean_grouped", "period_start_col",
+           "period_to_timestamp_col"]
 
 
 def ewm_mean_grouped(sdf: SparkDF, by: list[str], col: str, order_by: list[str],
@@ -67,126 +80,152 @@ def ewm_mean_grouped(sdf: SparkDF, by: list[str], col: str, order_by: list[str],
     return sdf.groupBy(*by).applyInPandas(_one_group, schema)
 
 
-def ewm_mean_global(sdf: SparkDF, col: str, order_by: str, alpha: float,
-                    name: str = "ewm", num_partitions: int | None = None,
-                    adjust: bool = True) -> SparkDF:
-    """Distributed segment-scan EWM over one globally ordered series.
-    ``order_by`` must be unique (it defines the order).
+def _segment_scan(sdf: SparkDF, cols: list[str], order_by: str,
+                  num_partitions: int | None,
+                  fields: list[tuple[str, T.DataType]],
+                  local: Callable[[Iterator[pd.DataFrame]],
+                                  Iterator[pd.DataFrame]],
+                  fold: Callable[[pd.DataFrame], pd.DataFrame],
+                  carry: list[str],
+                  patch: Callable[[str], Column]) -> SparkDF:
+    """The two-phase scan both global kernels run on.
 
-    Three stages, none of which materializes the series on fewer executors
-    than the input occupies:
+    ``local`` streams one range partition's Arrow batches and adds the
+    state ``fields`` to every row, carrying its state across batches;
+    the partition's last row, repeated as its marker row, is the
+    partition's summary.  ``fold`` gets the #partitions marker rows in
+    partition order (one task) and returns the state entering each
+    partition (``_PID`` plus the double columns ``carry``); a broadcast
+    join brings every row its partition's carry, and ``patch(c)``
+    overwrites each of ``cols`` with its result."""
+    part = _ranged(sdf, [order_by], num_partitions)
+    schema = T.StructType(
+        [T.StructField(f.name, T.DoubleType()) if f.name in cols else f
+         for f in part.schema.fields]
+        + [T.StructField(n, t) for n, t in fields]
+        + [T.StructField(_MARK, T.BooleanType(), False)])
 
-    1. ``repartitionByRange(order_by)`` + local sort → globally ordered
-       partitions; local recurrence per partition via ``mapInPandas``
-       (state carried across Arrow batches inside one partition).
-    2. 1-row-per-partition summary → exclusive prefix carries, folded in a
-       single tiny task (the only sequential step, O(#partitions)).
-    3. Broadcast-join carries back; patch local values with the decayed
-       carry.
+    def _pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        last = None
+        for pdf in local(batches):
+            pdf[_MARK] = False
+            if len(pdf):
+                last = pdf.iloc[[-1]].copy()
+            yield pdf
+        if last is not None:
+            last[_MARK] = True
+            yield last
 
-    ``adjust=False`` (pandas' recursive form) dispatches to the affine
-    segment scan (`_ewm_noadjust_multi`): pandas resets the old weight to
-    1 after every observation, so the state is not linear in (num, den),
-    but each row's value IS affine in the partition's first blended
-    observation — see that function's docstring.
-    Nulls follow pandas ``ignore_na=False``: weights keep decaying, no
-    new observation is added, and the prior mean carries through.
-    """
+    state = [n for n, _ in fields]
+    data, summ = _split_scanned(_map_in_pandas(part, _pass, schema, cols),
+                                state)
+    carry_schema = T.StructType(
+        [T.StructField(_PID, T.IntegerType())]
+        + [T.StructField(n, T.DoubleType()) for n in carry])
+    carries = summ.groupBy().applyInPandas(
+        lambda pdf: fold(pdf.sort_values(_PID)), carry_schema)
+    return (data.join(F.broadcast(carries), _PID, "left")
+            .withColumns({c: patch(c) for c in cols})
+            .drop(_PID, *state, *carry))
+
+
+def ewm_global(sdf: SparkDF, cols: list[str], order_by: str, alpha: float,
+               stat: str = "mean", adjust: bool = True,
+               ignore_na: bool = False, bias: bool = False,
+               num_partitions: int | None = None) -> SparkDF:
+    """pandas ``ewm(alpha, adjust, ignore_na).mean()`` (``stat="mean"``)
+    or ``.var(bias)`` (``stat="var"``, ``adjust=True``) of every column in
+    ``cols`` over the global ``order_by`` order (unique: it defines the
+    order), as ONE distributed segment scan.  Results overwrite ``cols``
+    in place as doubles; the other columns ride through unchanged.
+
+    Each column's state is a few linear components, each with an
+    increment at an observation and a decay per step:
+
+    * mean: ``(x, 1)``, both decaying by ``d = 1 - alpha``;
+    * var: ``(x, x², 1, 1, 1)`` — ``Σw·x, Σw·x², Σw, Σw², nobs`` —
+      decaying by ``d, d, d, d², 1``; the debiased variance is then
+      ``(Σw)² ⁄ ((Σw)² − Σw²) · (Σw·x² ⁄ Σw − mean²)``, null before the
+      second observation.
+
+    Every row is a step (pandas ``ignore_na=False``: a null row decays
+    the weights and adds nothing, so the prior mean carries through);
+    with ``ignore_na=True`` only observations are steps, so a null row
+    changes nothing.  ``adjust=False`` runs the affine scan
+    (``_ewm_affine``)."""
+    if stat not in ("mean", "var"):
+        raise ValueError(f"ewm_global stat must be mean or var, got {stat!r}")
     if not adjust:
-        staged = sdf.withColumn(name, F.col(col).cast("double"))
-        return _ewm_noadjust_multi(staged, [name], order_by, alpha,
-                                   num_partitions)
+        if stat != "mean":
+            raise NotImplementedError("ewm var needs adjust=True")
+        return _ewm_affine(sdf, cols, order_by, alpha, ignore_na,
+                           num_partitions)
     d = 1.0 - alpha
-    n_parts = num_partitions or sdf.sparkSession.sparkContext.defaultParallelism
-    part = (sdf.repartitionByRange(n_parts, F.col(order_by))
-            .sortWithinPartitions(order_by)
-            .withColumn("__pid", F.spark_partition_id()))
+    # (power of x added at an observation, decay per step) per component
+    comps = ([(1, d), (0, d)] if stat == "mean" else
+             [(1, d), (2, d), (0, d), (0, d * d), (0, 1.0)])
+    s_ = [[f"__s{j}_{c}__" for j in range(len(comps))] for c in cols]
+    g_ = [[f"__g{j}_{c}__" for j in range(len(comps))] for c in cols]
+    k_ = [f"__k_{c}__" for c in cols]
+    carry = [n for gi in g_ for n in gi]
 
-    fields = list(part.schema.fields) + [
-        T.StructField("__num", T.DoubleType()),
-        T.StructField("__den", T.DoubleType()),
-        T.StructField("__pos", T.LongType()),
-    ]
-    local_schema = T.StructType(fields)
-
-    def _local_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # mapInPandas sees ONE partition as a stream of Arrow batches:
-        # carry the recurrence state across batches.
-        num = 0.0
-        den = 0.0
-        pos = -1
+    def local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        state = [[0.0] * len(comps) for _ in cols]
+        steps = [0] * len(cols)
         for pdf in batches:
-            x = pdf[col].to_numpy(dtype="float64")
-            nums = [0.0] * len(x)
-            dens = [0.0] * len(x)
-            positions = [0] * len(x)
-            for i, xi in enumerate(x):
-                pos += 1
-                if xi == xi:          # non-NaN observation
-                    num = xi + d * num
-                    den = 1.0 + d * den
-                else:                 # pandas ignore_na=False: weights
-                    num = d * num     # keep decaying, no new observation;
-                    den = d * den     # num/den carries the prior mean
-                nums[i] = num
-                dens[i] = den
-                positions[i] = pos
             pdf = pdf.copy()
-            pdf["__num"] = nums
-            pdf["__den"] = dens
-            pdf["__pos"] = positions
+            for i, c in enumerate(cols):
+                x = pdf[c].to_numpy(dtype="float64")
+                obs = ~np.isnan(x)
+                step = obs if ignore_na else np.ones_like(obs)
+                pdf[k_[i]] = steps[i] + np.cumsum(step)
+                steps[i] += int(step.sum())
+                for j, (p, dk) in enumerate(comps):
+                    run = list(accumulate(
+                        zip(np.where(obs, x ** p, 0.0).tolist(),
+                            np.where(step, dk, 1.0).tolist()),
+                        lambda s, inc: inc[0] + inc[1] * s,
+                        initial=state[i][j]))
+                    state[i][j] = run[-1]
+                    pdf[s_[i][j]] = run[1:]
             yield pdf
 
-    # read twice (summary + final join): persist so the scan runs once
-    local = part.mapInPandas(_local_scan, local_schema).persist()
+    def fold(summ: pd.DataFrame) -> pd.DataFrame:
+        g = [[0.0] * len(comps) for _ in cols]
+        rows = []
+        for r in summ.to_dict("records"):
+            rows.append([r[_PID], *[v for gi in g for v in gi]])
+            for i in range(len(cols)):
+                for j, (_, dk) in enumerate(comps):
+                    g[i][j] = r[s_[i][j]] + dk ** r[k_[i]] * g[i][j]
+        return pd.DataFrame(rows, columns=[_PID, *carry])
 
-    # one row per partition: final state + total decay d^n
-    summary = (local.groupBy("__pid")
-               .agg(F.max_by("__num", "__pos").alias("last_num"),
-                    F.max_by("__den", "__pos").alias("last_den"),
-                    F.pow(F.lit(d), F.count(F.lit(1))).alias("decay")))
+    def patch(c: str) -> Column:
+        i = cols.index(c)
+        t = [F.col(s_[i][j]) + F.col(g_[i][j])
+             * F.pow(F.lit(dk), F.col(k_[i]))
+             for j, (_, dk) in enumerate(comps)]
+        if stat == "mean":
+            return F.when(t[1] > 0, t[0] / t[1])
+        sx, sx2, sw, sw2, nobs = t
+        mean = sx / sw
+        var = sx2 / sw - mean * mean
+        if not bias:
+            var = var * (sw * sw) / (sw * sw - sw2)
+        return F.when(nobs >= 2, F.greatest(var, F.lit(0.0)))
 
-    carry_schema = T.StructType([
-        T.StructField("__pid", T.IntegerType()),
-        T.StructField("carry_num", T.DoubleType()),
-        T.StructField("carry_den", T.DoubleType()),
-    ])
-
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # exclusive prefix over the (tiny) partition summaries:
-        # G_p = last_p + decay_p * G_{p-1}; carry for p is G_{p-1}
-        pdf = pdf.sort_values("__pid")
-        carries, g_num, g_den = [], 0.0, 0.0
-        for _, row in pdf.iterrows():
-            carries.append((int(row["__pid"]), g_num, g_den))
-            g_num = row["last_num"] + row["decay"] * g_num
-            g_den = row["last_den"] + row["decay"] * g_den
-        return pd.DataFrame(carries,
-                            columns=["__pid", "carry_num", "carry_den"])
-
-    carries = (summary.withColumn("__one", F.lit(1)).groupBy("__one")
-               .applyInPandas(lambda pdf: _fold(pdf), carry_schema))
-
-    scale = F.pow(F.lit(d), F.col("__pos") + 1)
-    num_t = F.col("__num") + F.coalesce(F.col("carry_num"), F.lit(0.0)) * scale
-    den_t = F.col("__den") + F.coalesce(F.col("carry_den"), F.lit(0.0)) * scale
-    out = (local.join(F.broadcast(carries), "__pid", "left")
-           .withColumn(name,
-                       # den == 0 ⇔ no observation seen yet (leading NaNs)
-                       F.when(den_t > 0, num_t / den_t))
-           .drop("__pid", "__num", "__den", "__pos",
-                 "carry_num", "carry_den"))
-    return out
+    fields = [(n, T.DoubleType()) for si in s_ for n in si]
+    fields += [(n, T.LongType()) for n in k_]
+    return _segment_scan(sdf, cols, order_by, num_partitions, fields, local,
+                         fold, carry, patch)
 
 
-def _ewm_noadjust_multi(sdf: SparkDF, cols: list[str], order_by: str,
-                        alpha: float,
-                        num_partitions: int | None = None) -> SparkDF:
-    """pandas ``ewm(alpha, adjust=False).mean()`` (ignore_na=False) as a
-    distributed segment scan, overwriting ``cols`` in place.
+def _ewm_affine(sdf: SparkDF, cols: list[str], order_by: str, alpha: float,
+                ignore_na: bool, num_partitions: int | None) -> SparkDF:
+    """pandas ``ewm(alpha, adjust=False).mean()`` as a segment scan.
 
     pandas' recursion (per its Cython kernel) keeps a carried mean y and
-    an old-weight w: every row after the first observation decays
+    an old-weight w: every step after the first observation decays
     ``w *= 1-α``; an observation then blends ``y = (w·y + α·x)/(w + α)``
     and RESETS ``w = 1``.  The reset makes (num, den) non-linear, but
     within a partition every row's value is AFFINE in y1 — the blended
@@ -197,139 +236,91 @@ def _ewm_noadjust_multi(sdf: SparkDF, cols: list[str], order_by: str,
     with (A, B) computed locally (A multiplies by w/(w+α) at each later
     observation; w evolves locally because it resets at each obs).  Only
     y1 depends on upstream state, through the carried (y_in, w_in):
-    ``w1 = w_in · d^(p_first+1)``, ``y1 = (w1·y_in + α·x_first)/(w1+α)``
-    — or ``y1 = x_first`` when no observation precedes the partition.
-    The tiny driver fold walks partition summaries computing (y_in, y1)
-    per partition; a broadcast join patches rows.  Same cost envelope as
-    the adjusted scan: one range shuffle + one O(#partitions) fold.
-    Rows before the partition's first observation output the carried
-    mean y_in (null before the global first observation).
+    ``w1 = w_in · d^(k_first+1)`` (``k_first`` steps precede the first
+    observation), ``y1 = (w1·y_in + α·x_first)/(w1+α)`` — or
+    ``y1 = x_first`` when no observation precedes the partition.  The
+    fold walks the marker rows computing (y_in, y1) per partition.  Rows
+    before the partition's first observation output the carried mean
+    y_in (null before the global first observation).  Steps are as in
+    ``ewm_global``: every row, or only observations with ``ignore_na``.
     """
     d = 1.0 - alpha
-    n_parts = num_partitions or sdf.sparkSession.sparkContext.defaultParallelism
-    part = (sdf.repartitionByRange(n_parts, F.col(order_by))
-            .sortWithinPartitions(order_by)
-            .withColumn("__pid", F.spark_partition_id()))
+    kinds = {"a": T.DoubleType(), "b": T.DoubleType(),
+             "bf": T.BooleanType(), "fp": T.LongType(),
+             "fx": T.DoubleType(), "w": T.DoubleType(), "k": T.LongType()}
 
-    fields = [T.StructField(f.name, T.DoubleType() if f.name in cols
-                            else f.dataType, True)
-              for f in part.schema.fields]
-    for c in cols:
-        fields += [T.StructField(f"__a_{c}", T.DoubleType()),
-                   T.StructField(f"__b_{c}", T.DoubleType()),
-                   T.StructField(f"__bf_{c}", T.BooleanType()),
-                   # per-partition constants replicated per row; reduced
-                   # via max_by(__pos) in the summary
-                   T.StructField(f"__fp_{c}", T.LongType()),
-                   T.StructField(f"__fx_{c}", T.DoubleType()),
-                   T.StructField(f"__w_{c}", T.DoubleType())]
-    fields.append(T.StructField("__pos", T.LongType()))
-    local_schema = T.StructType(fields)
-    names = [f.name for f in fields]
+    def col(v: str, c: str) -> str:
+        return f"__{v}_{c}__"
 
-    def _local_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per column: (a, b) affine coeffs vs y1, w old-weight,
-        # first-obs (pos, x); state persists across Arrow batches
-        st = {c: {"a": 1.0, "b": 0.0, "w": 1.0,
-                  "fp": -1, "fx": float("nan")} for c in cols}
-        pos = -1
+    def local(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # per column: (a, b) affine coeffs vs y1, w old-weight, the
+        # first observation's step index and value, and the step count
+        st = {c: {"a": 1.0, "b": 0.0, "w": 1.0, "fp": -1,
+                  "fx": float("nan"), "k": 0} for c in cols}
         for pdf in batches:
             pdf = pdf.copy()
             n = len(pdf)
             for c in cols:
-                x = pdf[c].to_numpy(dtype="float64")
                 s = st[c]
-                a_l = [0.0] * n
-                b_l = [0.0] * n
-                bf_l = [False] * n
-                for i in range(n):
-                    xi = x[i]
+                a_l, b_l, bf_l = [0.0] * n, [0.0] * n, [False] * n
+                for i, xi in enumerate(pdf[c].to_numpy(dtype="float64")
+                                       .tolist()):
+                    obs = xi == xi
                     if s["fp"] < 0:
-                        if xi == xi:
-                            s["fp"], s["fx"] = pos + 1 + i, float(xi)
-                            s["a"], s["b"], s["w"] = 1.0, 0.0, 1.0
-                            bf_l[i] = False
-                        else:
-                            bf_l[i] = True
-                    else:
+                        if obs:
+                            s["fp"], s["fx"] = s["k"], xi
+                        bf_l[i] = not obs
+                    elif obs or not ignore_na:
                         s["w"] *= d
-                        if xi == xi:
+                        if obs:
                             denom = s["w"] + alpha
-                            s["a"] = s["a"] * (s["w"] / denom)
+                            s["a"] *= s["w"] / denom
                             s["b"] = (s["w"] * s["b"] + alpha * xi) / denom
                             s["w"] = 1.0
-                    a_l[i] = s["a"]
-                    b_l[i] = s["b"]
-                pdf[f"__a_{c}"] = a_l
-                pdf[f"__b_{c}"] = b_l
-                pdf[f"__bf_{c}"] = bf_l
-                pdf[f"__fp_{c}"] = s["fp"]
-                pdf[f"__fx_{c}"] = s["fx"]
-                pdf[f"__w_{c}"] = s["w"]
-            pdf["__pos"] = range(pos + 1, pos + 1 + n)
-            pos += n
-            yield pdf[names]
+                    if obs or not ignore_na:
+                        s["k"] += 1
+                    a_l[i], b_l[i] = s["a"], s["b"]
+                pdf[col("a", c)], pdf[col("b", c)] = a_l, b_l
+                pdf[col("bf", c)] = bf_l
+                for v in ("fp", "fx", "w", "k"):
+                    pdf[col(v, c)] = s[v]
+            yield pdf
 
-    local = part.mapInPandas(_local_scan, local_schema).persist()
-
-    summary = (local.groupBy("__pid")
-               .agg(F.count(F.lit(1)).alias("n_rows"),
-                    *[a for c in cols for a in
-                      (F.max_by(f"__a_{c}", "__pos").alias(f"la_{c}"),
-                       F.max_by(f"__b_{c}", "__pos").alias(f"lb_{c}"),
-                       F.max_by(f"__fp_{c}", "__pos").alias(f"fp_{c}"),
-                       F.max_by(f"__fx_{c}", "__pos").alias(f"fx_{c}"),
-                       F.max_by(f"__w_{c}", "__pos").alias(f"lw_{c}"))]))
-
-    carry_fields = [T.StructField("__pid", T.IntegerType())]
-    for c in cols:
-        carry_fields += [T.StructField(f"cy_{c}", T.DoubleType()),
-                         T.StructField(f"cy1_{c}", T.DoubleType())]
-    carry_schema = T.StructType(carry_fields)
-
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__pid")
+    def fold(summ: pd.DataFrame) -> pd.DataFrame:
         g = {c: (float("nan"), 1.0) for c in cols}   # (y, w) entering
         rows = []
-        for _, row in pdf.iterrows():
-            r = {"__pid": int(row["__pid"])}
+        for r in summ.to_dict("records"):
+            row = [r[_PID]]
             for c in cols:
                 y_in, w_in = g[c]
-                r[f"cy_{c}"] = y_in
-                fp = int(row[f"fp_{c}"])
-                if fp >= 0:                       # partition observed
+                y1 = float("nan")
+                if r[col("fp", c)] >= 0:          # partition observed
+                    fx = r[col("fx", c)]
                     if y_in != y_in:              # global first obs here
-                        y1 = float(row[f"fx_{c}"])
+                        y1 = fx
                     else:
-                        w1 = w_in * d ** (fp + 1)
-                        y1 = ((w1 * y_in + alpha * row[f"fx_{c}"])
-                              / (w1 + alpha))
-                    r[f"cy1_{c}"] = y1
-                    g[c] = (row[f"la_{c}"] * y1 + row[f"lb_{c}"],
-                            float(row[f"lw_{c}"]))
+                        w1 = w_in * d ** (r[col("fp", c)] + 1)
+                        y1 = (w1 * y_in + alpha * fx) / (w1 + alpha)
+                    g[c] = (r[col("a", c)] * y1 + r[col("b", c)],
+                            r[col("w", c)])
                 else:
-                    r[f"cy1_{c}"] = float("nan")
-                    g[c] = (y_in, w_in * d ** int(row["n_rows"]))
-            rows.append(r)
-        return pd.DataFrame(rows, columns=[f.name for f in carry_fields])
+                    g[c] = (y_in, w_in * d ** r[col("k", c)])
+                row += [y_in, y1]
+            rows.append(row)
+        return pd.DataFrame(rows, columns=[_PID, *carry])
 
-    carries = (summary.withColumn("__one", F.lit(1)).groupBy("__one")
-               .applyInPandas(lambda pdf: _fold(pdf), carry_schema))
+    def patch(c: str) -> Column:
+        cy = F.col(col("cy", c))
+        # before the first local observation: the carried mean (NaN,
+        # i.e. null, before the global first observation)
+        return (F.when(F.col(col("bf", c)), F.when(cy == cy, cy))
+                .otherwise(F.col(col("a", c)) * F.col(col("cy1", c))
+                           + F.col(col("b", c))))
 
-    out = local.join(F.broadcast(carries), "__pid", "left")
-    updates, drop = {}, ["__pid", "__pos"]
-    for c in cols:
-        val = F.when(F.col(f"__bf_{c}"),
-                     # before the first local obs → carried mean (NaN →
-                     # null before the global first observation)
-                     F.when(F.col(f"cy_{c}") == F.col(f"cy_{c}"),
-                            F.col(f"cy_{c}"))) \
-            .otherwise(F.col(f"__a_{c}") * F.col(f"cy1_{c}")
-                       + F.col(f"__b_{c}"))
-        updates[c] = val
-        drop += [f"__a_{c}", f"__b_{c}", f"__bf_{c}", f"__fp_{c}",
-                 f"__fx_{c}", f"__w_{c}", f"cy_{c}", f"cy1_{c}"]
-    return out.withColumns(updates).drop(*drop)
+    carry = [col(v, c) for c in cols for v in ("cy", "cy1")]
+    fields = [(col(v, c), t) for c in cols for v, t in kinds.items()]
+    return _segment_scan(sdf, cols, order_by, num_partitions, fields, local,
+                         fold, carry, patch)
 
 
 # --------------------------------------------------------------------------
@@ -417,238 +408,6 @@ def period_to_timestamp_col(col, freq: str, how: str = "start"):
         return (col + F.expr(f"INTERVAL {interval}")
                 - F.expr("INTERVAL 1 MICROSECOND"))
     raise ValueError(f"how must be 'start' or 'end', got {how!r}")
-
-
-def ewm_var_global(sdf: SparkDF, col: str, order_by: str, alpha: float,
-                   name: str = "ewm_var", bias: bool = False,
-                   num_partitions: int | None = None) -> SparkDF:
-    """Distributed ``ewm(adjust=True).var()`` — same three-stage segment
-    scan as :func:`ewm_mean_global`, with a 5-tuple linear state
-    ``(Σw·x, Σw·x², Σw, Σw², nobs)``: w decays by d = 1−α per row, w² by
-    d².  pandas' debiased variance is then a pure column expression:
-    ``(Σw² ⁄ ((Σw)² − Σw²)) · (Σw·x² − (Σw·x)²/Σw)`` (bias=False), null
-    until the second observation.  Nulls follow pandas ``ignore_na=False``
-    (weights decay, no observation added)."""
-    d = 1.0 - alpha
-    d2 = d * d
-    n_parts = num_partitions or sdf.sparkSession.sparkContext.defaultParallelism
-    part = (sdf.repartitionByRange(n_parts, F.col(order_by))
-            .sortWithinPartitions(order_by)
-            .withColumn("__pid", F.spark_partition_id()))
-
-    state_cols = ["__sx", "__sx2", "__sw", "__sw2", "__nob"]
-    fields = list(part.schema.fields) + [
-        T.StructField(c, T.DoubleType()) for c in state_cols
-    ] + [T.StructField("__pos", T.LongType())]
-    local_schema = T.StructType(fields)
-
-    def _local_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sx = sx2 = sw = sw2 = nob = 0.0
-        pos = -1
-        for pdf in batches:
-            x = pdf[col].to_numpy(dtype="float64")
-            n = len(x)
-            outs = {c: [0.0] * n for c in state_cols}
-            positions = [0] * n
-            for i, xi in enumerate(x):
-                pos += 1
-                if xi == xi:
-                    sx = xi + d * sx
-                    sx2 = xi * xi + d * sx2
-                    sw = 1.0 + d * sw
-                    sw2 = 1.0 + d2 * sw2
-                    nob += 1.0
-                else:
-                    sx, sx2, sw, sw2 = d * sx, d * sx2, d * sw, d2 * sw2
-                outs["__sx"][i], outs["__sx2"][i] = sx, sx2
-                outs["__sw"][i], outs["__sw2"][i] = sw, sw2
-                outs["__nob"][i] = nob
-                positions[i] = pos
-            pdf = pdf.copy()
-            for c in state_cols:
-                pdf[c] = outs[c]
-            pdf["__pos"] = positions
-            yield pdf
-
-    local = part.mapInPandas(_local_scan, local_schema).persist()
-
-    summary = (local.groupBy("__pid")
-               .agg(*[F.max_by(c, "__pos").alias("last" + c)
-                      for c in state_cols],
-                    F.pow(F.lit(d), F.count(F.lit(1))).alias("decay"),
-                    F.pow(F.lit(d2), F.count(F.lit(1))).alias("decay2")))
-
-    carry_schema = T.StructType(
-        [T.StructField("__pid", T.IntegerType())] +
-        [T.StructField("carry" + c, T.DoubleType()) for c in state_cols])
-
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__pid")
-        carries = []
-        g = {c: 0.0 for c in state_cols}
-        for _, row in pdf.iterrows():
-            carries.append((int(row["__pid"]), *[g[c] for c in state_cols]))
-            dk, dk2 = row["decay"], row["decay2"]
-            g["__sx"] = row["last__sx"] + dk * g["__sx"]
-            g["__sx2"] = row["last__sx2"] + dk * g["__sx2"]
-            g["__sw"] = row["last__sw"] + dk * g["__sw"]
-            g["__sw2"] = row["last__sw2"] + dk2 * g["__sw2"]
-            g["__nob"] = row["last__nob"] + g["__nob"]
-        return pd.DataFrame(
-            carries, columns=["__pid"] + ["carry" + c for c in state_cols])
-
-    carries = (summary.withColumn("__one", F.lit(1)).groupBy("__one")
-               .applyInPandas(lambda pdf: _fold(pdf), carry_schema))
-
-    scale = F.pow(F.lit(d), F.col("__pos") + 1)
-    scale2 = F.pow(F.lit(d2), F.col("__pos") + 1)
-    cz = lambda c: F.coalesce(F.col("carry" + c), F.lit(0.0))  # noqa: E731
-    sx_t = F.col("__sx") + cz("__sx") * scale
-    sx2_t = F.col("__sx2") + cz("__sx2") * scale
-    sw_t = F.col("__sw") + cz("__sw") * scale
-    sw2_t = F.col("__sw2") + cz("__sw2") * scale2
-    nob_t = F.col("__nob") + cz("__nob")
-    mean = sx_t / sw_t
-    biased = sx2_t / sw_t - mean * mean
-    if bias:
-        var = biased
-    else:
-        var = biased * (sw_t * sw_t) / (sw_t * sw_t - sw2_t)
-    out = (local.join(F.broadcast(carries), "__pid", "left")
-           .withColumn(name,
-                       F.when(nob_t >= 2, F.greatest(var, F.lit(0.0))))
-           .drop("__pid", *state_cols, "__pos",
-                 *["carry" + c for c in state_cols]))
-    return out
-
-
-def ewm_mean_ignore_na(sdf: SparkDF, cols: list[str], order_by: str,
-                       alpha: float, adjust: bool = True,
-                       num_partitions: int | None = None) -> SparkDF:
-    """pandas ``ewm(..., ignore_na=True).mean()``: NaN rows neither decay
-    the weights nor add observations — the EWM runs over each column's
-    NON-NULL subsequence, and gap rows output the prior mean.
-
-    Per column: split on null, run the shared segment-scan kernel over
-    the observation subsequence (which stays range-partitioned — no
-    single-task stage), union the gap rows back with a null result, and
-    one ``last_scan`` forward-fill patches them with the prior mean.
-    Columns with distinct null patterns cannot share one scan (their
-    observation clocks differ), so this is one pass per column — the
-    ``ignore_na=False`` default keeps the shared multi-column pass."""
-    from .scan import last_scan
-    out = sdf
-    for c in cols:
-        is_f = isinstance(out.schema[c].dataType, (T.DoubleType, T.FloatType))
-        null_c = F.col(c).isNull() | (F.isnan(c) if is_f else F.lit(False))
-        obs = out.filter(~null_c)
-        gaps = out.filter(null_c).withColumn(c, F.lit(None).cast("double"))
-        scanned = ewm_mean_global(obs, c, order_by, alpha, name=c,
-                                  num_partitions=num_partitions,
-                                  adjust=adjust)
-        out = last_scan(scanned.unionByName(gaps), [c], [order_by],
-                        num_partitions=num_partitions)
-    return out
-
-
-def ewm_mean_global_multi(sdf: SparkDF, cols: list[str], order_by: str,
-                          alpha: float,
-                          num_partitions: int | None = None,
-                          adjust: bool = True) -> SparkDF:
-    """``ewm_mean_global`` for SEVERAL columns in ONE ranged pass: the
-    per-partition recurrence carries (num, den) state per column through
-    the same Arrow stream, the partition-summary fold carries one
-    (num, den) pair per column, and a single broadcast join patches all
-    columns at once.  Results overwrite ``cols`` in place.
-    ``adjust=False`` dispatches to the affine scan
-    (``_ewm_noadjust_multi`` — see its docstring)."""
-    if not adjust:
-        return _ewm_noadjust_multi(sdf, cols, order_by, alpha,
-                                   num_partitions)
-    d = 1.0 - alpha
-    n_parts = num_partitions or sdf.sparkSession.sparkContext.defaultParallelism
-    part = (sdf.repartitionByRange(n_parts, F.col(order_by))
-            .sortWithinPartitions(order_by)
-            .withColumn("__pid", F.spark_partition_id()))
-
-    fields = [T.StructField(f.name, T.DoubleType() if f.name in cols
-                            else f.dataType, True)
-              for f in part.schema.fields]
-    for c in cols:
-        fields += [T.StructField(f"__num_{c}", T.DoubleType()),
-                   T.StructField(f"__den_{c}", T.DoubleType())]
-    fields.append(T.StructField("__pos", T.LongType()))
-    local_schema = T.StructType(fields)
-    names = [f.name for f in fields]
-
-    def _local_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = {c: (0.0, 0.0) for c in cols}
-        pos = -1
-        for pdf in batches:
-            pdf = pdf.copy()
-            n = len(pdf)
-            for c in cols:
-                x = pdf[c].to_numpy(dtype="float64")
-                num, den = state[c]
-                nums, dens = [0.0] * n, [0.0] * n
-                for i in range(n):
-                    xi = x[i]
-                    if xi == xi:      # non-NaN (pandas ignore_na=False)
-                        num = xi + d * num
-                        den = 1.0 + d * den
-                    else:
-                        num = d * num
-                        den = d * den
-                    nums[i] = num
-                    dens[i] = den
-                state[c] = (num, den)
-                pdf[f"__num_{c}"] = nums
-                pdf[f"__den_{c}"] = dens
-            pdf["__pos"] = range(pos + 1, pos + 1 + n)
-            pos += n
-            yield pdf[names]
-
-    local = part.mapInPandas(_local_scan, local_schema).persist()
-    summary = (local.groupBy("__pid")
-               .agg(F.pow(F.lit(d), F.count(F.lit(1))).alias("decay"),
-                    *[a for c in cols for a in
-                      (F.max_by(f"__num_{c}", "__pos").alias(f"ln_{c}"),
-                       F.max_by(f"__den_{c}", "__pos").alias(f"ld_{c}"))]))
-
-    carry_fields = [T.StructField("__pid", T.IntegerType())]
-    for c in cols:
-        carry_fields += [T.StructField(f"cn_{c}", T.DoubleType()),
-                         T.StructField(f"cd_{c}", T.DoubleType())]
-    carry_schema = T.StructType(carry_fields)
-
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__pid")
-        g = {c: (0.0, 0.0) for c in cols}
-        rows = []
-        for _, row in pdf.iterrows():
-            r = {"__pid": int(row["__pid"])}
-            for c in cols:
-                gn, gd = g[c]
-                r[f"cn_{c}"], r[f"cd_{c}"] = gn, gd
-                g[c] = (row[f"ln_{c}"] + row["decay"] * gn,
-                        row[f"ld_{c}"] + row["decay"] * gd)
-            rows.append(r)
-        return pd.DataFrame(rows, columns=[f.name for f in carry_fields])
-
-    carries = (summary.withColumn("__one", F.lit(1)).groupBy("__one")
-               .applyInPandas(lambda pdf: _fold(pdf), carry_schema))
-
-    scale = F.pow(F.lit(d), F.col("__pos") + 1)
-    out = local.join(F.broadcast(carries), "__pid", "left")
-    updates, drop = {}, ["__pid", "__pos"]
-    for c in cols:
-        num_t = (F.col(f"__num_{c}")
-                 + F.coalesce(F.col(f"cn_{c}"), F.lit(0.0)) * scale)
-        den_t = (F.col(f"__den_{c}")
-                 + F.coalesce(F.col(f"cd_{c}"), F.lit(0.0)) * scale)
-        updates[c] = F.when(den_t > 0, num_t / den_t)
-        drop += [f"__num_{c}", f"__den_{c}", f"cn_{c}", f"cd_{c}"]
-    return out.withColumns(updates).drop(*drop)
 
 
 def time_rolling(sdf: SparkDF, rid_cols: list[str], ts_col: str,

@@ -12,8 +12,7 @@ import pandas as pd
 import pytest
 
 from pandas_expr_spark import from_pandas
-from pandas_expr_spark.functions.timeseries import (ewm_mean_global,
-                                                    ewm_mean_global_multi)
+from pandas_expr_spark.functions.timeseries import ewm_global
 
 
 def _close(got, want):
@@ -60,9 +59,8 @@ class TestEwmNulls:
                 .ewm(alpha=0.5, adjust=True).mean().to_numpy())
         sdf = spark.createDataFrame(
             [(i, v) for i, v in enumerate(self.VALS)], "i long, x double")
-        out = ewm_mean_global(sdf, "x", "i", 0.5, name="y",
-                              num_partitions=nparts)
-        got = [np.nan if r["y"] is None else r["y"]
+        out = ewm_global(sdf, ["x"], "i", 0.5, num_partitions=nparts)
+        got = [np.nan if r["x"] is None else r["x"]
                for r in out.orderBy("i").collect()]
         _close(got, want)
 
@@ -72,8 +70,8 @@ class TestEwmNulls:
                 .ewm(alpha=0.3, adjust=True).mean().to_numpy())
         sdf = spark.createDataFrame([(i, v) for i, v in enumerate(vals)],
                                     "i long, x double")
-        out = ewm_mean_global(sdf, "x", "i", 0.3, name="y", num_partitions=2)
-        got = [np.nan if r["y"] is None else r["y"]
+        out = ewm_global(sdf, ["x"], "i", 0.3, num_partitions=2)
+        got = [np.nan if r["x"] is None else r["x"]
                for r in out.orderBy("i").collect()]
         _close(got, want)
 
@@ -83,9 +81,9 @@ class TestEwmNulls:
                 .ewm(alpha=0.4, adjust=False).mean().to_numpy())
         sdf = spark.createDataFrame(
             [(i, v) for i, v in enumerate(self.VALS)], "i long, x double")
-        out = ewm_mean_global(sdf, "x", "i", 0.4, name="y",
-                              num_partitions=nparts, adjust=False)
-        got = [np.nan if r["y"] is None else r["y"]
+        out = ewm_global(sdf, ["x"], "i", 0.4, adjust=False,
+                         num_partitions=nparts)
+        got = [np.nan if r["x"] is None else r["x"]
                for r in out.orderBy("i").collect()]
         _close(got, want)
 
@@ -104,8 +102,8 @@ class TestEwmNulls:
         pdfm = pd.DataFrame({"i": range(8),
                              "a": [1.0, None, 3.0, 2.0, None, 6.0, 1.0, None],
                              "b": [None, 5.0, 1.0, None, 2.0, 2.0, None, 8.0]})
-        out = ewm_mean_global_multi(spark.createDataFrame(pdfm), ["a", "b"],
-                                    "i", 0.4, num_partitions=3)
+        out = ewm_global(spark.createDataFrame(pdfm), ["a", "b"], "i", 0.4,
+                         num_partitions=3)
         got = out.orderBy("i").toPandas()
         for c in ("a", "b"):
             _close(got[c].to_numpy(),
@@ -127,11 +125,114 @@ class TestEwmRandomized:
                 .ewm(alpha=alpha, adjust=adjust).mean().to_numpy())
         sdf = spark.createDataFrame([(i, v) for i, v in enumerate(data)],
                                     "i long, x double")
-        out = ewm_mean_global(sdf, "x", "i", alpha, name="y",
-                              num_partitions=7, adjust=adjust)
-        got = [np.nan if r["y"] is None else r["y"]
+        out = ewm_global(sdf, ["x"], "i", alpha, adjust=adjust,
+                         num_partitions=7)
+        got = [np.nan if r["x"] is None else r["x"]
                for r in out.orderBy("i").collect()]
         _close(got, want)
+
+    @pytest.mark.parametrize("stat,adjust,ignore_na",
+                             [("mean", True, True), ("mean", False, True),
+                              ("var", True, False)])
+    @pytest.mark.parametrize("nparts", [1, 3, 16])
+    def test_one_scan_many_columns(self, spark, stat, adjust, ignore_na,
+                                   nparts):
+        # columns with different null patterns share one scan: each
+        # keeps its own step count (ignore_na) and state components
+        rng = np.random.RandomState(nparts)
+        pdf = pd.DataFrame({"i": range(120), "a": rng.randn(120),
+                            "b": rng.randn(120)})
+        pdf.loc[rng.rand(120) < 0.3, "a"] = np.nan
+        pdf.loc[:3, "b"] = np.nan
+        out = ewm_global(spark.createDataFrame(pdf), ["a", "b"], "i", 0.3,
+                         stat, adjust, ignore_na,
+                         num_partitions=nparts).orderBy("i").toPandas()
+        for c in ("a", "b"):
+            e = pdf[c].ewm(alpha=0.3, adjust=adjust, ignore_na=ignore_na)
+            _close(out[c], e.mean() if stat == "mean" else e.var())
+
+
+class TestEwmSharedScan:
+    """The global EWM runs on ``scan.py``'s two-phase scan: it pins its
+    scanned table with the scan family's checkpoint (no cached plan is
+    left behind), carries untouched columns through exactly, and runs
+    one scan for all columns."""
+
+    PDF = pd.DataFrame({"i": range(40),
+                        "a": [float(i % 7) if i % 3 else None
+                              for i in range(40)],
+                        "b": [float(i * i % 11) for i in range(40)],
+                        "c": [float(i % 4) for i in range(40)]})
+
+    @pytest.mark.parametrize("op", [
+        lambda df: df.ewm(alpha=0.3).mean(),
+        lambda df: df.ewm(alpha=0.3, adjust=False).mean(),
+        lambda df: df.ewm(alpha=0.3, ignore_na=True).mean(),
+        lambda df: df.ewm(alpha=0.3).var(),
+        lambda df: df.ewm(alpha=0.3).std(),
+        lambda df: df.a.ewm(alpha=0.3).mean(),
+        lambda df: df.reset_index().with_ewm("e", "a", order_by="i",
+                                             alpha=0.3),
+    ], ids=["mean", "mean_noadjust", "mean_ignore_na", "var", "std",
+            "series_mean", "with_ewm"])
+    def test_leaves_no_cached_plan(self, spark, op):
+        spark.catalog.clearCache()
+        op(from_pandas(self.PDF).set_index("i")).compute()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    BIG = 2 ** 53 + 1
+
+    def _big_sdf(self, spark):
+        return spark.createDataFrame(
+            [(i, float(i % 5), self.BIG if i % 2 else None)
+             for i in range(30)], "i long, x double, z long")
+
+    def _assert_exact(self, rows):
+        assert len(rows) == 30
+        for r in rows:
+            assert r["z"] == (self.BIG if r["i"] % 2 else None)
+
+    def test_bigint_exact_through_with_ewm(self, spark):
+        # read on the plan: compute() presents a nullable bigint as float64
+        pdf = pd.DataFrame({
+            "i": range(30), "x": [float(i % 5) for i in range(30)],
+            "z": pd.array([self.BIG if i % 2 else None for i in range(30)],
+                          dtype="Int64")})
+        out = from_pandas(pdf).with_ewm("e", "x", order_by="i", alpha=0.4,
+                                        num_partitions=3)
+        self._assert_exact(out._sdf.select("i", "z").collect())
+
+    @pytest.mark.parametrize("kw", [{}, {"adjust": False},
+                                    {"ignore_na": True}, {"stat": "var"}],
+                             ids=["mean", "noadjust", "ignore_na", "var"])
+    def test_bigint_exact_through_kernel(self, spark, kw):
+        out = ewm_global(self._big_sdf(spark), ["x"], "i", 0.4,
+                         num_partitions=3, **kw)
+        self._assert_exact(out.collect())
+
+    def test_var_columns_share_one_scan(self, spark, jobs):
+        def total(cols):
+            df = from_pandas(self.PDF.fillna(0.0)).set_index("i")[cols]
+            res, build = jobs(lambda: df.ewm(alpha=0.3).var())
+            _, action = jobs(res.compute)
+            return build + action
+        assert total(["a", "b", "c"]) == total(["a"])
+
+    def test_no_hand_written_scan(self):
+        # the range partitioning, local pass and pinning belong to
+        # scan.py; timeseries.py keeps only its grouped applyInPandas
+        # and the one-group fold
+        import ast
+        import inspect
+
+        from pandas_expr_spark.functions import timeseries
+        banned = {"persist", "repartitionByRange", "mapInPandas",
+                  "spark_partition_id"}
+        called = {n.func.attr if isinstance(n.func, ast.Attribute)
+                  else getattr(n.func, "id", None)
+                  for n in ast.walk(ast.parse(inspect.getsource(timeseries)))
+                  if isinstance(n, ast.Call)}
+        assert not called & banned
 
 
 class TestGroupedRollingApplyCenter:

@@ -50,6 +50,14 @@ PINS = [
 ]
 
 
+@pytest.mark.parametrize("op", [lambda df: df.s + df.s.max(),
+                                lambda df: df.s.max() + df.s],
+                         ids=["series_plus_scalar", "scalar_plus_series"])
+def test_string_scalar_concatenates(spark, op):
+    pdf = pd.DataFrame({"s": ["a", "bc", "d", "b"]})
+    _check(op(pes.from_pandas(pdf)).compute(), op(pdf))
+
+
 def _check(got, want):
     if isinstance(want, pd.DataFrame):
         pd.testing.assert_frame_equal(got, want, check_dtype=False,

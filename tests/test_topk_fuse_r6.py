@@ -101,6 +101,16 @@ def test_negative_n_fallback(base, base_pdf):
     pd.testing.assert_frame_equal(out.compute(), exp, check_dtype=False)
 
 
+@pytest.mark.parametrize("sort", [False, True], ids=["plain", "sorted"])
+def test_series_head_negative_n(base, base_pdf, sort):
+    # pandas: all but the last |n| rows; Spark's limit refuses a negative n
+    s, p = base["y"], base_pdf["y"]
+    if sort:
+        s, p = s.sort_values(ascending=False), p.sort_values(ascending=False)
+    pd.testing.assert_series_equal(s.head(-1).compute(), p.head(-1),
+                                   check_dtype=False, check_index_type=False)
+
+
 def test_intervening_op_falls_back_correct(base, base_pdf):
     # a projection between sort and head drops the fuse handle — result
     # must still be right (full-sort path)
