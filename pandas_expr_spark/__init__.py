@@ -175,7 +175,7 @@ def crosstab(frame, index=None, columns=None, values=None, aggfunc=None,
     form ``crosstab(df, "row_col", "col_col")`` or pandas' two-Series form
     ``crosstab(s_rows, s_cols)`` (same-anchor Series).  ``values=`` may be
     a same-anchor Series in the two-Series form."""
-    from ._collection import Series as _Series, _ROWID, positions
+    from ._collection import Series as _Series, _paired
     from pyspark.sql import functions as _F
     if isinstance(frame, _Series):
         s1, s2 = frame, index
@@ -196,34 +196,10 @@ def crosstab(frame, index=None, columns=None, values=None, aggfunc=None,
             sdf = s1._sdf.select(s1._scol.alias(n1), s2._scol.alias(n2),
                                  *extra)
         else:
-            # foreign series: pandas inner-aligns on the index — one
-            # equi-join on the index cols, or the positional rowid
-            # contract for default-index series (r5 hunt fix)
-            f1, f2 = s1.to_frame("__r__"), s2.to_frame("__c__")
-            pos1 = (not f1._index_cols
-                    or tuple(f1._index_cols) == (_ROWID,))
-            pos2 = (not f2._index_cols
-                    or tuple(f2._index_cols) == (_ROWID,))
-            if pos1 and pos2:
-                a = f1._sdf if f1._index_cols else positions(f1)
-                b = f2._sdf if f2._index_cols else positions(f2)
-                joined = (a.select(_F.col(_ROWID), _F.col("__r__"))
-                          .join(b.select(_F.col(_ROWID), _F.col("__c__")),
-                                _ROWID, "inner"))
-            elif (f1._index_cols and f2._index_cols
-                  and len(f1._index_cols) == len(f2._index_cols)):
-                b = f2._sdf.select(
-                    *[_F.col(c).alias(i) for c, i in
-                      zip(f2._index_cols, f1._index_cols)],
-                    _F.col("__c__"))
-                joined = (f1._sdf.select(*f1._index_cols, _F.col("__r__"))
-                          .join(b, list(f1._index_cols), "inner"))
-            else:
-                raise ValueError(
-                    "crosstab(series, series) needs both Series indexed "
-                    "(or both default-index for positional alignment)")
-            sdf = joined.select(_F.col("__r__").alias(n1),
-                                _F.col("__c__").alias(n2))
+            # foreign series: pandas inner-aligns them on their labels
+            sdf = (_paired(s1, s2, "inner")._sdf
+                   .select(_F.col("__l__").alias(n1),
+                           _F.col("__r__").alias(n2)))
         frame, index, columns = DataFrame(sdf), n1, n2
     if values is not None or aggfunc is not None:
         return frame.crosstab(index, columns, values=values,

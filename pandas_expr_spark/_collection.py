@@ -16,8 +16,9 @@ Design notes (SURVEY §1.5 — the index problem):
   demands it — ``head``/``tail``/alignment).
 * ``Series`` is *anchored*: it holds the parent frame's Spark DataFrame plus a
   Column expression over it.  Binops between Series of the same anchor compose
-  Column expressions (stays in whole-stage codegen); cross-anchor binops align
-  via an index join (pandas alignment semantics, reference ``_expr.py:958-978``).
+  Column expressions (stays in whole-stage codegen); cross-anchor operands
+  pair by label through ``_order.align`` (pandas alignment semantics,
+  reference ``_expr.py:958-978``).
 * At 100 TB, positional-index materialization is the one op that cannot scale
   (it is a global ordering); everything else lowers to shuffle-free column
   expressions or ordinary shuffled joins/aggs that AQE handles.
@@ -49,7 +50,8 @@ from pyspark.sql import types as T
 from . import _dtypes as D
 from ._dtypes import is_numeric, to_pandas_dtype, to_spark_type
 from ._expr import Node
-from ._order import _LABEL, _ORDER, _ROWID, order_key, positions
+from ._order import (_LABEL, _ORDER, _ROWID, _positional_order, align,
+                     order_key, positions)
 
 __all__ = ["DataFrame", "Series", "Index", "Scalar", "new_collection"]
 
@@ -426,23 +428,6 @@ def _order_cols(sdf: SparkDF) -> list:
     if _LABEL in sdf.columns:
         out.append(F.col(_LABEL))
     return out
-
-
-def _positional_order(frame):
-    """``(sdf, order_cols, idx_cols, idx_names)``: the row order every
-    positional op (cum*, shift/diff, fills, interpolate, rolling/
-    expanding/ewm) runs in, and the index its result carries.  A stamp
-    wins — a sort keeps its labels but presents in stamp order — then the
-    index, then the frame's positions, which become the result's index.
-    An unindexed stamped frame keeps no index: ``compute()`` presents it
-    in stamp order with a RangeIndex, so it needs no position pass."""
-    sdf = frame._sdf
-    if _ORDER in sdf.columns:
-        return sdf, [_ORDER], frame._index_cols, frame._index_names
-    if frame._index_cols:
-        return (sdf, list(frame._index_cols), frame._index_cols,
-                frame._index_names)
-    return positions(frame), [_ROWID], (_ROWID,), (None,)
 
 
 def _lag_value(op: str, fill_value=None):
@@ -1351,9 +1336,7 @@ class Series(FrameBase):
 
     def _aligned_binop(self, other: "Series", fn, op: str,
                        reflexive: bool) -> "Series":
-        lf = self.to_frame("__l__")
-        rf = other.to_frame("__r__")
-        joined = _align_frames(lf, rf)
+        joined = _paired(self, other)
         l, r = F.col("__l__"), F.col("__r__")
         if reflexive:
             l, r = r, l
@@ -1630,51 +1613,21 @@ class Series(FrameBase):
         ``F.least(F.greatest(col, lower), upper)``, with a missing-value
         guard: Spark's greatest/least *skip* nulls and order NaN above every
         double, which would turn missing values into the clip bounds —
-        pandas keeps them missing.  A foreign-frame Series bound is
-        index-aligned with one equi-join per bound (like where/mask).
-        A lazy Scalar bound (``s.clip(lower=s.quantile(.2))``) is its
-        scalar subquery (``_lit``), like any other literal bound."""
-        ser_bounds = [b for b in (lower, upper) if isinstance(b, Series)]
-        if any(b._sdf is not self._sdf for b in ser_bounds):
-            cur = self.to_frame("__self__")
-            if isinstance(lower, Series):
-                cur = _align_frames(cur, lower.to_frame("__lo__"))
-            if isinstance(upper, Series):
-                cur = _align_frames(cur, upper.to_frame("__hi__"))
-            c = F.col("__self__")
-            clipped = c
-            if lower is not None:
-                clipped = F.greatest(clipped, F.col("__lo__") if
-                                     isinstance(lower, Series)
-                                     else _lit(lower))
-            if upper is not None:
-                clipped = F.least(clipped, F.col("__hi__") if
-                                   isinstance(upper, Series)
-                                   else _lit(upper))
-            guard = c.isNull()
-            if isinstance(self.spark_type, (T.DoubleType, T.FloatType)):
-                guard = guard | F.isnan(c)
-            node = _node("clip", {"aligned": True, "lower": lower,
-                                  "upper": upper}, self._expr)
-            return Series(cur._sdf, F.when(guard, c).otherwise(clipped),
-                          self._col_name, node, cur._index_cols,
-                          cur._index_names)
-
-        def _bound(b):
-            # Series bound: same-anchor column composes directly (pandas
-            # elementwise clip)
-            return b._scol if isinstance(b, Series) else _lit(b)
-
-        c = self._scol
+        pandas keeps them missing.  A Series bound is reindexed onto this
+        Series' labels (``_onto``).  A lazy Scalar bound
+        (``s.clip(lower=s.quantile(.2))``) is its scalar subquery
+        (``_lit``), like any other literal bound."""
+        base, (lo, hi) = self._onto(lower, upper)
+        c = base._scol
         clipped = c
         if lower is not None:
-            clipped = F.greatest(clipped, _bound(lower))
+            clipped = F.greatest(clipped, lo)
         if upper is not None:
-            clipped = F.least(clipped, _bound(upper))
+            clipped = F.least(clipped, hi)
         guard = c.isNull()
         if isinstance(self.spark_type, (T.DoubleType, T.FloatType)):
             guard = guard | F.isnan(c)
-        return self._with_scol(F.when(guard, c).otherwise(clipped),
+        return base._with_scol(F.when(guard, c).otherwise(clipped),
                                "clip", lower=lower, upper=upper)
 
     def isna(self):
@@ -1728,7 +1681,8 @@ class Series(FrameBase):
         """Reference Between ``_expr.py:1153-1156``.  Named method, so it
         materializes the pandas boolean (null value → False) — the filter
         row-set is identical either way, and dunder predicates stay raw
-        for parquet pushdown (see the pushdown lesson in NOTES_r3)."""
+        for parquet pushdown: a ``coalesce(pred, false)`` wrapper drops the
+        predicate from ``PushedFilters``."""
         c = self._scol
         lo, hi = _lit(left), _lit(right)
         lo = (c >= lo) if inclusive in ("both", "left") else (c > lo)
@@ -1744,21 +1698,9 @@ class Series(FrameBase):
         fills only the first n missing values."""
         if limit is None:
             if isinstance(value, Series):
-                # pandas: fill from the aligned other series — same-anchor
-                # composes directly; foreign frames align on the index
-                if value._sdf is self._sdf:
-                    return self._with_scol(
-                        F.coalesce(self._scol, value._scol), "fillna",
-                        entry=self._value_dtype)
-                lf = self.to_frame("__l__")
-                rf = value.to_frame("__r__")
-                joined = _align_frames(lf, rf, how="left")
-                node = Node("fillna", {"aligned": True}, self._expr,
-                            value._expr)
-                return Series(joined._sdf,
-                              F.coalesce(F.col("__l__"), F.col("__r__")),
-                              self._col_name, node, joined._index_cols,
-                              joined._index_names)
+                base, (v,) = self._onto(value)
+                return base._with_scol(F.coalesce(base._scol, v), "fillna",
+                                       entry=self._value_dtype)
             e = self._value_dtype
             if (e is not None and e.categories is not None
                     and not isinstance(value, Scalar)
@@ -1924,76 +1866,51 @@ class Series(FrameBase):
                       self._scol, self._col_name, node,
                       self._index_cols, self._index_names)
 
-    def _other_expr(self, other):
-        """Replacement value for where/mask: a same-anchor Series lowers
-        to its column expression; scalars, lazy or not, through
-        ``_lit``."""
-        if isinstance(other, Series):
-            if other._sdf is not self._sdf:
-                raise ValueError("where/mask with a foreign-frame 'other' "
-                                 "is not supported; align first")
-            return other._scol
-        return _lit(other)
+    def _onto(self, *values) -> tuple["Series", list]:
+        """This Series over a plan that also carries every foreign Series
+        of ``values`` reindexed onto its labels (``align``'s left form: a
+        missing label gives null), and each value as a Column of that
+        plan — a scalar, lazy or not, through ``_lit``."""
+        base, cols = self, []
+        for v in values:
+            if isinstance(v, Series) and v._sdf is not self._sdf:
+                f, _, rmap = align(
+                    DataFrame(base._sdf, base._expr, base._index_cols,
+                              base._index_names), v.to_frame("v"))
+                base = Series(f._sdf, self._scol, self._col_name, self._expr,
+                              f._index_cols, f._index_names, self._dtypes)
+                cols.append(F.col(rmap["v"]))
+            else:
+                cols.append(v._scol if isinstance(v, Series) else _lit(v))
+        return base, cols
 
     def mask(self, cond: "Series", other=None):
+        """pandas ``mask``: ``where`` on the condition inverted over its
+        own rows (a null counts as False), so a label the condition lacks
+        replaces, as in pandas."""
         if callable(cond) and not isinstance(cond, FrameBase):
             cond = cond(self)
-        if callable(other) and not isinstance(other, FrameBase):
-            other = other(self)
-        if isinstance(other, Series) and other._sdf is not self._sdf:
-            return self._where_aligned(cond, other, keep_on_true=False)
-        return self._with_scol(
-            F.when(cond._scol, self._other_expr(other))
-            .otherwise(self._scol), "mask", other=other,
-            entry=self._value_dtype if other is None else None)
+        return self.where(cond._with_scol(
+            ~F.coalesce(cond._scol, F.lit(False)), "invert"), other)
 
     def where(self, cond: "Series", other=None):
+        """pandas ``where``: a foreign condition or ``other`` is reindexed
+        onto this Series' labels; a missing condition replaces."""
         if callable(cond) and not isinstance(cond, FrameBase):
             cond = cond(self)
         if callable(other) and not isinstance(other, FrameBase):
             other = other(self)
-        if isinstance(other, Series) and other._sdf is not self._sdf:
-            return self._where_aligned(cond, other, keep_on_true=True)
-        return self._with_scol(
-            F.when(cond._scol, self._scol)
-            .otherwise(self._other_expr(other)), "where", other=other,
+        base, (c, o) = self._onto(cond, other)
+        return base._with_scol(
+            F.when(c, base._scol).otherwise(o), "where", other=other,
             entry=self._value_dtype if other is None else None)
-
-    def _where_aligned(self, cond: "Series", other: "Series",
-                      keep_on_true: bool) -> "Series":
-        """where/mask with a FOREIGN-frame replacement Series: pandas
-        aligns ``other`` on the index — one equi-join.  The condition is
-        materialized as a column on this frame first (it must anchor
-        here), so the join carries (value, cond) against other's value."""
-        if cond._sdf is not self._sdf:
-            raise ValueError("where/mask with both a foreign cond and a "
-                             "foreign other is not supported; align first")
-        name = self._col_name or other._col_name or "__v__"
-        lf = DataFrame(
-            self._sdf.select(*[F.col(c) for c in self._index_cols],
-                             self._scol.alias("__l__"),
-                             cond._scol.alias("__c__")),
-            Node("where_lhs", {}, self._expr),
-            self._index_cols, self._index_names)
-        rf = other.to_frame("__r__")
-        joined = _align_frames(lf, rf)
-        c = F.coalesce(F.col("__c__"), F.lit(False))
-        scol = (F.when(c, F.col("__l__")).otherwise(F.col("__r__"))
-                if keep_on_true else
-                F.when(c, F.col("__r__")).otherwise(F.col("__l__")))
-        node = Node("where" if keep_on_true else "mask", {"aligned": True},
-                    self._expr, other._expr)
-        return Series(joined._sdf, scol, name, node,
-                      joined._index_cols, joined._index_names)
 
     def combine_first(self, other: "Series") -> "Series":
         """pandas ``Series.combine_first``: index-aligned null overlay —
         full outer join on the index + one coalesce (the Series form of
         reference CombineFirst ``_expr.py:1005-1031``)."""
         name = self._col_name or other._col_name or "__v__"
-        lf = self.to_frame("__l__")
-        rf = other.to_frame("__r__")
-        joined = _align_frames(lf, rf)
+        joined = _paired(self, other)
         scol = F.coalesce(F.col("__l__"), F.col("__r__"))
         node = Node("combine_first", {}, self._expr, other._expr)
         return Series(joined._sdf, scol, name, node,
@@ -2614,7 +2531,7 @@ class Series(FrameBase):
         else:
             lf = self.to_frame("__a__").assign(__pa__=True)
             rf = other.to_frame("__b__").assign(__pb__=True)
-            joined, lmap, rmap = _index_outer_join(lf, rf)
+            joined, lmap, rmap = align(lf, rf, "outer")
             base = joined._sdf.select(
                 *[F.col(c) for c in joined._index_cols],
                 F.col(lmap["__a__"]).alias("__a__"),
@@ -2688,9 +2605,7 @@ class Series(FrameBase):
         if isinstance(other, Series) and other._sdf is self._sdf:
             return Scalar(self._sdf.agg(fn(self._scol, other._scol).alias(op)),
                           Node(op, {}, self._expr, other._expr))
-        lf = self.to_frame("__l__")
-        rf = other.to_frame("__r__")
-        joined = _align_frames(lf, rf)
+        joined = _paired(self, other)
         return Scalar(joined._sdf.agg(
             fn(F.col("__l__"), F.col("__r__")).alias(op)),
             Node(op, {"aligned": True}, self._expr, other._expr))
@@ -2706,9 +2621,7 @@ class Series(FrameBase):
                 pair = self._sdf.select(self._scol.alias("__l__"),
                                         other._scol.alias("__r__"))
             else:
-                lf = self.to_frame("__l__")
-                rf = other.to_frame("__r__")
-                pair = _align_frames(lf, rf)._sdf.select("__l__", "__r__")
+                pair = _paired(self, other)._sdf.select("__l__", "__r__")
             ranked = _avg_rank_join(_avg_rank_join(pair, "__l__", "__lrk__"),
                                     "__r__", "__rrk__")
             return Scalar(ranked.agg(
@@ -3499,11 +3412,9 @@ class Series(FrameBase):
             "reindex")
 
     def align(self, other: "Series", join: str = "outer"):
-        """Outer-align two Series on their index: one index join, two
-        re-wrapped views (pandas returns the aligned pair)."""
-        lf = self.to_frame("__l__")
-        rf = other.to_frame("__r__")
-        joined = _align_frames(lf, rf, how=join)
+        """Align two Series on their labels (``_order.align``): two
+        re-wrapped views of one join (pandas returns the aligned pair)."""
+        joined = _paired(self, other, join)
         node = Node("align", {"join": join}, self._expr, other._expr)
         l = Series(joined._sdf, F.col("__l__"), self._col_name, node,
                    joined._index_cols, joined._index_names)
@@ -3588,19 +3499,14 @@ class Series(FrameBase):
 
     def update(self, other: "Series") -> None:
         """pandas ``Series.update``: non-null values of ``other``
-        overwrite this Series, aligned on index, IN PLACE."""
-        lf = self.to_frame("__l__")
-        rf = other.to_frame("__r__")
-        joined = _align_frames(lf, rf, how="left")
-        scol = F.coalesce(F.col("__r__"), F.col("__l__"))
-        name = self._col_name if self._col_name is not None else "__v__"
-        sdf = joined._sdf.select(
-            *[F.col(c) for c in joined._index_cols], scol.alias(name))
-        self._sdf = sdf
-        self._scol = F.col(name)
-        self._index_cols = joined._index_cols
-        self._index_names = joined._index_names
-        self._expr = Node("update", {}, self._expr, other._expr)
+        overwrite this Series, reindexed onto its labels, IN PLACE."""
+        base, (v,) = self._onto(other)
+        out = base._with_scol(F.coalesce(v, base._scol), "update",
+                              other=other)
+        self.__dict__.pop("_spark_type_cache", None)
+        self._sdf, self._scol, self._expr = out._sdf, out._scol, out._expr
+        self._index_cols = out._index_cols
+        self._index_names = out._index_names
 
     def asof(self, where):
         """Last non-null value whose index <= ``where``.  Scalar ``where``
@@ -3967,8 +3873,7 @@ class Series(FrameBase):
         """pandas ``Series.compare``: rows where the two differ, columns
         ``self``/``other`` — one index align + null-safe inequality
         (works on the default positional index too)."""
-        joined = _align_frames(self.to_frame("__l__"),
-                               other.to_frame("__r__"))
+        joined = _paired(self, other)
         diff = ~F.col("__l__").eqNullSafe(F.col("__r__"))
         sdf = joined._sdf.filter(diff).select(
             *[F.col(c) for c in joined._index_cols],
@@ -4132,8 +4037,7 @@ _PAIR = ("__pn__", "__px__", "__py__", "__pxy__", "__px2__", "__py2__")
 def _pair_frame(s: "Series", other, op: str) -> "DataFrame":
     """``s`` and ``other`` (rolling/expanding cov/corr) as the ``_PAIR``
     columns of one frame, each null where either side is: a projection
-    when they share an anchor, else index-aligned with one equi-join,
-    like where/mask."""
+    when they share an anchor, else outer-aligned by label (``_paired``)."""
     if not isinstance(other, Series):
         raise NotImplementedError(f"{op} cov/corr needs a Series other "
                                   "(frame-pairwise not supported)")
@@ -4144,7 +4048,7 @@ def _pair_frame(s: "Series", other, op: str) -> "DataFrame":
                           s._scol.alias("__x__"), other._scol.alias("__y__")),
             Node(f"{op}_pair", {}, s._expr), s._index_cols, s._index_names)
     else:
-        f = _align_frames(s.to_frame("__x__"), other.to_frame("__y__"))
+        f = _paired(s, other, a="__x__", b="__y__")
     x, y = F.col("__x__").cast("double"), F.col("__y__").cast("double")
     m = x.isNotNull() & y.isNotNull()
     moments = (F.lit(1.0), x, y, x * y, x * x, y * y)
@@ -4809,58 +4713,15 @@ class DataFrame(FrameBase):
                                         (_ROWID,), (None,))
                 return self._derive(self._sdf.filter(key._scol), "filter",
                                     {"predicate": key._expr.op})
-            # FOREIGN mask: pandas aligns it on the index (missing labels
-            # → False); default-index frames align positionally via
-            # rowids — same contract as where/mask.  (A mask against a
-            # lazy Scalar, `df[df.v > df.v.mean()]`, is not foreign: the
-            # Scalar is a scalar subquery on this frame's plan.)
-            mf = key.to_frame("__mask__")
-            # a rowid-indexed mask (groupby cumcount/ngroup, scan outputs)
-            # over a default-index frame aligns POSITIONALLY — the rowid
-            # is the established position contract (same as where/assign)
-            mask_rowid = (tuple(mf._index_cols) == (_ROWID,))
-            if not self._index_cols and mask_rowid:
-                base = positions(self)
-                lidx = [_ROWID]
-                msel = mf._sdf.select(F.col(_ROWID), F.col("__mask__"))
-                # KEEP the rowid as the surviving rows' positional labels
-                # (the alignment join scrambles row order — dropping the
-                # rowid made downstream positional ops silently misalign)
-                # and re-establish the original order for presentation
-                joined = (base.join(msel, lidx, "left")
-                          .filter(F.coalesce(F.col("__mask__"),
-                                             F.lit(False)))
-                          .drop("__mask__").orderBy(_ROWID))
-                return self._derive(joined, "filter", {"aligned_mask": True},
-                                    (_ROWID,), (None,))
-            if bool(self._index_cols) != bool(mf._index_cols):
-                raise ValueError(
-                    "Boolean mask from another frame needs an index on "
-                    "both sides (or on neither) to align")
-            if self._index_cols:
-                base, lidx = self._sdf, list(self._index_cols)
-                msel = mf._sdf.select(
-                    *[F.col(c).alias(i)
-                      for c, i in zip(mf._index_cols, lidx)],
-                    F.col("__mask__"))
-                drop_rowid = False
-            else:
-                base = positions(self)
-                lidx = [_ROWID]
-                mbase = positions(mf)
-                msel = mbase.select(F.col(_ROWID), F.col("__mask__"))
-                drop_rowid = True
-            joined = (base.join(msel, lidx, "left")
-                      .filter(F.coalesce(F.col("__mask__"), F.lit(False)))
-                      .drop("__mask__"))
-            if drop_rowid:
-                # keep the rowid as positional labels + original order —
-                # the join scrambles rows, and dropping the anchor made
-                # downstream positional ops silently misalign (r5 wave Q)
-                joined = joined.orderBy(_ROWID)
-                return self._derive(joined, "filter", {"aligned_mask": True},
-                                    (_ROWID,), (None,))
-            return self._derive(joined, "filter", {"aligned_mask": True})
+            # a FOREIGN mask is reindexed onto this frame's labels, a
+            # missing label counting as False.  (A mask against a lazy
+            # Scalar, `df[df.v > df.v.mean()]`, is not foreign: the Scalar
+            # is a scalar subquery on this frame's plan.)
+            base, _, rmap = align(self, key.to_frame("v"))
+            keep = F.coalesce(F.col(rmap["v"]), F.lit(False))
+            return self._derive(base._sdf.filter(keep).drop(rmap["v"]),
+                                "filter", {"aligned_mask": True},
+                                base._index_cols, base._index_names)
         if isinstance(key, int) and str(key) in self.columns:
             # Spark column labels are strings; ops that produce pandas
             # integer labels (str.partition, str.split(expand=True),
@@ -5034,7 +4895,8 @@ class DataFrame(FrameBase):
         fused: every such value comes out of ONE scan over the frame's
         rows (``_fused_positional``) and is written next to its columns,
         reading them as they were before the assign.  Any other Series
-        aligns by index label, like pandas."""
+        is reindexed onto this frame's labels (``_order.align``), like
+        pandas."""
         sdf = self._sdf
         made_rowid_index = False
         # Values computed up front into hidden columns read the frame as
@@ -5069,9 +4931,10 @@ class DataFrame(FrameBase):
         view = None
         scalars = []    # the plan nodes of lazy Scalar values
 
-        def _current():
-            # the frame as assigned so far (late-bound on sdf)
-            cur = sdf.drop(*held.values()) if held else sdf
+        def _current(view=False):
+            # the frame as assigned so far (late-bound on sdf); a
+            # callable's view leaves out the values held for later keys
+            cur = sdf.drop(*held.values()) if held and view else sdf
             if made_rowid_index and not self._index_cols:
                 return DataFrame(cur, self._expr, (_ROWID,), (None,))
             return DataFrame(cur, self._expr, self._index_cols,
@@ -5082,7 +4945,7 @@ class DataFrame(FrameBase):
                 sdf = sdf.withColumn(k, F.col(held[k]))
                 continue
             if callable(v) and not isinstance(v, Series):
-                cur = _current()
+                cur = _current(view=True)
                 view = cur._sdf
                 v = v(cur)
                 # fall through: same-anchor fast path below (the view's
@@ -5093,117 +4956,14 @@ class DataFrame(FrameBase):
             if isinstance(v, Series):
                 if (v._sdf is not sdf and v._sdf is not self._sdf
                         and v._sdf is not view):
-                    # foreign Series: pandas aligns on the index.  Indexed
-                    # frames align via one left equi-join; default-index
-                    # frames align POSITIONALLY (label==position), the
-                    # same rowid contract as where/_framewise_cond.
-                    vf = v.to_frame("__assign_v__")
-                    # a rowid-backed index (cumsum/rank/scan outputs over a
-                    # default-index frame) IS the positional index — treat
-                    # it like no index when choosing the alignment mode
-                    v_positional = (not vf._index_cols or
-                                    tuple(vf._index_cols) == (_ROWID,))
-                    f_rowid = tuple(self._index_cols) == (_ROWID,)
-                    if bool(self._index_cols) == v_positional \
-                            and not (f_rowid and v_positional):
-                        raise ValueError(
-                            "assign with foreign Series requires an index "
-                            "on both sides (or on neither — default-index "
-                            "frames align positionally); use merge/join "
-                            "instead")
-                    both_order = (_ORDER in sdf.columns
-                                  and _ORDER in vf._sdf.columns)
-                    if (both_order
-                            and tuple(self._index_cols) == (_ROWID,)
-                            and tuple(vf._index_cols) == (_ROWID,)):
-                        # both sides stamped AND rowid-LABELED: pandas
-                        # aligns by label, so a value series REORDERED
-                        # after derivation (sort_values then assign) must
-                        # label-match, not position-match (r8 review).
-                        # Join key = (label, per-label occurrence ordinal
-                        # in presented order): unique labels reduce to a
-                        # pure label join; duplicate IDENTICAL indexes
-                        # (concat self-assign, pandas' positional
-                        # contract) match occurrence-by-occurrence — the
-                        # r5 wave-R2 explosion can't recur, no eager
-                        # uniqueness probe needed.
-                        pos = "__assign_pos2__"
-                        lsdf = positions(_current(), pos)
-                        wv = Window.partitionBy(_ROWID).orderBy(pos)
-                        lsdf = (lsdf.withColumn("__occ__",
-                                                F.row_number().over(wv))
-                                .drop(pos))
-                        vsdf2 = positions(vf, pos)
-                        vsdf2 = (vsdf2.withColumn(
-                                    "__vocc__", F.row_number().over(
-                                        Window.partitionBy(_ROWID)
-                                        .orderBy(pos)))
-                                 .drop(pos))
-                        vsel = vsdf2.select(
-                            F.col(_ROWID).alias("__vlbl__"),
-                            F.col("__vocc__"), F.col("__assign_v__"))
-                        sdf = (lsdf.join(
-                                   vsel,
-                                   (F.col(_ROWID) == F.col("__vlbl__"))
-                                   & (F.col("__occ__") == F.col("__vocc__")),
-                                   "left")
-                               .drop("__vlbl__", "__vocc__", "__occ__"))
-                        sdf = (sdf.withColumn(k, F.col("__assign_v__"))
-                               .drop("__assign_v__"))
-                        continue
-                    if both_order and not self._index_cols:
-                        # both sides stamped, self UNLABELED: align by
-                        # canonical PRESENTED POSITION (a ranged pass per
-                        # side), never by raw stamp values — stamps from
-                        # different mint generations don't compare (r8
-                        # gate stamped_rank_orders: dedup-reset's sparse
-                        # survivor-label stamp vs rank's re-minted dense
-                        # stamp silently mispaired every row).
-                        pos = "__assign_pos2__"
-                        lsdf = positions(_current(), pos)
-                        vsel = (positions(vf, pos)
-                                .select(F.col(pos), F.col("__assign_v__")))
-                        sdf = (lsdf.join(vsel, on=[pos], how="left")
-                               .drop(pos))
-                        sdf = (sdf.withColumn(k, F.col("__assign_v__"))
-                               .drop("__assign_v__"))
-                        continue
-                    if f_rowid and v_positional:
-                        # rowid-labeled frame (nlargest/filter survivors
-                        # keep original positions) + positional Series:
-                        # pandas aligns by LABEL, and the Series' position
-                        # IS its label — one rowid equi-join (r5 wave Q)
-                        vsdf = (vf._sdf
-                                if tuple(vf._index_cols) == (_ROWID,)
-                                else positions(vf))
-                        vsel = vsdf.select(F.col(_ROWID),
-                                           F.col("__assign_v__"))
-                        sdf = sdf.join(vsel, on=[_ROWID], how="left")
-                        sdf = (sdf.withColumn(k, F.col("__assign_v__"))
-                               .drop("__assign_v__"))
-                        continue
-                    if self._index_cols:
-                        vsel = vf._sdf.select(
-                            *[F.col(c).alias(i) for c, i in
-                              zip(vf._index_cols, self._index_cols)],
-                            F.col("__assign_v__"))
-                        sdf = sdf.join(vsel, on=list(self._index_cols),
-                                       how="left")
-                    else:
-                        vsdf = (vf._sdf if tuple(vf._index_cols) == (_ROWID,)
-                                else positions(vf))
-                        vsel = vsdf.select(F.col(_ROWID),
-                                           F.col("__assign_v__"))
-                        # KEEP the rowid: the join scrambles arrival
-                        # order, and a later RE-attach over that
-                        # nondeterministic order would silently misalign
-                        # the next positional op (r5 wave Q)
-                        base = (sdf if _ROWID in sdf.columns
-                                else positions(_current()))
-                        sdf = base.join(vsel, on=[_ROWID], how="left")
-                        made_rowid_index = True
-                    sdf = (sdf.withColumn(k, F.col("__assign_v__"))
-                           .drop("__assign_v__"))
+                    # a foreign Series is reindexed onto this frame's
+                    # labels (``_order.align``)
+                    cur, _, rmap = align(_current(), v.to_frame("v"),
+                                         by_occurrence=True)
+                    sdf = (cur._sdf.withColumn(k, F.col(rmap["v"]))
+                           .drop(rmap["v"]))
+                    made_rowid_index = (made_rowid_index
+                                        or cur._index_cols != self._index_cols)
                     continue
                 col = v._scol
             elif isinstance(v, (list, tuple, np.ndarray, pd.Series, pd.Index)):
@@ -5585,7 +5345,7 @@ class DataFrame(FrameBase):
         # stay float for float columns but long for int columns)
         typed = getattr(fn, "_typed", False)
         if isinstance(other, DataFrame):
-            joined, lcols, rcols = _index_outer_join(self, other)
+            joined, lcols, rcols = align(self, other, "outer")
             jtypes = {f.name: f.dataType for f in joined._sdf.schema.fields}
             out_cols = [F.col(c) for c in joined._index_cols]
             # pandas: identical column orders are PRESERVED; otherwise
@@ -5849,51 +5609,28 @@ class DataFrame(FrameBase):
     def _binop_axis0(self, other: "Series", fn, op: str) -> "DataFrame":
         """``df.op(series, axis=0)``: one value per ROW applied across all
         numeric columns.  Same-anchor series is a pure projection; a
-        foreign series costs one index equi-join."""
+        foreign series outer-aligns with the rows by label, as pandas
+        does (``_order.align``)."""
         num = [c for c in self.columns
                if is_numeric(self._sdf.schema[c].dataType)]
         typed = getattr(fn, "_typed", False)
 
-        def _ap(c):
+        def _ap(c, x, o):
             if typed:
-                return fn(F.col(c), other._scol,
+                return fn(x, o,
                           (self._sdf.schema[c].dataType, other.spark_type))
-            return fn(F.col(c), other._scol)
+            return fn(x, o)
 
         if other._sdf is self._sdf:
-            updates = {c: _ap(c) for c in num}
+            updates = {c: _ap(c, F.col(c), other._scol) for c in num}
             return self._derive(self._sdf.withColumns(updates), op, {})
-        if not self._index_cols and not other._index_cols:
-            # both default-indexed: pandas aligns POSITIONALLY — one
-            # rowid equi-join, keeping the rowid as the result's labels
-            # (a re-attach over the join's scrambled arrival order would
-            # silently misalign the next positional op)
-            lsdf = positions(self)
-            osdf = positions(other.to_frame("__o__"))
-            joined = lsdf.join(osdf.select(F.col(_ROWID), F.col("__o__")),
-                               on=[_ROWID], how="left")
-            updates = {c: (fn(F.col(c), F.col("__o__"),
-                              (self._sdf.schema[c].dataType,
-                               other.spark_type))
-                           if typed else fn(F.col(c), F.col("__o__")))
-                       for c in num}
-            node = Node(op, {"axis": 0}, self._expr, other._expr)
-            return DataFrame(joined.withColumns(updates).drop("__o__"),
-                             node, (_ROWID,), (None,))
-        if not self._index_cols or not other._index_cols:
-            raise ValueError(f"{op}(axis=0) with a foreign series needs an "
-                             "index on both sides to align")
-        of = other.to_frame("__o__")
-        osel = of._sdf.select(*[F.col(c).alias(i) for c, i in
-                                zip(of._index_cols, self._index_cols)],
-                              F.col("__o__"))
-        joined = self._sdf.join(osel, on=list(self._index_cols), how="left")
-        updates = {c: (fn(F.col(c), F.col("__o__"),
-                          (self._sdf.schema[c].dataType, other.spark_type))
-                       if typed else fn(F.col(c), F.col("__o__")))
-                   for c in num}
-        return self._derive(joined.withColumns(updates).drop("__o__"),
-                            op, {"axis": 0})
+        joined, lmap, rmap = align(self, other.to_frame("o"), "outer")
+        o = F.col(rmap["o"])
+        cols = [(_ap(c, F.col(lmap[c]), o) if c in num
+                 else F.col(lmap[c])).alias(c) for c in self.columns]
+        return DataFrame(joined._sdf.select(*joined._index_cols, *cols),
+                         Node(op, {"axis": 0}, self._expr, other._expr),
+                         joined._index_cols, joined._index_names)
 
     def add(self, other, fill_value=None, axis=None):
         return self._named_binop(other, lambda a, b: a + b, "add",
@@ -6076,7 +5813,7 @@ class DataFrame(FrameBase):
     def combine_first(self, other: "DataFrame") -> "DataFrame":
         """Reference CombineFirst ``_expr.py:1005-1031``: index-aligned null
         overlay → full outer join on index + per-column coalesce."""
-        joined, lcols, rcols = _index_outer_join(self, other)
+        joined, lcols, rcols = align(self, other, "outer")
         out_cols = [F.col(c) for c in joined._index_cols]
         all_names = list(dict.fromkeys(self.columns + other.columns))
         for name in all_names:
@@ -6094,41 +5831,24 @@ class DataFrame(FrameBase):
 
     def update(self, other: "DataFrame") -> "DataFrame":
         """pandas ``DataFrame.update``: overwrite self's values with
-        other's non-null values at matching index labels — a LEFT index
-        join + reversed coalesce (self's row set and columns unchanged)."""
-        joined, lcols, rcols = _index_outer_join(self, other, how="left")
-        out_cols = [F.col(c) for c in joined._index_cols]
-        for name in self.columns:
-            l = lcols[name]
-            r = rcols.get(name)
-            if r is not None:
-                out_cols.append(F.coalesce(F.col(r), F.col(l)).alias(name))
-            else:
-                out_cols.append(F.col(l).alias(name))
-        node = Node("update", {}, self._expr, other._expr)
-        # pandas update mutates in place (returns None); rebind this
-        # frame's plan so `df.update(other)` works without capturing the
-        # result.  Returning self keeps the chainable form working too.
-        # The join's renamed index columns alias back to self's original
-        # names so later index-aligned ops still line up.
-        had_idx = bool(self._index_cols)
-        own_idx = self._index_cols or joined._index_cols
-        out_cols = [F.col(j).alias(o)
-                    for j, o in zip(joined._index_cols, own_idx)] + \
-                   out_cols[len(joined._index_cols):]
-        self._sdf = joined._sdf.select(*out_cols)
-        self._expr = node
-        self._index_cols = tuple(own_idx)
-        if not had_idx:
-            self._index_names = joined._index_names
+        other's non-null values at matching labels — ``other`` reindexed
+        onto self's rows + reversed coalesce (self's row set and columns
+        unchanged).  pandas mutates in place (returns None); the frame
+        rebinds, and returning self keeps the chainable form working."""
+        f, _, rmap = align(self, other)
+        sdf = (f._sdf.withColumns({c: F.coalesce(F.col(rmap[c]), F.col(c))
+                                   for c in self.columns if c in rmap})
+               .drop(*rmap.values()))
+        self._rebind(self._derive(sdf, "update", {"other": other},
+                                  f._index_cols, f._index_names))
         return self
 
     def _framewise_cond(self, cond: "DataFrame", keep_on_true: bool,
                         other) -> "DataFrame":
         """Boolean-FRAME cond (``df.where(df > 0)``): per-column CASE —
         pure projection when the cond is a comparison of this frame
-        (its node's hint); otherwise one index equi-join with the cond
-        columns renamed alongside."""
+        (its node's hint); otherwise the cond, and a frame ``other``, are
+        reindexed onto this frame's labels (``_order.align``)."""
         hint = cond._hint("eq", "ne", "lt", "le", "gt", "ge")
         other_is_frame = isinstance(other, DataFrame)
         if (hint is not None and hint[0] is self._sdf
@@ -6146,60 +5866,39 @@ class DataFrame(FrameBase):
                 self._sdf.withColumns({c: rep(c) for c in self.columns}),
                 "where" if keep_on_true else "mask",
                 {"frame_cond": True, "other": other})
-        # alignment path: named index when present; default-index frames
-        # align POSITIONALLY via attached rowids (pandas label==position)
-        sides = [bool(self._index_cols), bool(cond._index_cols)] + \
-                ([bool(other._index_cols)] if other_is_frame else [])
-        if len(set(sides)) != 1:
-            raise ValueError("where/mask with a foreign frame needs an "
-                             "index on all sides (or on none) to align")
-        if self._index_cols:
-            base, lidx = self._sdf, list(self._index_cols)
-            cond_sdf, cidx = cond._sdf, list(cond._index_cols)
-            drop_rowid = False
-        else:
-            base, lidx = positions(self), [_ROWID]
-            cond_sdf, cidx = positions(cond), [_ROWID]
-            drop_rowid = True
-        csel = cond_sdf.select(
-            *[F.col(c).alias(i) for c, i in zip(cidx, lidx)],
-            *[F.col(c).alias(f"__c_{c}__") for c in cond.columns])
-        joined = base.join(csel, on=lidx, how="left")
+        if not keep_on_true:
+            # pandas' mask is where on the inverted cond: a label or
+            # column missing from the cond then replaces
+            cond = cond._derive(cond._sdf.withColumns(
+                {c: ~F.coalesce(F.col(c), F.lit(False))
+                 for c in cond.columns}), "invert")
+        base, _, cmap = align(self, cond)
+        omap = {}
         if other_is_frame:
-            other_sdf = other._sdf if self._index_cols \
-                else positions(other)
-            oidx = list(other._index_cols) if self._index_cols else [_ROWID]
-            osel = other_sdf.select(
-                *[F.col(c).alias(i) for c, i in zip(oidx, lidx)],
-                *[F.col(c).alias(f"__o_{c}__") for c in other.columns])
-            joined = joined.join(osel, on=lidx, how="left")
+            base, _, omap = align(base, other)
+
         def rep2(c):
-            flag = (F.coalesce(F.col(f"__c_{c}__"), F.lit(False))
-                    if c in cond.columns else F.lit(False))
+            flag = (F.coalesce(F.col(cmap[c]), F.lit(False))
+                    if c in cmap else F.lit(False))
             if other_is_frame:
-                oc = (F.col(f"__o_{c}__") if c in other.columns
-                      else F.lit(None))
+                oc = F.col(omap[c]) if c in omap else F.lit(None)
             else:
                 oc = _lit(other)
-            return (F.when(flag, F.col(c)).otherwise(oc)
-                    if keep_on_true else
-                    F.when(flag, oc).otherwise(F.col(c)))
-        out = (joined.withColumns({c: rep2(c) for c in self.columns})
-               .drop(*[f"__c_{c}__" for c in cond.columns],
-                     *([f"__o_{c}__" for c in other.columns]
-                       if other_is_frame else [])))
-        if drop_rowid:
-            out = out.drop(_ROWID)
+            return F.when(flag, F.col(c)).otherwise(oc)
+        out = (base._sdf.withColumns({c: rep2(c) for c in self.columns})
+               .drop(*cmap.values(), *omap.values()))
         return self._derive(out, "where" if keep_on_true else "mask",
                             {"frame_cond": True, "aligned": True,
-                             "other": other})
+                             "other": other},
+                            base._index_cols, base._index_names)
 
     def where(self, cond, other=None) -> "DataFrame":
         """pandas ``DataFrame.where``: same-anchor boolean Series lowers
         to per-column ``CASE WHEN`` — pure projection, no shuffle.  A
-        cond from ANOTHER frame (e.g. the parent of a projection) aligns
-        on the index via one equi-join, pandas alignment semantics.  A
-        boolean FRAME cond applies per column (``df.where(df > 0)``)."""
+        cond from ANOTHER frame (e.g. the parent of a projection) is
+        reindexed onto this frame's labels (``_order.align``), a missing
+        label counting as False.  A boolean FRAME cond applies per column
+        (``df.where(df > 0)``)."""
         if callable(cond) and not isinstance(cond, FrameBase):
             cond = cond(self)
         if callable(other) and not isinstance(other, FrameBase):
@@ -6209,43 +5908,24 @@ class DataFrame(FrameBase):
         if not isinstance(cond, Series):
             raise ValueError("DataFrame.where requires a boolean Series")
         if cond._sdf is self._sdf:
-            # the replacement is cast per column (a string column takes
-            # str(other)) — Spark-typed columns can't hold pandas' mixed
-            # object cells
-            reps = {c: F.when(cond._scol, F.col(c)).otherwise(
-                        _lit(other).cast(self._sdf.schema[c].dataType)
-                        if other is not None else F.lit(None))
-                    for c in self.columns}
-            return self._derive(self._sdf.withColumns(reps), "where",
-                                {"other": other})
-        if bool(self._index_cols) != bool(cond._index_cols):
-            raise ValueError("DataFrame.where with a foreign cond needs "
-                             "an index on both sides (or on neither — "
-                             "default-index frames align positionally)")
-        cf = cond.to_frame("__cond__")
-        if self._index_cols:
-            base, lidx = self._sdf, list(self._index_cols)
-            csel = cf._sdf.select(
-                *[F.col(c).alias(i) for c, i in zip(cf._index_cols, lidx)],
-                F.col("__cond__"))
-            drop_rowid = False
+            base, flag, hidden = self, cond._scol, None
         else:
-            # default-index frames align POSITIONALLY (pandas
-            # label==position), same rowid contract as _framewise_cond
-            base, lidx = positions(self), [_ROWID]
-            csel = positions(cf).select(F.col(_ROWID),
-                                            F.col("__cond__"))
-            drop_rowid = True
-        joined = base.join(csel, on=lidx, how="left")
-        if drop_rowid:
-            joined = joined.drop(_ROWID)
-        flag = F.coalesce(F.col("__cond__"), F.lit(False))
+            base, _, rmap = align(self, cond.to_frame("v"))
+            hidden = rmap["v"]
+            flag = F.col(hidden)
+        # the replacement is cast per column (a string column takes
+        # str(other)) — Spark-typed columns can't hold pandas' mixed
+        # object cells
         reps = {c: F.when(flag, F.col(c)).otherwise(
                     _lit(other).cast(self._sdf.schema[c].dataType)
                     if other is not None else F.lit(None))
                 for c in self.columns}
-        return self._derive(joined.withColumns(reps).drop("__cond__"),
-                            "where", {"aligned": True, "other": other})
+        sdf = base._sdf.withColumns(reps)
+        if base is self:
+            return self._derive(sdf, "where", {"other": other})
+        return self._derive(sdf.drop(hidden), "where",
+                            {"aligned": True, "other": other},
+                            base._index_cols, base._index_names)
 
     def mask(self, cond, other=None) -> "DataFrame":
         """pandas ``DataFrame.mask`` — complement of ``where``.  A null
@@ -6264,12 +5944,13 @@ class DataFrame(FrameBase):
         return self.where(inv, other)
 
     def align(self, other: "DataFrame", join: str = "outer"):
-        """Reference ``_Align`` ``_expr.py:958-978``."""
-        joined, lcols, rcols = _index_outer_join(self, other, how=join)
-        lsel = [F.col(c) for c in joined._index_cols] + \
-               [F.col(lcols[c]).alias(c) for c in self.columns]
-        rsel = [F.col(c) for c in joined._index_cols] + \
-               [F.col(rcols[c]).alias(c) for c in other.columns]
+        """Reference ``_Align`` ``_expr.py:958-978``, through
+        ``_order.align``."""
+        joined, lcols, rcols = align(self, other, join)
+        keep = [F.col(c) for c in joined._index_cols] + \
+            _order_cols(joined._sdf)
+        lsel = keep + [F.col(lcols[c]).alias(c) for c in self.columns]
+        rsel = keep + [F.col(rcols[c]).alias(c) for c in other.columns]
         ln = Node("align_left", {}, self._expr, other._expr)
         rn = Node("align_right", {}, self._expr, other._expr)
         return (DataFrame(joined._sdf.select(*lsel), ln, joined._index_cols, joined._index_names),
@@ -7068,7 +6749,7 @@ class DataFrame(FrameBase):
         per shared column.  ``func`` receives ENGINE Series (same-anchor)
         — build it from engine ops (arithmetic/comparison/where), the
         same contract as ``assign`` callables."""
-        joined, lcols, rcols = _index_outer_join(self, other)
+        joined, lcols, rcols = align(self, other, "outer")
         base = DataFrame(joined._sdf, joined._expr, joined._index_cols,
                          joined._index_names)
         out_cols = [F.col(c) for c in joined._index_cols]
@@ -7699,37 +7380,22 @@ class DataFrame(FrameBase):
     def compare(self, other: "DataFrame") -> "DataFrame":
         """pandas ``DataFrame.compare``: rows where any shared column
         differs, emitted as ``col_self`` / ``col_other`` pairs (pandas'
-        MultiIndex columns flattened).  One index equi-join; null-safe
-        inequality matches pandas NaN-equals-NaN semantics."""
-        left, right = self, other
-        if not left._index_cols and not right._index_cols:
-            # default-index frames align POSITIONALLY (the rowid
-            # contract, same as where/assign — r5 hunt fix)
-            left = _frame_with_index(left)
-            right = _frame_with_index(right)
-        if not left._index_cols or \
-                len(right._index_cols) != len(left._index_cols):
-            raise ValueError("compare needs both frames indexed alike")
-        shared = [c for c in left.columns if c in right.columns]
-        icols = list(left._index_cols)
-        a = left._sdf.select(*icols,
-                             *[F.col(c).alias(f"__a_{c}__") for c in shared])
-        b = right._sdf.select(
-            *[F.col(c).alias(i) for c, i in zip(right._index_cols, icols)],
-            *[F.col(c).alias(f"__b_{c}__") for c in shared])
-        j = a.join(b, icols, "inner")
-        neq = [~F.col(f"__a_{c}__").eqNullSafe(F.col(f"__b_{c}__"))
-               for c in shared]
+        MultiIndex columns flattened).  The frames inner-align on their
+        labels (``_order.align``); null-safe inequality matches pandas
+        NaN-equals-NaN semantics."""
+        j, lmap, rmap = align(self, other, "inner")
+        shared = [c for c in self.columns if c in other.columns]
+        neq = [~F.col(lmap[c]).eqNullSafe(F.col(rmap[c])) for c in shared]
         any_diff = neq[0]
         for n in neq[1:]:
             any_diff = any_diff | n
-        sel = [F.col(c) for c in icols]
+        sel = [F.col(c) for c in j._index_cols]
         for c, n in zip(shared, neq):
-            sel.append(F.when(n, F.col(f"__a_{c}__")).alias(f"{c}_self"))
-            sel.append(F.when(n, F.col(f"__b_{c}__")).alias(f"{c}_other"))
-        out = j.filter(any_diff).select(*sel)
+            sel.append(F.when(n, F.col(lmap[c])).alias(f"{c}_self"))
+            sel.append(F.when(n, F.col(rmap[c])).alias(f"{c}_other"))
+        out = j._sdf.filter(any_diff).select(*sel)
         return DataFrame(out, Node("compare", {}, self._expr),
-                         tuple(icols), left._index_names)
+                         j._index_cols, j._index_names)
 
     # -- positional family over all numeric columns: ONE distributed
     # segment scan for the whole frame (functions/scan.py) ---------------
@@ -8624,7 +8290,7 @@ class DataFrame(FrameBase):
                   and is_numeric(other._sdf.schema[c].dataType)]
         if not common:
             raise ValueError("no shared numeric columns to correlate")
-        joined, lmap, rmap = _index_outer_join(self, other, "inner")
+        joined, lmap, rmap = align(self, other, "inner")
         if method == "spearman":
             outs = None
             for c in common:
@@ -9806,8 +9472,7 @@ class DataFrame(FrameBase):
 
 
 # --------------------------------------------------------------------------
-# alignment helpers (pandas index-alignment semantics, reference
-# `_Align` _expr.py:958-978 / CombineFirst :1005-1031)
+# alignment helpers: the label pairing itself is ``_order.align``
 # --------------------------------------------------------------------------
 def _frame_with_index(df: DataFrame) -> DataFrame:
     if df._index_cols:
@@ -9816,49 +9481,13 @@ def _frame_with_index(df: DataFrame) -> DataFrame:
     return DataFrame(sdf, df._expr, (_ROWID,), (None,), df._dtypes)
 
 
-def _index_outer_join(left: DataFrame, right: DataFrame, how: str = "outer"):
-    """Full-outer join two frames on their index; returns (joined, left-col
-    mapping, right-col mapping)."""
-    lf = _frame_with_index(left)
-    rf = _frame_with_index(right)
-    if len(lf._index_cols) != len(rf._index_cols):
-        raise ValueError("cannot align frames with different index widths")
-    lsdf = lf._sdf
-    rsdf = rf._sdf
-    lmap = {c: f"__l_{c}__" for c in left.columns}
-    rmap = {c: f"__r_{c}__" for c in right.columns}
-    lidx = list(lf._index_cols)
-    ridx = list(rf._index_cols)
-    lsel = [F.col(c).alias(f"__lidx_{i}__") for i, c in enumerate(lidx)] + \
-           [F.col(c).alias(lmap[c]) for c in left.columns]
-    rsel = [F.col(c).alias(f"__ridx_{i}__") for i, c in enumerate(ridx)] + \
-           [F.col(c).alias(rmap[c]) for c in right.columns]
-    l2 = lsdf.select(*lsel)
-    r2 = rsdf.select(*rsel)
-    cond = None
-    for i in range(len(lidx)):
-        c = l2[f"__lidx_{i}__"].eqNullSafe(r2[f"__ridx_{i}__"])
-        cond = c if cond is None else (cond & c)
-    joined = l2.join(r2, cond, how)
-    idx_cols = []
-    for i in range(len(lidx)):
-        joined = joined.withColumn(
-            f"__idx_{i}__", F.coalesce(F.col(f"__lidx_{i}__"), F.col(f"__ridx_{i}__")))
-        joined = joined.drop(f"__lidx_{i}__", f"__ridx_{i}__")
-        idx_cols.append(f"__idx_{i}__")
-    names = lf._index_names
-    out = DataFrame(joined, Node("align", {}, left._expr, right._expr),
-                    tuple(idx_cols), names)
-    return out, lmap, rmap
-
-
-def _align_frames(lf: DataFrame, rf: DataFrame, how: str = "outer") -> DataFrame:
-    joined, lmap, rmap = _index_outer_join(lf, rf, how)
-    sel = [F.col(c) for c in joined._index_cols] + \
-          [F.col(lmap[c]).alias(c) for c in lf.columns] + \
-          [F.col(rmap[c]).alias(c) for c in rf.columns]
-    return DataFrame(joined._sdf.select(*sel), joined._expr,
-                     joined._index_cols, joined._index_names)
+def _paired(s: "Series", other: "Series", how: str = "outer",
+            a: str = "__l__", b: str = "__r__") -> DataFrame:
+    """Series ``s`` and ``other`` aligned by label (``align``) as the
+    columns ``a`` and ``b`` of one frame."""
+    joined, lmap, rmap = align(s.to_frame(a), other.to_frame(b), how)
+    return DataFrame(joined._sdf.withColumnsRenamed({lmap[a]: a, rmap[b]: b}),
+                     joined._expr, joined._index_cols, joined._index_names)
 
 
 def new_collection(sdf: SparkDF, expr: Node, index_cols=(), index_names=None):

@@ -7,7 +7,7 @@ most three hidden columns:
   nlargest, dedup→reset_index, concat, melt…) stamp it; only its ORDER
   matters, the values may be sparse.
 * ``_ROWID`` — an anonymous index of positional labels (filter, dedup and
-  alignment-join survivors keep their original labels).
+  alignment survivors keep their original labels).
 * ``_LABEL`` — each row's pandas position, minted in-scan by the sources
   (parquet ``_metadata.row_index`` + file offsets; from_pandas numbers
   its rows directly).  It is valid only on an unindexed, unstamped frame and
@@ -16,17 +16,31 @@ most three hidden columns:
 The invariant: a frame presents its rows in ``_ORDER`` order when
 stamped, else in ``_ROWID`` order when that is its index, else in its
 physical layout (which then equals ``_LABEL`` order).  ``compute()``
-presents rows this way, and the two functions below are the only places
-that turn the invariant into a key or a position — every positional op
-asks them rather than choosing a branch itself.
+presents rows this way, and ``order_key``/``positions`` are the only
+places that turn the invariant into a key or a position — every
+positional op asks them rather than choosing a branch itself.
+
+Alignment — which foreign row pairs with which of ours — is the same
+decision, and ``align`` is its one owner (reference ``_Align``).  A
+frame's labels are its index columns; an unindexed frame's labels are its
+presented positions, so any two frames align.  ``how="left"`` is pandas'
+reindex onto the left frame (assign, masks, where/mask, fillna, update):
+each left row once, in its presented order, under its own labels and
+stamp — no sort is added — and a label missing on the right gives null.
+``assign`` pairs the repeated labels of two stamped frames indexed by
+rowid (a concat's) by (label, occurrence in presented order).  The other
+forms (outer, inner, right) join on the labels and coalesce them into a
+fresh index, as arithmetic and ``combine_first`` need.  Labels of kinds that cannot be
+equal (strings against numbers) match nothing, as in pandas.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-__all__ = ["order_key", "positions"]
+__all__ = ["align", "order_key", "positions"]
 
 _ROWID = "__pes_rowid__"
 _ORDER = "__pes_order__"
@@ -69,6 +83,132 @@ def positions(frame, name: str = _ROWID, upto: str = "attach"):
     if upto == "pass":
         return None
     return _attach_rowid(sdf, name)
+
+
+def _positional_order(frame):
+    """``(sdf, order_cols, idx_cols, idx_names)``: the row order every
+    positional op (cum*, shift/diff, fills, interpolate, rolling/
+    expanding/ewm, and their grouped forms) runs in, and the index its
+    result carries.  A stamp
+    wins — a sort keeps its labels but presents in stamp order — then the
+    index, then the frame's positions, which become the result's index.
+    An unindexed stamped frame keeps no index: ``compute()`` presents it
+    in stamp order with a RangeIndex, so it needs no position pass."""
+    sdf = frame._sdf
+    if _ORDER in sdf.columns:
+        return sdf, [_ORDER], frame._index_cols, frame._index_names
+    if frame._index_cols:
+        return (sdf, list(frame._index_cols), frame._index_cols,
+                frame._index_names)
+    return positions(frame), [_ROWID], (_ROWID,), (None,)
+
+
+def align(left, right, how: str = "left", by_occurrence: bool = False):
+    """``(joined, lmap, rmap)``: the rows of frames ``left`` and ``right``
+    paired by label (module docstring), as one DataFrame whose columns
+    ``lmap``/``rmap`` name each side's columns.  ``how="left"`` keeps
+    every column of ``left``'s plan under its own name, and its index —
+    an unindexed left takes its positions as the rowid index — and names
+    ``right``'s columns apart from every column of ``left``'s plan, so a
+    result can be aligned again.  The other forms carry the index in
+    fresh ``__idx_i__`` columns.
+
+    ``by_occurrence`` (assign's rule) pairs the repeated labels of two
+    stamped, rowid-indexed frames — a concat's — by occurrence in
+    presented order.  It costs a window over each side's stamp, so the
+    other left-form consumers, whose labels are unique, leave it off.
+
+    The plan is built from SQL strings: each ``F.col`` is a dozen Py4J
+    round trips, and every consumer builds one of these."""
+    from ._collection import DataFrame
+    from ._expr import Node
+    lsdf, lidx = _labeled(left)
+    rsdf, ridx = _labeled(right)
+    if len(lidx) != len(ridx):
+        raise ValueError("cannot align frames with different index widths")
+    match = all(map(_comparable, _label_types(left, lidx),
+                    _label_types(right, ridx)))
+    pre = "__r"     # no column of left's plan starts with it
+    while any(c.startswith(pre) for c in left._sdf.columns):
+        pre += "r"
+    rmap = {c: f"{pre}_{c}__" for c in right.columns}
+    rkeys = [f"{pre}{i}__" for i in range(len(ridx))]
+    rsel = [f"{_q(c)} AS {_q(k)}" for c, k in zip(ridx, rkeys)] + \
+        [f"{_q(c)} AS {_q(rmap[c])}" for c in right.columns]
+    node = Node("align", {"how": how}, left._expr, right._expr)
+    names = left._index_names if left._index_cols else (None,)
+    if how == "left":
+        lmap = {c: c for c in left.columns}
+        if not match:
+            types = right._sdf.schema
+            joined = lsdf.withColumns(
+                {rmap[c]: F.lit(None).cast(types[c].dataType)
+                 for c in right.columns})
+            return DataFrame(joined, node, lidx, names), lmap, rmap
+        on = [f"{_q(a)} <=> {_q(k)}" for a, k in zip(lidx, rkeys)]
+        occ = [f"{pre}occ__", f"{pre}rocc__"]
+        if (by_occurrence and _ORDER in lsdf.columns
+                and _ORDER in rsdf.columns
+                and tuple(left._index_cols) == (_ROWID,)
+                and tuple(right._index_cols) == (_ROWID,)):
+            # repeated labels pair by occurrence in presented order
+            num = (f"row_number() OVER (PARTITION BY {_q(_ROWID)} "
+                   f"ORDER BY {_q(_ORDER)})")
+            lsdf = lsdf.withColumn(occ[0], F.expr(num))
+            rsel.append(f"{num} AS {_q(occ[1])}")
+            on.append(f"{_q(occ[0])} = {_q(occ[1])}")
+        joined = (lsdf.join(rsdf.selectExpr(*rsel), F.expr(" AND ".join(on)),
+                            "left")
+                  .drop(*rkeys, *occ))
+        return DataFrame(joined, node, lidx, names), lmap, rmap
+    lmap = {c: f"__l_{c}__" for c in left.columns}
+    lkeys = [f"__lidx_{i}__" for i in range(len(lidx))]
+    l2 = lsdf.selectExpr(
+        *[f"{_q(c)} AS {_q(k)}" for c, k in zip(lidx, lkeys)],
+        *[f"{_q(c)} AS {_q(lmap[c])}" for c in left.columns])
+    on = (F.expr(" AND ".join(f"{_q(a)} <=> {_q(k)}"
+                              for a, k in zip(lkeys, rkeys)))
+          if match else F.lit(False))
+    joined = l2.join(rsdf.selectExpr(*rsel), on, how)
+    idx = [f"__idx_{i}__" for i in range(len(lidx))]
+    joined = joined.selectExpr(
+        *[f"coalesce({_cast(a, match)}, {_cast(b, match)}) AS {_q(i)}"
+          for a, b, i in zip(lkeys, rkeys, idx)],
+        *map(_q, lmap.values()), *map(_q, rmap.values()))
+    return DataFrame(joined, node, idx, names), lmap, rmap
+
+
+def _q(name: str) -> str:
+    """``name`` quoted as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _cast(name: str, match: bool) -> str:
+    # labels of kinds that never match coalesce as strings
+    return _q(name) if match else f"CAST({_q(name)} AS STRING)"
+
+
+def _labeled(frame) -> tuple[SparkDF, list[str]]:
+    """The frame's rows and its label columns: the index, else the
+    presented positions as the rowid."""
+    if frame._index_cols:
+        return frame._sdf, list(frame._index_cols)
+    return positions(frame), [_ROWID]
+
+
+def _label_types(frame, idx) -> list:
+    """The Spark types of a frame's label columns ``idx`` (rowids are
+    positions: longs, with no schema lookup)."""
+    return [T.LongType() if c == _ROWID else frame._sdf.schema[c].dataType
+            for c in idx]
+
+
+def _comparable(a: T.DataType, b: T.DataType) -> bool:
+    """Whether labels of Spark types ``a`` and ``b`` can ever be equal."""
+    if type(a) is type(b) or T.NullType() in (a, b):
+        return True
+    kinds = (T.NumericType, (T.DateType, T.TimestampType, T.TimestampNTZType))
+    return any(isinstance(a, k) and isinstance(b, k) for k in kinds)
 
 
 def _labels_valid(frame) -> bool:

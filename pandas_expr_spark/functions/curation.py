@@ -71,7 +71,8 @@ def gopher_rules(col: Column | str) -> list[Column]:
 
     All pure ``F.*`` expressions over ONE let-bound tokenization (the
     token array is computed once per row via the 1-element-transform
-    let-binding trick — see NOTES_r1.md — not once per referencing rule).
+    let-binding trick, which projection collapse cannot inline — not once
+    per referencing rule).
     A 100 TB corpus pays exactly one narrow map stage.
     """
     c = F.col(col) if isinstance(col, str) else col

@@ -104,7 +104,7 @@ def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Col
 
     The token array is let-bound through a 1-element transform so the
     ``split`` runs once per row, not once per reference (projection collapse
-    would otherwise inline it 3×; see NOTES_r1.md).
+    inlines an expression at every reference, here 3×).
     """
     sw = stopwords or _STOPWORDS
     toks = word_tokens(col)
@@ -138,7 +138,8 @@ def quality_score(col: Column | str) -> Column:
     p = punct_ratio(c)
     punct_ok = F.greatest(F.lit(0.0), F.lit(1.0) - p * 4)
 
-    # token-derived terms share one let-bound split (see NOTES_r1.md)
+    # token-derived terms share one let-bound split: a 1-element transform
+    # keeps projection collapse from inlining the split per reference
     def _tok_terms(t):
         total = F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
         atl = F.when(F.size(t) > 0, total / F.size(t)).otherwise(F.lit(0.0))
@@ -176,7 +177,8 @@ def lang_id(col: Column | str, markers: dict[str, list[str]] | None = None) -> C
     langs = sorted(m)
     toks = F.transform(word_tokens(col), F.lower)
 
-    # Double let-binding (see NOTES_r1.md): the token array is bound so the
+    # Double let-binding (1-element transforms, which projection collapse
+    # cannot inline per reference): the token array is bound so the
     # split runs once per row (not once per language), and the score array is
     # bound so each per-language filter runs once (not once per cascade
     # reference).

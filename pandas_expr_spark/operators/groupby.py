@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 from .. import _dtypes as D
 from .._dtypes import is_numeric, to_spark_type
 from .._expr import Node
+from .._order import _positional_order
 
 def _moments(c: Column, k: int):
     """(n, [Σx..Σx^k]) as double — combined into ONE aggregate expression so
@@ -702,7 +703,7 @@ class GroupBy:
             numeric_only=fn_name not in self._ANY_DTYPE_AGGS)
         # pandas transform KEEPS null-key rows (values NaN under dropna —
         # masked by _finish_window) and aligns to the caller's labels
-        sdf, _order, tmp = self._positional()
+        sdf, _order, ridx, rnames = _positional_order(self._frame)
         if fn_name == "nunique":
             # count(DISTINCT) OVER is unsupported — size(collect_set OVER)
             # gives the per-group distinct count (nulls excluded, pandas
@@ -711,7 +712,7 @@ class GroupBy:
                 {c: F.size(F.collect_set(F.col(c)).over(w)) for c in cols})
         else:
             out = sdf.withColumns({c: fn(F.col(c)).over(w) for c in cols})
-        res = self._finish_window(out, tmp, "transform")
+        res = self._finish_window(out, ridx, rnames, "transform")
         if self._slice is None:
             # pandas transform excludes the group keys from the result
             keep = [c for c in res.columns if c not in self._by]
@@ -724,7 +725,7 @@ class GroupBy:
         index (positional rowid when implicit) — result joins back by that
         same label, so the output aligns with the caller's rows."""
         from .._collection import DataFrame
-        sdf, pos_cols, tmp = self._positional()
+        sdf, pos_cols, idx, names = _positional_order(self._frame)
         cols = self._value_columns(numeric_only=True)
         by = list(self._by)
         sel = list(dict.fromkeys(by + pos_cols + cols))
@@ -744,8 +745,6 @@ class GroupBy:
         out = base.groupBy(*by).applyInPandas(_tf, schema)
         node = Node("groupby_transform", {"by": by, "fn": "callable"},
                     self._frame._expr)
-        idx = (tmp,) if tmp else tuple(self._frame._index_cols)
-        names = (None,) if tmp else self._frame._index_names
         if self._slice is not None:
             keep = [c for c in self._slice if c in cols]
             out = out.select(*pos_cols, *keep)
@@ -757,18 +756,9 @@ class GroupBy:
         return DataFrame(out, node, idx, names)
 
     # -- positional window ops (pandas groupby.shift/rank/cum*; `IX` §1.5).
-    # All are ONE window = one shuffle on the group keys; row order comes
-    # from the stamp or the engine index when present, else the positions.
-    def _positional(self):
-        from .._collection import _ORDER, _ROWID, positions
-        if _ORDER in self._frame._sdf.columns:
-            # a sort/nlargest stamped the presentation order — grouped
-            # positional ops (cum*, shift, head/tail) follow IT within
-            # each group, like pandas (r5 wave R2)
-            return self._frame._sdf, [_ORDER], None
-        if self._frame._index_cols:
-            return self._frame._sdf, list(self._frame._index_cols), None
-        return positions(self._frame), [_ROWID], _ROWID
+    # All are ONE window = one shuffle on the group keys; row order and the
+    # result's index come from ``_positional_order``: the stamp, else the
+    # engine index, else the positions (which become the index).
 
     # grouped ops that REMOVE null-key rows under dropna=True (pandas);
     # every other grouped positional op KEEPS the row and nulls the value
@@ -776,11 +766,12 @@ class GroupBy:
         {"head", "tail", "nth", "sample", "nlargest", "nsmallest",
          "filter", "topn"})
 
-    def _finish_window(self, out, drop_col, op: str, mi: bool = False):
-        """``mi=True`` (the groupby.rolling/expanding/ewm chain family):
-        pandas prepends the GROUP KEYS to the row labels — the result
-        index is (keys…, original labels) and null-key rows drop (they
-        belong to no group).  Transform-like ops (shift/cum*/rank/…)
+    def _finish_window(self, out, idx, names, op: str, mi: bool = False):
+        """The result over ``out`` with row index ``idx`` named ``names``
+        (``_positional_order``'s).  ``mi=True`` (the groupby.rolling/
+        expanding/ewm chain family): pandas prepends the GROUP KEYS to the
+        row labels — the result index is (keys…, original labels) and
+        null-key rows drop (they belong to no group).  Transform-like ops (shift/cum*/rank/…)
         keep the caller's index unchanged (mi=False)."""
         from .._collection import DataFrame, Series
         if mi and self._dropna and self._by:
@@ -792,12 +783,8 @@ class GroupBy:
         if mi:
             node = Node("groupby_" + op, {"by": self._by},
                         self._frame._expr)
-            base_idx = ([drop_col] if drop_col
-                        else list(self._frame._index_cols))
-            base_names = ((None,) if drop_col
-                          else tuple(self._frame._index_names))
-            idx = tuple(self._by) + tuple(base_idx)
-            names = tuple(self._by) + base_names
+            idx = tuple(self._by) + tuple(idx)
+            names = tuple(self._by) + tuple(names)
             if self._slice is not None:
                 keep = [c for c in self._slice if c in out.columns]
                 out = out.select(*idx, *keep)
@@ -821,9 +808,7 @@ class GroupBy:
             if op in self._NULLKEY_FILTER_OPS:
                 out = out.filter(~keynull)
             else:
-                protected = set(self._by) | (
-                    {drop_col} if drop_col
-                    else set(self._frame._index_cols))
+                protected = set(self._by) | set(idx)
                 out = out.select(*[
                     F.when(keynull, F.lit(None)).otherwise(F.col(c))
                     .alias(c) if c not in protected else F.col(c)
@@ -833,35 +818,21 @@ class GroupBy:
         if op in ("cumcount", "ngroup"):
             # pandas returns a SERIES named by the op, indexed by the
             # caller's row labels
-            idx = ((drop_col,) if drop_col
-                   else tuple(self._frame._index_cols))
-            names = (None,) if drop_col else self._frame._index_names
             out = out.select(*idx, *_oc(out), op)
             return Series(out, F.col(op), None, node, idx, names)
         if self._slice is not None and op not in ("cumcount", "ngroup"):
             # pandas: groupby(k)[cols].shift()/cumsum()/... returns ONLY
             # the sliced columns (plus the row labels).  cumcount/ngroup
             # produce a dedicated result column regardless of slicing.
-            idx = [drop_col] if drop_col else list(self._frame._index_cols)
             keep = [c for c in self._slice if c in out.columns]
             out = out.select(*idx, *_oc(out), *keep)
             if self._slice_scalar and len(keep) == 1:
                 # string slice → pandas returns a SERIES
-                idx_t = ((drop_col,) if drop_col
-                         else tuple(self._frame._index_cols))
-                names = ((None,) if drop_col
-                         else self._frame._index_names)
-                return Series(out, F.col(keep[0]), keep[0], node,
-                              idx_t, names)
-        if drop_col:
-            # The rowid attached by _positional() IS the original row label
-            # (pandas keeps the caller's index through positional grouped
-            # ops) — keep it as the anonymous engine index instead of
-            # dropping it, or the label↔row association dies in the group
-            # shuffle.
-            return DataFrame(out, node, (drop_col,), (None,))
-        return DataFrame(out, node, self._frame._index_cols,
-                         self._frame._index_names)
+                return Series(out, F.col(keep[0]), keep[0], node, idx, names)
+        # attached positions ARE the original row labels (pandas keeps the
+        # caller's index through positional grouped ops): they stay the
+        # index, or the label↔row association dies in the group shuffle
+        return DataFrame(out, node, idx, names)
 
     def shift(self, periods: int = 1, fill_value=None):
         """pandas ``groupby.shift`` → ``lag``/``lead`` over the positional
@@ -869,30 +840,30 @@ class GroupBy:
         ``fill_value`` — lag's default arg fires ONLY at the group
         boundary, so shifted-in data nulls stay null like pandas)."""
         from pyspark.sql import Window
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         w = Window.partitionBy(*self._by).orderBy(
             *[F.col(c).asc() for c in order_cols])
         fn = (lambda c: F.lag(c, periods, fill_value)) if periods >= 0 \
             else (lambda c: F.lead(c, -periods, fill_value))
         out = sdf.withColumns({c: fn(F.col(c)).over(w)
                                for c in self._value_columns()})
-        return self._finish_window(out, tmp, "shift")
+        return self._finish_window(out, ridx, rnames, "shift")
 
     def cumcount(self, ascending: bool = True):
         """pandas ``groupby.cumcount``: 0-based position within group."""
         from pyspark.sql import Window
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         order = [F.col(c).asc() if ascending else F.col(c).desc()
                  for c in order_cols]
         w = Window.partitionBy(*self._by).orderBy(*order)
         out = sdf.withColumn("cumcount", F.row_number().over(w) - 1)
-        return self._finish_window(out, tmp, "cumcount")
+        return self._finish_window(out, ridx, rnames, "cumcount")
 
     def _cumulative(self, fn_name: str):
         """Running aggregate with pandas null semantics: a null input row
         yields null but does not interrupt the running value."""
         from pyspark.sql import Window
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         fn = _AGG_FNS[fn_name]
         w = (Window.partitionBy(*self._by)
              .orderBy(*[F.col(c).asc() for c in order_cols])
@@ -900,7 +871,7 @@ class GroupBy:
         out = sdf.withColumns({
             c: F.when(F.col(c).isNotNull(), fn(F.col(c)).over(w))
             for c in self._value_columns(numeric_only=True)})
-        return self._finish_window(out, tmp, "cum" + fn_name)
+        return self._finish_window(out, ridx, rnames, "cum" + fn_name)
 
     def cumsum(self): return self._cumulative("sum")
     def cumprod(self): return self._cumulative("prod")
@@ -919,7 +890,7 @@ class GroupBy:
         # so a default-index frame needs rowid labels for the result to
         # align with the caller's rows (method="first" also uses them as
         # the tie-break)
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         pos_cols = order_cols if method == "first" else []
         cols = {}
         for c in self._value_columns(numeric_only=True):
@@ -945,7 +916,7 @@ class GroupBy:
                 r = r / F.count(c).over(_W.partitionBy(*self._by))
             cols[c] = F.when(col.isNotNull(), r)
         out = sdf.withColumns(cols)
-        return self._finish_window(out, tmp, "rank")
+        return self._finish_window(out, ridx, rnames, "rank")
 
     def head(self, n: int = 5):
         """pandas ``groupby.head``: first n rows of each group in original
@@ -975,7 +946,7 @@ class GroupBy:
         from pyspark.sql import Window
         if method not in ("linear", "pad", "ffill"):
             raise ValueError(f"interpolate: method {method!r} unsupported")
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         wb = (Window.partitionBy(*self._by)
               .orderBy(*[F.col(c).asc() for c in order_cols])
               .rowsBetween(Window.unboundedPreceding, 0))
@@ -1005,7 +976,7 @@ class GroupBy:
             updates[c] = F.when(v.isNotNull(), v).otherwise(
                 F.when(pp.isNotNull(), fill))
         out = sdf.withColumns(updates).drop("__gp__")
-        return self._finish_window(out, tmp, "interpolate")
+        return self._finish_window(out, ridx, rnames, "interpolate")
 
     def resample(self, freq: str, on: str | None = None,
                  fill_empty: bool = True):
@@ -1064,7 +1035,7 @@ class GroupBy:
 
     def _positional_limit(self, n: int, ascending: bool, op: str):
         from pyspark.sql import Window
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         order = [F.col(c).asc() if ascending else F.col(c).desc()
                  for c in order_cols]
         w = Window.partitionBy(*self._by).orderBy(*order)
@@ -1081,14 +1052,14 @@ class GroupBy:
                 F.count(F.lit(1)).over(Window.partitionBy(*self._by)))
             out = (ranked.filter(F.col("__rn__") <= F.col("__gcnt__") + n)
                    .drop("__rn__", "__gcnt__"))
-        return self._finish_window(out, tmp, op)
+        return self._finish_window(out, ridx, rnames, op)
 
     def nth(self, n: int):
         """pandas ``groupby.nth``: the row at position n (negative = from
         the end) of each group, original index kept — one row-number
         window, a filter, no extra shuffle."""
         from pyspark.sql import Window
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         asc = n >= 0
         order = [F.col(c).asc() if asc else F.col(c).desc()
                  for c in order_cols]
@@ -1096,7 +1067,7 @@ class GroupBy:
         want = n + 1 if n >= 0 else -n
         out = (sdf.withColumn("__rn__", F.row_number().over(w))
                .filter(F.col("__rn__") == want).drop("__rn__"))
-        return self._finish_window(out, tmp, "nth")
+        return self._finish_window(out, ridx, rnames, "nth")
 
     def nlargest(self, n: int, col: str, tiebreak: str | None = None):
         """Top-n rows per group by ``col`` (the pandas
@@ -1119,7 +1090,8 @@ class GroupBy:
         w = Window.partitionBy(*self._by).orderBy(*order)
         out = (sdf.withColumn("__rn__", F.row_number().over(w))
                .filter(F.col("__rn__") <= n).drop("__rn__"))
-        return self._finish_window(out, None, op)
+        return self._finish_window(out, self._frame._index_cols,
+                                   self._frame._index_names, op)
 
     def ewm_mean(self, col: str, alpha: float, adjust: bool = True,
                  name: str | None = None):
@@ -1129,10 +1101,10 @@ class GroupBy:
         and as scalable as any partitioned window).  Row order within the
         group comes from the engine index (positional rowid fallback)."""
         from ..functions.timeseries import ewm_mean_grouped
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         out = ewm_mean_grouped(sdf, self._by, col, order_cols, alpha,
                                name=name or f"{col}_ewm", adjust=adjust)
-        return self._finish_window(out, tmp, "ewm")
+        return self._finish_window(out, ridx, rnames, "ewm")
 
     def ffill(self, limit: int | None = None):
         """pandas ``groupby.ffill``: per-group forward fill of every value
@@ -1147,7 +1119,7 @@ class GroupBy:
 
     def _fill(self, forward: bool, limit: int | None = None):
         from pyspark.sql import Window
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         base = Window.partitionBy(*self._by).orderBy(
             *[F.col(c).asc() for c in order_cols])
         lo = Window.unboundedPreceding if limit is None else -limit
@@ -1160,7 +1132,8 @@ class GroupBy:
             fill = lambda c: F.first(c, ignorenulls=True).over(w)
         out = sdf.withColumns({c: fill(F.col(c))
                                for c in self._value_columns()})
-        return self._finish_window(out, tmp, "ffill" if forward else "bfill")
+        return self._finish_window(out, ridx, rnames,
+                                   "ffill" if forward else "bfill")
 
     def filter(self, func):
         """pandas ``groupby.filter``: keep the rows of groups passing a
@@ -1178,7 +1151,7 @@ class GroupBy:
           group data through Python; prefer the SQL form.
         """
         from .._collection import DataFrame
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         if isinstance(func, str):
             if self._dropna:
                 for b in self._by:
@@ -1190,7 +1163,7 @@ class GroupBy:
         else:
             schema = sdf.schema
             by = self._by
-            hidden = [tmp] if tmp else []
+            hidden = [c for c in ridx if c not in self._frame._index_cols]
 
             def _flt(g: pd.DataFrame) -> pd.DataFrame:
                 return g if func(g.drop(columns=hidden)) else g.iloc[0:0]
@@ -1200,7 +1173,7 @@ class GroupBy:
                 for b in by:
                     grouped = grouped.filter(F.col(b).isNotNull())
             out = grouped.groupBy(*by).applyInPandas(_flt, schema)
-        return self._finish_window(out, tmp, "filter")
+        return self._finish_window(out, ridx, rnames, "filter")
 
     def ngroup(self, ascending: bool = True):
         """pandas ``groupby.ngroup``: the group's number, dense-numbered in
@@ -1209,25 +1182,25 @@ class GroupBy:
         100 TB — make even the key table too big for a single-partition
         window), then joins back."""
         from ..functions.scan import global_pos
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         keys = sdf.select(*self._by).na.drop(subset=self._by).distinct()
         mapping = global_pos(keys, list(self._by), "ngroup",
                              descending=[not ascending] * len(self._by))
         # no broadcast hint: the key table's size is data-dependent — let
         # AQE pick broadcast vs shuffle join at runtime
         out = sdf.join(mapping, self._by, "left")
-        return self._finish_window(out, tmp, "ngroup")
+        return self._finish_window(out, ridx, rnames, "ngroup")
 
     def diff(self, periods: int = 1):
         """pandas ``groupby.diff`` — one positional window per group."""
         from pyspark.sql import Window
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         w = Window.partitionBy(*self._by).orderBy(
             *[F.col(c).asc() for c in order_cols])
         out = sdf.withColumns({
             c: F.col(c) - F.lag(c, periods).over(w)
             for c in self._value_columns(numeric_only=True)})
-        return self._finish_window(out, tmp, "diff")
+        return self._finish_window(out, ridx, rnames, "diff")
 
     def pct_change(self, periods: int = 1, fill_method: str | None = "pad"):
         """pandas ``groupby.pct_change`` with pandas zero-divisor semantics
@@ -1238,7 +1211,7 @@ class GroupBy:
         if fill_method not in ("pad", "ffill", None):
             raise ValueError(f"fill_method must be 'pad'/'ffill'/None, "
                              f"got {fill_method!r}")
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         w = Window.partitionBy(*self._by).orderBy(
             *[F.col(c).asc() for c in order_cols])
         vcols = self._value_columns(numeric_only=True)
@@ -1261,14 +1234,14 @@ class GroupBy:
                      .otherwise(F.lit(float("inf")) * inf_sign))
             updates[name] = ratio - F.lit(1)
         out = sdf.withColumns(updates)
-        return self._finish_window(out, tmp, "pct_change")
+        return self._finish_window(out, ridx, rnames, "pct_change")
 
     def ohlc(self):
         """pandas ``groupby.ohlc``: open/high/low/close per value column in
         row order — ``min_by``/``max_by`` on the positional index give
         first/last, so the whole thing is ONE agg shuffle (columns named
         ``col_open`` … ``col_close``, pandas' MultiIndex flattened)."""
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         if self._dropna:
             for b in self._by:
                 sdf = sdf.filter(F.col(b).isNotNull())
@@ -1345,7 +1318,7 @@ class GroupBy:
         if (n is None) == (frac is None):
             raise ValueError("sample: pass exactly one of n / frac")
         from ..functions.urls import cap_per_group
-        sdf, order_cols, tmp = self._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(self._frame)
         if self._dropna:
             for b in self._by:
                 sdf = sdf.filter(F.col(b).isNotNull())
@@ -1360,7 +1333,7 @@ class GroupBy:
         out = cap_per_group(sdf, n, self._by, key, salt=salt, frac=frac)
         if drop_key:
             out = out.drop(drop_key)
-        return self._finish_window(out, tmp, "sample")
+        return self._finish_window(out, ridx, rnames, "sample")
 
     def corr(self):
         """Grouped Pearson correlation of exactly two sliced columns
@@ -1425,7 +1398,7 @@ class _GroupRolling:
     def _agg(self, fn_name: str):
         from pyspark.sql import Window
         gb = self._gb
-        sdf, order_cols, tmp = gb._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(gb._frame)
         if self._w is None:  # expanding
             lo, hi = Window.unboundedPreceding, Window.currentRow
             minp = self._minp or 1
@@ -1456,7 +1429,8 @@ class _GroupRolling:
                 updates[c] = F.when(nn >= minp, val).otherwise(F.lit(None))
         out = sdf.withColumns(updates)
         kind = "expanding" if self._w is None else "rolling"
-        return gb._finish_window(out, tmp, f"{kind}_{fn_name}", mi=True)
+        return gb._finish_window(out, ridx, rnames, f"{kind}_{fn_name}",
+                                 mi=True)
 
     def mean(self): return self._agg("mean")
     def sum(self): return self._agg("sum")
@@ -1472,7 +1446,7 @@ class _GroupRolling:
         keys; the Python func is the slow path by construction).
         ``raw`` defaults to False like pandas (func receives a Series)."""
         gb = self._gb
-        sdf, order_cols, tmp = gb._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(gb._frame)
         w = self._w
         if w is None:                       # expanding().apply
             minp = 1 if self._minp is None else self._minp
@@ -1501,7 +1475,7 @@ class _GroupRolling:
 
         out = sdf.groupBy(*gb._by).applyInPandas(_fn, schema)
         kind = "expanding_apply" if w is None else "rolling_apply"
-        return gb._finish_window(out, tmp, kind, mi=True)
+        return gb._finish_window(out, ridx, rnames, kind, mi=True)
 
 
 class _GroupEwm:
@@ -1513,7 +1487,7 @@ class _GroupEwm:
 
     def mean(self):
         gb = self._gb
-        sdf, order_cols, tmp = gb._positional()
+        sdf, order_cols, ridx, rnames = _positional_order(gb._frame)
         vcols = gb._value_columns(numeric_only=True)
         alpha, adjust = self._alpha, self._adjust
         fields = [T.StructField(f.name, T.DoubleType() if f.name in vcols
@@ -1529,7 +1503,7 @@ class _GroupEwm:
             return pdf[names]
 
         out = sdf.groupBy(*gb._by).applyInPandas(_fn, schema)
-        return gb._finish_window(out, tmp, "ewm_mean", mi=True)
+        return gb._finish_window(out, ridx, rnames, "ewm_mean", mi=True)
 
 
 class Resampler(GroupBy):

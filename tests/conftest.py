@@ -46,6 +46,31 @@ def jobs(spark):
 
 
 @pytest.fixture()
+def py4j_calls(spark):
+    """``py4j_calls(fn) -> (fn(), n)``: run ``fn`` and count the Py4J
+    round trips it asks the JVM for, then restore the original method.
+    Deletes of garbage-collected Java objects are not counted: Python's
+    collector sends them whenever it runs, not when ``fn`` asks."""
+    from py4j.clientserver import ClientServerConnection
+    orig = ClientServerConnection.send_command
+
+    def count(fn):
+        n = 0
+
+        def send(self, command, *args, **kwargs):
+            nonlocal n
+            n += not command.startswith("m\nd\n")
+            return orig(self, command, *args, **kwargs)
+        ClientServerConnection.send_command = send
+        try:
+            out = fn()
+        finally:
+            ClientServerConnection.send_command = orig
+        return out, n
+    return count
+
+
+@pytest.fixture()
 def base_pdf():
     # FIXTURES.md F1 / reference tests/test_collection.py:16-25
     return pd.DataFrame({"x": range(100), "y": [float(i) * 10.0 for i in range(100)]})

@@ -1,7 +1,7 @@
 """Round-5 hunt wave J pins: from_pandas Series collections, fill_value
 on NaN values, Series.combine(fill_value=), and all-int frame reduction
 dtypes.  Each test pins a real divergence found by differential probing
-against eager pandas (see NOTES_r5.md)."""
+against eager pandas."""
 from __future__ import annotations
 
 import numpy as np
