@@ -4958,8 +4958,7 @@ class DataFrame(FrameBase):
                         and v._sdf is not view):
                     # a foreign Series is reindexed onto this frame's
                     # labels (``_order.align``)
-                    cur, _, rmap = align(_current(), v.to_frame("v"),
-                                         by_occurrence=True)
+                    cur, _, rmap = align(_current(), v.to_frame("v"))
                     sdf = (cur._sdf.withColumn(k, F.col(rmap["v"]))
                            .drop(rmap["v"]))
                     made_rowid_index = (made_rowid_index
@@ -5628,9 +5627,9 @@ class DataFrame(FrameBase):
         o = F.col(rmap["o"])
         cols = [(_ap(c, F.col(lmap[c]), o) if c in num
                  else F.col(lmap[c])).alias(c) for c in self.columns]
-        return DataFrame(joined._sdf.select(*joined._index_cols, *cols),
-                         Node(op, {"axis": 0}, self._expr, other._expr),
-                         joined._index_cols, joined._index_names)
+        return self._derive(joined._sdf.select(*joined._index_cols, *cols),
+                            op, {"axis": 0}, joined._index_cols,
+                            joined._index_names, deps=(other._expr,))
 
     def add(self, other, fill_value=None, axis=None):
         return self._named_binop(other, lambda a, b: a + b, "add",
@@ -9474,13 +9473,6 @@ class DataFrame(FrameBase):
 # --------------------------------------------------------------------------
 # alignment helpers: the label pairing itself is ``_order.align``
 # --------------------------------------------------------------------------
-def _frame_with_index(df: DataFrame) -> DataFrame:
-    if df._index_cols:
-        return df
-    sdf = positions(df)
-    return DataFrame(sdf, df._expr, (_ROWID,), (None,), df._dtypes)
-
-
 def _paired(s: "Series", other: "Series", how: str = "outer",
             a: str = "__l__", b: str = "__r__") -> DataFrame:
     """Series ``s`` and ``other`` aligned by label (``align``) as the

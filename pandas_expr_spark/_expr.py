@@ -23,7 +23,7 @@ following ``where``/``mask`` inlines).  It is set once, by the
 constructor's ``hint=`` argument, and is not tokenized.  A collection
 reads it only while its own plan ``is`` the recorded one
 (``FrameBase._hint``): a node is shared with frames over other plans
-(``assign``'s callable view, set ops and ``_frame_with_index`` rebuild a
+(``assign``'s callable view, set ops and ``_order.labeled`` rebuild a
 frame over a new plan under the parent's node), and a hint read there would
 apply to the wrong rows.
 

@@ -23,15 +23,21 @@ positional op asks them rather than choosing a branch itself.
 Alignment — which foreign row pairs with which of ours — is the same
 decision, and ``align`` is its one owner (reference ``_Align``).  A
 frame's labels are its index columns; an unindexed frame's labels are its
-presented positions, so any two frames align.  ``how="left"`` is pandas'
-reindex onto the left frame (assign, masks, where/mask, fillna, update):
-each left row once, in its presented order, under its own labels and
-stamp — no sort is added — and a label missing on the right gives null.
-``assign`` pairs the repeated labels of two stamped frames indexed by
-rowid (a concat's) by (label, occurrence in presented order).  The other
-forms (outer, inner, right) join on the labels and coalesce them into a
-fresh index, as arithmetic and ``combine_first`` need.  Labels of kinds that cannot be
-equal (strings against numbers) match nothing, as in pandas.
+presented positions, so any two frames align (``labeled`` gives the
+frame indexed by them; merge's ``left_index``/``right_index`` read it
+too).  ``how="left"`` is pandas' reindex onto the left frame (assign,
+masks, where/mask, fillna, update): each left row once, in its presented
+order, under its own labels and stamp — no sort is added — and a label
+missing on the right gives null.
+Two stamped frames indexed by rowid (a concat's) may repeat labels;
+where the right repeats a label, its rows pair with the left's by
+occurrence in presented order, as pandas pairs two equal indexes, so
+every consumer keeps each left row once.  The other forms (outer, inner,
+right) join on the labels and coalesce them into one index — the rowid
+when both sides' labels are positions, so ``compute()`` presents the
+rows in label order as pandas does — as arithmetic and
+``combine_first`` need.  Labels of kinds that cannot be equal (strings
+against numbers) match nothing, as in pandas.
 """
 
 from __future__ import annotations
@@ -40,7 +46,7 @@ from pyspark.sql import DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["align", "order_key", "positions"]
+__all__ = ["align", "labeled", "order_key", "positions"]
 
 _ROWID = "__pes_rowid__"
 _ORDER = "__pes_order__"
@@ -103,7 +109,7 @@ def _positional_order(frame):
     return positions(frame), [_ROWID], (_ROWID,), (None,)
 
 
-def align(left, right, how: str = "left", by_occurrence: bool = False):
+def align(left, right, how: str = "left"):
     """``(joined, lmap, rmap)``: the rows of frames ``left`` and ``right``
     paired by label (module docstring), as one DataFrame whose columns
     ``lmap``/``rmap`` name each side's columns.  ``how="left"`` keeps
@@ -111,32 +117,32 @@ def align(left, right, how: str = "left", by_occurrence: bool = False):
     an unindexed left takes its positions as the rowid index — and names
     ``right``'s columns apart from every column of ``left``'s plan, so a
     result can be aligned again.  The other forms carry the index in
-    fresh ``__idx_i__`` columns.
+    fresh ``__idx_i__`` columns, or in the rowid when both sides' labels
+    are positions, so ``compute()`` presents them in label order.
 
-    ``by_occurrence`` (assign's rule) pairs the repeated labels of two
-    stamped, rowid-indexed frames — a concat's — by occurrence in
-    presented order.  It costs a window over each side's stamp, so the
-    other left-form consumers, whose labels are unique, leave it off.
+    Two stamped, rowid-indexed frames (a concat's) may repeat labels:
+    where the right repeats one, its occurrences pair with the left's in
+    presented order, so each left row still appears once.
 
     The plan is built from SQL strings: each ``F.col`` is a dozen Py4J
     round trips, and every consumer builds one of these."""
     from ._collection import DataFrame
     from ._expr import Node
-    lsdf, lidx = _labeled(left)
-    rsdf, ridx = _labeled(right)
+    lf, rf = labeled(left), labeled(right)
+    lsdf, lidx = lf._sdf, list(lf._index_cols)
+    rsdf, ridx = rf._sdf, list(rf._index_cols)
     if len(lidx) != len(ridx):
         raise ValueError("cannot align frames with different index widths")
-    match = all(map(_comparable, _label_types(left, lidx),
-                    _label_types(right, ridx)))
+    match = all(map(_comparable, _label_types(lf), _label_types(rf)))
     pre = "__r"     # no column of left's plan starts with it
-    while any(c.startswith(pre) for c in left._sdf.columns):
+    while any(c.startswith(pre) for c in lsdf.columns):
         pre += "r"
     rmap = {c: f"{pre}_{c}__" for c in right.columns}
     rkeys = [f"{pre}{i}__" for i in range(len(ridx))]
     rsel = [f"{_q(c)} AS {_q(k)}" for c, k in zip(ridx, rkeys)] + \
         [f"{_q(c)} AS {_q(rmap[c])}" for c in right.columns]
     node = Node("align", {"how": how}, left._expr, right._expr)
-    names = left._index_names if left._index_cols else (None,)
+    names = lf._index_names
     if how == "left":
         lmap = {c: c for c in left.columns}
         if not match:
@@ -146,17 +152,16 @@ def align(left, right, how: str = "left", by_occurrence: bool = False):
                  for c in right.columns})
             return DataFrame(joined, node, lidx, names), lmap, rmap
         on = [f"{_q(a)} <=> {_q(k)}" for a, k in zip(lidx, rkeys)]
-        occ = [f"{pre}occ__", f"{pre}rocc__"]
-        if (by_occurrence and _ORDER in lsdf.columns
-                and _ORDER in rsdf.columns
-                and tuple(left._index_cols) == (_ROWID,)
-                and tuple(right._index_cols) == (_ROWID,)):
+        occ = [f"{pre}occ__", f"{pre}rocc__", f"{pre}rn__"]
+        if all(_ORDER in f._sdf.columns and f._index_cols == (_ROWID,)
+               for f in (lf, rf)):
             # repeated labels pair by occurrence in presented order
-            num = (f"row_number() OVER (PARTITION BY {_q(_ROWID)} "
-                   f"ORDER BY {_q(_ORDER)})")
+            part = f"OVER (PARTITION BY {_q(_ROWID)}"
+            num = f"row_number() {part} ORDER BY {_q(_ORDER)})"
             lsdf = lsdf.withColumn(occ[0], F.expr(num))
-            rsel.append(f"{num} AS {_q(occ[1])}")
-            on.append(f"{_q(occ[0])} = {_q(occ[1])}")
+            rsel += [f"{num} AS {_q(occ[1])}",
+                     f"count(1) {part}) AS {_q(occ[2])}"]
+            on.append(f"({_q(occ[2])} = 1 OR {_q(occ[0])} = {_q(occ[1])})")
         joined = (lsdf.join(rsdf.selectExpr(*rsel), F.expr(" AND ".join(on)),
                             "left")
                   .drop(*rkeys, *occ))
@@ -170,12 +175,23 @@ def align(left, right, how: str = "left", by_occurrence: bool = False):
                               for a, k in zip(lkeys, rkeys)))
           if match else F.lit(False))
     joined = l2.join(rsdf.selectExpr(*rsel), on, how)
-    idx = [f"__idx_{i}__" for i in range(len(lidx))]
+    idx = ([_ROWID] if lidx == ridx == [_ROWID] else
+           [f"__idx_{i}__" for i in range(len(lidx))])
     joined = joined.selectExpr(
         *[f"coalesce({_cast(a, match)}, {_cast(b, match)}) AS {_q(i)}"
           for a, b, i in zip(lkeys, rkeys, idx)],
         *map(_q, lmap.values()), *map(_q, rmap.values()))
     return DataFrame(joined, node, idx, names), lmap, rmap
+
+
+def labeled(frame):
+    """The frame indexed by its labels: its own index, else its presented
+    positions as the rowid index."""
+    if frame._index_cols:
+        return frame
+    from ._collection import DataFrame
+    return DataFrame(positions(frame), frame._expr, (_ROWID,), (None,),
+                     frame._dtypes, frame._axis)
 
 
 def _q(name: str) -> str:
@@ -188,19 +204,11 @@ def _cast(name: str, match: bool) -> str:
     return _q(name) if match else f"CAST({_q(name)} AS STRING)"
 
 
-def _labeled(frame) -> tuple[SparkDF, list[str]]:
-    """The frame's rows and its label columns: the index, else the
-    presented positions as the rowid."""
-    if frame._index_cols:
-        return frame._sdf, list(frame._index_cols)
-    return positions(frame), [_ROWID]
-
-
-def _label_types(frame, idx) -> list:
-    """The Spark types of a frame's label columns ``idx`` (rowids are
+def _label_types(frame) -> list:
+    """The Spark types of a labeled frame's index columns (rowids are
     positions: longs, with no schema lookup)."""
     return [T.LongType() if c == _ROWID else frame._sdf.schema[c].dataType
-            for c in idx]
+            for c in frame._index_cols]
 
 
 def _comparable(a: T.DataType, b: T.DataType) -> bool:

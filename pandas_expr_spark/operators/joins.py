@@ -38,7 +38,8 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
           suffixes: tuple = ("_x", "_y"), indicator: bool = False,
           broadcast: bool | None = None, hint: str | None = None,
           validate: str | None = None):
-    from .._collection import DataFrame, Series, _frame_with_index
+    from .._collection import DataFrame, Series
+    from .._order import labeled
 
     if isinstance(right, Series):
         right = right.to_frame()
@@ -65,7 +66,7 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
         return DataFrame(l2.crossJoin(r2), node, (), None, dtypes)
 
     if left_index:
-        left = _frame_with_index(left)
+        left = labeled(left)
         left_keys = list(left._index_cols)
     elif on is not None:
         left_keys = on
@@ -79,7 +80,7 @@ def merge(left, right, how: str = "inner", on=None, left_on=None,
         left_keys = common
 
     if right_index:
-        right = _frame_with_index(right)
+        right = labeled(right)
         right_keys = list(right._index_cols)
     elif on is not None:
         right_keys = on

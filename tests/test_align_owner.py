@@ -114,24 +114,81 @@ def test_concat_repeated_labels_pair_by_occurrence(spark):
     _check(got, want)
 
 
+CONCAT_CONSUMERS = {
+    "fillna": lambda c, s: c.v.fillna(c.v.shift()),
+    "getitem_mask": lambda c, s: c[c.v.diff() > 0],
+    "where": lambda c, s: c.where(c.v.diff() > 0),
+    "mask": lambda c, s: c.mask(c.v.diff() > 0),
+    "series_where_other": lambda c, s: c.w.where(c.v > 2, c.w.shift()),
+    "assign_unique": lambda c, s: c.assign(x=s),
+}
+
+
+@pytest.mark.parametrize("consumer", list(CONCAT_CONSUMERS))
+def test_concat_repeated_labels_keep_each_row_once(spark, consumer):
+    # a concat's repeated labels pair by occurrence only where the other
+    # side repeats them too; a unique label reaches every occurrence
+    fn = CONCAT_CONSUMERS[consumer]
+    f = pes.from_pandas(P1)
+    want = fn(pd.concat([P1, P1]), P1.sort_values("v").w)
+    _check(fn(pes.concat([f, f]), f.sort_values("v").w).compute(), want)
+
+
+@pytest.fixture()
+def shuffled(spark):
+    # joins shuffle into several partitions, unmerged: the join's arrival
+    # order is scrambled, as on large inputs
+    conf = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": "7"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in old.items():
+        spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("op", ["add_axis0", "series_add", "sorted_add"])
+def test_outer_alignment_presents_label_order(shuffled, op):
+    fn = {"add_axis0": lambda f, g: f.add(g.u, axis=0),
+          "series_add": lambda f, g: f.v + g.u,
+          "sorted_add": lambda f, g: f.sort_values("v").v + g.u}[op]
+    pa = pd.concat([P1] * 500, ignore_index=True)
+    pb = pd.concat([P2] * 500, ignore_index=True)
+    got = fn(pes.from_pandas(pa), pes.from_pandas(pb)).compute()
+    _check(got, fn(pa, pb))
+
+
+def test_axis0_op_keeps_the_dtype_record(spark):
+    # a column the op passes through keeps its recorded dtype
+    p = P1.assign(c=pd.Categorical(list("xyxyzz")))
+    got = pes.from_pandas(p).sub(pes.from_pandas(P2).u, axis=0).compute()
+    _check(got[["v", "w"]], P1.sub(P2.u, axis=0))
+    _check(got.c, p.c)
+
+
 # -- job pins ----------------------------------------------------------
 # build + action (compute) jobs on 3,000-row frames.  Each total is at or
-# below its count before alignment had one owner, except the two marked:
-# their results are now presented in the left frame's order by its
-# positions (two more jobs: the presentation sort), where the old path
-# dropped the positions and presented rows in the join's arrival order.
+# below its count before alignment had one owner, except those marked.
+# Results presented by their positions take two more jobs, the
+# presentation sort, where the old path presented rows in the join's
+# arrival order (scrambled once the join shuffles).  Two stamped,
+# rowid-indexed sides number their labels' occurrences (a concat repeats
+# them): one shuffle per side, as assign paid before.
 JOB_PINS = {
     "a.assign(x=b.u)": (lambda a, b: a.assign(x=b.u), 4),
     "sorted assign": (lambda a, b: a.sort_values("v").assign(
         x=b.sort_values("u").u), 10),
     "filtered assign": (lambda a, b: a[a.v > 2].assign(x=b.u), 4),
-    "a.v + b.u": (lambda a, b: a.v + b.u, 3),
-    "sorted a.v + b.u": (lambda a, b: a.sort_values("v").v + b.u, 3),
+    "a.v + b.u": (lambda a, b: a.v + b.u, 5),                       # was 3
+    "sorted a.v + b.u": (lambda a, b: a.sort_values("v").v + b.u,
+                         5),                                        # was 3
     "a[b.u > 0]": (lambda a, b: a[b.u > 0], 4),
     "sorted mask": (lambda a, b: a.sort_values("v")[
-        b.sort_values("u").u > 0], 6),
+        b.sort_values("u").u > 0], 10),                              # was 6
     "a.where(b.u > 0)": (lambda a, b: a.where(b.u > 0), 4),         # was 2
-    "a.add(b.u, axis=0)": (lambda a, b: a.add(b.u, axis=0), 3),
+    "a.add(b.u, axis=0)": (lambda a, b: a.add(b.u, axis=0), 5),     # was 3
     "fillna": (lambda a, b: a.v.where(a.v > 2).fillna(b.u), 4),     # was 2
     "where other": (lambda a, b: a.v.where(a.v > 2, b.u), 4),
 }

@@ -1,7 +1,8 @@
 """The positional-anchor decision has one owner: ``_order.py``.
 
 Every other module asks ``order_key``/``positions`` for an order or for
-positions, and ``align`` for the rows paired by label; none may reach for
+positions, ``labeled`` for a frame indexed by its labels, and ``align``
+for the rows paired by label; none may reach for
 the branch helpers behind them.  (The
 sources still mint the in-scan label column — that is not a branch.)
 """
@@ -12,8 +13,7 @@ import pandas_expr_spark
 
 PKG = pathlib.Path(pandas_expr_spark.__file__).parent
 OWNER = PKG / "_order.py"
-PRIVATE = {"_attach_rowid", "_labels_valid", "_labeled", "_label_types",
-           "_comparable"}
+PRIVATE = {"_attach_rowid", "_labels_valid", "_label_types", "_comparable"}
 
 
 def _references(tree):
@@ -40,7 +40,7 @@ def test_anchor_helpers_stay_in_owner():
         "\n".join(hits)
 
 
-def test_owner_exposes_three_functions():
+def test_owner_exposes_four_functions():
     from pandas_expr_spark import _order
-    assert _order.__all__ == ["align", "order_key", "positions"]
+    assert _order.__all__ == ["align", "labeled", "order_key", "positions"]
     assert PRIVATE <= set(vars(_order))
